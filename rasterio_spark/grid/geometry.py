@@ -183,7 +183,8 @@ class FlatPolygons:
 
     Layout: edges of polygon k occupy [starts[k], starts[k] + counts[k])
     in (x0, y0, x1, y1); ``index`` maps polygon_id -> k. Built once on
-    the driver, broadcast to executors.
+    the driver: pip_join broadcasts it for :meth:`contains`, rasterize
+    scans it on the driver with :meth:`center_spans`.
     """
 
     __slots__ = ("index", "starts", "counts", "x0", "y0", "x1", "y1")
@@ -248,6 +249,70 @@ class FlatPolygons:
         sums = np.add.reduceat(crossings, bounds)
         out[np.nonzero(known)[0]] = (sums % 2).astype(bool)
         return out
+
+    def center_spans(self, windows: np.ndarray) -> tuple[np.ndarray, ...]:
+        """Scanline form of :meth:`contains` at cell centers.
+
+        ``windows[k] = (r0, r1, c0, c1)`` bounds polygon k (insertion
+        order of ``index``) to rows r0 <= r < r1 and cols c0 <= c < c1.
+        Returns (k, row, first, last) int64 arrays: inclusive column
+        spans of the cells whose center (col + 0.5, row + 0.5)
+        ``contains`` accepts, each span non-empty.
+
+        Each edge emits one x-crossing per row center line it straddles,
+        by the same half-open test and the same x_at_y expression as
+        ``contains``; per (polygon, row) the sorted crossings give the
+        spans. Cost is O(crossings) with no per-cell or per-row Python.
+        """
+        win = np.asarray(windows, dtype="float64").reshape(-1, 4)
+        k = np.repeat(np.arange(len(self.counts)), self.counts)
+        # rows whose center line y = r + 0.5 the edge straddles:
+        # min(y0, y1) <= r + 0.5 < max(y0, y1)
+        lo = np.maximum(_first_center_at_or_above(np.minimum(self.y0, self.y1)), win[k, 0])
+        hi = np.minimum(_first_center_at_or_above(np.maximum(self.y0, self.y1)), win[k, 1])
+        n = np.maximum(hi - lo, 0).astype(np.int64)
+        e = np.repeat(np.arange(len(k)), n)
+        row = lo[e] + (np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n))
+        ry = row + 0.5
+        ex0, ey0, ex1, ey1 = self.x0[e], self.y0[e], self.x1[e], self.y1[e]
+        x_at_y = ex0 + (ry - ey0) * (ex1 - ex0) / (ey1 - ey0)
+        ke = k[e]
+        order = np.lexsort((x_at_y, row, ke))
+        ke, row, xs = ke[order], row[order], x_at_y[order]
+        # groups of one (polygon, row): start offset and crossing count
+        new = np.ones(len(ke), dtype=bool)
+        new[1:] = (ke[1:] != ke[:-1]) | (row[1:] != row[:-1])
+        gstart = np.flatnonzero(new)
+        gsize = np.diff(np.append(gstart, len(ke)))
+        rank = np.arange(len(ke)) - np.repeat(gstart, gsize)
+        size = np.repeat(gsize, gsize)
+        # a center with j crossings at or left of it has size - j to its
+        # right: inside iff that is odd. Between sorted crossings i and
+        # i + 1, j = i + 1, so crossing i opens a span iff size - i is
+        # even (never the last crossing, where size - i = 1).
+        i = np.flatnonzero((size - rank) % 2 == 0)
+        # an odd count (a ring left open) also puts every center left of
+        # the first crossing inside
+        odd = gstart[gsize % 2 == 1]
+        sk = np.concatenate([ke[i], ke[odd]])
+        srow = np.concatenate([row[i], row[odd]])
+        first = np.concatenate([_first_center_at_or_above(xs[i]), np.full(len(odd), -np.inf)])
+        last = np.concatenate([_first_center_at_or_above(xs[i + 1]), _first_center_at_or_above(xs[odd])]) - 1
+        first = np.maximum(first, win[sk, 2])
+        last = np.minimum(last, win[sk, 3] - 1)
+        keep = first <= last
+        return sk[keep], *(a[keep].astype(np.int64) for a in (srow, first, last))
+
+
+def _first_center_at_or_above(v: np.ndarray) -> np.ndarray:
+    """Smallest integer c (as float) with c + 0.5 >= v, elementwise.
+
+    ``ceil(v - 0.5)`` is one too small where v - 0.5 rounds down onto
+    an integer (v = -0.5 + 2**-54 gives -1, not 0); rounding never makes
+    it too large. The comparison the ray cast makes corrects it.
+    """
+    c = np.ceil(v - 0.5)
+    return np.where(c + 0.5 < v, c + 1, c)
 
 
 def _segments_intersect_rects(p0: np.ndarray, p1: np.ndarray, rects: np.ndarray) -> np.ndarray:

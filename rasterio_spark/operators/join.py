@@ -22,6 +22,8 @@ broadcast; output is identical.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -103,7 +105,7 @@ _COVER_ARRAY_CACHE: dict = {}
 # build is O(P / cores) wall-clock with the identical per-polygon NumPy.
 COVER_DISTRIBUTED_THRESHOLD = 10_000
 
-# Default cover-cell budget for the res+3 refinement loop (r6, guide
+# Cover-cell budget for the res+3 refinement loop (r6, guide
 # §2.4/§3.1): every pip_join action pays a BroadcastExchange that is
 # SERIAL in cover rows (measured ~4 s/1.2M rows per action on this
 # host), while the ray-casting refine the finer cover avoids is a
@@ -111,9 +113,12 @@ COVER_DISTRIBUTED_THRESHOLD = 10_000
 # cap optimized the wrong side of that trade at every scale we can
 # measure; 150k cells keeps the per-action broadcast ~0.3 s. Jobs whose
 # refine really dominates (hour-long scans over 10^10+ pages) should
-# raise the budget via env or pass cover_res explicitly — the cover is
-# a pure performance parameter, output is identical at any resolution.
-COVER_CELL_BUDGET = int(__import__("os").environ.get("RASTERIO_SPARK_COVER_CELLS", "150000"))
+# raise RASTERIO_SPARK_COVER_CELLS or pass cover_res explicitly — the
+# cover is a pure performance parameter, output is identical at any
+# resolution.
+def cover_cell_budget() -> int:
+    """The cover-cell budget, read from the environment at call time."""
+    return int(os.environ.get("RASTERIO_SPARK_COVER_CELLS", "150000"))
 
 
 def _polygon_cover_distributed(spark, polygons: list[dict], res: int, batch_rows: int = 512) -> DataFrame:
@@ -334,8 +339,9 @@ def pip_join(
     if strategy != "rtree" and cover_res is None:
         cover_res = res + 3
         # cap the cover size: total bbox area in cells at cover_res
-        # (budget rationale at COVER_CELL_BUDGET above)
-        while cover_res > res and _bbox_cells_at(cover_res) > COVER_CELL_BUDGET:
+        # (budget rationale at cover_cell_budget above)
+        budget = cover_cell_budget()
+        while cover_res > res and _bbox_cells_at(cover_res) > budget:
             cover_res -= 1
 
     entries, rings_by_id, bcast, cover = _layer_index(

@@ -1,5 +1,5 @@
-"""Rasterize / geometry_mask / mask — vector -> raster as a broadcast
-PIP join (SURVEY.md §2.3; reference /root/reference/rasterio/features.py:200-421
+"""Rasterize / geometry_mask / mask — vector -> raster burns
+(SURVEY.md §2.3; reference rasterio/features.py:200-421
 + _features.pyx:302-423).
 
 Semantics mirrored from the reference:
@@ -16,11 +16,18 @@ Semantics mirrored from the reference:
 - output dtype inference from values uses grid.dtypes-free minimal rule
   (the engine emits double and lets the writer narrow).
 
-Plan shape: shapes (small, driver-side) -> candidate cells
-(sequence+explode over each shape's window — bbox-pruned like
-geometry_window, features.py:457-547) -> PIP/touch refine in an
-Arrow-batched UDF -> REPLACE/ADD resolution. One narrow explode + one
-aggregation; polygon rings travel once via broadcast.
+Plan shape: shapes (small, driver-side) -> burned (shape, row, col)
+cells -> REPLACE/ADD resolution (one aggregation). Center-rule
+polygons are scanned on the driver in NumPy: each row center line's
+sorted even-odd edge crossings give inclusive column spans, O(edge
+crossings) with the same half-open test and crossing arithmetic as
+FlatPolygons.contains (Raptor-style per-row intervals instead of
+per-cell tests). The spans load as a pandas LocalTableScan and
+``sequence`` + explode them in the JVM — no Python worker runs.
+``all_touched`` polygons explode their bbox window
+(geometry_window, features.py:457-547) and keep an Arrow-batched touch
+refine with the rings broadcast once; points and lines burn their
+cells on the driver.
 """
 
 from __future__ import annotations
@@ -36,12 +43,12 @@ from pyspark.sql.types import BooleanType
 
 from rasterio_spark.grid.affine import Affine
 from rasterio_spark.grid.geometry import (
+    FlatPolygons,
     cells_touched_by_polygon,
     explode_geometries,
     geom_bounds,
     is_valid_geom,
     line_cells,
-    points_in_rings,
     polygon_rings,
 )
 from rasterio_spark.grid.transform import rowcol
@@ -106,8 +113,7 @@ def rasterize(
         raise ValueError("no valid geometry objects found for rasterize")
 
     rows_out: list[pd.DataFrame] = []
-    poly_entries = []
-    rings_by_sid: dict[int, list[np.ndarray]] = {}
+    poly_entries = []  # (sid, shape_idx, value, (r0, r1, c0, c1), grid rings)
     # sid = exploded-part index in input order; REPLACE orders by it
     # (parts of one shape share a value, so part order == shape order),
     # ADD contributes once per part per cell (GDAL burns per geometry).
@@ -145,57 +151,68 @@ def rasterize(
             win = _shape_window(geom, transform, height, width)
             if win is None:
                 continue
-            poly_entries.append((sid, shape_idx, value, win))
-            # rings in GRID coordinates (so the UDF is transform-free)
+            # rings in GRID coordinates (so the burn is transform-free)
             rings = []
             for ring in polygon_rings(geom):
                 cols_f, rows_f = transform.reverse(ring[:, 0], ring[:, 1])
                 rings.append(np.stack([cols_f, rows_f], axis=1))
-            rings_by_sid[sid] = rings
+            rs, cs = win.toslices()
+            bounds = tuple(int(v) for v in (rs.start, rs.stop, cs.start, cs.stop))
+            poly_entries.append((sid, shape_idx, value, bounds, rings))
         else:
             warnings.warn(f"geometry type {gtype} not burnable; skipped")
 
     parts: list[DataFrame] = []
+    rings_by_sid = {sid: rings for sid, _, _, _, rings in poly_entries}
 
-    if poly_entries:
-        from rasterio_spark.grid.geometry import FlatPolygons
-
-        flat_bc = spark.sparkContext.broadcast(FlatPolygons(rings_by_sid))
+    if poly_entries and all_touched:
         rings_bc = spark.sparkContext.broadcast(rings_by_sid)
-        touch = all_touched
 
         @F.pandas_udf(BooleanType())
-        def burn_test(sid_s: pd.Series, row_s: pd.Series, col_s: pd.Series) -> pd.Series:
+        def touched(sid_s: pd.Series, row_s: pd.Series, col_s: pd.Series) -> pd.Series:
             sids = sid_s.values
             rr = row_s.values.astype("float64")
             cc = col_s.values.astype("float64")
-            if not touch:
-                # center rule: one flat vectorized PIP pass
-                return pd.Series(flat_bc.value.contains(sids, cc + 0.5, rr + 0.5))
             by_sid = rings_bc.value
             out = np.zeros(len(sids), dtype=bool)
             for s in pd.unique(sids):
-                rings = by_sid.get(s)
-                if rings is None:
-                    continue
                 m = sids == s
-                out[m] = cells_touched_by_polygon(rr[m], cc[m], rings)
+                out[m] = cells_touched_by_polygon(rr[m], cc[m], by_sid[s])
             return pd.Series(out)
 
         cand = spark.createDataFrame(
-            [
-                (sid, orig_idx, value, *[int(v) for s in w.toslices() for v in (s.start, s.stop)])
-                for sid, orig_idx, value, w in poly_entries
-            ],
+            [(sid, orig_idx, value, *w) for sid, orig_idx, value, w, _ in poly_entries],
             "sid long, orig_idx long, value double, r0 int, r1 int, c0 int, c1 int",
         )
         cand = (
             cand.withColumn("row", F.explode(F.sequence(F.col("r0"), F.col("r1") - 1)))
             .withColumn("col", F.explode(F.sequence(F.col("c0"), F.col("c1") - 1)))
-            .where(burn_test(F.col("sid"), F.col("row"), F.col("col")))
+            .where(touched(F.col("sid"), F.col("row"), F.col("col")))
             .select(F.col("sid").alias("shape_idx"), "orig_idx", "row", "col", "value")
         )
         parts.append(cand)
+    elif poly_entries:
+        # center rule: per-row column spans scanned on the driver, loaded
+        # from pandas (a LocalTableScan, no Python RDD) and exploded in
+        # the JVM — no Python worker touches a cell
+        k, row, c0, c1 = FlatPolygons(rings_by_sid).center_spans(
+            np.array([w for _, _, _, w, _ in poly_entries])
+        )
+        meta = pd.DataFrame([e[:3] for e in poly_entries], columns=["sid", "orig_idx", "value"])
+        spans = meta.iloc[k].reset_index(drop=True).assign(row=row, c0=c0, c1=c1)
+        spans = spark.createDataFrame(
+            spans.astype({"row": "int32", "c0": "int32", "c1": "int32"}),
+            "sid long, orig_idx long, value double, row int, c0 int, c1 int",
+        )
+        parts.append(
+            spans.select(
+                F.col("sid").alias("shape_idx"),
+                "orig_idx",
+                "row",
+                F.explode(F.sequence("c0", "c1")).alias("col"),
+                "value",
+            )
+        )
 
     if rows_out:
         pdf = pd.concat(rows_out, ignore_index=True)

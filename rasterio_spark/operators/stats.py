@@ -81,8 +81,9 @@ def zonal_stats(
     (e.g. (0.5, 0.9) -> p50, p90) in the SAME single shuffle — zonal
     medians without a second pass.
 
-    Plan shape: the shapes' cover relation (rasterize per_shape — a
-    broadcast-PIP explode, one narrow stage) equi-joins the cell table
+    Plan shape: the shapes' cover relation (rasterize per_shape — for
+    the center rule, driver-scanned row spans exploded in the JVM, one
+    narrow stage with no Python worker) equi-joins the cell table
     on (row, col) and aggregates per (shape_id, band): one shuffle,
     sized by covered cells, never by the full layer — the join key
     pushes the bbox prune into the scan side at 100 TB when the layer

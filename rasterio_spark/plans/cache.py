@@ -15,7 +15,11 @@ call site.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 _ACTIVE: list[DataFrame] = []
 
@@ -28,7 +32,10 @@ def scoped_persist(df: DataFrame) -> DataFrame:
 
 
 def release_persisted() -> int:
-    """Unpersist every registered DataFrame; returns how many."""
+    """Unpersist every registered DataFrame; returns how many succeeded.
+
+    A failed unpersist is logged as a warning and the rest are still
+    released."""
     n = 0
     while _ACTIVE:
         df = _ACTIVE.pop()
@@ -36,5 +43,5 @@ def release_persisted() -> int:
             df.unpersist()
             n += 1
         except Exception:
-            pass
+            log.warning("unpersist of a scoped persist failed", exc_info=True)
     return n

@@ -52,11 +52,14 @@ def partition_lineage(df: DataFrame, stage: str, partition_col: str) -> DataFram
 
 
 def read_lineage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | None:
+    """The committed lineage rows, or None when nothing was ever
+    committed (the lineage path does not exist). A lineage path that
+    exists but cannot be read raises."""
     path = os.path.join(out_dir, LINEAGE_DIR, stage)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
+    return spark.read.parquet(path)
 
 
 def checkpointed_write(
@@ -205,10 +208,14 @@ def write_window(
 
 def verify_lineage(spark: SparkSession, out_dir: str, stage: str, partition_col: str) -> DataFrame:
     """Recompute digests from the written data and diff against the
-    lineage table: returns mismatching partitions (empty = consistent)."""
+    lineage table: returns mismatching partitions (empty = consistent).
+    With no lineage committed, every data partition is reported."""
     data = spark.read.parquet(os.path.join(out_dir, stage))
     actual = partition_lineage(data, stage, partition_col)
-    committed = read_lineage(spark, out_dir, stage).select(
+    committed = read_lineage(spark, out_dir, stage)
+    if committed is None:
+        committed = spark.createDataFrame([], "partition_id long, row_count long, digest long")
+    committed = committed.select(
         "partition_id", F.col("row_count").alias("c_rows"), F.col("digest").alias("c_digest")
     )
     j = actual.join(committed, "partition_id", "full")

@@ -123,3 +123,22 @@ def test_asof_latest(spark, pages):
     cell = got.cell_id.iloc[0]
     grp = tiled[tiled.cell_id == cell].sort_values(["warc_ts", "url"], ascending=False)
     assert got[got.cell_id == cell].url.iloc[0] == grp.url.iloc[0]
+
+
+def test_cover_cell_budget_read_at_call_time(spark, pages, monkeypatch):
+    """RASTERIO_SPARK_COVER_CELLS set after import still caps the cover
+    resolution pip_join picks."""
+    from rasterio_spark.operators import join
+
+    picked = []
+
+    def capture(spark_, polygons, cover_res, prepared=None):
+        picked.append(cover_res)
+        raise StopIteration
+
+    monkeypatch.setattr(join, "_layer_index", capture)
+    for budget in ("150000", "1"):
+        monkeypatch.setenv("RASTERIO_SPARK_COVER_CELLS", budget)
+        with pytest.raises(StopIteration):
+            pip_join(pages, rect_polygons(), strategy="broadcast")
+    assert picked[1] < picked[0]

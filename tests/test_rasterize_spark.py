@@ -171,3 +171,172 @@ def test_rasterize_per_shape_dedup_skip_equivalence(spark):
     keys = [(r["shape_id"], r["row"], r["col"]) for r in cover]
     assert len(keys) == len(set(keys))  # (3,3) burned by both parts, one row out
     assert (0, 3, 3) in set(keys)
+
+
+# --- center-rule scanline: spans == FlatPolygons.contains -------------
+
+def _random_rings(rng, t, center, radius):
+    """One seeded random polygon in grid coordinates: a star-shaped
+    exterior (every third snapped to half-integers, so row center lines
+    pass through vertices and cell centers lie on edges), every fifth
+    self-intersecting, every fourth with a hole."""
+    nv = int(rng.integers(3, 12))
+    ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
+    rad = rng.uniform(0.3, 1.0, nv) * radius
+    pts = np.stack([center[0] + rad * np.cos(ang), center[1] + rad * np.sin(ang)], axis=1)
+    if t % 5 == 0:
+        pts = center + rng.uniform(-radius, radius, (nv, 2))
+    if t % 3 == 0:
+        pts = np.round(pts * 2) / 2
+    rings = [np.vstack([pts, pts[:1]])]
+    if t % 4 == 0:
+        hole = center + (pts[::-1] - center) * 0.4
+        if t % 3 == 0:
+            hole = np.round(hole * 2) / 2
+        rings.append(np.vstack([hole, hole[:1]]))
+    return rings
+
+
+def _spans_grid(spans, k, shape):
+    """Boolean grid of polygon k's spans; spans must be non-empty and
+    disjoint within a row."""
+    got = np.zeros(shape, dtype=bool)
+    ks, rows, first, last = spans
+    for r, a, b in zip(rows[ks == k], first[ks == k], last[ks == k]):
+        assert a <= b
+        assert not got[r, a : b + 1].any()
+        got[r, a : b + 1] = True
+    return got
+
+
+def test_first_center_at_or_above_exact():
+    """Smallest c with c + 0.5 >= v, also where v - 0.5 rounds onto an
+    integer."""
+    from rasterio_spark.grid.geometry import _first_center_at_or_above
+
+    v = np.array([-0.5 + 2.0**-54, -0.5, 0.5, 0.5 + 2.0**-52, 3.0, -7.25])
+    np.testing.assert_array_equal(_first_center_at_or_above(v), [0, -1, 0, 1, 3, -7])
+
+
+def test_center_spans_equal_contains_random_polygons():
+    """>= 300 seeded random polygons (half-integer vertices, holes,
+    self-intersections, open rings, windows that clip): at every cell
+    center of each window the scanline spans equal
+    FlatPolygons.contains, the per-cell ray cast they replace."""
+    from rasterio_spark.grid.geometry import FlatPolygons
+
+    rng = np.random.default_rng(20261017)
+    shape = (24, 28)
+    rings_by_id, windows = {}, []
+    for t in range(360):
+        rings = _random_rings(rng, t, rng.uniform(-2, 30, 2), rng.uniform(0.5, 9))
+        if t % 7 == 0:
+            rings = [r[:-1] for r in rings]  # rings left open
+        rings_by_id[100 + t] = rings
+        r0, c0 = rng.integers(0, 12, 2)
+        windows.append((r0, r0 + rng.integers(1, 13), c0, c0 + rng.integers(1, 17)))
+    fp = FlatPolygons(rings_by_id)
+    spans = fp.center_spans(np.array(windows))
+    rr, cc = np.mgrid[0 : shape[0], 0 : shape[1]]
+    vertex_on_center_line = 0
+    for k, (pid, rings) in enumerate(rings_by_id.items()):
+        r0, r1, c0, c1 = windows[k]
+        inside = np.zeros(shape, dtype=bool)
+        inside[r0:r1, c0:c1] = True
+        want = np.zeros(shape, dtype=bool)
+        want[inside] = fp.contains(np.full(inside.sum(), pid), cc[inside] + 0.5, rr[inside] + 0.5)
+        np.testing.assert_array_equal(_spans_grid(spans, k, shape), want, err_msg=f"polygon {pid}")
+        vertex_on_center_line += any(((r[:, 1] - 0.5) % 1 == 0).any() for r in rings)
+    assert vertex_on_center_line >= 100  # the degenerate cases were exercised
+
+
+def _center_rule_cells(geom, transform, shape):
+    """The per-cell center-rule burn the scanline replaced: every cell
+    of the shape's window, ray-cast at its center."""
+    from rasterio_spark.grid.geometry import FlatPolygons, polygon_rings
+    from rasterio_spark.operators.rasterize import _shape_window
+
+    win = _shape_window(geom, transform, *shape)
+    if win is None:
+        return set()
+    rs, cs = win.toslices()
+    rings = []
+    for ring in polygon_rings(geom):
+        cols_f, rows_f = transform.reverse(ring[:, 0], ring[:, 1])
+        rings.append(np.stack([cols_f, rows_f], axis=1))
+    rr, cc = np.mgrid[rs, cs]
+    rr, cc = rr.ravel(), cc.ravel()
+    hit = FlatPolygons({0: rings}).contains(np.zeros(len(rr), dtype=np.int64), cc + 0.5, rr + 0.5)
+    return set(zip(rr[hit].tolist(), cc[hit].tolist()))
+
+
+@pytest.mark.parametrize(
+    "transform",
+    [
+        Affine(0.5, 0.0, 10.0, 0.0, -0.5, 20.0),  # north-up, non-identity
+        Affine(0.25, 0.0, -5.0, 0.0, 0.25, 3.0),  # south-up (e > 0)
+    ],
+    ids=["north_up", "south_up"],
+)
+def test_rasterize_center_rule_equals_per_cell_test(spark, transform):
+    """rasterize(per_shape=True) through Spark equals the per-cell
+    center test for 300 seeded random polygons in world coordinates,
+    and a MultiPolygon whose parts overlap comes out deduplicated."""
+    rng = np.random.default_rng(7)
+    shape = (40, 48)
+
+    def to_world(ring):
+        xs, ys = transform * (ring[:, 0], ring[:, 1])
+        return [(float(x), float(y)) for x, y in zip(xs, ys)]
+
+    geoms = []
+    for t in range(300):
+        rings = _random_rings(rng, t, rng.uniform(-4, 52, 2), rng.uniform(0.5, 12))
+        geoms.append({"type": "Polygon", "coordinates": [to_world(r) for r in rings]})
+    a = _random_rings(rng, 1, np.array([20.0, 20.0]), 8.0)[0]
+    b = _random_rings(rng, 3, np.array([24.0, 22.0]), 8.0)[0]
+    multi = {"type": "MultiPolygon", "coordinates": [[to_world(a)], [to_world(b)]]}
+    geoms.append(multi)
+
+    got = {}
+    for sid, row, col in rasterize(
+        spark, [(g, 1.0) for g in geoms], shape, transform, per_shape=True
+    ).select("shape_id", "row", "col").collect():
+        key = (row, col)
+        assert key not in got.setdefault(sid, set())  # multi-part double covers deduplicated
+        got[sid].add(key)
+    for sid, geom in enumerate(geoms[:-1]):
+        assert got.get(sid, set()) == _center_rule_cells(geom, transform, shape), sid
+    parts = [{"type": "Polygon", "coordinates": p} for p in multi["coordinates"]]
+    want = _center_rule_cells(parts[0], transform, shape) | _center_rule_cells(parts[1], transform, shape)
+    overlap = _center_rule_cells(parts[0], transform, shape) & _center_rule_cells(parts[1], transform, shape)
+    assert overlap and got[len(geoms) - 1] == want
+
+
+def _python_free(df) -> str:
+    df.count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython", "ExistingRDD", "PythonRDD"):
+        if node in plan:
+            return node
+    return ""
+
+
+def test_center_rule_plans_run_no_python(spark):
+    """Center-rule rasterize and zonal_stats execute with no Python UDF
+    node and no Python RDD scan; the all_touched refine still has its
+    Arrow UDF (so the check can see one)."""
+    from pyspark.sql import functions as F
+
+    from rasterio_spark.operators.stats import zonal_stats
+
+    cells = spark.range(0, 100).select(
+        F.lit(1).alias("band"),
+        F.expr("CAST(id DIV 10 AS INT)").alias("row"),
+        (F.col("id") % 10).cast("int").alias("col"),
+        F.col("id").cast("double").alias("value"),
+        F.lit(True).alias("valid"),
+    )
+    assert _python_free(rasterize(spark, [BASIC_GEOMETRY], SHAPE)) == ""
+    assert _python_free(zonal_stats(cells, [BASIC_GEOMETRY], SHAPE)) == ""
+    assert _python_free(rasterize(spark, [BASIC_GEOMETRY], SHAPE, all_touched=True)) == "ArrowEvalPython"
