@@ -239,7 +239,7 @@ def time_stages(spark):
         lambda: J._polygon_cover(prepared[0], cover_res, prepared[1]),
     )
     out["pip.cover_rows"] = len(cover_pdf)
-    cov_df = t("pip.cover_createDataFrame", lambda: spark.createDataFrame(cover_pdf))
+    cov_df = t("pip.cover_createDataFrame", lambda: spark.createDataFrame(cover_pdf, J.COVER_SCHEMA))
     t("pip.cover_first_count", lambda: cov_df.count())
     tiled = tile_pages(pages, res=res)
     from rasterio_spark.functions import cell_exprs as CE

@@ -1,45 +1,18 @@
-"""Vectorized pandas/Arrow UDFs — the only places Python touches rows.
+"""Vectorized pandas/Arrow UDFs for the few row paths with no JVM form.
 
 Every UDF here is Arrow-batched and internally pure NumPy (input_hint:
-"no per-row Python"). Broadcast variables carry the small spatial
-structures (polygon rings, R-tree) to executors once.
+"no per-row Python"). Today that is the rotated-affine reverse
+transform; the pip_join refine runs in the JVM
+(``operators.join._refine``).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from rasterio_spark.grid.affine import Affine
-from rasterio_spark.grid.geometry import points_in_rings
-
-
-def make_pip_udf(flat_bcast):
-    """Point-in-polygon refine: (polygon_id, x, y) -> bool.
-
-    ``flat_bcast`` is a SparkContext.broadcast of a
-    geometry.FlatPolygons (all rings concatenated). The whole batch is
-    ray-cast in ONE flat vectorized pass — no per-polygon Python loop —
-    the residual filter of the filter-and-refine join (SURVEY.md §2.3).
-    """
-
-    @F.pandas_udf(BooleanType())
-    def pip(polygon_id: pd.Series, x: pd.Series, y: pd.Series, interior: pd.Series) -> pd.Series:
-        flat = flat_bcast.value
-        known = interior.values.astype(bool)
-        out = known.copy()  # interior cells are inside by construction
-        m = ~known
-        if m.any():
-            out[m] = flat.contains(
-                polygon_id.values[m],
-                x.values[m].astype("float64"),
-                y.values[m].astype("float64"),
-            )
-        return pd.Series(out)
-
-    return pip
 
 
 def make_rowcol_udf(transform: Affine):

@@ -1,10 +1,13 @@
 """Spatial joins — the north-rule core (BASELINE.json north_star).
 
 - ``pip_join``: pages x polygons point-in-polygon join via
-  filter-and-refine: polygon cover cells (driver-side, R-tree-pruned,
-  broadcast) -> equi-join on cell_id -> ray-casting refine in an
-  Arrow UDF. The spatial theta-join becomes an equi-join Catalyst can
-  broadcast or sort-merge (SURVEY.md §2.3).
+  filter-and-refine: polygon cover cells (driver-side, broadcast) ->
+  equi-join on cell_id -> refine. Interior cells accept outright;
+  boundary cells carry the polygon edges that meet their latitude band,
+  and the refine ray-casts the page against them in a JVM higher-order
+  function, so the join starts no Python worker. The spatial
+  theta-join becomes an equi-join Catalyst can broadcast or sort-merge
+  (SURVEY.md §2.3).
 - ``knn_join``: k nearest pages per query point by cell-ring expansion:
   rings grow until every query holds >= k candidates AND the expansion
   radius covers the k-th distance bound, then window row_number <= k.
@@ -26,7 +29,8 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -35,30 +39,61 @@ from rasterio_spark.grid.geometry import STRtree
 from rasterio_spark.operators.tile import DEFAULT_RES, tile_pages
 from rasterio_spark.sources.polygons import prepare_layer
 
+COVER_SCHEMA = (
+    "cell_id long, polygon_id long, poly_value double, interior boolean, "
+    "_edges array<struct<x0:double,y0:double,x1:double,y1:double>>"
+)
 
-def _polygon_cover(entries, res: int, rings_by_id=None) -> pd.DataFrame:
-    """(cell_id, polygon_id, value, interior) for every cell whose
-    extent overlaps a polygon's bbox — the join's build side.
+# Fraction of a cell side by which the cover widens each cell before
+# testing it against the polygon's edges. A page is placed in a cell by
+# a rounded floor, so it may sit a few ulps outside the cell's computed
+# extent; widening only turns interior or exterior cells into boundary
+# cells, which the refine tests exactly.
+_CELL_MARGIN = 1e-6
 
-    ``interior`` marks cells FULLY contained in the polygon: pages in
-    those cells are accepted without the ray-casting refine (classic
-    filter-and-refine with an interior shortcut — only the O(perimeter)
-    boundary cells pay the UDF, not the O(area) interior). Pure NumPy:
-    runs driver-side for small layers, executor-side per batch inside
-    :func:`_polygon_cover_distributed` above COVER_DISTRIBUTED_THRESHOLD
-    polygons. Size is O(total bbox area in cells), independent of page
-    count.
+
+def _ragged(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ranges [starts[i], starts[i] + counts[i])."""
+    return np.repeat(starts - (np.cumsum(counts) - counts), counts) + np.arange(int(counts.sum()))
+
+
+def _polygon_cover(entries, res: int, rings_by_id) -> pd.DataFrame:
+    """The join's build side (COVER_SCHEMA): one row per (cell, polygon)
+    for the cells of the polygon's bbox that the polygon touches.
+
+    - ``interior``: the cell lies wholly inside the polygon, so its
+      pages are accepted without a refine; ``_edges`` is NULL.
+    - Otherwise ``_edges`` holds the polygon's non-horizontal edges
+      whose y-range meets the cell's latitude band, and :func:`_refine`
+      ray-casts each page against them. Horizontal edges never pass the
+      half-open straddle test, and dropping them keeps the refine from
+      dividing by zero.
+    - Cells wholly outside (center outside, no edge crosses) are left
+      out.
+
+    Grid-edge cells (first/last row or column) are never interior and
+    never left out: ``rowcol_of`` clamps pages beyond the grid's extent
+    into them, so such a page can lie anywhere past the cell. Their band
+    is unbounded on its outer side. Polygons with an open ring get no
+    shortcut at all: their parity can flip inside a cell no edge
+    crosses.
+
+    Pure NumPy per polygon, with rows x edges masks and no per-cell
+    Python: runs driver-side for small layers, executor-side per batch
+    inside :func:`_polygon_cover_distributed` above
+    COVER_DISTRIBUTED_THRESHOLD polygons. Size is O(boundary + interior
+    cells), independent of page count.
     """
     from rasterio_spark.grid.geometry import _segments_intersect_rects, points_in_rings
 
     ny, nx = C.grid_shape(res)
     cell_w = C.LON_SPAN / nx
     cell_h = C.LAT_SPAN / ny
-    out_cells = []
-    out_pid = []
-    out_val = []
-    out_int = []
+    mx, my = cell_w * _CELL_MARGIN, cell_h * _CELL_MARGIN
+    out = {k: [] for k in ("cell_id", "polygon_id", "poly_value", "interior")}
+    n_edges, edges = [], []
     for pid, value, (left, bottom, right, top) in entries:
+        rings = rings_by_id[pid]
         r_lo, c_lo = C.rowcol_of(left, top, res)
         r_hi, c_hi = C.rowcol_of(right, bottom, res)
         rr = np.arange(min(r_lo, r_hi), max(r_lo, r_hi) + 1, dtype=np.int64)
@@ -66,38 +101,71 @@ def _polygon_cover(entries, res: int, rings_by_id=None) -> pd.DataFrame:
         grid_r, grid_c = np.meshgrid(rr, cc, indexing="ij")
         flat_r = grid_r.ravel()
         flat_c = grid_c.ravel()
-        ids = C.cell_id_from_rowcol(flat_r, flat_c, res)
-        if rings_by_id is not None and pid in rings_by_id:
-            rings = rings_by_id[pid]
-            # cell bbox in lon/lat (north-up grid: row 0 at LAT_MAX)
-            x0 = C.LON_MIN + flat_c * cell_w
-            x1 = x0 + cell_w
-            y1 = C.LAT_MAX - flat_r * cell_h
-            y0 = y1 - cell_h
-            center_in = points_in_rings((x0 + x1) / 2.0, (y0 + y1) / 2.0, rings)
-            rects = np.stack([x0, y0, x1, y1], axis=1)
-            p0 = np.concatenate([r[:-1] for r in rings])
-            p1 = np.concatenate([r[1:] for r in rings])
-            crossed = _segments_intersect_rects(p0, p1, rects)
-            interior = center_in & ~crossed
-        else:
-            interior = np.zeros(ids.shape, dtype=bool)
-        out_cells.append(ids)
-        out_pid.append(np.full(ids.shape, pid, dtype=np.int64))
-        out_val.append(np.full(ids.shape, value, dtype="float64"))
-        out_int.append(interior)
-    return pd.DataFrame(
-        {
-            "cell_id": np.concatenate(out_cells),
-            "polygon_id": np.concatenate(out_pid),
-            "poly_value": np.concatenate(out_val),
-            "interior": np.concatenate(out_int),
-        }
-    )
+        # cell bbox in lon/lat (north-up grid: row 0 at LAT_MAX)
+        x0 = C.LON_MIN + flat_c * cell_w
+        x1 = x0 + cell_w
+        y1 = C.LAT_MAX - flat_r * cell_h
+        y0 = y1 - cell_h
+        center_in = points_in_rings((x0 + x1) / 2.0, (y0 + y1) / 2.0, rings)
+        p0 = np.concatenate([r[:-1] for r in rings])
+        p1 = np.concatenate([r[1:] for r in rings])
+        rects = np.stack([x0 - mx, y0 - my, x1 + mx, y1 + my], axis=1)
+        crossed = _segments_intersect_rects(p0, p1, rects)
+        undecided = (flat_r == 0) | (flat_r == ny - 1) | (flat_c == 0) | (flat_c == nx - 1)
+        if not all(np.array_equal(r[0], r[-1]) for r in rings):
+            undecided[:] = True
+        keep = center_in | crossed | undecided
+        interior = (center_in & ~crossed & ~undecided)[keep]
+
+        # edges meeting each row's latitude band (rows x edges), then
+        # every boundary cell takes its row's list
+        sloped = p0[:, 1] != p1[:, 1]
+        e = np.concatenate([p0[sloped], p1[sloped]], axis=1)
+        top_y = C.LAT_MAX - rr * cell_h
+        band_hi = np.where(rr == 0, np.inf, top_y + my)
+        band_lo = np.where(rr == ny - 1, -np.inf, top_y - cell_h - my)
+        meets = (np.minimum(e[:, 1], e[:, 3])[None, :] <= band_hi[:, None]) & (
+            np.maximum(e[:, 1], e[:, 3])[None, :] >= band_lo[:, None]
+        )
+        row_n = meets.sum(axis=1)
+        row_edges = np.nonzero(meets)[1]
+        ri = flat_r[keep] - rr[0]
+        cnt = np.where(interior, 0, row_n[ri])
+        edges.append(e[row_edges[_ragged((np.cumsum(row_n) - row_n)[ri], cnt)]])
+        n_edges.append(cnt)
+
+        ids = C.cell_id_from_rowcol(flat_r[keep], flat_c[keep], res)
+        out["cell_id"].append(ids)
+        out["polygon_id"].append(np.full(ids.shape, pid, dtype=np.int64))
+        out["poly_value"].append(np.full(ids.shape, value, dtype="float64"))
+        out["interior"].append(interior)
+    pdf = pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
+    e = np.concatenate(edges)
+    offsets = np.concatenate([[0], np.cumsum(np.concatenate(n_edges))]).astype(np.int32)
+    pdf["_edges"] = pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.StructArray.from_arrays([pa.array(c) for c in np.ascontiguousarray(e.T)], ["x0", "y0", "x1", "y1"]),
+        mask=pa.array(pdf["interior"].values),
+    ).to_pandas()
+    return pdf
+
+
+def _refine(lon: Column, lat: Column) -> Column:
+    """Even-odd point-in-polygon over a cover-join candidate row: an
+    interior cell accepts; a boundary cell counts its ``_edges`` that a
+    ray from (lon, lat) to +x crosses. The half-open straddle test and
+    the x_at_y operation order are those of ``FlatPolygons.contains``,
+    so the two agree bit for bit."""
+
+    def crosses(e):
+        return ((e.y0 <= lat) != (e.y1 <= lat)) & (
+            lon < e.x0 + (lat - e.y0) * (e.x1 - e.x0) / (e.y1 - e.y0)
+        )
+
+    return F.col("interior") | (F.size(F.filter("_edges", crosses)) % 2 == 1)
 
 
 _LAYER_CACHE: dict = {}
-_COVER_ARRAY_CACHE: dict = {}
 
 # Above this many polygons the cover is built distributed (mapInPandas
 # over polygon batches) instead of a serial driver loop: at 10^5-10^6
@@ -108,13 +176,13 @@ COVER_DISTRIBUTED_THRESHOLD = 10_000
 # Cover-cell budget for the res+3 refinement loop (r6, guide
 # §2.4/§3.1): every pip_join action pays a BroadcastExchange that is
 # SERIAL in cover rows (measured ~4 s/1.2M rows per action on this
-# host), while the ray-casting refine the finer cover avoids is a
-# parallel Arrow batch filter (~0.2 s for the same layer). The old 2M
-# cap optimized the wrong side of that trade at every scale we can
-# measure; 150k cells keeps the per-action broadcast ~0.3 s. Jobs whose
-# refine really dominates (hour-long scans over 10^10+ pages) should
-# raise RASTERIO_SPARK_COVER_CELLS or pass cover_res explicitly — the
-# cover is a pure performance parameter, output is identical at any
+# host), while the refine the finer cover avoids is a parallel filter
+# (~0.2 s for the same layer). The old 2M cap optimized the wrong side
+# of that trade at every scale we can measure; 150k cells keeps the
+# per-action broadcast ~0.3 s. Jobs whose refine really dominates
+# (hour-long scans over 10^10+ pages) should raise
+# RASTERIO_SPARK_COVER_CELLS or pass cover_res explicitly — the cover
+# is a pure performance parameter, output is identical at any
 # resolution.
 def cover_cell_budget() -> int:
     """The cover-cell budget, read from the environment at call time."""
@@ -161,75 +229,16 @@ def _polygon_cover_distributed(spark, polygons: list[dict], res: int, batch_rows
             if entries:
                 yield _polygon_cover(entries, res, rings_by_id)
 
-    return src.mapInPandas(
-        build,
-        schema="cell_id long, polygon_id long, poly_value double, interior boolean",
-    )
-
-
-def _cover_arrays(spark, polygons: list[dict], cover_res: int, prepared=None) -> dict:
-    """Worker-resident cover index for strategy='probe': the cover
-    table as sorted flat numpy arrays (unique cells + per-cell slices
-    of (polygon_id, interior, value)), shipped via a Python broadcast —
-    sent to each executor ONCE per session and reused by every job,
-    unlike a per-action JVM BroadcastExchange."""
-    import hashlib
-    import json as _json
-
-    key = (
-        hashlib.sha256(
-            _json.dumps(
-                [(p["polygon_id"], p.get("value"), p.get("geom")) for p in polygons],
-                sort_keys=True,
-                default=list,
-            ).encode()
-        ).hexdigest(),
-        cover_res,
-        "arrays",
-    )
-    hit = _COVER_ARRAY_CACHE.get(key)
-    if hit is not None:
-        return hit
-    if len(polygons) > COVER_DISTRIBUTED_THRESHOLD:
-        # large layer: build executor-side, collect only the capped
-        # cover (bounded by the 2M-cell cap upstream) into the index
-        pdf = _polygon_cover_distributed(spark, polygons, cover_res).toPandas()
-    else:
-        entries, rings_by_id = prepared if prepared is not None else prepare_layer(polygons)
-        pdf = _polygon_cover(entries, cover_res, rings_by_id)
-    order = np.argsort(pdf["cell_id"].values, kind="stable")
-    cells = pdf["cell_id"].values[order]
-    pids = pdf["polygon_id"].values[order].astype(np.int64)
-    inter = pdf["interior"].values[order].astype(bool)
-    vals = pdf["poly_value"].values[order].astype("float64")
-    uniq, starts = np.unique(cells, return_index=True)
-    ends = np.append(starts[1:], len(cells))
-    bc = spark.sparkContext.broadcast((uniq, starts, ends, pids, inter, vals))
-    out = {"cells": uniq, "bc": bc}
-    _COVER_ARRAY_CACHE[key] = out
-    return out
-
-
-def _coarse_prefilter_cells(cover_cells: np.ndarray, cover_res: int, max_lit: int = 8192):
-    """Coarsen the covered-cell set until it fits a codegen'd literal
-    IN-set (<= max_lit entries): returns (prefilter_res, cell ids)."""
-    res = cover_res
-    _, rows, cols = C.decode(cover_cells)
-    while res > 0:
-        ids = np.unique(C.cell_id_from_rowcol(rows, cols, res))
-        if len(ids) <= max_lit:
-            return res, ids
-        res -= 1
-        rows, cols = rows >> 1, cols >> 1
-    return 0, np.unique(C.cell_id_from_rowcol(rows, cols, 0))
+    return src.mapInPandas(build, schema=COVER_SCHEMA)
 
 
 def _layer_index(spark, polygons: list[dict], cover_res: int | None, prepared=None):
-    """Driver-side layer index (entries, rings, flat broadcast, cover
-    DF) — built once per (layer, resolution) and memoized: this is the
-    'open the polygon layer' step a real deployment does once and
-    reuses across every job against it. ``cover_res=None`` skips the
-    cover build entirely (the R-tree probe strategy never joins it)."""
+    """The layer's join index, built once per (layer, resolution) and
+    memoized: this is the 'open the polygon layer' step a real
+    deployment does once and reuses across every job against it.
+    ``cover_res=None`` gives the broadcast ``FlatPolygons`` the R-tree
+    strategy ray-casts against; otherwise the broadcast cover DataFrame
+    (:func:`_polygon_cover`, ``cell_id`` renamed ``_cover_cell``)."""
     import hashlib
     import json as _json
 
@@ -252,35 +261,29 @@ def _layer_index(spark, polygons: list[dict], cover_res: int | None, prepared=No
     hit = _LAYER_CACHE.get(key)
     if hit is not None:
         return hit
-    from rasterio_spark.grid.geometry import FlatPolygons
-
     entries, rings_by_id = prepared if prepared is not None else prepare_layer(polygons)
-    bcast = spark.sparkContext.broadcast(FlatPolygons(rings_by_id))
-    cover = None
-    if cover_res is not None:
+    if cover_res is None:
+        from rasterio_spark.grid.geometry import FlatPolygons
+
+        index = spark.sparkContext.broadcast(FlatPolygons(rings_by_id))
+    else:
         if len(polygons) > COVER_DISTRIBUTED_THRESHOLD:
-            # large layer: executor-side batched build; localCheckpoint
-            # materializes it once so every cached reuse joins the
-            # stored cover instead of re-running the build
-            cover = _polygon_cover_distributed(
-                spark, polygons, cover_res
-            ).withColumnRenamed("cell_id", "_cover_cell").localCheckpoint()
+            # large layer: executor-side batched build
+            cover = _polygon_cover_distributed(spark, polygons, cover_res)
         else:
-            # localCheckpoint (eager) materializes the cover into executor
-            # blocks ONCE per layer: without it the cover stays a driver
-            # LocalTableScan and EVERY downstream action re-serializes all
-            # rows through the driver before its BroadcastExchange
-            # (measured: ~4 s/action at 1.2M rows, ~0.2 s checkpointed).
-            cover_pdf = _polygon_cover(entries, cover_res, rings_by_id)
-            cover = (
-                spark.createDataFrame(cover_pdf)
-                .withColumnRenamed("cell_id", "_cover_cell")
-                .localCheckpoint()
+            # an Arrow-backed local relation: a Python-list build would
+            # scan through a PythonRDD and start Python workers
+            cover = spark.createDataFrame(
+                _polygon_cover(entries, cover_res, rings_by_id), COVER_SCHEMA
             )
-        cover = F.broadcast(cover)
-    val = (entries, rings_by_id, bcast, cover)
-    _LAYER_CACHE[key] = val
-    return val
+        # localCheckpoint (eager) materializes the cover into executor
+        # blocks ONCE per layer: without it every downstream action
+        # re-runs the build, and a driver LocalTableScan re-serializes
+        # all rows before its BroadcastExchange (measured: ~4 s/action
+        # at 1.2M rows, ~0.2 s checkpointed)
+        index = F.broadcast(cover.withColumnRenamed("cell_id", "_cover_cell").localCheckpoint())
+    _LAYER_CACHE[key] = index
+    return index
 
 
 def pip_join(
@@ -300,20 +303,21 @@ def pip_join(
 
     ``cover_res`` (default res + 3, capped by cover size): the cover is
     built at a FINER resolution than the working tiling so most covered
-    cells are fully interior — those candidates skip the ray-casting
-    refine entirely; only the O(perimeter) boundary sliver pays the
-    Arrow UDF. The working ``cell_id``/tile columns stay at ``res``.
+    cells are fully interior — those candidates skip the refine
+    entirely; only the O(perimeter) boundary sliver is ray-cast, in the
+    JVM against the few edges its cover row carries. The working
+    ``cell_id``/tile columns stay at ``res``.
 
     ``strategy='auto'``: broadcast cover unless the layer's bbox area
     exceeds the cover cap even at the WORKING resolution (a cover that
     can't be built/broadcast at any useful res). Rationale (measured,
-    BENCH r1 vs r2): the cover join transfers only the ~f*n candidate
-    rows to Python, while the R-tree probe pays Arrow for every row —
-    once the cover build is amortized by the layer cache, broadcast
-    wins at every f < 1 (24M pages, f~0.65: 8.7 s vs 17.6 s). R-tree
-    remains the right call for one-shot jobs against huge ad-hoc
-    layers (no cover build at all); 'sort_merge' for covers too big to
-    broadcast but still enumerable.
+    BENCH r1 vs r2): the cover join refines only the ~f*n candidate
+    rows, while the R-tree probe pays Arrow for every row — once the
+    cover build is amortized by the layer cache, broadcast wins at
+    every f < 1 (24M pages, f~0.65: 8.7 s vs 17.6 s). R-tree remains
+    the right call for one-shot jobs against huge ad-hoc layers (no
+    cover build at all); 'sort_merge' for covers too big to broadcast
+    but still enumerable.
     """
     spark = pages.sparkSession
     tiled = tile_pages(pages, res=res, skew=skew, geocode=geocode)
@@ -323,18 +327,20 @@ def pip_join(
     # layer — three O(polygons) driver passes before any work started).
     # Prepared entries thread through every consumer below.
     prepared = prepare_layer(polygons)
-    probe_entries = prepared[0]
+    entries = prepared[0]
 
     def _bbox_cells_at(r_est: int) -> int:
         ny, nx = C.grid_shape(r_est)
         return sum(
             max(1, int((r - l) / (C.LON_SPAN / nx)) + 1)
             * max(1, int((t - b) / (C.LAT_SPAN / ny)) + 1)
-            for _, _, (l, b, r, t) in probe_entries
+            for _, _, (l, b, r, t) in entries
         )
 
     if strategy == "auto":
         strategy = "rtree" if _bbox_cells_at(res) > 2_000_000 else "broadcast"
+    if strategy not in ("broadcast", "sort_merge", "rtree"):
+        raise ValueError(f"unknown strategy {strategy!r}")
 
     if strategy != "rtree" and cover_res is None:
         cover_res = res + 3
@@ -344,7 +350,7 @@ def pip_join(
         while cover_res > res and _bbox_cells_at(cover_res) > budget:
             cover_res -= 1
 
-    entries, rings_by_id, bcast, cover = _layer_index(
+    index = _layer_index(
         spark, polygons, None if strategy == "rtree" else cover_res, prepared=prepared
     )
 
@@ -353,10 +359,10 @@ def pip_join(
         # does candidate lookup + ray-cast refine — no cover join at all.
         # Blob columns (html/text) never enter the Python stage (r6):
         # a mapInPandas Arrow-transfers every projected column BOTH
-        # ways, so the probe ships join keys + metadata only — the same
-        # contract as strategy='probe' (rejoin by url when the payload
-        # is needed; at scale you never move blobs through a spatial
-        # join). Guide §4.1: pass only the columns the function needs.
+        # ways, so the probe ships join keys + metadata only (rejoin by
+        # url when the payload is needed; at scale you never move blobs
+        # through a spatial join). Guide §4.1: pass only the columns
+        # the function needs.
         boxes = np.array([e[2] for e in entries], dtype="float64")
         ids = np.array([e[0] for e in entries], dtype=np.int64)
         values = {e[0]: e[1] for e in entries}
@@ -372,7 +378,7 @@ def pip_join(
 
         def probe(batches):
             tree, vals = tree_bc.value
-            flat = bcast.value
+            flat = index.value
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -392,116 +398,30 @@ def pip_join(
 
         return slim.mapInPandas(probe, schema=out_schema)
 
-    if strategy == "probe":
-        # Cover-probe: the same filter-and-refine candidates as the
-        # broadcast strategy, but the cover lives as a WORKER-RESIDENT
-        # index (Python broadcast, shipped once per session) instead of
-        # a per-action BroadcastExchange, and a coarse literal IN-set
-        # prefilter prunes non-candidate pages JVM-side before Arrow.
-        # Plan: scan -> codegen'd IN filter -> one mapInPandas. No JVM
-        # join, no exchange, nothing serial per run — the layout that
-        # keeps 8->32-core scaling at the host ceiling (BENCH r2).
-        from rasterio_spark.functions import cell_exprs as CE
-
-        entries, rings_by_id, bcast, _ = _layer_index(
-            spark, polygons, None, prepared=prepared
-        )
-        cov = _cover_arrays(spark, polygons, cover_res, prepared=prepared)
-        pre_res, pre_cells = _coarse_prefilter_cells(cov["cells"], cover_res)
-        pre_col = CE.encode_cols(F.col("lon"), F.col("lat"), pre_res)
-        # blob columns (html/text) never enter the Python stage: a
-        # mapInPandas must Arrow-transfer every input column, so the
-        # probe emits join KEYS + metadata only (rejoin by url when the
-        # payload is needed — at scale you never move blobs through a
-        # spatial join). The broadcast strategy keeps full columns
-        # because its UDF is a narrow 4-column filter.
-        slim = tiled.drop("html", "text")
-        pre = slim.where(pre_col.isin([int(x) for x in pre_cells]))
-
-        from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-        out_schema = StructType(
-            list(slim.schema.fields)
-            + [StructField("polygon_id", LongType()), StructField("poly_value", DoubleType())]
-        )
-        cov_bc = cov["bc"]
-
-        def probe_cover(batches):
-            cc, cs, ce, cpid, cint, cval = cov_bc.value
-            flat = bcast.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                lon = pdf["lon"].values
-                lat = pdf["lat"].values
-                r, c = C.rowcol_of(lon, lat, cover_res)
-                cells = C.cell_id_from_rowcol(r, c, cover_res)
-                idx = np.searchsorted(cc, cells)
-                idx[idx >= len(cc)] = 0
-                hit = cc[idx] == cells
-                rows = np.nonzero(hit)[0]
-                if not len(rows):
-                    continue
-                s = cs[idx[rows]]
-                cnt = ce[idx[rows]] - s
-                rep = np.repeat(rows, cnt)
-                within = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                ppos = np.repeat(s, cnt) + within
-                pids = cpid[ppos]
-                inter = cint[ppos]
-                vals = cval[ppos]
-                bnd = ~inter
-                ok = flat.contains(pids[bnd], lon[rep[bnd]], lat[rep[bnd]])
-                keep_rows = np.concatenate([rep[inter], rep[bnd][ok]])
-                keep_pids = np.concatenate([pids[inter], pids[bnd][ok]])
-                keep_vals = np.concatenate([vals[inter], vals[bnd][ok]])
-                if not len(keep_rows):
-                    continue
-                out = pdf.iloc[keep_rows].reset_index(drop=True)
-                out["polygon_id"] = keep_pids.astype("int64")
-                out["poly_value"] = keep_vals.astype("float64")
-                yield out
-
-        out = pre.mapInPandas(probe_cover, schema=out_schema)
-        if salt_buckets:
-            out = out.repartition(
-                spark.sparkContext.defaultParallelism,
-                F.col("cell_id"),
-                F.pmod(F.hash("url"), F.lit(salt_buckets)),
-            )
-        return out
-
     from rasterio_spark.functions import cell_exprs as CE
 
+    columns = tiled.columns
     tiled = tiled.withColumn(
         "_cover_cell", CE.encode_cols(F.col("lon"), F.col("lat"), cover_res)
     )
 
     if strategy == "broadcast":
-        cand = tiled.join(cover, "_cover_cell")
-    elif strategy == "sort_merge":
+        cand = tiled.join(index, "_cover_cell")
+    else:
         # north_star layout: range partition + in-partition sort on
         # (cell_id, warc_ts); merge-join hint avoids broadcast.
         lhs = (
             tiled.repartitionByRange(F.col("cell_id"))
             .sortWithinPartitions("cell_id", "warc_ts")
         )
-        cand = lhs.join(cover.hint("merge"), "_cover_cell")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    cand = cand.drop("_cover_cell")
+        cand = lhs.join(index.hint("merge"), "_cover_cell")
 
-    from rasterio_spark.functions.udfs import make_pip_udf
-
-    pip = make_pip_udf(bcast)
-    # interior shortcut: cover rows of fully-interior cells accept
-    # without ray casting — the flag rides INTO the UDF so the numpy
-    # pass only touches boundary-cell rows. One scan, one filter
-    # (measured best vs two-branch union, which re-scans + re-geocodes
-    # the pages side).
-    out = cand.where(
-        pip(F.col("polygon_id"), F.col("lon"), F.col("lat"), F.col("interior"))
-    ).drop("interior")
+    # One scan, one filter (measured best vs a two-branch union, which
+    # re-scans + re-geocodes the pages side); the explicit select keeps
+    # the pages columns first, then the polygon columns.
+    out = cand.where(_refine(F.col("lon"), F.col("lat"))).select(
+        *columns, "polygon_id", "poly_value"
+    )
 
     if salt_buckets:
         # Cell-prefix + salt layout for downstream keyed stages (hot

@@ -227,17 +227,3 @@ def test_sieve_gdal_merges_small_cluster(spark):
     out2 = sieve(cells, size=3, connectivity=4, mode="longest_border").toPandas()
     got2 = {(int(r.row), int(r.col)): r.value for r in out2.itertuples()}
     assert got2[(3, 3)] == 0.0  # small islands -> sea value under both rules
-
-
-def test_pip_probe_strategy_equivalent(spark, sf_dir):
-    """strategy='probe' (worker-resident cover, literal prefilter) must
-    emit exactly the broadcast strategy's (url, polygon_id) pairs."""
-    from rasterio_spark.operators.join import pip_join
-    from rasterio_spark.sources.pages import pages_from_documents
-    from rasterio_spark.sources.polygons import rect_polygons
-
-    pages = pages_from_documents(spark, sf_dir)
-    cols = ["url", "polygon_id", "poly_value"]
-    a = sorted(pip_join(pages, rect_polygons(), strategy="broadcast").select(*cols).collect())
-    b = sorted(pip_join(pages, rect_polygons(), strategy="probe").select(*cols).collect())
-    assert a == b and len(a) > 0

@@ -45,8 +45,7 @@ def test_pip_join_prepares_layer_once(spark, monkeypatch):
 
     monkeypatch.setattr(J, "prepare_layer", counting)
     J._LAYER_CACHE.clear()
-    J._COVER_ARRAY_CACHE.clear()
-    for strategy in ("auto", "broadcast", "rtree", "probe", "sort_merge"):
+    for strategy in ("auto", "broadcast", "rtree", "sort_merge"):
         calls["n"] = 0
         J.pip_join(pages, polys, strategy=strategy)
         assert calls["n"] == 1, (strategy, calls["n"])

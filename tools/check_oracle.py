@@ -80,6 +80,7 @@ def main() -> int:
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
 
+    from rasterio_spark.plans.cache import release_persisted
     from rasterio_spark.plans.session import get_session
 
     spark = get_session(app_name="oracle_check", cores=8, shuffle_partitions=8)
@@ -102,6 +103,11 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
             continue
+        finally:
+            # each query starts from an empty cache: no table persisted
+            # by an earlier query is reused or held for the whole run
+            release_persisted()
+            spark.catalog.clearCache()
         if name not in oq:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows (no oracle)")
             continue
