@@ -237,7 +237,11 @@ def run_suite(
             from rasterio_spark.operators.tile import tile_pages
             from rasterio_spark.sources.bucketed import read_bucketed, write_bucketed
 
-            bt_name = f"bench_pages_bucketed_{n}"
+            # keyed by layout (bucket count, one file per bucket) as
+            # well as size: a table cached by an older write_bucketed
+            # would time a different file layout
+            buckets = 32
+            bt_name = f"bench_pages_bucketed_{n}_b{buckets}_clustered"
             if not spark.catalog.tableExists(bt_name):
                 # the warehouse dir outlives the Derby metastore (a
                 # fresh metastore_db with a stale /tmp warehouse makes
@@ -252,7 +256,7 @@ def run_suite(
                 write_bucketed(
                     tile_pages(pages).select("url", "warc_ts", "lang", "cell_id"),
                     bt_name,
-                    buckets=32,
+                    buckets=buckets,
                 )
             bt = read_bucketed(spark, bt_name)
             asof_latest(bt.limit(1000)).count()  # untimed plan warm-up

@@ -9,11 +9,23 @@ partition it commits a lineage row
 
     (stage, partition_id, row_count, digest, committed_at)
 
-where digest = bit_xor(xxhash64(canonical row string)) — order-
-independent, so any task ordering yields the same digest. Resume =
-anti-join the input's partitions against committed lineage and write
-only the missing ones with dynamic partition overwrite (re-running a
-partition is idempotent: same bytes, same digest).
+Digest: the sum, mod 2^64, of one xxhash64 per row over every column
+but the partition column (sorted by name, each with its null flag; a
+column holding a map hashes its JSON), kept as a signed long. A sum is
+order-independent, so any task ordering yields the same digest, and
+duplicate rows add up instead of cancelling. The partition column is
+left out because partition discovery reads it back with its own type
+(a long tile id returns as an int).
+
+One materialization: the rows still to write (the input minus the
+committed partition ids) are clustered by partition and persisted
+once. One aggregate over them gives the partitions to write, their row
+counts and digests; the files are written from the same rows, so the
+lineage describes what was written even for a nondeterministic input.
+Clustering leaves each partition in one task, so each partition is one
+file (AQE splits only a partition larger than the advisory size), and
+each commit appends one lineage file. Re-running a partition is
+idempotent: dynamic partition overwrite replaces it whole.
 
 (The north-star names Iceberg; this sandbox has no Iceberg jars, so the
 same contract is implemented over parquet partitions + a lineage table.
@@ -24,30 +36,37 @@ from __future__ import annotations
 
 import os
 import time
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_DIR = "_lineage"
+LINEAGE_SCHEMA = "stage string, partition_id long, row_count long, digest long, committed_at long"
+
+
+def _digest(df: DataFrame, partition_col: str) -> Column:
+    """Aggregate column: sum of per-row xxhash64 mod 2^64 as a signed
+    long. The sum runs in decimal(38,0), so it cannot overflow under
+    ANSI mode; xxhash64 skips nulls, so each column also hashes its null
+    flag ((null, 1) and (1, null) differ)."""
+    parts: list[Column] = []
+    for f in sorted(df.schema.fields, key=lambda f: f.name):
+        if f.name != partition_col:
+            c = F.col(f.name)
+            parts += [F.to_json(c) if "map<" in f.dataType.simpleString() else c, c.isNull()]
+    mod = F.lit(Decimal(1 << 64))
+    s = F.pmod(F.sum(F.xxhash64(*parts or [F.lit(None)]).cast("decimal(38,0)")), mod)
+    return F.when(s >= F.lit(Decimal(1 << 63)), s - mod).otherwise(s).cast("long")
 
 
 def partition_lineage(df: DataFrame, stage: str, partition_col: str) -> DataFrame:
     """Lineage rows for a stage output: one per partition value."""
-    canon = F.to_json(F.struct(*[F.col(c) for c in sorted(df.columns)]))
-    h = F.xxhash64(canon)
     return (
-        df.withColumn("_h", h)
-        .groupBy(F.col(partition_col).alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.expr("bit_xor(_h)").alias("digest"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("partition_id").cast("long"),
-            "row_count",
-            "digest",
-        )
+        df.groupBy(F.col(partition_col).alias("partition_id"))
+        .agg(F.count(F.lit(1)).alias("row_count"), _digest(df, partition_col).alias("digest"))
+        .select(F.lit(stage).alias("stage"), F.col("partition_id").cast("long"), "row_count", "digest")
     )
 
 
@@ -60,6 +79,19 @@ def read_lineage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | N
     if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
     return spark.read.parquet(path)
+
+
+def _append_lineage(spark: SparkSession, out_dir: str, stage: str, rows: list) -> None:
+    """Commit lineage rows as one parquet file. A pandas local relation
+    with a DDL schema: a Python-list createDataFrame would start Python
+    workers."""
+    pdf = pd.DataFrame([r.asDict() for r in rows]).assign(committed_at=int(time.time()))
+    (
+        spark.createDataFrame(pdf, LINEAGE_SCHEMA)
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(os.path.join(out_dir, LINEAGE_DIR, stage))
+    )
 
 
 def checkpointed_write(
@@ -80,48 +112,40 @@ def checkpointed_write(
     Returns {written: n, skipped: n}.
     """
     spark = df.sparkSession
-    data_dir = os.path.join(out_dir, stage)
-
     done = read_lineage(spark, out_dir, stage)
-    if done is not None:
-        done_ids = [r["partition_id"] for r in done.select("partition_id").distinct().collect()]
-    else:
-        done_ids = []
+    done_ids = sorted({r[0] for r in done.select("partition_id").collect()}) if done is not None else []
 
-    todo_df = df if not done_ids else df.where(~F.col(partition_col).isin(done_ids))
-    todo_ids = [
-        r[0] for r in todo_df.select(partition_col).distinct().orderBy(partition_col).collect()
-    ]
-    if fail_after_partitions is not None:
-        write_ids = todo_ids[:fail_after_partitions]
-    else:
-        write_ids = todo_ids
-
-    written = 0
-    if write_ids:
-        part = df.where(F.col(partition_col).isin(write_ids))
-        # idempotent: dynamic overwrite replaces exactly these partitions.
-        # partitionOverwriteMode is set per-write (DataFrameWriter option)
-        # so the session conf — and unrelated overwrite writes later in
-        # the same session — are never mutated.
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(data_dir)
+    todo = df if not done_ids else df.where(~F.col(partition_col).isin(done_ids))
+    todo = todo.hint("rebalance", partition_col).persist()
+    try:
+        stats = sorted(
+            partition_lineage(todo, stage, partition_col).collect(), key=lambda r: r["partition_id"]
         )
-        lineage = partition_lineage(part, stage, partition_col).withColumn(
-            "committed_at", F.lit(int(time.time())).cast("long")
-        )
-        lineage.write.mode("append").parquet(os.path.join(out_dir, LINEAGE_DIR, stage))
-        written = len(write_ids)
+        commit = stats if fail_after_partitions is None else stats[:fail_after_partitions]
+        if commit:
+            part = todo
+            if len(commit) < len(stats):
+                part = todo.where(F.col(partition_col).isin([r["partition_id"] for r in commit]))
+            # idempotent: dynamic overwrite replaces exactly these partitions.
+            # partitionOverwriteMode is set per-write (DataFrameWriter option)
+            # so the session conf — and unrelated overwrite writes later in
+            # the same session — are never mutated.
+            (
+                part.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_col)
+                .parquet(os.path.join(out_dir, stage))
+            )
+            _append_lineage(spark, out_dir, stage, commit)
+    finally:
+        todo.unpersist()
 
-    if fail_after_partitions is not None and len(todo_ids) > len(write_ids):
+    if len(commit) < len(stats):
         raise RuntimeError(
-            f"simulated failure after {written} partitions "
-            f"({len(todo_ids) - written} remaining)"
+            f"simulated failure after {len(commit)} partitions "
+            f"({len(stats) - len(commit)} remaining)"
         )
-    return {"written": written, "skipped": len(done_ids)}
+    return {"written": len(commit), "skipped": len(done_ids)}
 
 
 def write_window(
@@ -177,8 +201,9 @@ def write_window(
     out = kept.unionByName(incoming.select(*kept.columns))
     # the write target is also the read source: materialize the patched
     # partitions first (localCheckpoint cuts the lineage back to the
-    # files we are about to replace)
-    out = out.localCheckpoint()
+    # files we are about to replace), clustered by partition so each
+    # touched tile is written as one file
+    out = out.hint("rebalance", partition_col).localCheckpoint()
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

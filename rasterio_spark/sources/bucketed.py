@@ -29,9 +29,15 @@ def write_bucketed(
 ) -> None:
     """Save ``df`` as a bucketed+sorted catalog table. ``sort_cols``
     should lead with the bucket key; pass sort_cols=bucket_cols when no
-    secondary order is wanted."""
+    secondary order is wanted.
+
+    Rows are first hash-partitioned into ``buckets`` partitions on the
+    bucket key: that is the same murmur3 pmod as the bucket id, so each
+    task writes exactly one bucket and the table holds one file per
+    bucket (unclustered rows write one file per task x bucket)."""
     (
-        df.write.mode(mode)
+        df.repartition(buckets, *bucket_cols)
+        .write.mode(mode)
         .bucketBy(buckets, *bucket_cols)
         .sortBy(*sort_cols)
         .format("parquet")

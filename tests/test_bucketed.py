@@ -90,3 +90,12 @@ def test_asof_latest_bucketed_no_exchange_and_equal(spark, sf_dir):
         assert rows == exp
     finally:
         spark.sql("DROP TABLE IF EXISTS t_asof_b")
+
+
+def test_bucketed_one_file_per_bucket(spark, bucketed_pair):
+    """Rows are clustered by bucket before the write: the table holds at
+    most one file per bucket, not one per (task x bucket)."""
+    pa, cb, pages, _ = bucketed_pair
+    assert pages.rdd.getNumPartitions() > 1
+    assert 1 < len(pa.inputFiles()) <= 16
+    assert len(cb.inputFiles()) <= 16

@@ -1,14 +1,21 @@
-"""plans/: scoped-persist release and lineage without a commit."""
+"""plans/: scoped-persist release and the resumable lineage write."""
 
 import os
 
+import pandas as pd
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from rasterio_spark.plans import cache
-from rasterio_spark.plans.lineage import LINEAGE_DIR, checkpointed_write, read_lineage, verify_lineage
+from rasterio_spark.plans import cache, lineage
+from rasterio_spark.plans.lineage import (
+    LINEAGE_DIR,
+    checkpointed_write,
+    partition_lineage,
+    read_lineage,
+    verify_lineage,
+)
 
 
 def test_release_persisted_logs_failure_and_releases_the_rest(spark, caplog):
@@ -65,3 +72,141 @@ def test_verify_lineage_without_lineage_reports_every_partition(spark, tmp_path)
     bad = verify_lineage(spark, out, "stage1", "tile").collect()
     assert sorted(r["partition_id"] for r in bad) == [0, 1, 2]
     assert all(r["row_count"] == 20 and r["c_rows"] is None for r in bad)
+
+
+def _eight_tiles(spark):
+    """8 tiles spread over 8 input partitions: every task holds rows of
+    every tile."""
+    return spark.range(0, 4000, 1, 8).select(
+        (F.col("id") % 8).cast("int").alias("tile"),
+        F.col("id").alias("v"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+    )
+
+
+def _parquet_files(d):
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def _assert_one_file_per_tile(out, stage, commits):
+    tiles = sorted(d for d in os.listdir(os.path.join(out, stage)) if d.startswith("tile="))
+    assert tiles == [f"tile={t}" for t in range(8)]
+    for t in tiles:
+        assert len(_parquet_files(os.path.join(out, stage, t))) == 1, t
+    assert len(_parquet_files(os.path.join(out, LINEAGE_DIR, stage))) == commits
+
+
+def test_checkpointed_write_one_file_per_tile_and_commit(spark, tmp_path):
+    """Uninterrupted, and crashed then resumed: one data file per tile
+    and one lineage file per commit."""
+    df = _eight_tiles(spark)
+    whole = str(tmp_path / "whole")
+    assert checkpointed_write(df, whole, "s", "tile") == {"written": 8, "skipped": 0}
+    _assert_one_file_per_tile(whole, "s", commits=1)
+
+    resumed = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="after 3 partitions"):
+        checkpointed_write(df, resumed, "s", "tile", fail_after_partitions=3)
+    assert checkpointed_write(df, resumed, "s", "tile") == {"written": 5, "skipped": 3}
+    _assert_one_file_per_tile(resumed, "s", commits=2)
+    assert verify_lineage(spark, resumed, "s", "tile").count() == 0
+
+
+def test_digest_counts_duplicates_and_ignores_order(spark):
+    """Duplicate rows add up instead of cancelling, and the digest does
+    not depend on how the rows are partitioned or ordered."""
+    a = spark.createDataFrame(pd.DataFrame({"tile": [0, 0], "v": [1, 1]}), "tile int, v long")
+    b = spark.createDataFrame(pd.DataFrame({"tile": [0, 0], "v": [2, 2]}), "tile int, v long")
+    (la,) = partition_lineage(a, "s", "tile").collect()
+    (lb,) = partition_lineage(b, "s", "tile").collect()
+    assert la["row_count"] == lb["row_count"] == 2
+    assert la["digest"] != lb["digest"]
+    assert la["digest"] != 0 and lb["digest"] != 0
+
+    df = _eight_tiles(spark)
+    lin = sorted(partition_lineage(df, "s", "tile").collect())
+    assert lin == sorted(partition_lineage(df.repartition(7), "s", "tile").collect())
+    assert lin == sorted(partition_lineage(df.orderBy(F.desc("v")), "s", "tile").collect())
+    assert len({r["digest"] for r in lin}) == 8
+
+    # a null moved to another column changes the digest
+    nulls = spark.createDataFrame(
+        pd.DataFrame({"tile": [0, 1], "x": [None, 1.0], "y": [1.0, None]}), "tile int, x double, y double"
+    )
+    d0, d1 = (r["digest"] for r in sorted(partition_lineage(nulls, "s", "tile").collect()))
+    assert d0 != d1
+
+
+def test_digest_under_ansi_and_with_a_map_column(spark):
+    """The digest's decimal sum and mod run under ANSI mode without
+    overflow, and a map column hashes through its JSON."""
+    df = spark.range(0, 500, 1, 4).select(
+        (F.col("id") % 2).cast("int").alias("tile"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        (F.col("id") * F.lit(0x7FFFFFFFFFFF)).alias("big"),
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = sorted(partition_lineage(df, "s", "tile").collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r["row_count"] for r in got] == [250, 250]
+    assert got == sorted(partition_lineage(df.repartition(3), "s", "tile").collect())
+
+
+def test_nondeterministic_input_commits_what_it_wrote(spark, tmp_path):
+    """The lineage comes from the rows that were written, so a
+    nondeterministic input still verifies straight after the write."""
+    import random
+
+    from pyspark.sql.types import DoubleType
+
+    noise = F.udf(lambda _: random.random(), DoubleType()).asNondeterministic()
+    df = spark.range(0, 400, 1, 4).select(
+        (F.col("id") % 4).cast("int").alias("tile"), noise(F.col("id")).alias("r")
+    )
+    out = str(tmp_path)
+    assert checkpointed_write(df, out, "s", "tile") == {"written": 4, "skipped": 0}
+    assert verify_lineage(spark, out, "s", "tile").count() == 0
+
+
+def test_checkpointed_write_leaves_nothing_persisted(spark, tmp_path):
+    """No persisted RDD outlives a call, whether it returns, raises its
+    simulated crash, or fails on its input."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    out = str(tmp_path / "a")
+    with pytest.raises(RuntimeError):
+        checkpointed_write(_eight_tiles(spark), out, "s", "tile", fail_after_partitions=2)
+    assert rdds().size() == before
+    checkpointed_write(_eight_tiles(spark), out, "s", "tile")
+    assert rdds().size() == before
+    bad = _eight_tiles(spark).withColumn(
+        "v", F.when(F.col("v") == 77, F.raise_error(F.lit("bad row"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="bad row"):
+        checkpointed_write(bad, str(tmp_path / "b"), "s", "tile")
+    assert rdds().size() == before
+
+
+def test_crash_between_data_write_and_lineage_is_reported_then_repaired(spark, tmp_path, monkeypatch):
+    """Files written but their lineage never appended: verify_lineage
+    reports those partitions, and the next call rewrites them clean."""
+    out = str(tmp_path)
+    df = _eight_tiles(spark)
+
+    def crash(*args):
+        raise RuntimeError("killed before the lineage append")
+
+    monkeypatch.setattr(lineage, "_append_lineage", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        checkpointed_write(df, out, "s", "tile")
+    monkeypatch.undo()
+    bad = verify_lineage(spark, out, "s", "tile").collect()
+    assert sorted(r["partition_id"] for r in bad) == list(range(8))
+    assert all(r["c_rows"] is None for r in bad)
+
+    assert checkpointed_write(df, out, "s", "tile") == {"written": 8, "skipped": 0}
+    assert verify_lineage(spark, out, "s", "tile").count() == 0
+    _assert_one_file_per_tile(out, "s", commits=1)

@@ -238,3 +238,45 @@ def test_write_window_partition_scoped(spark, tmp_path):
         for f in os.listdir(untouched_dir)
     )
     assert mtime_after == mtime_before
+
+
+def test_write_window_one_file_per_touched_tile(spark, tmp_path):
+    """The patched tiles are clustered before the write: each touched
+    tile is rewritten as one parquet file, while an untouched tile keeps
+    the files of the original multi-task write."""
+    import os
+
+    from rasterio_spark.grid.windows import Window
+    from rasterio_spark.plans.lineage import write_window
+
+    tile_h = 4
+    table = str(tmp_path / "layer_table")
+    cells = spark.range(0, 16 * 16, 1, 4).select(
+        F.lit(1).alias("band"),
+        F.expr("CAST(id % 16 AS INT)").alias("row"),
+        F.expr("CAST(id DIV 16 AS INT)").alias("col"),
+        F.col("id").cast("double").alias("value"),
+        F.lit(True).alias("valid"),
+    ).withColumn("tile_i", F.expr(f"row DIV {tile_h}").cast("int"))
+    cells.write.partitionBy("tile_i").parquet(table)
+
+    def files(tid):
+        d = os.path.join(table, f"tile_i={tid}")
+        return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+    untouched = files(3)
+    assert len(files(0)) == len(untouched) == 4  # one per writing task
+    new = spark.range(0, 16).select(
+        F.lit(1).alias("band"),
+        (2 + F.col("id") % 4).cast("int").alias("row"),
+        (5 + F.expr("id DIV 4")).cast("int").alias("col"),
+        F.lit(-7.0).alias("value"),
+        F.lit(True).alias("valid"),
+    )
+    res = write_window(spark, table, new, Window(5, 2, 4, 4), tile_height=tile_h)
+    assert res["partitions"] == [0, 1]
+    assert len(files(0)) == len(files(1)) == 1
+    assert files(3) == untouched
+    after = spark.read.parquet(table)
+    assert after.count() == 16 * 16
+    assert after.where("value = -7.0").count() == 16
