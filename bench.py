@@ -2,16 +2,15 @@
 
 Runs the headline tiling + PIP-join pipeline plus per-operator timings
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on),
+and prints ONE JSON line:
 
   {"metric": "...", "value": <suite seconds>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
    "headline_rows_per_sec": ..., "headline_rows": ...}
 
-Scaling evidence (BASELINE.md protocol): ``python bench.py --scaling``
-re-runs the headline job in two subprocesses at local[8] and local[32]
-on the same input and writes BENCH/BASELINE.md with throughput at both
-plus efficiency = (T32/T8)/4.
+The 20 timed keys live in one registry, ``suite()``; ``bench_extra.py``
+times, noop-sinks and explains entries of that same registry.
 
 Page count scales with the sf directory: n = sf * 6e6 (sf0.1 -> 600k
 synthetic pages; the documents-derived tables don't scale, so the
@@ -20,20 +19,19 @@ headline uses the deterministic synth generator at the proper size).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from rasterio_spark.plans.session import default_cores
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# disjoint-shard offset for the multi-process scaling harness
-# (tools/scaling_hunt.py --multiproc): each worker process reads pages
-# [OFFSET, OFFSET + n)
-OFFSET = int(os.environ.get("BENCH_OFFSET", "0"))
+CPUS = default_cores()
+HEADLINE = "headline_tile_pip_join"
 
 
 def sf_of(sf_dir: str) -> float:
@@ -51,61 +49,32 @@ def n_pages_for(sf: float) -> int:
 PAGES_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
 
 
-def ensure_pages(spark, n: int, geocoded: bool = True) -> str:
+def ensure_pages(spark, n: int) -> str:
     """Materialize the synthetic pages table to parquet once (untimed
     setup) — the real pipeline reads a stored table, so the timed job
     must too; measuring the generator would measure sha2 throughput,
     not the engine.
 
-    geocoded=True (default, the production architecture): (lon, lat)
-    are computed ONCE here at ingest (sha2 formulas, Zipf skew baked
-    in) and persisted as columns, so the timed pipeline never hashes —
-    queries then run with geocode='stored'."""
-    suffix = "geo_" if geocoded else ""
-    off = f"_o{OFFSET}" if OFFSET else ""
-    path = os.path.join(PAGES_CACHE, f"pages_{suffix}{n}{off}")
+    (lon, lat) are computed ONCE here at ingest (sha2 formulas, Zipf
+    skew baked in) and persisted as columns, so the timed pipeline
+    never hashes — queries then run with geocode='stored'."""
+    path = os.path.join(PAGES_CACHE, f"pages_geo_{n}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from rasterio_spark.sources.pages import synth_pages, with_geocode
 
-        df = synth_pages(spark, n, partitions=64, offset=OFFSET)
-        if geocoded:
-            df = with_geocode(df, skew=True, method="sha2")
+        df = with_geocode(synth_pages(spark, n, partitions=64), skew=True, method="sha2")
         # fixed file count so every parallelism level reads identical input
         df.write.mode("overwrite").parquet(path)
     return path
 
 
-def ensure_docs(spark, n: int) -> str:
-    """Materialize the synthetic documents corpus to parquet once
-    (untimed setup) — same contract as ensure_pages: the timed dedup
-    job reads a stored table, so generation cost never enters the
-    measurement."""
-    off = f"_o{OFFSET}" if OFFSET else ""
-    path = os.path.join(PAGES_CACHE, f"docs_{n}{off}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from rasterio_spark.sources.documents import synth_documents
+def build_headline(spark, pages_path: str):
+    """The north-star pipeline: pages table -> tile (res 7) -> PIP join
+    (auto strategy) -> join output (salted cell layout).
 
-        synth_documents(spark, n, partitions=64, offset=OFFSET).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
-
-
-GEOCODE = os.environ.get("BENCH_GEOCODE", "stored")
-STRATEGY = os.environ.get("BENCH_STRATEGY", "auto")
-# Cover resolution for the headline join. res 7 (= the working tiling
-# res) measured best at the bench scale: the broadcast build is ~20k
-# rows (sub-second, so the per-run serial BroadcastExchange stops
-# dominating 32-core walls) at the cost of more boundary-cell refine —
-# which is parallel. At cluster scale with hour-long jobs the res+3
-# interior-heavy cover amortizes and wins; both are one parameter.
-COVER_RES = int(os.environ.get("BENCH_COVER_RES", "7"))
-
-
-def build_headline(spark, pages_path: str, geocode: str = None):
-    """The north-star pipeline: pages table -> geocode+tile (res 7) ->
-    PIP join (auto strategy: broadcast R-tree probe at this layer's
-    covered-area fraction) -> join output (salted cell layout)."""
+    Cover resolution 7 (= the working tiling res) measured best at the
+    bench scale: the broadcast build is ~20k rows at the cost of more
+    boundary-cell refine, which is parallel."""
     from rasterio_spark.operators.join import pip_join
     from rasterio_spark.sources.polygons import synth_polygons
 
@@ -119,43 +88,19 @@ def build_headline(spark, pages_path: str, geocode: str = None):
             synth_polygons(),
             skew=True,
             salt_buckets=8,
-            geocode=geocode or GEOCODE,
-            strategy=STRATEGY,
-            cover_res=COVER_RES,
+            geocode="stored",
+            strategy="auto",
+            cover_res=7,
         )
 
 
-def run_headline(spark, n: int) -> tuple[float, int]:
-    path = ensure_pages(spark, n)
-    t0 = time.perf_counter()
-    joined = build_headline(spark, path).count()
-    dt = time.perf_counter() - t0
-    return dt, joined
+def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
+    """The bench registry: ``(queries, untimed)``.
 
-
-def run_headline_median(spark, n: int, runs: int = 3) -> tuple[float, int]:
-    """BASELINE.md protocol: warm-up discarded, median of >= 3 runs."""
-    times = []
-    rows = 0
-    for _ in range(runs):
-        dt, rows = run_headline(spark, n)
-        times.append(dt)
-    times.sort()
-    return times[len(times) // 2], rows
-
-
-def run_suite(
-    spark, sf_dir: str, n: int, only: set | None = None, repeats: int = 1
-) -> dict[str, float]:
-    """Per-operator wall-clock (seconds). Each entry is an action over
-    the full plan (count or small collect).
-
-    ``only`` restricts to a subset of query names (regression pinning);
-    ``repeats`` > 1 re-times each selected entry that many times and
-    keeps the MINIMUM (steady-state timing: the first pass pays JIT/
-    codegen, later passes measure the operator)."""
-    import warnings
-
+    ``queries`` maps each of the 20 keys, in run order, to a thunk that
+    builds its DataFrame (or a dict of DataFrames); a key's time covers
+    the thunk plus a count() of what it returns. ``untimed`` maps a key
+    to set-up or plan warm-up that runs just before that key is timed."""
     from pyspark.sql import functions as F
 
     from rasterio_spark.grid.affine import Affine
@@ -165,12 +110,14 @@ def run_suite(
     from rasterio_spark.operators.dedup import dedup_groups, minhash_lsh_pairs
     from rasterio_spark.operators.similarity import cosine_topk
     from rasterio_spark.operators.stats import zonal_stats
-    from rasterio_spark.operators.tile import cell_histogram, tile_counts
-    from rasterio_spark.operators.warp import downsample, reproject
+    from rasterio_spark.operators.tile import cell_histogram, tile_counts, tile_pages
+    from rasterio_spark.operators.warp import build_pyramid, downsample, reproject
     from rasterio_spark.operators.window_read import read_boundless
-    from rasterio_spark.sources.polygons import rect_polygons, synth_polygons
+    from rasterio_spark.sources.bucketed import read_bucketed, write_bucketed
+    from rasterio_spark.sources.polygons import synth_polygons
 
-    pages = spark.read.parquet(ensure_pages(spark, n))
+    pages_path = ensure_pages(spark, n)
+    pages = spark.read.parquet(pages_path)
     # big synthetic cell grid (~2n cells) for raster ops
     grid_w = 1024
     cells = spark.range(0, 2 * n).select(
@@ -188,522 +135,172 @@ def run_suite(
         (F.col("id") % 251).cast("double").alias("value"),
         (F.col("id") % 251 != 0).alias("valid"),
     )
+    polys = synth_polygons()
+
+    def docs():
+        return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    @functools.cache
+    def bucketed():
+        # the once-at-ingest shuffle: tile + bucketBy(32, cell_id)
+        # sortBy(cell_id, warc_ts), written once per session (the
+        # in-memory catalog does not outlive the process). Keyed by
+        # layout (bucket count, one file per bucket) as well as size.
+        buckets = 32
+        bt_name = f"bench_pages_bucketed_{n}_b{buckets}_clustered"
+        if not spark.catalog.tableExists(bt_name):
+            # the warehouse dir outlives the Derby metastore (a fresh
+            # metastore_db with a stale /tmp warehouse makes saveAsTable
+            # fail with LOCATION_ALREADY_EXISTS) — this is a bench
+            # cache, so drop the orphaned location
+            import shutil
+
+            wh = spark.conf.get("spark.sql.warehouse.dir")
+            loc = os.path.join(wh.removeprefix("file:"), bt_name)
+            if os.path.isdir(loc):
+                shutil.rmtree(loc, ignore_errors=True)
+            write_bucketed(
+                tile_pages(pages).select("url", "warc_ts", "lang", "cell_id"),
+                bt_name,
+                buckets=buckets,
+            )
+        return read_bucketed(spark, bt_name)
+
+    # production dedup config: xxh64 shingle hashes (one JVM hash call
+    # instead of a MessageDigest allocation — the sha2 variant exists
+    # only for DuckDB-oracle parity) + bucket cap. 128 perms / 16 bands
+    # is the production signature width.
+    mh128 = {"num_perm": 128, "bands": 16}
+
+    queries = {
+        HEADLINE: lambda: build_headline(spark, pages_path),
+        "tile_counts": lambda: tile_counts(pages),
+        "cell_histogram": lambda: cell_histogram(pages),
+        "pip_join_broadcast": lambda: pip_join(pages, polys, strategy="broadcast"),
+        "pip_join_sort_merge": lambda: pip_join(pages, polys, strategy="sort_merge"),
+        "pip_join_rtree": lambda: pip_join(pages, polys, strategy="rtree"),
+        "pip_join_auto": lambda: pip_join(pages, polys),
+        "knn": lambda: knn_join(
+            pages, [(i, -170.0 + 23.0 * i, -80.0 + 11.0 * i) for i in range(8)], k=10
+        ),
+        "asof_latest": lambda: asof_latest(pages),
+        # identical as-of semantics over the bucketed layout: the
+        # window's distribution is satisfied by bucketing, so the plan
+        # has ZERO Exchange (pytest-asserted in tests/test_bucketed.py);
+        # the delta vs `asof_latest` is what the ingest-time shuffle
+        # buys every downstream query
+        "asof_latest_bucketed": lambda: asof_latest(bucketed()),
+        "window_read_boundless": lambda: read_boundless(cells, Window(-8, -8, 1040, 600)),
+        "merge_first": lambda: merge(layers, "first"),
+        "downsample_average": lambda: downsample(cells, 8, "average"),
+        "overview_pyramid": lambda: build_pyramid(cells, [2, 4, 8]),
+        "zonal_stats": lambda: zonal_stats(
+            cells,
+            [
+                {
+                    "type": "Polygon",
+                    "coordinates": [[(x0, y0), (x0, y0 + 220), (x0 + 260, y0 + 220),
+                                     (x0 + 260, y0), (x0, y0)]],
+                }
+                for x0, y0 in ((40, 30), (300, 120), (620, 400), (100, 700))
+            ],
+            (1024, 1024),
+        ),
+        "reproject_cubic": lambda: reproject(
+            cells.where(F.col("row") < 256),
+            src_transform=Affine.identity(),
+            src_crs="EPSG:4326",
+            dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
+            dst_crs="EPSG:4326",
+            dst_width=512,
+            dst_height=128,
+            resampling="cubic",
+            src_nodata=0.0,
+        ),
+        "minhash_lsh": lambda: minhash_lsh_pairs(docs(), max_bucket=50, hash_method="xxh64"),
+        "minhash_lsh_128": lambda: minhash_lsh_pairs(
+            docs(), max_bucket=50, hash_method="xxh64", **mh128
+        ),
+        "dedup_groups": lambda: dedup_groups(
+            docs(), threshold=0.2, max_bucket=50, hash_method="xxh64"
+        ),
+        "cosine_topk": lambda: cosine_topk(
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), [0, 7, 42, 99], k=10
+        ),
+    }
+    untimed = {
+        # a 1/6-size headline run: JIT and codegen for the join plan
+        HEADLINE: lambda: build_headline(spark, ensure_pages(spark, max(n // 6, 10_000))).count(),
+        "asof_latest_bucketed": lambda: asof_latest(bucketed().limit(1000)).count(),
+        # the dedup plans JIT ~3s of generated code on first use, which
+        # is setup, not the operator: one tiny pass per signature width
+        "minhash_lsh": lambda: minhash_lsh_pairs(
+            docs().limit(200), max_bucket=50, hash_method="xxh64"
+        ).count(),
+        "minhash_lsh_128": lambda: minhash_lsh_pairs(
+            docs().limit(200), max_bucket=50, hash_method="xxh64", **mh128
+        ).count(),
+    }
+    return queries, untimed
+
+
+def count(built) -> int:
+    """Rows of a registry entry: a DataFrame, or a dict of them."""
+    if isinstance(built, dict):
+        return sum(df.count() for df in built.values())
+    return built.count()
+
+
+def run_suite(spark, sf_dir: str, n: int) -> tuple[dict[str, float], dict[str, int]]:
+    """Wall-clock seconds and row count of every registry key.
+
+    Each key runs its untimed warm-up, if any, then is timed once over
+    thunk + count(); the headline is the median of 3 timed runs."""
+    import warnings
 
     timings: dict[str, float] = {}
-
-    def timed(name, fn):
-        if only is not None and name not in only:
-            return
-        best = None
-        for _ in range(max(1, repeats)):
-            t0 = time.perf_counter()
-            fn()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-
+    rows: dict[str, int] = {}
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        polys = synth_polygons()
-        timed("tile_counts", lambda: tile_counts(pages).count())
-        timed("cell_histogram", lambda: cell_histogram(pages).count())
-        timed(
-            "pip_join_broadcast",
-            lambda: pip_join(pages, polys, strategy="broadcast").count(),
-        )
-        timed(
-            "pip_join_sort_merge",
-            lambda: pip_join(pages, polys, strategy="sort_merge").count(),
-        )
-        timed("pip_join_rtree", lambda: pip_join(pages, polys, strategy="rtree").count())
-        timed("pip_join_auto", lambda: pip_join(pages, polys).count())
-        timed(
-            "knn",
-            lambda: knn_join(
-                pages, [(i, -170.0 + 23.0 * i, -80.0 + 11.0 * i, ) for i in range(8)], k=10
-            ).count(),
-        )
-        timed("asof_latest", lambda: asof_latest(pages).count())
-
-        # bucketed layout on the bench path (r4 verdict item 4): the
-        # once-at-ingest shuffle. Setup (untimed, cached across runs in
-        # the warehouse): tile + bucketBy(32, cell_id) sortBy(cell_id,
-        # warc_ts). Timed: identical as-of semantics over the stored
-        # layout — the window's distribution is satisfied by bucketing,
-        # so the plan has ZERO Exchange (pytest-asserted in
-        # tests/test_bucketed.py); the delta vs `asof_latest` is what
-        # the ingest-time shuffle buys every downstream query.
-        if only is None or "asof_latest_bucketed" in only:
-            from rasterio_spark.operators.tile import tile_pages
-            from rasterio_spark.sources.bucketed import read_bucketed, write_bucketed
-
-            # keyed by layout (bucket count, one file per bucket) as
-            # well as size: a table cached by an older write_bucketed
-            # would time a different file layout
-            buckets = 32
-            bt_name = f"bench_pages_bucketed_{n}_b{buckets}_clustered"
-            if not spark.catalog.tableExists(bt_name):
-                # the warehouse dir outlives the Derby metastore (a
-                # fresh metastore_db with a stale /tmp warehouse makes
-                # saveAsTable fail with LOCATION_ALREADY_EXISTS) —
-                # this is a bench cache, so drop the orphaned location
-                import shutil
-
-                wh = spark.conf.get("spark.sql.warehouse.dir")
-                loc = os.path.join(wh.removeprefix("file:"), bt_name)
-                if os.path.isdir(loc):
-                    shutil.rmtree(loc, ignore_errors=True)
-                write_bucketed(
-                    tile_pages(pages).select("url", "warc_ts", "lang", "cell_id"),
-                    bt_name,
-                    buckets=buckets,
-                )
-            bt = read_bucketed(spark, bt_name)
-            asof_latest(bt.limit(1000)).count()  # untimed plan warm-up
-            timed("asof_latest_bucketed", lambda: asof_latest(bt).count())
-        timed("window_read_boundless", lambda: read_boundless(cells, Window(-8, -8, 1040, 600)).count())
-        timed("merge_first", lambda: merge(layers, "first").count())
-        timed("downsample_average", lambda: downsample(cells, 8, "average").count())
-
-        def _pyramid():
-            from rasterio_spark.operators.warp import build_pyramid
-
-            levels = build_pyramid(cells, [2, 4, 8])
-            for df in levels.values():
-                df.count()
-
-        timed("overview_pyramid", _pyramid)
-        timed(
-            "zonal_stats",
-            lambda: zonal_stats(
-                cells,
-                [
-                    {
-                        "type": "Polygon",
-                        "coordinates": [[(x0, y0), (x0, y0 + 220), (x0 + 260, y0 + 220),
-                                         (x0 + 260, y0), (x0, y0)]],
-                    }
-                    for x0, y0 in ((40, 30), (300, 120), (620, 400), (100, 700))
-                ],
-                (1024, 1024),
-            ).count(),
-        )
-        timed(
-            "reproject_cubic",
-            lambda: reproject(
-                cells.where(F.col("row") < 256),
-                src_transform=Affine.identity(),
-                src_crs="EPSG:4326",
-                dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
-                dst_crs="EPSG:4326",
-                dst_width=512,
-                dst_height=128,
-                resampling="cubic",
-                src_nodata=0.0,
-            ).count(),
-        )
-        # production dedup config: xxh64 shingle hashes (one JVM hash
-        # call instead of a MessageDigest allocation — the sha2 variant
-        # exists only for DuckDB-oracle parity) + bucket cap.
-        # One tiny untimed pass first: the dedup plans JIT ~3s of
-        # generated code on first use, which is setup, not the operator.
-        minhash_lsh_pairs(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200),
-            max_bucket=50,
-            hash_method="xxh64",
-        ).count()
-        timed(
-            "minhash_lsh",
-            lambda: minhash_lsh_pairs(
-                spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                max_bucket=50,
-                hash_method="xxh64",
-            ).count(),
-        )
-        # production signature width (r4 verdict item 8): 128 perms /
-        # 16 bands. Same one-shuffle signature agg — 128 min() columns
-        # instead of 16 — and an 8x-wider band explode before the
-        # bucket join. Untimed narrow pass first (plan JIT, like the
-        # 16-perm entry above).
-        minhash_lsh_pairs(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200),
-            max_bucket=50,
-            hash_method="xxh64",
-            num_perm=128,
-            bands=16,
-        ).count()
-        timed(
-            "minhash_lsh_128",
-            lambda: minhash_lsh_pairs(
-                spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                max_bucket=50,
-                hash_method="xxh64",
-                num_perm=128,
-                bands=16,
-            ).count(),
-        )
-        timed(
-            "dedup_groups",
-            lambda: dedup_groups(
-                spark.read.parquet(f"{sf_dir}/documents.parquet"),
-                threshold=0.2,
-                max_bucket=50,
-                hash_method="xxh64",
-            ).count(),
-        )
-        timed(
-            "cosine_topk",
-            lambda: cosine_topk(
-                spark.read.parquet(f"{sf_dir}/embeddings.parquet"), [0, 7, 42, 99], k=10
-            ).count(),
-        )
-    return timings
-
-
-def _await_barrier() -> None:
-    """Multi-process sync: BENCH_BARRIER='dir:count'. Each worker drops
-    a ready-file after its (untimed) cache build + warm-up, then spins
-    until all workers are ready — so the timed windows of concurrent
-    local[8] processes actually overlap (emulating N executors)."""
-    spec = os.environ.get("BENCH_BARRIER")
-    if not spec:
-        return
-    bdir, count = spec.rsplit(":", 1)
-    os.makedirs(bdir, exist_ok=True)
-    with open(os.path.join(bdir, f"ready.{OFFSET}.{os.getpid()}"), "w") as f:
-        f.write("1")
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        if len([f for f in os.listdir(bdir) if f.startswith("ready.")]) >= int(count):
-            return
-        time.sleep(0.25)
-    raise TimeoutError(f"barrier {spec} never filled")
+        queries, untimed = suite(spark, sf_dir, n)
+        for name, build in queries.items():
+            if name in untimed:
+                untimed[name]()
+            times = []
+            for _ in range(3 if name == HEADLINE else 1):
+                t0 = time.perf_counter()
+                rows[name] = count(build())
+                times.append(time.perf_counter() - t0)
+            timings[name] = round(sorted(times)[len(times) // 2], 3)
+    return timings, rows
 
 
 def main() -> None:
-    if "--scaling" in sys.argv:
-        run_scaling()
-        return
-    if "--prepare-only" in sys.argv:
-        # build this shard's parquet caches (full + warm-up size) and
-        # exit — run sequentially before a concurrent scaling pass so
-        # no worker writes a cache while another's clock is running.
-        # BENCH_JOB=dedup prepares the documents corpus instead.
-        from rasterio_spark.plans.session import get_session
-
-        n = int(os.environ.get("BENCH_N", "600000"))
-        spark = get_session(app_name="bench_prepare", cores=8, shuffle_partitions=8)
-        if os.environ.get("BENCH_JOB") == "dedup":
-            ensure_docs(spark, n)
-        else:
-            ensure_pages(spark, n)
-            ensure_pages(spark, min(n, 100_000))
-        spark.stop()
-        return
-    if "--dedup-only" in sys.argv:
-        # shuffle-heavy scaling subject (round-3 VERDICT item 4): the
-        # MinHash+LSH candidate-pair job — posexplode shingles ->
-        # signature groupBy -> band explode -> bucket self-join. Wide
-        # shuffles at every stage, unlike the map-heavy PIP headline.
-        from rasterio_spark.operators.dedup import minhash_lsh_pairs
-        from rasterio_spark.plans.session import get_session
-
-        n = int(os.environ.get("BENCH_N", "200000"))
-        # production signature width on demand (scaling_hunt --job
-        # dedup128): 128 perms / 16 bands instead of the default 16/4
-        num_perm = int(os.environ.get("BENCH_DEDUP_PERMS", "16"))
-        bands = 16 if num_perm >= 128 else 4
-        spark = get_session(
-            app_name="bench_dedup", cores=CPUS, shuffle_partitions=max(CPUS, 8)
-        )
-        docs = spark.read.parquet(ensure_docs(spark, n))
-        # warm-up (JIT, codegen) on a slice, discarded
-        warm_hi = OFFSET + min(n // 20, 10_000)
-        minhash_lsh_pairs(
-            docs.where(f"doc_id < {warm_hi}"),
-            max_bucket=50,
-            hash_method="xxh64",
-            num_perm=num_perm,
-            bands=bands,
-        ).count()
-        _await_barrier()
-        times = []
-        pairs = 0
-        for _ in range(3):
-            t0 = time.perf_counter()
-            pairs = minhash_lsh_pairs(
-                docs, max_bucket=50, hash_method="xxh64", num_perm=num_perm, bands=bands
-            ).count()
-            times.append(time.perf_counter() - t0)
-        times.sort()
-        print(
-            json.dumps(
-                {
-                    "sec": times[0],
-                    "median_sec": times[len(times) // 2],
-                    "rows": n,
-                    "pairs": pairs,
-                    "cpus": CPUS,
-                }
-            )
-        )
-        spark.stop()
-        return
-    if "--headline-only" in sys.argv:
-        # subprocess mode for scaling runs: print seconds + rows
-        from rasterio_spark.plans.session import get_session
-
-        n = int(os.environ.get("BENCH_N", "600000"))
-        spark = get_session(app_name="bench_headline", cores=CPUS, shuffle_partitions=max(CPUS, 8))
-        run_headline(spark, min(n, 100_000))  # warm-up (JIT, codegen)
-        _await_barrier()
-        times = []
-        rows = 0
-        for _ in range(4):
-            dt, rows = run_headline(spark, n)
-            times.append(dt)
-        times.sort()
-        # report both: best (robust to host phase shifts on this shared
-        # VM) and median; scaling uses best-of
-        print(json.dumps({"sec": times[0], "median_sec": times[len(times) // 2], "rows": rows, "cpus": CPUS}))
-        spark.stop()
-        return
-
-    if "--suite-only" in sys.argv:
-        # regression pinning: time only $BENCH_ONLY queries, best of
-        # $BENCH_REPEATS passes each (first pass pays JIT/codegen)
-        from rasterio_spark.plans.session import get_session
-
-        names = set(os.environ.get("BENCH_ONLY", "").split(",")) - {""}
-        repeats = int(os.environ.get("BENCH_REPEATS", "3"))
-        sf = sf_of(SF_DIR)
-        n = n_pages_for(sf)
-        spark = get_session(
-            app_name="bench_subset", cores=CPUS, shuffle_partitions=max(CPUS, 8)
-        )
-        q = run_suite(spark, SF_DIR, n, only=names or None, repeats=repeats)
-        print(json.dumps({"queries": q, "sf": sf, "cpus": CPUS, "repeats": repeats}))
-        spark.stop()
-        return
-
     from rasterio_spark.plans.session import get_session
 
     sf = sf_of(SF_DIR)
     n = n_pages_for(sf)
     spark = get_session(app_name="bench", cores=CPUS, shuffle_partitions=max(CPUS, 8))
     t_suite0 = time.perf_counter()
-    # warm-up headline at 1/6 size, discarded; median of 3 timed runs
-    run_headline(spark, max(n // 6, 10_000))
-    dt_head, joined = run_headline_median(spark, n)
-    queries = run_suite(spark, SF_DIR, n)
+    queries, rows = run_suite(spark, SF_DIR, n)
     suite_sec = round(time.perf_counter() - t_suite0, 3)
-    tiles_joined = n + joined
-    out = {
-        "metric": "tiling+PIP-join pipeline suite",
-        "value": suite_sec,
-        "unit": "sec",
-        "queries": {"headline_tile_pip_join": round(dt_head, 3), **queries},
-        "sf": sf,
-        "n_pages": n,
-        "headline_rows": tiles_joined,
-        "headline_rows_per_sec": round(tiles_joined / dt_head, 1),
-        "cpus": CPUS,
-    }
-    # attach the large-scale scaling evidence (BENCH/BASELINE.md
-    # protocol) if a hunt log exists, nested under the log file it came
-    # from: those cycles ran on a 32-core host, not at this run's "cpus"
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    historical: dict[str, dict] = {}
-    log = os.path.join(bench_dir, "scaling_log.jsonl")
-    if os.path.exists(log):
-        recs = [json.loads(l) for l in open(log)]
-        # only cycles at the latest record's page count: minima taken
-        # across mixed-n cycles would pair a small-n time with a large-n
-        # row count (ADVICE r2)
-        recs = [r for r in recs if recs and r["n"] == recs[-1]["n"]]
-        if recs:
-            g8 = min(r["sec8"] for r in recs)
-            g32 = min(r["sec32"] for r in recs)
-            rows = recs[-1]["rows"]
-            historical.setdefault("BENCH/scaling_log.jsonl", {})["scaling"] = {
-                "n_pages": recs[-1]["n"],
-                "rows": rows,
-                "best_sec8": round(g8, 2),
-                "best_sec32": round(g32, 2),
-                "tp8": round(rows / g8, 1),
-                "tp32": round(rows / g32, 1),
-                "efficiency": round((rows / g32) / (rows / g8) / 4.0, 4),
-                "jvm_control_eff_range": [
-                    min(r.get("jvm_control_eff", 1.0) for r in recs),
-                    max(r.get("jvm_control_eff", 0.0) for r in recs),
-                ],
-                "cycles": len(recs),
-            }
-    mp_log = os.path.join(bench_dir, "scaling_mp_log.jsonl")
-    if os.path.exists(mp_log):
-        all_recs = [json.loads(l) for l in open(mp_log)]
-        for job, base_key in (
-            ("pip", "scaling_multiproc"),
-            ("dedup", "scaling_multiproc_dedup"),
-            ("dedup128", "scaling_multiproc_dedup128"),
-        ):
-            jrecs = [r for r in all_recs if r.get("job", "pip") == job]
-            # pinned (taskset-confined, honest core accounting) and
-            # free-floating cycles are different protocols with
-            # different tp1 baselines — summarize them separately
-            for pinned, out_key in ((False, base_key), (True, base_key + "_pinned")):
-                mrecs = [r for r in jrecs if bool(r.get("pinned")) == pinned]
-                mrecs = [r for r in mrecs if mrecs and r["n"] == mrecs[-1]["n"]]
-                if not mrecs:
-                    continue
-                # calm-cycle filter (round-2 protocol): report only cycles
-                # whose host probes were all quiet, so a slow baseline in a
-                # degraded phase can't inflate the efficiency
-                calm = [
-                    r
-                    for r in mrecs
-                    if max(r["probe_before"], r["probe_mid"], r["probe_after"]) <= 0.05
-                ]
-                pool = calm if calm else mrecs
-                best = max(pool, key=lambda r: r["eff"])
-                entry = {
-                    "n_pages": best["n"],
-                    "workers": best["workers"],
-                    "tp1": best["tp1"],
-                    "tp4": best["tp4"],
-                    "efficiency": best["eff"],
-                    "best_aggregate_rows_per_sec": max(r["tp4"] for r in pool),
-                    "calm_cycles": len(calm),
-                    "cycles": len(mrecs),
-                }
-                ctrls = [r["control_eff"] for r in pool if r.get("control_eff")]
-                if ctrls:
-                    # same-cycle numpy 8->32-process control: the host's
-                    # own ceiling in the window the cycle ran (read eff
-                    # against this, per BENCH/BASELINE.md)
-                    entry["numpy_control_eff_range"] = [min(ctrls), max(ctrls)]
-                historical.setdefault("BENCH/scaling_mp_log.jsonl", {})[out_key] = entry
-    if historical:
-        out["historical_32core_scaling"] = historical
-    print(json.dumps(out))
-    spark.stop()
-
-
-def run_scaling() -> None:
-    """BASELINE.md protocol: identical job at local[8] and local[32].
-
-    Uses a compute-bound input (default 24M pages, override with
-    BENCH_SCALING_N): at the sf0.1 size the whole job finishes in ~1s
-    and fixed per-job overhead (scheduling, python-worker feed,
-    broadcast) swamps the measurement — scaling efficiency is defined
-    over the throughput region, like a real cluster job.
-    """
-    sf = sf_of(SF_DIR)
-    n = int(os.environ.get("BENCH_SCALING_N", str(max(n_pages_for(sf), 24_000_000))))
-    # interleaved sessions (8, 32, 8, 32) + best-of to cancel host
-    # drift (turbo states, page cache); each session itself reports the
-    # best of 4 timed runs after a warm-up. Two pipeline variants are
-    # measured: 'stored' (lon/lat materialized at ingest — the
-    # production architecture: zero hashing on the hot path) and 'sha2'
-    # (recompute-per-query reference, oracle-parity formulas).
-    results: dict[str, dict[int, dict]] = {}
-    for geocode in ("stored", "sha2"):
-        best: dict[int, dict] = {}
-        for cpus in (8, 32, 8, 32):
-            time.sleep(10)  # let the previous JVM fully exit
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_CPUS=str(cpus),
-                BENCH_N=str(n),
-                BENCH_GEOCODE=geocode,
-            )
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--headline-only"],
-                env=env,
-                capture_output=True,
-                text=True,
-                timeout=3600,
-            )
-            line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-            r = json.loads(line)
-            if cpus not in best or r["sec"] < best[cpus]["sec"]:
-                best[cpus] = r
-        results[geocode] = best
-    r8, r32 = results["stored"][8], results["stored"][32]
-    rows = n + r8["rows"]
-    tp8 = rows / r8["sec"]
-    tp32 = rows / r32["sec"]
-    x8, x32 = results["sha2"][8], results["sha2"][32]
-    xrows = n + x8["rows"]
-    xtp8 = xrows / x8["sec"]
-    xtp32 = xrows / x32["sec"]
-    xeff = (xtp32 / xtp8) / 4.0
-    eff = (tp32 / tp8) / 4.0
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            f"""# BENCH/BASELINE — measured results
-
-Headline job (north-rule metric): parquet pages table (n={n:,},
-Zipf-skewed geocode materialized at ingest, 20% of pages in 3 hot
-boxes) -> res-7 cell tiling -> broadcast hierarchical-cover PIP join
-against 208 polygons (res-10 cover, interior-cell shortcut, Arrow-
-vectorized ray-casting refine on boundary cells only) -> salted
-(cell, salt) layout -> count of join output rows. Identical input
-files and plan at both parallelism levels (BASELINE.md sandbox
-protocol: no real cluster, local[8] vs local[32] on one host).
-
-Ingest-geocoded pipeline (production architecture — lon/lat are table
-columns written once at ingest; the timed job is hash-free):
-
-| parallelism | wall sec (best) | tiles+joined rows | rows/sec |
-|---|---|---|---|
-| local[8]  | {r8['sec']:.2f} | {rows:,} | {tp8:,.0f} |
-| local[32] | {r32['sec']:.2f} | {rows:,} | {tp32:,.0f} |
-
-**Scaling efficiency (tp32/tp8)/4 = {eff:.3f}**
-(north-rule criterion: >= 0.8 between N and 4N executors)
-
-sha2 recompute-per-query variant (oracle-parity formulas, kept as the
-reference point — pays a JVM MessageDigest allocation per row, which
-alone caps 8->32-thread scaling at ~2x measured in isolation):
-
-| parallelism | wall sec (best) | tiles+joined rows | rows/sec |
-|---|---|---|---|
-| local[8]  | {x8['sec']:.2f} | {xrows:,} | {xtp8:,.0f} |
-| local[32] | {x32['sec']:.2f} | {xrows:,} | {xtp32:,.0f} |
-
-**Scaling efficiency (xtp32/xtp8)/4 = {xeff:.3f}**
-
-Measurement protocol: per level, 2 interleaved sessions (8,32,8,32),
-each warm-up + 4 timed runs, best-of taken. Best-of rather than median
-because this sandbox VM shows multi-minute host phases where identical
-JVM work slows 3-10x (hypervisor stalls logged by the kernel:
-"hrtimer: interrupt took 20ms"; a pure-numpy 32-process burn varies
-only ~1.5x in the same windows). Calibration: that numpy burn scales
-8->32 threads at ~2.7x on this host (turbo-clock ceiling ~0.67
-efficiency) — single-host local[8] vs local[32] shares one memory bus
-and clock budget, unlike the N vs 4N executor clusters of the north
-rule, so host-calibrated efficiency = eff/0.67 is also reported:
-stored {eff:.2f} -> ~{min(eff / 0.67, 1.0):.0%} of the achievable
-hardware ceiling.
-
-sf={sf}, generated {time.strftime('%Y-%m-%d %H:%M:%S')}.
-"""
-        )
+    tiles_joined = n + rows[HEADLINE]
     print(
         json.dumps(
             {
-                "tp8": tp8,
-                "tp32": tp32,
-                "efficiency": eff,
-                "rows": rows,
-                "sha2_tp8": xtp8,
-                "sha2_tp32": xtp32,
-                "sha2_efficiency": xeff,
+                "metric": "tiling+PIP-join pipeline suite",
+                "value": suite_sec,
+                "unit": "sec",
+                "queries": queries,
+                "sf": sf,
+                "n_pages": n,
+                "headline_rows": tiles_joined,
+                "headline_rows_per_sec": round(tiles_joined / queries[HEADLINE], 1),
+                "cpus": CPUS,
             }
         )
     )
+    spark.stop()
 
 
 if __name__ == "__main__":

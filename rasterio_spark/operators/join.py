@@ -627,10 +627,12 @@ def knn_join(
     # band job (measured ~2 s saved at the bench shape, coverage 0.68).
     coverage = len(max_ids) / float(ny * nx)
     if coverage <= 0.5:
+        from rasterio_spark.plans.cache import scoped_persist
+
         max_df = spark.createDataFrame(
             pd.DataFrame({"cell_id": max_ids.astype("int64")})
         )
-        tiled = tiled.join(F.broadcast(max_df), "cell_id", "left_semi").cache()
+        tiled = scoped_persist(tiled.join(F.broadcast(max_df), "cell_id", "left_semi"))
     need = {qid for qid, _, _ in queries}
     counts: dict[int, int] = {qid: 0 for qid in need}
     sufficient_radius: dict[int, int] = {}

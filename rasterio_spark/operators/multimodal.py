@@ -1,11 +1,10 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed
-metadata.
+"""Multimodal columns: binary blobs + typed metadata.
 
-The container ships no image/audio codecs, so the DECODE step is a
-clearly-marked stub (deterministic fake features / NotImplementedError)
-— but the Spark-side plumbing is real and tested: binary schemas,
-mapInPandas batch shape, Arrow transport of bytes, partition-friendly
-output schemas.
+``html_stats`` reads metadata from the binary html column with Spark
+built-ins. ``extract_image_features`` is batch feature extraction over
+opaque blobs: the Spark-side plumbing (binary schema, mapInPandas batch
+shape, Arrow transport of bytes) is real, and the decode is a
+deterministic sha256 stand-in because no image codec is installed.
 """
 
 from __future__ import annotations
@@ -16,8 +15,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DECODERS_AVAILABLE = False  # no PIL/cv2/librosa in this environment
 
 
 def html_stats(pages: DataFrame) -> DataFrame:
@@ -79,164 +76,3 @@ def extract_image_features(
             )
 
     return binaries.mapInPandas(extract, schema=schema)
-
-
-def decode_image(blob: bytes):
-    """Real image decode — unavailable in this container."""
-    raise NotImplementedError(
-        "image codecs are not installed in this environment; "
-        "extract_image_features uses the deterministic stub instead"
-    )
-
-
-def frame_sample(
-    videos: DataFrame, every_n: int = 10, binary_col: str = "content", id_col: str = "url"
-) -> DataFrame:
-    """Frame-sampling plumbing: emits (id, frame_idx, frame_feat) rows
-    per blob — frame count is derived deterministically from blob size
-    (stub for a real container parser)."""
-
-    def sample(batches):
-        for pdf in batches:
-            blobs = [bytes(b) if b is not None else b"" for b in pdf[binary_col]]
-            sampled = [
-                np.arange(0, max(1, len(b) // 1024), every_n, dtype=np.int32)
-                for b in blobs
-            ]
-            reps = np.array([len(s) for s in sampled], dtype=np.int64)
-            out_id = np.repeat(pdf[id_col].to_numpy(), reps)
-            out_idx = (
-                np.concatenate(sampled) if len(sampled) else np.array([], dtype=np.int32)
-            )
-            # the per-frame sha256 below IS the stubbed decode step (a
-            # real frame decoder is per-frame work too); the row
-            # assembly around it is vectorized (repeat/concatenate)
-            out_feat = [
-                (
-                    np.frombuffer(
-                        hashlib.sha256(b + int(i).to_bytes(4, "little")).digest()[:16],
-                        dtype="<u4",
-                    ).astype("float64")
-                    / 2**32
-                ).tolist()
-                for b, s in zip(blobs, sampled)
-                for i in s
-            ]
-            yield pd.DataFrame({id_col: out_id, "frame_idx": out_idx, "frame_feat": out_feat})
-
-    return videos.mapInPandas(sample, schema=f"{id_col} string, frame_idx int, frame_feat array<double>")
-
-
-def resize_images(
-    images: DataFrame,
-    out_hw: tuple = (16, 16),
-    binary_col: str = "content",
-    id_col: str = "url",
-) -> DataFrame:
-    """Image resize plumbing: binary blob -> resized pixel grid as a
-    flat double array (row-major) + output dims. The decode is the
-    deterministic fake (sha256-tiled grid whose shape derives from the
-    blob size), block-average 'resized' to ``out_hw`` with real
-    vectorized NumPy — swap ``_fake_pixels`` for a real decoder and the
-    plan, schema, and batch shape are unchanged."""
-    oh, ow = int(out_hw[0]), int(out_hw[1])
-
-    def _fake_pixels(blob: bytes) -> np.ndarray:
-        # deterministic HxW grid: dims from blob length, values from a
-        # sha256 stream — stands in for a real decoded image
-        h = 8 + (len(blob) % 57)
-        w = 8 + (len(blob) % 71)
-        need = h * w
-        seed = hashlib.sha256(blob or b"").digest()
-        reps = need * 8 // len(seed) + 1
-        buf = (seed * reps)[: need * 1]
-        return np.frombuffer(buf, dtype="u1").astype("float64").reshape(h, w)
-
-    def _block_mean(a: np.ndarray) -> np.ndarray:
-        h, w = a.shape
-        ry = np.minimum((np.arange(h) * oh) // h, oh - 1)
-        rx = np.minimum((np.arange(w) * ow) // w, ow - 1)
-        out = np.zeros((oh, ow))
-        cnt = np.zeros((oh, ow))
-        np.add.at(out, (ry[:, None], rx[None, :]), a)
-        np.add.at(cnt, (ry[:, None], rx[None, :]), 1.0)
-        return out / np.maximum(cnt, 1.0)
-
-    schema = f"{id_col} string, height int, width int, pixels array<double>"
-
-    def run(batches):
-        for pdf in batches:
-            blobs = [bytes(b) if b is not None else b"" for b in pdf[binary_col]]
-            pix = [_block_mean(_fake_pixels(b)).ravel().tolist() for b in blobs]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "height": oh,
-                    "width": ow,
-                    "pixels": pix,
-                }
-            )
-
-    return images.mapInPandas(run, schema=schema)
-
-
-def decode_audio(blob: bytes):
-    """Real audio decode — unavailable in this container."""
-    raise NotImplementedError(
-        "audio codecs are not installed in this environment; "
-        "audio_chunk_features uses the deterministic stub instead"
-    )
-
-
-def audio_chunk_features(
-    audio: DataFrame,
-    chunk_ms: int = 1000,
-    bytes_per_ms: int = 32,
-    binary_col: str = "content",
-    id_col: str = "url",
-    dim: int = 8,
-) -> DataFrame:
-    """Audio chunking plumbing: one row per ``chunk_ms`` window of the
-    blob — (id, chunk_idx, chunk_ms, feat). Chunk count derives
-    deterministically from blob size (duration ~ bytes/bytes_per_ms);
-    the per-chunk feature is the sha256 fake standing in for a real
-    frontend (fbank/spectrogram). Row assembly is vectorized
-    (repeat/concatenate), same pattern as frame_sample."""
-    if not 1 <= dim <= 8:
-        raise ValueError(
-            f"dim must be in 1..8 (sha256 stub yields 8 u32 words); got {dim}"
-        )
-    chunk_bytes = max(1, chunk_ms * bytes_per_ms)
-
-    def run(batches):
-        for pdf in batches:
-            blobs = [bytes(b) if b is not None else b"" for b in pdf[binary_col]]
-            nchunks = [max(1, (len(b) + chunk_bytes - 1) // chunk_bytes) for b in blobs]
-            reps = np.array(nchunks, dtype=np.int64)
-            out_id = np.repeat(pdf[id_col].to_numpy(), reps)
-            out_idx = np.concatenate(
-                [np.arange(n, dtype=np.int32) for n in nchunks]
-            ) if nchunks else np.array([], dtype=np.int32)
-            out_feat = [
-                (
-                    np.frombuffer(
-                        hashlib.sha256(b + int(i).to_bytes(4, "little")).digest()[: dim * 4],
-                        dtype="<u4",
-                    ).astype("float64")
-                    / 2**32
-                ).tolist()
-                for b, n in zip(blobs, nchunks)
-                for i in range(n)
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: out_id,
-                    "chunk_idx": out_idx,
-                    "chunk_ms": chunk_ms,
-                    "feat": out_feat,
-                }
-            )
-
-    return audio.mapInPandas(
-        run, schema=f"{id_col} string, chunk_idx int, chunk_ms int, feat array<double>"
-    )

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set (a deployment setting), else the
+    cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_session(
     app_name: str = "rasterio_spark",
     cores: int | None = None,
@@ -20,7 +26,7 @@ def get_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # Python workers must be able to unpickle UDF closures that

@@ -1,0 +1,90 @@
+"""bench.py's registry is the one source of the timed bench queries:
+every entry builds, ``run_suite`` times exactly its keys, and
+``bench_extra`` selects from the same registry."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+import bench
+import bench_extra
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(scope="module")
+def registry(spark, sf_dir, tmp_path_factory):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bench, "PAGES_CACHE", str(tmp_path_factory.mktemp("bench_cache")))
+        yield bench.suite(spark, sf_dir, 6_000)
+
+
+def test_every_entry_builds_and_resolves_its_schema(registry):
+    queries, untimed = registry
+    assert len(queries) == 20
+    assert "asof_latest_bucketed" in queries
+    assert set(untimed) <= set(queries)
+    for name, build in queries.items():
+        built = build()
+        for df in built.values() if isinstance(built, dict) else [built]:
+            assert df.schema.fields, name
+
+
+@pytest.fixture
+def stub_suite(spark, registry, monkeypatch):
+    """Replace bench.suite with one-row DataFrames under the real names,
+    recording the order keys and warm-ups run in."""
+    names = list(registry[0])
+    log = []
+
+    def entry(name):
+        def build():
+            log.append(name)
+            return spark.range(1)
+
+        return build
+
+    def fake(spark_, sf_dir_, n_):
+        untimed = {k: (lambda k=k: log.append("warm:" + k)) for k in registry[1]}
+        return {k: entry(k) for k in names}, untimed
+
+    monkeypatch.setattr(bench, "suite", fake)
+    return names, log
+
+
+def test_run_suite_times_the_registry_keys(spark, stub_suite):
+    names, log = stub_suite
+    timings, rows = bench.run_suite(spark, "unused", 6_000)
+    assert list(timings) == names and list(rows) == names
+    assert log.count(bench.HEADLINE) == 3  # median of 3
+    for warm in (w for w in log if w.startswith("warm:")):
+        key = warm.removeprefix("warm:")
+        assert log.index(warm) + 1 == log.index(key)  # right before its key
+
+
+def test_bench_extra_draws_from_the_registry(spark, stub_suite, capsys):
+    names, _ = stub_suite
+    bench_extra.time_queries(spark, ["knn", "asof_latest_bucketed"], repeats=1)
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert list(out["queries"]) == ["knn", "asof_latest_bucketed"]
+    bench_extra.time_queries(spark, None, repeats=1)
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert list(out["queries"]) == names
+
+
+def test_default_cores_come_from_the_host():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [sys.executable, "-c", "import bench; print(bench.CPUS)"],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert int(out.stdout.split()[-1]) == len(os.sched_getaffinity(0))

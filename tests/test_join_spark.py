@@ -96,6 +96,20 @@ def test_knn_matches_bruteforce(spark, pages):
         np.testing.assert_allclose(got_q.dist2.values, [d for d, _ in order], rtol=0, atol=0)
 
 
+def test_knn_list_prune_path_persist_is_released(spark, pages):
+    """max_rings=8 disks cover <=50% of the grid, so the list path
+    persists the pruned pages; release_persisted() must free it."""
+    from rasterio_spark.plans.cache import release_persisted
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    release_persisted()
+    before = rdds().size()
+    queries = [(0, 10.0, 10.0), (1, -170.0, 80.0), (2, 100.5, 40.5)]
+    knn_join(pages, queries, k=3, max_rings=8).count()
+    release_persisted()
+    assert rdds().size() == before
+
+
 def test_sample_points(spark):
     cells = spark.range(0, 100).select(
         F.lit(1).alias("band"),

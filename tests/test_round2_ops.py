@@ -132,19 +132,6 @@ def test_transform_geom_antimeridian_linestring():
     assert plain["type"] == "LineString"
 
 
-def test_frame_sample_vectorized(spark):
-    from rasterio_spark.operators.multimodal import frame_sample
-
-    rows = [("a", bytes(5 * 1024)), ("b", bytes(25 * 1024)), ("c", b"")]
-    videos = spark.createDataFrame(rows, "url string, content binary")
-    out = frame_sample(videos, every_n=10).toPandas()
-    per_url = out.groupby("url")["frame_idx"].apply(list).to_dict()
-    assert per_url["a"] == [0]  # 5 frames -> idx 0
-    assert per_url["b"] == [0, 10, 20]  # 25 frames -> 0, 10, 20
-    assert per_url["c"] == [0]  # empty blob -> 1 synthetic frame
-    assert all(len(f) == 4 for f in out["frame_feat"])  # 16 bytes -> 4 u32
-
-
 def test_ivf_centroids_no_driver_action(spark):
     """ivf_topk with nprobe covering all clusters equals brute force;
     centroids are computed without a .first() driver action."""

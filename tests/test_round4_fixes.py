@@ -384,24 +384,6 @@ def test_colormap_cli_and_apply(spark, tmp_path):
     assert out[1] == (None, None, None, None)  # unmapped -> NULL components
 
 
-def test_synth_documents_deterministic_and_shardable(spark):
-    """Bench corpus generator: deterministic, disjoint offset shards
-    compose to the full corpus, and every dup_mod-th doc repeats its
-    predecessor (real duplicate structure for the dedup scaling job)."""
-    from rasterio_spark.sources.documents import synth_documents
-
-    full = {r["doc_id"]: r["text"] for r in synth_documents(spark, 40).collect()}
-    again = {r["doc_id"]: r["text"] for r in synth_documents(spark, 40).collect()}
-    assert full == again
-    s0 = {r["doc_id"]: r["text"] for r in synth_documents(spark, 20, offset=0).collect()}
-    s1 = {r["doc_id"]: r["text"] for r in synth_documents(spark, 20, offset=20).collect()}
-    assert set(s0) == set(range(20)) and set(s1) == set(range(20, 40))
-    assert {**s0, **s1} == full
-    for i in range(7, 40, 7):
-        assert full[i] == full[i - 1]  # dup structure
-    assert full[1] != full[2]
-
-
 def test_build_pyramid_cascade_equals_from_base(spark):
     """The cascading pyramid (weighted state carried factor-to-factor)
     must equal the from-base downsample_stats at every level, including
@@ -541,58 +523,9 @@ def test_make_rowcol_udf_rotated_transform(spark):
         assert got[(x, y)] == (rr, cc)
 
 
-def test_resize_images_plumbing(spark):
-    """resize plumbing: deterministic output dims/pixel counts, values
-    stable across runs, block-mean preserves the global mean of the
-    fake decode (exact for block-aligned shapes)."""
-    import numpy as np
-
-    from rasterio_spark.operators.multimodal import resize_images
-
-    blobs = [("a", b"x" * 100), ("b", b"y" * 3000), ("c", None)]
-    df = spark.createDataFrame(blobs, "url string, content binary")
-    out1 = {r["url"]: r for r in resize_images(df, (16, 16)).collect()}
-    out2 = {r["url"]: r for r in resize_images(df, (16, 16)).collect()}
-    for u in ("a", "b", "c"):
-        assert (out1[u]["height"], out1[u]["width"]) == (16, 16)
-        assert len(out1[u]["pixels"]) == 256
-        assert out1[u]["pixels"] == out2[u]["pixels"]  # deterministic
-        assert all(0.0 <= p <= 255.0 for p in out1[u]["pixels"])
-    assert out1["a"]["pixels"] != out1["b"]["pixels"]
-
-
-def test_audio_chunk_features_plumbing(spark):
-    """audio chunking: one row per chunk_ms window (count from blob
-    size), vectorized assembly, deterministic per-chunk features."""
-    from rasterio_spark.operators.multimodal import audio_chunk_features, decode_audio
-
-    import pytest
-
-    with pytest.raises(NotImplementedError, match="audio codecs"):
-        decode_audio(b"RIFF")
-
-    # 1000 ms * 32 B/ms = 32000 B per chunk: 80k bytes -> 3 chunks
-    df = spark.createDataFrame(
-        [("a", b"z" * 80_000), ("b", b"q" * 10), ("c", None)],
-        "url string, content binary",
-    )
-    out = audio_chunk_features(df).groupBy("url").count().collect()
-    counts = {r["url"]: r["count"] for r in out}
-    assert counts == {"a": 3, "b": 1, "c": 1}
-    rows = audio_chunk_features(df).where("url = 'a'").orderBy("chunk_idx").collect()
-    assert [r["chunk_idx"] for r in rows] == [0, 1, 2]
-    assert all(len(r["feat"]) == 8 and r["chunk_ms"] == 1000 for r in rows)
-    assert rows[0]["feat"] != rows[1]["feat"]  # chunk index enters the feature
-
-
 def test_multimodal_decode_stub_and_descriptors():
-    import pytest
-
-    from rasterio_spark.operators.multimodal import decode_image
     from rasterio_spark.sources.layers import doc_layer_descriptor, identity_layer
 
-    with pytest.raises(NotImplementedError, match="codecs"):
-        decode_image(b"\x89PNG")
     d = doc_layer_descriptor(100)
     assert (d.width, d.height, d.nodata) == (32, 4, 0.0)
     from rasterio_spark.grid.windows import shape as win_shape
@@ -617,10 +550,7 @@ def test_review_fixes_misc(spark):
     import pytest
 
     from rasterio_spark.operators.calc import calc
-    from rasterio_spark.operators.multimodal import (
-        audio_chunk_features,
-        extract_image_features,
-    )
+    from rasterio_spark.operators.multimodal import extract_image_features
     from rasterio_spark.operators.stats import zonal_stats
 
     cells = spark.createDataFrame(
@@ -635,8 +565,6 @@ def test_review_fixes_misc(spark):
     blobs = spark.createDataFrame([("a", b"x")], "url string, content binary")
     with pytest.raises(ValueError, match="dim must be in 1..8"):
         extract_image_features(blobs, dim=16)
-    with pytest.raises(ValueError, match="dim must be in 1..8"):
-        audio_chunk_features(blobs, dim=9)
 
     from rasterio_spark import cli
 

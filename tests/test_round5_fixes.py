@@ -11,10 +11,8 @@
 - _polygon_cover_distributed serializes numpy-scalar coordinates
   (ADVICE #3).
 - cli rm recognizes multi-level-partitioned layer tables (ADVICE #5).
-- bench_pin --report survives an empty log (ADVICE #4).
 """
 
-import json
 import os
 import subprocess
 import sys
@@ -234,21 +232,6 @@ def test_cli_rm_still_refuses_non_layer(tmp_path):
     )
     assert r.returncode == 2
     assert d.exists()
-
-
-# ------------------------------------------------------------- bench_pin
-
-
-def test_bench_pin_report_empty_log(tmp_path, monkeypatch, capsys):
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    import bench_pin
-
-    log = tmp_path / "pin.jsonl"
-    log.write_text("")
-    monkeypatch.setattr(bench_pin, "LOG", str(log))
-    bench_pin.report()  # must not raise
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["cycles"] == 0
 
 
 # ------------------------------------------------- merge_min/max pin
