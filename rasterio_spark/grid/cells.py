@@ -11,9 +11,7 @@ The engine tiles the world with an equirectangular quadtree ("eqcell"):
   the same encoding is expressible in ANSI SQL for the DuckDB oracle)
 
 This plays the role H3/S2 plays in the north-star design: a prefix-
-shardable spatial key. Parent/child moves are bit shifts; ring(k)
-neighborhoods wrap in longitude and clamp in latitude — the substrate
-for kNN-by-ring-expansion.
+shardable spatial key. Parent/child moves are bit shifts.
 
 Tile (block) assignment mirrors rasterio's block grid: a tile is a
 ``bh x bw`` block of cells, row-major, with edge tiles clipped to
@@ -103,46 +101,6 @@ def cell_center(row, col, res: int):
     lon = (np.asarray(col, dtype="float64") + 0.5) / nx * LON_SPAN + LON_MIN
     lat = LAT_MAX - (np.asarray(row, dtype="float64") + 0.5) / ny * LAT_SPAN
     return lon, lat
-
-
-def ring(row: int, col: int, k: int, res: int, wrap: bool = True) -> np.ndarray:
-    """Cells at Chebyshev distance exactly ``k`` from (row, col):
-    (n, 2) int64 array. Wraps in longitude (col mod nx) when ``wrap``,
-    else clips columns like rows — use wrap=False when the downstream
-    distance metric is planar (non-wrapped) lon/lat, so the candidate
-    topology matches the ranking metric.
-
-    k = 0 returns the cell itself. The kNN operator expands k = 0, 1, 2...
-    until enough neighbors are found.
-    """
-    ny, nx = grid_shape(res)
-    if k == 0:
-        cells = np.array([[row, col]], dtype=np.int64)
-    else:
-        rs, cs = [], []
-        # top and bottom edges of the ring
-        for r in (row - k, row + k):
-            cc = np.arange(col - k, col + k + 1, dtype=np.int64)
-            rs.append(np.full(cc.shape, r, dtype=np.int64))
-            cs.append(cc)
-        # left and right edges, excluding corners already covered
-        rr = np.arange(row - k + 1, row + k, dtype=np.int64)
-        for c in (col - k, col + k):
-            rs.append(rr)
-            cs.append(np.full(rr.shape, c, dtype=np.int64))
-        cells = np.stack([np.concatenate(rs), np.concatenate(cs)], axis=1)
-    keep = (cells[:, 0] >= 0) & (cells[:, 0] < ny)  # latitude clamp
-    if wrap:
-        cells[:, 1] %= nx  # longitude wrap
-    else:
-        keep &= (cells[:, 1] >= 0) & (cells[:, 1] < nx)
-    return cells[keep]
-
-
-def disk(row: int, col: int, k: int, res: int, wrap: bool = True) -> np.ndarray:
-    """All cells with Chebyshev distance <= k (the filled ring)."""
-    parts = [ring(row, col, i, res, wrap=wrap) for i in range(k + 1)]
-    return np.unique(np.concatenate(parts), axis=0)
 
 
 # ---- block/tile grid (rasterio block_windows parity) -----------------------

@@ -8,9 +8,10 @@
   function, so the join starts no Python worker. The spatial
   theta-join becomes an equi-join Catalyst can broadcast or sort-merge
   (SURVEY.md §2.3).
-- ``knn_join``: k nearest pages per query point by cell-ring expansion:
-  rings grow until every query holds >= k candidates AND the expansion
-  radius covers the k-th distance bound, then window row_number <= k.
+- ``knn_join``: k nearest pages per query point by cell-ring expansion,
+  as one lazy plan: a per-query histogram of pages by ring distance
+  picks the smallest radius holding >= k pages, the disk widens to
+  cover the k-th distance bound, then window row_number <= k.
 - ``sample_points``: rasterio.sample as a point->cell equi-join
   (reference rasterio/sample.py:44-99): out-of-bounds -> nodata.
 - ``asof_latest``: latest page per (cell) by warc_ts — the as-of
@@ -443,123 +444,6 @@ def pip_join_count(pages: DataFrame, polygons: list[dict], res: int = DEFAULT_RE
     return j.groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n_pages"))
 
 
-def _query_disk_cells(qdf: DataFrame, res: int, radius_col: str = "_r") -> DataFrame:
-    """(query_id, qrow, qcol, radius) -> (query_id, cell_id): each
-    query's disk cells up to its own radius, generated executor-side in
-    Arrow batches — the driver never materializes per-query cell lists
-    (the large-query-set complement to knn_join's list path)."""
-
-    def gen(batches):
-        for pdf in batches:
-            out_q, out_c = [], []
-            for qid, r0, c0, rad in zip(
-                pdf["query_id"].values, pdf["qrow"].values, pdf["qcol"].values, pdf[radius_col].values
-            ):
-                d = C.disk(int(r0), int(c0), int(rad), res, wrap=False)
-                if d.size:
-                    ids = np.unique(C.cell_id_from_rowcol(d[:, 0], d[:, 1], res))
-                    out_q.append(np.full(ids.shape, qid, dtype="int64"))
-                    out_c.append(ids.astype("int64"))
-            if out_q:
-                yield pd.DataFrame(
-                    {"query_id": np.concatenate(out_q), "cell_id": np.concatenate(out_c)}
-                )
-
-    return qdf.mapInPandas(gen, "query_id long, cell_id long")
-
-
-def _knn_join_df(
-    pages: DataFrame, queries: DataFrame, k: int, res: int, max_rings: int
-) -> DataFrame:
-    """knn_join for a queries DataFrame (query_id, qlon, qlat): the
-    ring expansion runs as doubling-radius passes with the per-query
-    state (resolved radius) in a DataFrame — driver traffic is one
-    scalar emptiness probe per pass, never O(queries x cells). Ranking
-    arithmetic and (dist2, url) ordering are identical to the list
-    path, so both satisfy the same oracle."""
-    from rasterio_spark.functions.cell_exprs import rowcol_cols
-    from rasterio_spark.plans.cache import scoped_persist
-
-    ny, nx = C.grid_shape(res)
-    cell_w = C.LON_SPAN / nx
-    cell_h = C.LAT_SPAN / ny
-    min_side = min(cell_w, cell_h)
-
-    qrow, qcol = rowcol_cols(F.col("qlon"), F.col("qlat"), res)
-    state = (
-        queries.select("query_id", "qlon", "qlat")
-        .withColumn("qrow", qrow)
-        .withColumn("qcol", qcol)
-        .withColumn("base_r", F.lit(None).cast("int"))
-        .localCheckpoint()
-    )
-    # prune the page scan to the union of maximal disks (O(search area),
-    # like the list path) — built executor-side, distinct'd before the
-    # semi-join so the build side stays |cells|, not |queries x cells|
-    max_cells = (
-        _query_disk_cells(state.withColumn("_r", F.lit(max_rings)), res)
-        .select("cell_id")
-        .distinct()
-    )
-    tiled = scoped_persist(
-        tile_pages(pages, res=res)
-        .select("url", "lon", "lat", "cell_id")
-        .join(max_cells, "cell_id", "left_semi")
-    )
-
-    R, j = 0, 0
-    while R < max_rings - 1:
-        active = state.where(F.col("base_r").isNull())
-        if active.isEmpty():
-            break
-        R = min(2 ** (j + 1) - 1, max_rings - 1)
-        j += 1
-        dc = _query_disk_cells(active.withColumn("_r", F.lit(R)), res)
-        enough = (
-            tiled.join(dc, "cell_id")
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") >= k)
-            .select("query_id", F.lit(R).alias("_newr"))
-        )
-        state = (
-            state.join(enough, "query_id", "left")
-            .withColumn("base_r", F.coalesce("base_r", "_newr"))
-            .drop("_newr")
-            .localCheckpoint()
-        )
-
-    # same guarantee radius as the list path: the found radius bounds the
-    # k-th distance by (base_r+1) cell diagonals; expand so the disk
-    # covers that distance in min-side units
-    diag = float(np.hypot(cell_w, cell_h))
-    final = state.withColumn("base_r", F.coalesce("base_r", F.lit(max(R, 0))))
-    safe_r = F.least(
-        (F.ceil((F.col("base_r") + 1) * F.lit(diag) / F.lit(min_side)) + 1).cast("int"),
-        F.lit(max_rings),
-    )
-    cells_df = _query_disk_cells(final.withColumn("_r", safe_r), res)
-    cand = tiled.join(cells_df, "cell_id").join(
-        final.select("query_id", "qlon", "qlat"), "query_id"
-    )
-    dist2 = (F.col("lon") - F.col("qlon")) * (F.col("lon") - F.col("qlon")) + (
-        F.col("lat") - F.col("qlat")
-    ) * (F.col("lat") - F.col("qlat"))
-    w = W.partitionBy("query_id").orderBy(F.col("dist2").asc(), F.col("url").asc())
-    return (
-        cand.withColumn("dist2", dist2)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "url", "lon", "lat", "dist2", "rank")
-    )
-
-
-# list inputs above this size silently get the distributed DF path —
-# the driver ring loop's per-band bookkeeping is fine for dozens of
-# query points but is a serial scale-killer at 10^5+ (r4 verdict #2)
-KNN_LIST_DF_THRESHOLD = 1000
-
-
 def knn_join(
     pages: DataFrame,
     queries: list[tuple[int, float, float]] | DataFrame,
@@ -569,124 +453,70 @@ def knn_join(
 ) -> DataFrame:
     """k nearest pages per query point (planar lon/lat distance).
 
-    ``queries`` may be a list of (query_id, qlon, qlat) tuples (small
-    query sets; ring bookkeeping on the driver) or a DataFrame with
-    those columns (large query sets; fully distributed state — see
-    ``_knn_join_df``).
+    ``queries`` is a list of (query_id, qlon, qlat) tuples or a
+    DataFrame with those columns; both build the same lazy plan, which
+    runs no Spark job until the caller's action.
 
-    Ring expansion (north_star): candidate cells grow ring by ring;
-    a radius R is sufficient once every query has >= k candidates
-    inside ring R AND (k-th candidate distance) <= R * min_cell_side —
-    the cheapest correct stopping rule for a grid index. The driver
-    loop only moves cell ids (tiny); pages are touched via equi-joins.
+    Cell-ring expansion (north_star) as one plan. A query's disk of
+    radius R is the cells at Chebyshev distance <= R from its cell,
+    clipped at the grid's edges (no longitude wrap, so the candidate
+    topology matches the planar ranking metric). Inside the
+    ``max_rings`` disk, a per-query histogram of pages by ring distance
+    and its running sum give the smallest radius R holding >= k pages
+    (``max_rings - 1`` when none does). The k-th distance is then at
+    most (R + 1) cell diagonals, so the final disk is widened to cover
+    that distance in min-side units, capped at ``max_rings``, and
+    ranked exactly.
 
     Returns (query_id, url, lon, lat, dist2, rank) with rank <= k,
     ties broken by url.
     """
-    if isinstance(queries, DataFrame):
-        return _knn_join_df(pages, queries, k, res, max_rings)
-    if len(queries) > KNN_LIST_DF_THRESHOLD:
-        # large list: the driver ring loop is O(queries) serial Python
-        # with per-band collects — route through the fully distributed
-        # DF path instead (identical results; see equivalence pytest)
-        qdf = pages.sparkSession.createDataFrame(
-            [(int(q), float(x), float(y)) for q, x, y in queries],
+    from rasterio_spark.functions.cell_exprs import rowcol_cols
+
+    if not isinstance(queries, DataFrame):
+        queries = pages.sparkSession.createDataFrame(
+            pd.DataFrame(list(queries), columns=["query_id", "qlon", "qlat"]).astype(
+                {"query_id": "int64", "qlon": "float64", "qlat": "float64"}
+            ),
             "query_id long, qlon double, qlat double",
         )
-        return _knn_join_df(pages, qdf, k, res, max_rings)
-    spark = pages.sparkSession
     ny, nx = C.grid_shape(res)
     cell_w = C.LON_SPAN / nx
     cell_h = C.LAT_SPAN / ny
-    min_side = min(cell_w, cell_h)
+    qrow, qcol = rowcol_cols(F.col("qlon"), F.col("qlat"), res)
+    q = queries.select("query_id", "qlon", "qlat", qrow.alias("qrow"), qcol.alias("qcol"))
+    tiled = tile_pages(pages, res=res).select("url", "lon", "lat", "row", "col")
 
-    qrows = {qid: C.rowcol_of(qlon, qlat, res) for qid, qlon, qlat in queries}
-
-    # cache ONLY the pages inside the maximal search area (union of the
-    # max_rings disks), not the whole table: at 100 TB the semi-join
-    # against the broadcast cell list prunes the scan to O(search area)
-    # and the cache holds the candidate subset every band job reuses.
-    # The expansion is non-wrapping (wrap=False) so the candidate
-    # topology matches the planar dist2 ranking metric below.
-    max_ids = np.unique(
-        np.concatenate(
-            [
-                C.cell_id_from_rowcol(d[:, 0], d[:, 1], res)
-                for d in (
-                    C.disk(int(r), int(c), max_rings, res, wrap=False)
-                    for r, c in qrows.values()
-                )
-            ]
+    def in_disk(qr: DataFrame) -> DataFrame:
+        """Pages inside each query's disk of radius ``_r``: the disk is
+        one broadcast row per grid row it spans, joined on ``row`` with a
+        range condition on ``col``."""
+        r = F.col("_r")
+        first = F.greatest(F.col("qrow") - r, F.lit(0))
+        last = F.least(F.col("qrow") + r, F.lit(ny - 1))
+        rows = qr.withColumn("row", F.explode(F.sequence(first, last)))
+        return tiled.join(F.broadcast(rows), "row").where(
+            F.col("col").between(F.col("qcol") - r, F.col("qcol") + r)
         )
+
+    ring = F.greatest(F.abs(F.col("row") - F.col("qrow")), F.abs(F.col("col") - F.col("qcol")))
+    upto = W.partitionBy("query_id").orderBy("d")
+    base = (
+        in_disk(q.withColumn("_r", F.lit(max_rings)))
+        .groupBy("query_id", ring.alias("d"))
+        .count()
+        .withColumn("_n", F.sum("count").over(upto))
+        .where(F.col("_n") >= k)
+        .groupBy("query_id")
+        .agg(F.min("d").alias("base_r"))
     )
-    tiled = tile_pages(pages, res=res).select("url", "lon", "lat", "cell_id")
-    # Prune + cache only when the maximal disks actually prune: when
-    # they cover most of the grid (dense/low-res case) the semi-join
-    # keeps ~everything, so the broadcast build + join + cache write
-    # are pure overhead vs re-running the narrow projected scan per
-    # band job (measured ~2 s saved at the bench shape, coverage 0.68).
-    coverage = len(max_ids) / float(ny * nx)
-    if coverage <= 0.5:
-        from rasterio_spark.plans.cache import scoped_persist
-
-        max_df = spark.createDataFrame(
-            pd.DataFrame({"cell_id": max_ids.astype("int64")})
-        )
-        tiled = scoped_persist(tiled.join(F.broadcast(max_df), "cell_id", "left_semi"))
-    need = {qid for qid, _, _ in queries}
-    counts: dict[int, int] = {qid: 0 for qid in need}
-    sufficient_radius: dict[int, int] = {}
-    # expand radii in geometrically-growing bands: one Spark job per
-    # band instead of per ring, so sparse regions cost O(log R) jobs
-    band_start, band_size = 0, 1
-    radius = 0
-    while need and band_start < max_rings:
-        band_end = min(band_start + band_size, max_rings)
-        ring_rows = []
-        for qid in need:
-            r, c = qrows[qid]
-            for rad in range(band_start, band_end):
-                ring = C.ring(int(r), int(c), rad, res, wrap=False)
-                if ring.size:
-                    ids = C.cell_id_from_rowcol(ring[:, 0], ring[:, 1], res)
-                    ring_rows.extend((qid, int(i)) for i in ids)
-        if ring_rows:
-            ring_df = spark.createDataFrame(
-                pd.DataFrame(ring_rows, columns=["query_id", "cell_id"]).astype("int64")
-            )
-            got = (
-                tiled.join(F.broadcast(ring_df), "cell_id")
-                .groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            for row in got:
-                counts[row["query_id"]] += row["n"]
-        done = {qid for qid in need if counts[qid] >= k}
-        for qid in done:
-            sufficient_radius[qid] = band_end - 1
-        need -= done
-        band_start, band_size = band_end, band_size * 2
-        radius = band_start
-
-    # guarantee: expand each query's disk so it covers its k-th distance
-    # upper bound ((R+1) rings cover distance R*min_side at least)
-    final_rows = []
-    for qid, qlon, qlat in queries:
-        r, c = qrows[qid]
-        base_r = sufficient_radius.get(qid, radius - 1)
-        # distance to any point in ring base_r is at most (base_r+1) * max diag
-        max_d = (base_r + 1) * float(np.hypot(cell_w, cell_h))
-        safe_r = int(np.ceil(max_d / min_side)) + 1
-        disk = C.disk(int(r), int(c), min(safe_r, max_rings), res, wrap=False)
-        ids = C.cell_id_from_rowcol(disk[:, 0], disk[:, 1], res)
-        final_rows.extend((int(qid), int(i)) for i in np.unique(ids))
-    cells_df = spark.createDataFrame(
-        pd.DataFrame(final_rows, columns=["query_id", "cell_id"]).astype("int64")
+    base_r = F.least(F.coalesce(F.col("base_r"), F.lit(max_rings - 1)), F.lit(max_rings - 1))
+    # a page in ring R lies within (R + 1) cell diagonals of the query
+    diag, min_side = float(np.hypot(cell_w, cell_h)), min(cell_w, cell_h)
+    safe_r = F.least(
+        (F.ceil((base_r + 1) * F.lit(diag) / F.lit(min_side)) + 1).cast("int"), F.lit(max_rings)
     )
-    qdf = spark.createDataFrame(list(queries), "query_id long, qlon double, qlat double")
-
-    cand = tiled.join(F.broadcast(cells_df), "cell_id").join(F.broadcast(qdf), "query_id")
+    cand = in_disk(q.join(base, "query_id", "left").withColumn("_r", safe_r))
     dist2 = (F.col("lon") - F.col("qlon")) * (F.col("lon") - F.col("qlon")) + (
         F.col("lat") - F.col("qlat")
     ) * (F.col("lat") - F.col("qlat"))

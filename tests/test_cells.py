@@ -52,26 +52,6 @@ def test_grid_shape():
     assert cells.grid_shape(7) == (128, 256)
 
 
-def test_ring_sizes():
-    # interior cell: ring k has 8k cells (k>0), 1 cell at k=0
-    res = 7
-    assert len(cells.ring(64, 128, 0, res)) == 1
-    for k in (1, 2, 3):
-        assert len(cells.ring(64, 128, k, res)) == 8 * k
-    # disk = 1 + sum of rings
-    assert len(cells.disk(64, 128, 2, res)) == 25
-
-
-def test_ring_wraps_longitude_clamps_latitude():
-    res = 3  # ny=8, nx=16
-    r = cells.ring(0, 0, 1, res)
-    # row -1 clipped away; col -1 wraps to 15
-    assert (r[:, 0] >= 0).all()
-    assert set(r[:, 1].tolist()) <= {0, 1, 15}
-    assert 15 in r[:, 1].tolist()
-    assert len(r) == 5  # 3 at row 1, 2 at row 0 (left/right neighbors)
-
-
 def test_block_window_edge_clip():
     # 791x718 grid with 256x256 blocks: edge tiles are clipped
     w = cells.block_window(2, 3, height=718, width=791, block_shape=(256, 256))

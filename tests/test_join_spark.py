@@ -1,12 +1,12 @@
 """Spatial join operators: pip_join strategy equivalence + rect oracle,
-kNN vs brute force, sample_points, asof_latest."""
+sample_points, asof_latest."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from rasterio_spark.grid.affine import Affine
-from rasterio_spark.operators.join import asof_latest, knn_join, pip_join, sample_points
+from rasterio_spark.operators.join import asof_latest, pip_join, sample_points
 from rasterio_spark.sources.pages import pages_from_documents, with_geocode
 from rasterio_spark.sources.polygons import RECTS, rect_polygons, synth_polygons
 
@@ -79,35 +79,6 @@ def test_pip_join_generic_polygons(spark, pages):
         for u in geo.url.values[inside]:
             expected.add((u, p["polygon_id"]))
     assert got == expected
-
-
-def test_knn_matches_bruteforce(spark, pages):
-    queries = [(0, 10.0, 10.0), (1, -170.0, 80.0), (2, 100.5, 40.5)]
-    k = 5
-    got = knn_join(pages, queries, k=k).toPandas()
-
-    geo = with_geocode(pages).select("url", "lon", "lat").toPandas()
-    for qid, qlon, qlat in queries:
-        d2 = (geo.lon.values - qlon) ** 2 + (geo.lat.values - qlat) ** 2
-        order = sorted(zip(d2, geo.url.values))[:k]
-        expect_urls = [u for _, u in order]
-        got_q = got[got.query_id == qid].sort_values("rank")
-        assert got_q.url.tolist() == expect_urls, qid
-        np.testing.assert_allclose(got_q.dist2.values, [d for d, _ in order], rtol=0, atol=0)
-
-
-def test_knn_list_prune_path_persist_is_released(spark, pages):
-    """max_rings=8 disks cover <=50% of the grid, so the list path
-    persists the pruned pages; release_persisted() must free it."""
-    from rasterio_spark.plans.cache import release_persisted
-
-    rdds = spark.sparkContext._jsc.getPersistentRDDs
-    release_persisted()
-    before = rdds().size()
-    queries = [(0, 10.0, 10.0), (1, -170.0, 80.0), (2, 100.5, 40.5)]
-    knn_join(pages, queries, k=3, max_rings=8).count()
-    release_persisted()
-    assert rdds().size() == before
 
 
 def test_sample_points(spark):

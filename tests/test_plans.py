@@ -112,6 +112,28 @@ def test_checkpointed_write_one_file_per_tile_and_commit(spark, tmp_path):
     assert verify_lineage(spark, resumed, "s", "tile").count() == 0
 
 
+def test_truncated_lineage_file_raises(spark, tmp_path):
+    """A lineage file cut to half its bytes fails every reader instead of
+    reading as 'uncommitted' (which would rewrite its partitions)."""
+    out = str(tmp_path)
+    df = _eight_tiles(spark)
+    with pytest.raises(RuntimeError, match="after 3 partitions"):
+        checkpointed_write(df, out, "s", "tile", fail_after_partitions=3)
+    checkpointed_write(df, out, "s", "tile")
+    lin = os.path.join(out, LINEAGE_DIR, "s")
+    paths = [os.path.join(lin, f) for f in _parquet_files(lin)]
+    assert len(paths) == 2
+    newest = max(paths, key=lambda p: os.stat(p).st_mtime_ns)
+    with open(newest, "r+b") as f:
+        f.truncate(os.path.getsize(newest) // 2)
+    with pytest.raises(Py4JJavaError):
+        read_lineage(spark, out, "s").count()
+    with pytest.raises(Py4JJavaError):
+        verify_lineage(spark, out, "s", "tile").collect()
+    with pytest.raises(Py4JJavaError):
+        checkpointed_write(df, out, "s", "tile")
+
+
 def test_digest_counts_duplicates_and_ignores_order(spark):
     """Duplicate rows add up instead of cancelling, and the digest does
     not depend on how the rows are partitioned or ordered."""

@@ -5,8 +5,7 @@
 2. pip_join layer-cache key must include geometry;
 3. merge_sources mixed-resolution sources are nearest-resampled onto
    the output grid (reference merge.py:488-494 out_shape read);
-4. knn planar metric / non-wrapped expansion near the antimeridian;
-5. sieve mode='gdal': iterative largest-neighbor merge (clusters of
+4. sieve mode='gdal': iterative largest-neighbor merge (clusters of
    adjacent small regions that jointly exceed the threshold DO merge).
 """
 
@@ -165,29 +164,6 @@ def test_merge_sources_mixed_resolution(spark):
     # non-overlapped cells keep the coarse value
     assert got[(2, 0)] == 1.0
     assert got[(3, 1)] == 1.0
-
-
-def test_knn_planar_near_antimeridian(spark):
-    """A query near lon=-170 must rank by PLANAR distance: pages at
-    lon=+170 are ~340 degrees away, not 20 — expansion must not wrap."""
-    from rasterio_spark.operators.join import knn_join
-
-    # synthetic pages: cluster of 3 near (+170, 0), 3 sparser near (-150, 0)
-    pts = [(-150.0 + i * 0.5, 0.0) for i in range(3)] + [
-        (170.0 + i * 0.1, 0.0) for i in range(3)
-    ]
-    rows = [(f"u{i}", x, y) for i, (x, y) in enumerate(pts)]
-    pages = spark.createDataFrame(rows, "url string, plon double, plat double")
-    # knn_join geocodes from url; instead check the metric directly via
-    # cells.ring wrap=False behavior + brute-force comparison
-    from rasterio_spark.grid import cells as C
-
-    r, c = C.rowcol_of(-179.0, 0.0, 7)
-    ring_wrapped = C.ring(int(r), int(c), 3, 7, wrap=True)
-    ring_planar = C.ring(int(r), int(c), 3, 7, wrap=False)
-    ny, nx = C.grid_shape(7)
-    assert (ring_wrapped[:, 1] >= nx - 10).any()  # wraps to far east
-    assert (ring_planar[:, 1] <= 10).all()  # clipped, no far-side cells
 
 
 def test_sieve_gdal_merges_small_cluster(spark):

@@ -1,6 +1,5 @@
 """Round-3 additions: zonal_stats, downsample_stats, multiband stack,
-knn DataFrame-input path, kmeans oracle determinism, geocode skew
-signal."""
+kmeans oracle determinism, geocode skew signal."""
 
 from __future__ import annotations
 
@@ -135,28 +134,6 @@ def test_zonal_stats_multipart_dedup(spark):
     assert len(rows) == 1
     # union cover: 4 + 4 - 1 overlap = 7 cells
     assert rows[0]["n_cells"] == 7
-
-
-def test_knn_df_input_equals_list_path(spark):
-    """DataFrame query input returns exactly the list path's rows."""
-    from rasterio_spark.operators.join import knn_join
-    from rasterio_spark.sources.pages import synth_pages
-
-    pages = synth_pages(spark, 3000)
-    queries = [(0, 10.0, 10.0), (1, -170.0, 80.0), (2, 100.5, 40.5)]
-    base = {
-        (r["query_id"], r["rank"]): (r["url"], r["dist2"])
-        for r in knn_join(pages, queries, k=4).collect()
-    }
-    qdf = spark.createDataFrame(queries, "query_id long, qlon double, qlat double")
-    dfp = {
-        (r["query_id"], r["rank"]): (r["url"], r["dist2"])
-        for r in knn_join(pages, qdf, k=4).collect()
-    }
-    assert dfp == base
-    from rasterio_spark.plans.cache import release_persisted
-
-    release_persisted()
 
 
 def test_kmeans_oracle_matches_duckdb(spark, tmp_path):

@@ -3,8 +3,6 @@
 - pip_join's cover resolution is a pure performance parameter: the same
   (url, polygon_id) set must come out at any cover_res (the budgeted
   default included).
-- knn_join's prune-skip heuristic (disks covering > 50% of the grid run
-  without the semi-join + cache) must not change the top-k.
 - _spread_small_input (round-robin rebalance of single-partition
   corpora) must not change dedup results.
 """
@@ -15,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rasterio_spark.operators.dedup import dedup_groups, minhash_lsh_pairs
-from rasterio_spark.operators.join import knn_join, pip_join
+from rasterio_spark.operators.join import pip_join
 from rasterio_spark.sources.pages import pages_from_documents
 from rasterio_spark.sources.polygons import rect_polygons
 
@@ -37,18 +35,6 @@ def test_pip_join_cover_budget_equivalence(spark, pages):
     for cover_res in (7, 8, 10):
         got = _pair_set(pip_join(pages, polys, cover_res=cover_res))
         assert got == base, cover_res
-
-
-def test_knn_prune_paths_agree(spark, pages):
-    """max_rings=64 (disks cover >50% of the res-7 grid -> prune+cache
-    skipped) and max_rings=8 (3.5% coverage -> semi-join prune path)
-    return identical exact top-k."""
-    queries = [(0, 10.0, 10.0), (1, -170.0, 80.0), (2, 100.5, 40.5)]
-    wide = [tuple(r) for r in knn_join(pages, queries, k=3, max_rings=64)
-            .orderBy("query_id", "rank").collect()]
-    narrow = [tuple(r) for r in knn_join(pages, queries, k=3, max_rings=8)
-              .orderBy("query_id", "rank").collect()]
-    assert wide == narrow
 
 
 def test_spread_small_input_invariant(spark, sf_dir):
