@@ -163,24 +163,6 @@ def pip_join_count_sql() -> str:
     """.replace("AS rects(", "AS r(")
 
 
-def q_pip_join_sort_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rasterio_spark.operators.join import pip_join
-    from rasterio_spark.sources.polygons import rect_polygons
-
-    return pip_join(
-        _pages(spark, sf_dir), rect_polygons(), strategy="sort_merge", salt_buckets=8
-    ).select("url", "polygon_id", "poly_value")
-
-
-def q_pip_join_rtree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rasterio_spark.operators.join import pip_join
-    from rasterio_spark.sources.polygons import rect_polygons
-
-    return pip_join(_pages(spark, sf_dir), rect_polygons(), strategy="rtree").select(
-        "url", "polygon_id", "poly_value"
-    )
-
-
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rasterio_spark.operators.join import knn_join
 
@@ -663,7 +645,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # correctness artifact caps at 50 queries, so redundant-oracle rows
     # were removed IN FAVOR OF pytest equivalence pins —
     #   tile_counts_salted == tile_counts   (tests/test_join_spark.py:51)
-    #   pip_join strategy variants == pairs (tests/test_join_spark.py:45)
+    #   pip_join strategy variants == pairs
+    #     (tests/test_join_spark.py::test_pip_join_strategies_agree)
     #   per-method downsample == the columns of downsample_stats
     #   (tests/test_round3_fixes.py) — mode keeps its own row (different
     #   plan shape).

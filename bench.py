@@ -9,7 +9,7 @@ and prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": ...,
    "headline_rows_per_sec": ..., "headline_rows": ...}
 
-The 20 timed keys live in one registry, ``suite()``; ``bench_extra.py``
+The 19 timed keys live in one registry, ``suite()``; ``bench_extra.py``
 times, noop-sinks and explains entries of that same registry.
 
 Page count scales with the sf directory: n = sf * 6e6 (sf0.1 -> 600k
@@ -70,7 +70,7 @@ def ensure_pages(spark, n: int) -> str:
 
 def build_headline(spark, pages_path: str):
     """The north-star pipeline: pages table -> tile (res 7) -> PIP join
-    (auto strategy) -> join output (salted cell layout).
+    (broadcast cover) -> join output (salted cell layout).
 
     Cover resolution 7 (= the working tiling res) measured best at the
     bench scale: the broadcast build is ~20k rows at the cost of more
@@ -89,7 +89,6 @@ def build_headline(spark, pages_path: str):
             skew=True,
             salt_buckets=8,
             geocode="stored",
-            strategy="auto",
             cover_res=7,
         )
 
@@ -97,7 +96,7 @@ def build_headline(spark, pages_path: str):
 def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     """The bench registry: ``(queries, untimed)``.
 
-    ``queries`` maps each of the 20 keys, in run order, to a thunk that
+    ``queries`` maps each of the 19 keys, in run order, to a thunk that
     builds its DataFrame (or a dict of DataFrames); a key's time covers
     the thunk plus a count() of what it returns. ``untimed`` maps a key
     to set-up or plan warm-up that runs just before that key is timed."""
@@ -179,7 +178,6 @@ def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         "cell_histogram": lambda: cell_histogram(pages),
         "pip_join_broadcast": lambda: pip_join(pages, polys, strategy="broadcast"),
         "pip_join_sort_merge": lambda: pip_join(pages, polys, strategy="sort_merge"),
-        "pip_join_rtree": lambda: pip_join(pages, polys, strategy="rtree"),
         "pip_join_auto": lambda: pip_join(pages, polys),
         "knn": lambda: knn_join(pages, knn_points, k=10),
         "asof_latest": lambda: asof_latest(pages),

@@ -1,11 +1,11 @@
-"""GeoJSON-dict geometry utilities: validation, bounds, explode, PIP, R-tree.
+"""GeoJSON-dict geometry utilities: validation, bounds, explode, PIP.
 
 Geometries are plain dicts (``{"type": ..., "coordinates": ...}``),
 matching the reference's structural model
 (/root/reference/rasterio/features.py:550-644). In DataFrames a polygon
 layer is ``(polygon_id long, rings array<array<array<double>>>, value
-double)``; the driver materializes small layers, builds an STR-packed
-R-tree over the bboxes, and broadcasts it to the PIP pandas UDF.
+double)``; the driver materializes small layers and builds pip_join's
+polygon cover from them (operators/join.py).
 
 The point-in-polygon test is even-odd ray casting with rasterio's
 rasterize inclusion rule: a cell is burned iff its **center** is inside
@@ -17,6 +17,7 @@ convention closely enough to reproduce the conftest golden arrays
 
 from __future__ import annotations
 
+import numbers
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -85,7 +86,7 @@ def is_valid_geom(geom) -> bool:
 def _coords_iter(obj) -> Iterator[tuple[float, float]]:
     """Flatten any nesting of coordinate lists into (x, y) pairs."""
     if isinstance(obj, (list, tuple)):
-        if obj and isinstance(obj[0], (int, float)):
+        if obj and isinstance(obj[0], numbers.Real):
             yield obj[0], obj[1]
         else:
             for sub in obj:
@@ -182,9 +183,9 @@ class FlatPolygons:
     batch PIP with NO per-polygon Python loop.
 
     Layout: edges of polygon k occupy [starts[k], starts[k] + counts[k])
-    in (x0, y0, x1, y1); ``index`` maps polygon_id -> k. Built once on
-    the driver: pip_join broadcasts it for :meth:`contains`, rasterize
-    scans it on the driver with :meth:`center_spans`.
+    in (x0, y0, x1, y1); ``index`` maps polygon_id -> k. Built on the
+    driver: :meth:`contains` is the exact reference pip_join's refine is
+    tested against, and rasterize scans it with :meth:`center_spans`.
     """
 
     __slots__ = ("index", "starts", "counts", "x0", "y0", "x1", "y1")
@@ -382,91 +383,3 @@ def line_cells(coords: np.ndarray) -> np.ndarray:
         cc = np.round(c0 + t * (c1 - c0)).astype(np.int64)
         out.append(np.stack([rr, cc], axis=1))
     return np.unique(np.concatenate(out), axis=0)
-
-
-# ---- STR-packed R-tree (driver-built, broadcast to executors) -------------
-
-class STRtree:
-    """Sort-Tile-Recursive packed R-tree over bounding boxes.
-
-    Built once on the driver from the polygon layer's bboxes, then
-    broadcast; each PIP-join batch queries it to get candidate polygon
-    ids before the exact ray-casting refine (the classic filter-and-
-    refine spatial join; see SURVEY.md §2.3).
-
-    Pure NumPy, pickle-friendly. Query is vectorized over a batch of
-    boxes: returns (box_idx, item_id) candidate pairs.
-    """
-
-    __slots__ = ("node_boxes", "leaf_items", "_item_boxes", "ids", "_leaf_cap")
-
-    def __init__(self, boxes: np.ndarray, ids: np.ndarray | None = None, leaf_capacity: int = 16):
-        boxes = np.asarray(boxes, dtype="float64").reshape(-1, 4)
-        n = len(boxes)
-        self.ids = np.arange(n, dtype=np.int64) if ids is None else np.asarray(ids, dtype=np.int64)
-        self._leaf_cap = leaf_capacity
-        if n == 0:
-            self.node_boxes = np.zeros((0, 4))
-            self.leaf_items = []
-            self._item_boxes = []
-            return
-        # STR packing: sort by center-x, slice into vertical strips,
-        # sort each strip by center-y, chunk into leaves.
-        cx = (boxes[:, 0] + boxes[:, 2]) / 2
-        cy = (boxes[:, 1] + boxes[:, 3]) / 2
-        order = np.argsort(cx, kind="stable")
-        n_leaves = max(1, -(-n // leaf_capacity))
-        n_strips = max(1, int(np.ceil(np.sqrt(n_leaves))))
-        strip_size = -(-n // n_strips)
-        leaves: list[np.ndarray] = []
-        for s in range(0, n, strip_size):
-            strip = order[s : s + strip_size]
-            strip = strip[np.argsort(cy[strip], kind="stable")]
-            for t in range(0, len(strip), leaf_capacity):
-                leaves.append(strip[t : t + leaf_capacity])
-        self.leaf_items = [self.ids[leaf] for leaf in leaves]
-        self._item_boxes = [boxes[leaf] for leaf in leaves]
-        self.node_boxes = np.stack(
-            [
-                np.concatenate(
-                    [boxes[leaf, :2].min(axis=0), boxes[leaf, 2:].max(axis=0)]
-                )
-                for leaf in leaves
-            ]
-        )
-
-    def query(self, qboxes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Batch query: (m, 4) boxes -> (query_idx, item_id) overlap pairs."""
-        qboxes = np.asarray(qboxes, dtype="float64").reshape(-1, 4)
-        if len(self.node_boxes) == 0 or len(qboxes) == 0:
-            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-        nb = self.node_boxes
-        # leaf-level overlap: (m, n_leaves)
-        hit = (
-            (qboxes[:, None, 0] <= nb[None, :, 2])
-            & (qboxes[:, None, 2] >= nb[None, :, 0])
-            & (qboxes[:, None, 1] <= nb[None, :, 3])
-            & (qboxes[:, None, 3] >= nb[None, :, 1])
-        )
-        q_idx_out: list[np.ndarray] = []
-        item_out: list[np.ndarray] = []
-        # iterate LEAVES (few), vectorize over the queries hitting each
-        for li in range(len(self.leaf_items)):
-            q_hit = np.nonzero(hit[:, li])[0]
-            if not q_hit.size:
-                continue
-            ib = self._item_boxes[li]
-            qb = qboxes[q_hit]
-            m = (
-                (qb[:, None, 0] <= ib[None, :, 2])
-                & (qb[:, None, 2] >= ib[None, :, 0])
-                & (qb[:, None, 1] <= ib[None, :, 3])
-                & (qb[:, None, 3] >= ib[None, :, 1])
-            )
-            qi2, ii = np.nonzero(m)
-            if qi2.size:
-                q_idx_out.append(q_hit[qi2])
-                item_out.append(self.leaf_items[li][ii])
-        if not q_idx_out:
-            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-        return np.concatenate(q_idx_out), np.concatenate(item_out)

@@ -17,11 +17,12 @@
 - ``asof_latest``: latest page per (cell) by warc_ts — the as-of
   resolution used on (cell_id, warc_ts) sorted runs.
 
-Scale notes: the polygon side is broadcast (small); the pages side
-never collects. ``strategy='sort_merge'`` repartitions by range on
-cell_id and sorts (cell_id, warc_ts) within partitions — the
-north_star's sort-merge layout — useful when the cover is too big to
-broadcast; output is identical.
+Scale notes: the polygon cover is pip_join's only index, built on the
+driver once per (layer, resolution) and capped by
+:func:`cover_cell_budget`; the pages side never collects.
+``strategy='sort_merge'`` joins the same cover after repartitioning by
+range on cell_id and sorting (cell_id, warc_ts) within partitions — the
+north_star's sort-merge layout; output is identical.
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from rasterio_spark.grid import cells as C
-from rasterio_spark.grid.geometry import STRtree
 from rasterio_spark.operators.tile import DEFAULT_RES, tile_pages
 from rasterio_spark.sources.polygons import prepare_layer
 
@@ -80,10 +80,8 @@ def _polygon_cover(entries, res: int, rings_by_id) -> pd.DataFrame:
     crosses.
 
     Pure NumPy per polygon, with rows x edges masks and no per-cell
-    Python: runs driver-side for small layers, executor-side per batch
-    inside :func:`_polygon_cover_distributed` above
-    COVER_DISTRIBUTED_THRESHOLD polygons. Size is O(boundary + interior
-    cells), independent of page count.
+    Python, run on the driver. Size is O(boundary + interior cells),
+    independent of page count.
     """
     from rasterio_spark.grid.geometry import _segments_intersect_rects, points_in_rings
 
@@ -168,12 +166,6 @@ def _refine(lon: Column, lat: Column) -> Column:
 
 _LAYER_CACHE: dict = {}
 
-# Above this many polygons the cover is built distributed (mapInPandas
-# over polygon batches) instead of a serial driver loop: at 10^5-10^6
-# shapes the serial build is minutes of driver time, while the batched
-# build is O(P / cores) wall-clock with the identical per-polygon NumPy.
-COVER_DISTRIBUTED_THRESHOLD = 10_000
-
 # Cover-cell budget for the res+3 refinement loop (r6, guide
 # §2.4/§3.1): every pip_join action pays a BroadcastExchange that is
 # SERIAL in cover rows (measured ~4 s/1.2M rows per action on this
@@ -190,61 +182,18 @@ def cover_cell_budget() -> int:
     return int(os.environ.get("RASTERIO_SPARK_COVER_CELLS", "150000"))
 
 
-def _polygon_cover_distributed(spark, polygons: list[dict], res: int, batch_rows: int = 512) -> DataFrame:
-    """Cover build for large layers: the same per-polygon NumPy as
-    :func:`_polygon_cover`, run executor-side over polygon batches via
-    mapInPandas. Geometry ships inside the batch rows (geom json), so
-    nothing polygon-sized stays on the driver during the build; the
-    result is a DataFrame with the cover's exact schema."""
-    import json as _json
-
-    def _np_default(o):
-        # ring coordinates may be numpy arrays OR numpy scalars
-        # (np.float32/np.int64 aren't iterable, so plain default=list
-        # would raise); tolist() covers both
-        return o.tolist() if hasattr(o, "tolist") else list(o)
-
-    rows = [
-        (int(p["polygon_id"]), float(p["value"]), _json.dumps(p["geom"], default=_np_default))
-        for p in polygons
-    ]
-    n_part = max(
-        1,
-        min(len(rows) // batch_rows + 1, spark.sparkContext.defaultParallelism * 2),
-    )
-    src = spark.createDataFrame(
-        rows, "polygon_id long, value double, geom string"
-    ).repartition(n_part, "polygon_id")
-
-    def build(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            polys = [
-                {"polygon_id": int(pid), "value": float(v), "geom": _json.loads(g)}
-                for pid, v, g in zip(
-                    pdf["polygon_id"].values, pdf["value"].values, pdf["geom"].values
-                )
-            ]
-            entries, rings_by_id = prepare_layer(polys)
-            if entries:
-                yield _polygon_cover(entries, res, rings_by_id)
-
-    return src.mapInPandas(build, schema=COVER_SCHEMA)
-
-
-def _layer_index(spark, polygons: list[dict], cover_res: int | None, prepared=None):
+def _layer_index(spark, polygons: list[dict], cover_res: int, prepared=None):
     """The layer's join index, built once per (layer, resolution) and
     memoized: this is the 'open the polygon layer' step a real
-    deployment does once and reuses across every job against it.
-    ``cover_res=None`` gives the broadcast ``FlatPolygons`` the R-tree
-    strategy ray-casts against; otherwise the broadcast cover DataFrame
-    (:func:`_polygon_cover`, ``cell_id`` renamed ``_cover_cell``)."""
+    deployment does once and reuses across every job against it. The
+    index is the broadcast cover DataFrame (:func:`_polygon_cover`,
+    ``cell_id`` renamed ``_cover_cell``)."""
     import hashlib
     import json as _json
 
     # the key must cover the full geometry, not just ids/values — two
-    # layers with identical ids but different rings must not collide
+    # layers with identical ids but different rings must not collide;
+    # tolist() serializes numpy arrays and numpy scalars alike
     key = (
         hashlib.sha256(
             _json.dumps(
@@ -253,7 +202,7 @@ def _layer_index(spark, polygons: list[dict], cover_res: int | None, prepared=No
                     for p in polygons
                 ],
                 sort_keys=True,
-                default=list,
+                default=lambda o: o.tolist(),
             ).encode()
         ).hexdigest(),
         len(polygons),
@@ -263,26 +212,15 @@ def _layer_index(spark, polygons: list[dict], cover_res: int | None, prepared=No
     if hit is not None:
         return hit
     entries, rings_by_id = prepared if prepared is not None else prepare_layer(polygons)
-    if cover_res is None:
-        from rasterio_spark.grid.geometry import FlatPolygons
-
-        index = spark.sparkContext.broadcast(FlatPolygons(rings_by_id))
-    else:
-        if len(polygons) > COVER_DISTRIBUTED_THRESHOLD:
-            # large layer: executor-side batched build
-            cover = _polygon_cover_distributed(spark, polygons, cover_res)
-        else:
-            # an Arrow-backed local relation: a Python-list build would
-            # scan through a PythonRDD and start Python workers
-            cover = spark.createDataFrame(
-                _polygon_cover(entries, cover_res, rings_by_id), COVER_SCHEMA
-            )
-        # localCheckpoint (eager) materializes the cover into executor
-        # blocks ONCE per layer: without it every downstream action
-        # re-runs the build, and a driver LocalTableScan re-serializes
-        # all rows before its BroadcastExchange (measured: ~4 s/action
-        # at 1.2M rows, ~0.2 s checkpointed)
-        index = F.broadcast(cover.withColumnRenamed("cell_id", "_cover_cell").localCheckpoint())
+    # an Arrow-backed local relation: a Python-list build would scan
+    # through a PythonRDD and start Python workers
+    cover = spark.createDataFrame(_polygon_cover(entries, cover_res, rings_by_id), COVER_SCHEMA)
+    # localCheckpoint (eager) materializes the cover into executor
+    # blocks ONCE per layer: without it every downstream action re-runs
+    # the build, and a driver LocalTableScan re-serializes all rows
+    # before its BroadcastExchange (measured: ~4 s/action at 1.2M rows,
+    # ~0.2 s checkpointed)
+    index = F.broadcast(cover.withColumnRenamed("cell_id", "_cover_cell").localCheckpoint())
     _LAYER_CACHE[key] = index
     return index
 
@@ -292,7 +230,7 @@ def pip_join(
     polygons: list[dict],
     res: int = DEFAULT_RES,
     skew: bool = False,
-    strategy: str = "auto",
+    strategy: str = "broadcast",
     salt_buckets: int = 0,
     cover_res: int | None = None,
     geocode: str = "auto",
@@ -307,97 +245,45 @@ def pip_join(
     cells are fully interior — those candidates skip the refine
     entirely; only the O(perimeter) boundary sliver is ray-cast, in the
     JVM against the few edges its cover row carries. The working
-    ``cell_id``/tile columns stay at ``res``.
+    ``cell_id``/tile columns stay at ``res``. A layer whose bbox area
+    exceeds :func:`cover_cell_budget` at every finer resolution is
+    covered at ``res`` itself: a coarser cover drops the bbox pre-filter
+    the cells give, so every page of a coarse cell becomes a candidate
+    of every polygon in it (measured 3-30x slower than a per-page probe
+    of the layer's bboxes).
 
-    ``strategy='auto'``: broadcast cover unless the layer's bbox area
-    exceeds the cover cap even at the WORKING resolution (a cover that
-    can't be built/broadcast at any useful res). Rationale (measured,
-    BENCH r1 vs r2): the cover join refines only the ~f*n candidate
-    rows, while the R-tree probe pays Arrow for every row — once the
-    cover build is amortized by the layer cache, broadcast wins at
-    every f < 1 (24M pages, f~0.65: 8.7 s vs 17.6 s). R-tree remains
-    the right call for one-shot jobs against huge ad-hoc layers (no
-    cover build at all); 'sort_merge' for covers too big to broadcast
-    but still enumerable.
+    ``strategy``: ``'broadcast'`` (default) broadcast-joins the cover;
+    ``'sort_merge'`` joins the same cover under the north_star's
+    (cell_id, warc_ts) sort-merge layout. Output is identical.
     """
+    if strategy not in ("broadcast", "sort_merge"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     spark = pages.sparkSession
     tiled = tile_pages(pages, res=res, skew=skew, geocode=geocode)
 
-    # ONE serial prepare per invocation (r4 verdict: the auto estimate,
-    # the cover-res cap loop, and _layer_index each re-prepared the
-    # layer — three O(polygons) driver passes before any work started).
-    # Prepared entries thread through every consumer below.
+    # ONE serial prepare per invocation (r4 verdict: the cover-res cap
+    # loop and _layer_index each re-prepared the layer). Prepared
+    # entries thread through every consumer below.
     prepared = prepare_layer(polygons)
-    entries = prepared[0]
 
-    def _bbox_cells_at(r_est: int) -> int:
-        ny, nx = C.grid_shape(r_est)
-        return sum(
-            max(1, int((r - l) / (C.LON_SPAN / nx)) + 1)
-            * max(1, int((t - b) / (C.LAT_SPAN / ny)) + 1)
-            for _, _, (l, b, r, t) in entries
-        )
-
-    if strategy == "auto":
-        strategy = "rtree" if _bbox_cells_at(res) > 2_000_000 else "broadcast"
-    if strategy not in ("broadcast", "sort_merge", "rtree"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    if strategy != "rtree" and cover_res is None:
+    if cover_res is None:
         cover_res = res + 3
         # cap the cover size: total bbox area in cells at cover_res
         # (budget rationale at cover_cell_budget above)
         budget = cover_cell_budget()
-        while cover_res > res and _bbox_cells_at(cover_res) > budget:
+
+        def bbox_cells_at(r_est: int) -> int:
+            ny, nx = C.grid_shape(r_est)
+            return sum(
+                max(1, int((r - l) / (C.LON_SPAN / nx)) + 1)
+                * max(1, int((t - b) / (C.LAT_SPAN / ny)) + 1)
+                for _, _, (l, b, r, t) in prepared[0]
+            )
+
+        while cover_res > res and bbox_cells_at(cover_res) > budget:
             cover_res -= 1
 
-    index = _layer_index(
-        spark, polygons, None if strategy == "rtree" else cover_res, prepared=prepared
-    )
-
-    if strategy == "rtree":
-        # broadcast STR R-tree over polygon bboxes; one mapInPandas pass
-        # does candidate lookup + ray-cast refine — no cover join at all.
-        # Blob columns (html/text) never enter the Python stage (r6):
-        # a mapInPandas Arrow-transfers every projected column BOTH
-        # ways, so the probe ships join keys + metadata only (rejoin by
-        # url when the payload is needed; at scale you never move blobs
-        # through a spatial join). Guide §4.1: pass only the columns
-        # the function needs.
-        boxes = np.array([e[2] for e in entries], dtype="float64")
-        ids = np.array([e[0] for e in entries], dtype=np.int64)
-        values = {e[0]: e[1] for e in entries}
-        tree_bc = spark.sparkContext.broadcast((STRtree(boxes, ids), values))
-
-        from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-        slim = tiled.drop("html", "text")
-        out_schema = StructType(
-            list(slim.schema.fields)
-            + [StructField("polygon_id", LongType()), StructField("poly_value", DoubleType())]
-        )
-
-        def probe(batches):
-            tree, vals = tree_bc.value
-            flat = index.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pts = np.stack(
-                    [pdf["lon"].values, pdf["lat"].values, pdf["lon"].values, pdf["lat"].values],
-                    axis=1,
-                )
-                qi, pid = tree.query(pts)
-                if not len(qi):
-                    continue
-                keep = flat.contains(pid, pdf["lon"].values[qi], pdf["lat"].values[qi])
-                qi, pid = qi[keep], pid[keep]
-                out = pdf.iloc[qi].reset_index(drop=True)
-                out["polygon_id"] = pid.astype("int64")
-                out["poly_value"] = pd.Series(pid).map(vals).astype("float64")
-                yield out
-
-        return slim.mapInPandas(probe, schema=out_schema)
+    index = _layer_index(spark, polygons, cover_res, prepared=prepared)
 
     from rasterio_spark.functions import cell_exprs as CE
 

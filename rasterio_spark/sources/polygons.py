@@ -2,14 +2,14 @@
 
 Schema (SURVEY.md §1.1): ``polygons(polygon_id long, rings
 array<array<array<double>>>, value double)``. Small layers (the usual
-case: admin boundaries, crawl filters) are materialized driver-side,
-packed into an STR R-tree + a rings dict, and broadcast; only the
-per-polygon candidate-cell cover travels through a join.
+case: admin boundaries, crawl filters) are materialized driver-side
+into bboxes + a rings dict, from which pip_join builds the per-polygon
+cell cover it broadcasts.
 
 Two generators:
 - ``rect_polygons``: deterministic axis-aligned rectangles — the
   oracle-able layer (a rectangle's PIP is a pure range predicate, so
-  the DuckDB twin is exact; the engine still runs the generic R-tree +
+  the DuckDB twin is exact; the engine still runs the generic cover +
   ray-casting path against them).
 - ``synth_polygons``: FIXTURES.md §7 — 200 jittered convex polygons +
   5 hot-box polygons + degenerate cases (empty ring -> skipped with a
@@ -129,7 +129,7 @@ def synth_polygons(n: int = 200, seed: int = 42) -> list[dict]:
 
 
 def prepare_layer(polys: list[dict], skip_invalid: bool = True):
-    """Validate + explode + pack: returns (entries, rings_by_id, boxes).
+    """Validate + explode + pack: returns (entries, rings_by_id).
 
     Invalid/empty geometries are warned and skipped (skip_invalid=True)
     or raise — parity with rasterize's validation driver

@@ -1,14 +1,12 @@
 """Geometry tests: is_valid_geom parity with the reference's structural
 rules (features.py:550-644, exercised by tests/test_features.py), bounds,
 PIP ray casting against the conftest golden arrays
-(basic_image / basic_image_2x2, reference tests/conftest.py:285-320),
-and the STR-tree filter."""
+(basic_image / basic_image_2x2, reference tests/conftest.py:285-320)."""
 
 import numpy as np
 import pytest
 
 from rasterio_spark.grid.geometry import (
-    STRtree,
     explode_geometries,
     geom_bounds,
     is_valid_geom,
@@ -149,48 +147,6 @@ def test_flat_polygons_matches_points_in_rings():
     # unknown polygon id -> False
     assert not flat.contains(np.array([12345]), np.array([0.0]), np.array([0.0]))[0]
     assert flat.contains(np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0)).size == 0
-
-
-def test_strtree_query():
-    rng = np.random.default_rng(42)
-    boxes = np.zeros((100, 4))
-    boxes[:, 0] = rng.uniform(-100, 100, 100)
-    boxes[:, 1] = rng.uniform(-100, 100, 100)
-    boxes[:, 2] = boxes[:, 0] + rng.uniform(1, 10, 100)
-    boxes[:, 3] = boxes[:, 1] + rng.uniform(1, 10, 100)
-    tree = STRtree(boxes)
-
-    queries = np.zeros((20, 4))
-    queries[:, 0] = rng.uniform(-100, 100, 20)
-    queries[:, 1] = rng.uniform(-100, 100, 20)
-    queries[:, 2] = queries[:, 0] + rng.uniform(1, 20, 20)
-    queries[:, 3] = queries[:, 1] + rng.uniform(1, 20, 20)
-
-    qi, items = tree.query(queries)
-    got = set(zip(qi.tolist(), items.tolist()))
-
-    # brute-force oracle
-    expected = set()
-    for i, q in enumerate(queries):
-        for j, b in enumerate(boxes):
-            if q[0] <= b[2] and q[2] >= b[0] and q[1] <= b[3] and q[3] >= b[1]:
-                expected.add((i, j))
-    assert got == expected
-
-
-def test_strtree_empty():
-    tree = STRtree(np.zeros((0, 4)))
-    qi, items = tree.query(np.array([[0, 0, 1, 1]]))
-    assert qi.size == 0 and items.size == 0
-
-
-def test_strtree_picklable():
-    import pickle
-
-    tree = STRtree(np.array([[0, 0, 1, 1], [2, 2, 3, 3]]))
-    tree2 = pickle.loads(pickle.dumps(tree))
-    qi, items = tree2.query(np.array([[0.5, 0.5, 2.5, 2.5]]))
-    assert set(items.tolist()) == {0, 1}
 
 
 def test_is_valid_geom_reference_matrix():

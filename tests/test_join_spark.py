@@ -42,7 +42,7 @@ def test_pip_join_strategies_agree(spark, pages):
         (r["url"], r["polygon_id"])
         for r in pip_join(pages, polys, strategy="broadcast").select("url", "polygon_id").collect()
     }
-    for strategy in ("sort_merge", "rtree"):
+    for strategy in ("sort_merge",):
         got = {
             (r["url"], r["polygon_id"])
             for r in pip_join(pages, polys, strategy=strategy).select("url", "polygon_id").collect()

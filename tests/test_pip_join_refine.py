@@ -13,9 +13,10 @@ from rasterio_spark.operators import join as J
 from rasterio_spark.sources.polygons import prepare_layer, rect_polygons
 
 RES = 3
-COVER_RESES = (4, 6)
-# lattice of a quarter cell at the finer cover resolution: vertices and
-# pages on it land exactly on cell boundaries at both cover resolutions
+# RES itself is where a layer over the cover-cell budget lands
+COVER_RESES = (RES, 4, 6)
+# lattice of a quarter cell at the finest cover resolution: vertices and
+# pages on it land exactly on cell boundaries at every cover resolution
 DX = C.LON_SPAN / C.grid_shape(6)[1] / 4
 DY = C.LAT_SPAN / C.grid_shape(6)[0] / 4
 
@@ -116,10 +117,9 @@ def layer(spark):
 
 
 @pytest.mark.parametrize("cover_res", COVER_RESES)
-def test_pip_join_equals_contains_on_random_polygons(spark, layer, cover_res, monkeypatch):
-    """broadcast, sort_merge and the distributed-cover build all emit
-    exactly the pairs FlatPolygons.contains accepts, in the pages
-    columns' order."""
+def test_pip_join_equals_contains_on_random_polygons(spark, layer, cover_res):
+    """broadcast and sort_merge both emit exactly the pairs
+    FlatPolygons.contains accepts, in the pages columns' order."""
     polys, pages, want = layer
     assert len(want) > 1000
     for strategy in ("broadcast", "sort_merge"):
@@ -127,10 +127,15 @@ def test_pip_join_equals_contains_on_random_polygons(spark, layer, cover_res, mo
         assert _pairs(got) == want, strategy
         # pages columns first: output digests hash columns in schema order
         assert got.columns == J.tile_pages(pages, res=RES).columns + ["polygon_id", "poly_value"]
-    monkeypatch.setattr(J, "COVER_DISTRIBUTED_THRESHOLD", 0)
-    monkeypatch.setattr(J, "_LAYER_CACHE", {})
-    got = J.pip_join(pages, polys, res=RES, strategy="broadcast", cover_res=cover_res)
-    assert _pairs(got) == want
+
+
+@pytest.mark.parametrize("strategy", ["rtree", "auto"])
+def test_pip_join_rejects_unknown_strategy(spark, strategy):
+    """The cover is the only index: broadcast and sort_merge are the
+    only join layouts."""
+    pages = spark.createDataFrame([("u0", 1.0, 1.0)], "url string, lon double, lat double")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        J.pip_join(pages, rect_polygons(), strategy=strategy)
 
 
 def _square(pid, x0, y0, x1, y1):
@@ -138,7 +143,7 @@ def _square(pid, x0, y0, x1, y1):
     return {"polygon_id": pid, "geom": {"type": "Polygon", "coordinates": [ring]}, "value": float(pid)}
 
 
-def test_cover_shortcuts_match_rtree(spark):
+def test_cover_shortcuts_exact(spark):
     """Pages the cover cell alone would place wrongly, at cover res 6:
     - clamped past the grid's extent into an edge row or column (a
       polygon over lat 80-88 and a page at (10, 89.5) share a cell;
@@ -147,8 +152,7 @@ def test_cover_shortcuts_match_rtree(spark):
       -1e-17 lands in the cell whose west side is 0; the polygon's west
       edge is at -5e-18);
     - tested against an open ring, whose parity flips at lat 10 inside
-      a cell no edge crosses, whose center is outside.
-    The R-tree strategy tests every page exactly."""
+      a cell no edge crosses, whose center is outside."""
     open_ring = [(40, 0), (40, 30), (70, 30), (70, 10)]
     polys = [
         _square(1, 0, 80, 20, 88),
@@ -171,7 +175,6 @@ def test_cover_shortcuts_match_rtree(spark):
     )
     pages = spark.createDataFrame(pdf)
     want = {("p1", 1), ("p2", 1), ("p3", 2), ("p5", 2), ("p6", 3), ("p9", 4), ("p10", 5)}
-    assert _pairs(J.pip_join(pages, polys, res=3, strategy="rtree")) == want
     for strategy in ("broadcast", "sort_merge"):
         got = J.pip_join(pages, polys, res=3, strategy=strategy, cover_res=6)
         assert _pairs(got) == want, strategy
@@ -237,8 +240,8 @@ def _python_nodes(df) -> list[str]:
 def test_pip_join_plans_run_no_python(spark, sf_dir):
     """The broadcast and sort_merge joins (pages scanned from parquet)
     plan no Python UDF, map or RDD node, and the cover they join is a
-    local relation, not a Python RDD; rtree still maps in pandas (so the
-    check can see one)."""
+    local relation, not a Python RDD. A mapInPandas over the pages shows
+    the check can see a Python node."""
     from rasterio_spark.sources.pages import pages_from_documents
     from rasterio_spark.sources.polygons import synth_polygons
 
@@ -252,17 +255,17 @@ def test_pip_join_plans_run_no_python(spark, sf_dir):
     cover = spark.createDataFrame(J._polygon_cover(entries, 8, rings_by_id), J.COVER_SCHEMA)
     assert _python_nodes(cover) == []
     assert "LocalTableScan" in cover._jdf.queryExecution().executedPlan().toString()
-    assert _python_nodes(J.pip_join(pages, polys, strategy="rtree")) == ["MapInPandas"]
+    assert _python_nodes(pages.mapInPandas(lambda it: it, pages.schema)) == ["MapInPandas"]
 
 
 def test_rect_polygons_join_under_ansi(spark, sf_dir):
     """Rectangles (two horizontal edges each) join with ANSI arithmetic
     on: the refine never divides by a zero edge height."""
-    from rasterio_spark.sources.pages import pages_from_documents
+    from rasterio_spark.sources.pages import pages_from_documents, with_geocode
 
     pages = pages_from_documents(spark, sf_dir)
     polys = rect_polygons()
-    want = _pairs(J.pip_join(pages, polys, strategy="rtree"))
+    want = _expected(polys, with_geocode(pages).select("url", "lon", "lat").toPandas())
     old = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:

@@ -230,85 +230,6 @@ def test_sieve_gdal_distributed_postcondition_and_determinism(spark):
                 )
 
 
-def _synthetic_polygons(n, seed=11):
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    polys = []
-    for i in range(n):
-        cx = float(rng.uniform(-170, 170))
-        cy = float(rng.uniform(-80, 80))
-        w = float(rng.uniform(0.5, 3.0))
-        h = float(rng.uniform(0.5, 3.0))
-        polys.append(
-            {
-                "polygon_id": i,
-                "value": float(i % 7),
-                "geom": {
-                    "type": "Polygon",
-                    "coordinates": [[
-                        [cx - w, cy - h], [cx + w, cy - h], [cx + w, cy + h],
-                        [cx - w, cy + h], [cx - w, cy - h],
-                    ]],
-                },
-            }
-        )
-    return polys
-
-
-def test_distributed_cover_matches_serial(spark):
-    """_polygon_cover_distributed (mapInPandas batches) must produce the
-    exact same cover row set as the serial driver build."""
-    from rasterio_spark.operators.join import (
-        _polygon_cover,
-        _polygon_cover_distributed,
-    )
-    from rasterio_spark.sources.polygons import prepare_layer
-
-    polys = _synthetic_polygons(300)
-    entries, rings_by_id = prepare_layer(polys)
-    serial = _polygon_cover(entries, res=6, rings_by_id=rings_by_id)
-    dist = _polygon_cover_distributed(spark, polys, res=6).toPandas()
-    key = ["cell_id", "polygon_id"]
-    s = serial.sort_values(key).reset_index(drop=True)
-    d = dist.sort_values(key).reset_index(drop=True)
-    assert len(s) == len(d)
-    assert (s["cell_id"].values == d["cell_id"].values).all()
-    assert (s["polygon_id"].values == d["polygon_id"].values).all()
-    assert (s["poly_value"].values == d["poly_value"].values).all()
-    assert (s["interior"].values == d["interior"].values).all()
-
-    def edges(v):
-        return None if v is None else [tuple(e[k] for k in ("x0", "y0", "x1", "y1")) for e in v]
-
-    assert [edges(v) for v in s["_edges"]] == [edges(v) for v in d["_edges"]]
-
-
-def test_pip_join_distributed_cover_equivalence(spark, monkeypatch):
-    """pip_join output is identical whether the cover was built serially
-    or distributed (threshold forced to 0)."""
-    from rasterio_spark.operators import join as J
-
-    polys = _synthetic_polygons(40, seed=5)
-    pages = spark.range(0, 3000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-        (F.pmod(F.col("id") * F.lit(2654435761), F.lit(340000)) / 1000.0 - 170).alias("lon"),
-        (F.pmod(F.col("id") * F.lit(40503), F.lit(160000)) / 1000.0 - 80).alias("lat"),
-    )
-
-    def run(strategy):
-        out = J.pip_join(pages, polys, res=5, strategy=strategy)
-        cols = ["url", "polygon_id", "poly_value"]
-        return sorted(tuple(r[c] for c in cols) for r in out.select(cols).collect())
-
-    base_b = run("broadcast")
-    # force the distributed build (fresh cache so it actually runs)
-    monkeypatch.setattr(J, "COVER_DISTRIBUTED_THRESHOLD", 0)
-    monkeypatch.setattr(J, "_LAYER_CACHE", {})
-    assert run("broadcast") == base_b
-    assert len(base_b) > 0
-
-
 def test_colormap_roundtrip(tmp_path):
     """write_colormap/colormap parity with the reference round-trip
     (reference tests/test_colormap.py): 3-tuples get alpha 255, the

@@ -6,8 +6,7 @@
 - focal_filter(normalize=True) zero-weight guards (ADVICE #2).
 - from_wkt tolerates newlines/tabs after the dataset authority
   (ADVICE #1).
-- _polygon_cover_distributed serializes numpy-scalar coordinates
-  (ADVICE #3).
+- pip_join accepts numpy-scalar ring coordinates.
 - cli rm recognizes multi-level-partitioned layer tables (ADVICE #5).
 """
 
@@ -41,7 +40,7 @@ def test_pip_join_prepares_layer_once(spark, monkeypatch):
 
     monkeypatch.setattr(J, "prepare_layer", counting)
     J._LAYER_CACHE.clear()
-    for strategy in ("auto", "broadcast", "rtree", "sort_merge"):
+    for strategy in ("broadcast", "sort_merge"):
         calls["n"] = 0
         J.pip_join(pages, polys, strategy=strategy)
         assert calls["n"] == 1, (strategy, calls["n"])
@@ -119,14 +118,16 @@ def test_from_wkt_inner_authority_still_rejected():
         from_wkt(wkt)
 
 
-# ------------------------------------------------- distributed cover build
+# ------------------------------------------------- numpy-scalar coordinates
 
 
-def test_polygon_cover_distributed_numpy_scalar_coords(spark):
-    """np.float32 / np.int64 ring coordinates must serialize (ADVICE:
-    default=list raised TypeError on non-iterable numpy scalars)."""
-    from rasterio_spark.operators.join import _polygon_cover, _polygon_cover_distributed
-    from rasterio_spark.sources.polygons import prepare_layer
+def test_pip_join_numpy_scalar_coords(spark, monkeypatch):
+    """A ring of np.float32 / np.int64 coordinates joins exactly like the
+    same ring as Python floats: prepare_layer's coordinate walk and the
+    layer cache's JSON key both take numpy scalars."""
+    import pandas as pd
+
+    import rasterio_spark.operators.join as J
 
     ring = [
         [np.float32(0.0), np.int64(0)],
@@ -135,31 +136,27 @@ def test_polygon_cover_distributed_numpy_scalar_coords(spark):
         [np.float32(0.0), np.float64(10.0)],
         [np.float32(0.0), np.int64(0)],
     ]
-    polys = [
-        {
-            "polygon_id": 1,
-            "value": 2.0,
-            "geom": {"type": "Polygon", "coordinates": [ring]},
-        }
-    ]
-    got = _polygon_cover_distributed(spark, polys, res=6).toPandas()
-    entries, rings = prepare_layer(
-        [
+    lonlat = [(5.0, 5.0), (0.0, 5.0), (10.0, 5.0), (5.0, 0.0), (5.0, 10.0), (11.0, 5.0), (5.0, -1.0)]
+    pages = spark.createDataFrame(
+        pd.DataFrame(
             {
-                "polygon_id": 1,
-                "value": 2.0,
-                "geom": {
-                    "type": "Polygon",
-                    "coordinates": [[[float(x), float(y)] for x, y in ring]],
-                },
+                "url": [f"p{i}" for i in range(len(lonlat))],
+                "lon": [x for x, _ in lonlat],
+                "lat": [y for _, y in lonlat],
+                "warc_ts": pd.Timestamp("2024-01-01"),
             }
-        ]
+        )
     )
-    exp = _polygon_cover(entries, 6, rings)
-    key = ["cell_id", "polygon_id"]
-    assert sorted(map(tuple, got[key].values.tolist())) == sorted(
-        map(tuple, exp[key].values.tolist())
-    )
+
+    def pairs(coords):
+        monkeypatch.setattr(J, "_LAYER_CACHE", {})
+        polys = [{"polygon_id": 1, "value": 2.0, "geom": {"type": "Polygon", "coordinates": [coords]}}]
+        out = J.pip_join(pages, polys, res=3).select("url", "polygon_id", "poly_value")
+        return sorted(tuple(r) for r in out.collect())
+
+    want = pairs([[float(x), float(y)] for x, y in ring])
+    assert want
+    assert pairs(ring) == want
 
 
 # ---------------------------------------------------------------- cli rm
