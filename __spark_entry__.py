@@ -59,12 +59,6 @@ def q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tile_counts(_pages(spark, sf_dir), res=TILE_RES)
 
 
-def q_tile_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rasterio_spark.operators.tile import tile_counts_salted
-
-    return tile_counts_salted(_pages(spark, sf_dir), res=TILE_RES)
-
-
 def q_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rasterio_spark.operators.tile import cell_histogram
 
@@ -641,15 +635,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on pruned entries (round-3 VERDICT item 1): the driver's
-    # correctness artifact caps at 50 queries, so redundant-oracle rows
-    # were removed IN FAVOR OF pytest equivalence pins —
-    #   tile_counts_salted == tile_counts   (tests/test_join_spark.py:51)
+    # NOTE on pruned entries: the correctness artifact caps at 50
+    # queries, so redundant-oracle rows are pinned by pytest equivalence
+    # instead —
     #   pip_join strategy variants == pairs
     #     (tests/test_join_spark.py::test_pip_join_strategies_agree)
     #   per-method downsample == the columns of downsample_stats
-    #   (tests/test_round3_fixes.py) — mode keeps its own row (different
-    #   plan shape).
+    #     (tests/test_round3_ops.py::test_downsample_stats_matches_per_method)
+    #     — mode keeps its own row (different plan shape).
     qs: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "tile_counts": q_tile_counts,
         "cell_histogram": q_cell_histogram,

@@ -9,7 +9,7 @@ and prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": ...,
    "headline_rows_per_sec": ..., "headline_rows": ...}
 
-The 19 timed keys live in one registry, ``suite()``; ``bench_extra.py``
+The 18 timed keys live in one registry, ``suite()``; ``bench_extra.py``
 times, noop-sinks and explains entries of that same registry.
 
 Page count scales with the sf directory: n = sf * 6e6 (sf0.1 -> 600k
@@ -96,7 +96,7 @@ def build_headline(spark, pages_path: str):
 def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     """The bench registry: ``(queries, untimed)``.
 
-    ``queries`` maps each of the 19 keys, in run order, to a thunk that
+    ``queries`` maps each of the 18 keys, in run order, to a thunk that
     builds its DataFrame (or a dict of DataFrames); a key's time covers
     the thunk plus a count() of what it returns. ``untimed`` maps a key
     to set-up or plan warm-up that runs just before that key is timed."""
@@ -178,7 +178,6 @@ def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         "cell_histogram": lambda: cell_histogram(pages),
         "pip_join_broadcast": lambda: pip_join(pages, polys, strategy="broadcast"),
         "pip_join_sort_merge": lambda: pip_join(pages, polys, strategy="sort_merge"),
-        "pip_join_auto": lambda: pip_join(pages, polys),
         "knn": lambda: knn_join(pages, knn_points, k=10),
         "asof_latest": lambda: asof_latest(pages),
         # identical as-of semantics over the bucketed layout: the
@@ -225,9 +224,18 @@ def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
             spark.read.parquet(f"{sf_dir}/embeddings.parquet"), [0, 7, 42, 99], k=10
         ),
     }
+
+    def small_pages():
+        return ensure_pages(spark, max(n // 6, 10_000))
+
     untimed = {
         # a 1/6-size headline run: JIT and codegen for the join plan
-        HEADLINE: lambda: build_headline(spark, ensure_pages(spark, max(n // 6, 10_000))).count(),
+        HEADLINE: lambda: build_headline(spark, small_pages()).count(),
+        # the same call over the 1/6-size pages: the layer's cover
+        # build and first-use codegen, not the operator
+        "pip_join_broadcast": lambda: pip_join(
+            spark.read.parquet(small_pages()), polys, strategy="broadcast"
+        ).count(),
         # the same plan over 2-ring disks: first-use codegen, not the operator
         "knn": lambda: knn_join(pages, knn_points, k=10, max_rings=2).count(),
         "asof_latest_bucketed": lambda: asof_latest(bucketed().limit(1000)).count(),

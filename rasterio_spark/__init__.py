@@ -5,7 +5,7 @@ rasterio (reference: /root/reference, rasterio/rasterio @ v1.5.1.dev0) as
 Spark DataFrame operators over tables of web pages / grid cells:
 
 - windowed block reads         -> cell-range predicates pushed to parquet scans
-- affine / Window transforms   -> pure-Python grid algebra + vectorized pandas UDFs
+- affine / Window transforms   -> pure-Python grid algebra + column expressions
 - rasterize / shapes           -> polygon->cell broadcast PIP joins / connected components
 - merge / stack                -> multi-source groupBy aggregation with mask semantics
 - reproject / warp             -> re-grid joins and aggregations
@@ -17,9 +17,9 @@ Layout:
               the test oracle substrate)
   operators/  DataFrame -> DataFrame operators
   sources/    synthetic data generators + layer loaders
-  functions/  vectorized pandas/Arrow UDFs and built-in column expressions
+  functions/  built-in column expressions (grid math, text features)
   plans/      session builder, lineage/checkpointing
-  streaming/  structured-streaming variants
+  streaming/  structured-streaming tile counts and batch sessionization
 """
 
 __version__ = "0.1.0"

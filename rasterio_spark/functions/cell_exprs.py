@@ -62,8 +62,9 @@ def affine_rowcol_cols(x: Column, y: Column, transform) -> tuple[Column, Column]
     row = floor((y - f) / e), col = floor((x - c) / a). Matches
     grid.transform.rowcol's floor default for b == d == 0 transforms.
 
-    Rotated transforms need the linear-solve path — use
-    functions.udfs.rowcol_udf for those.
+    Rotated transforms need the linear-solve path of
+    grid.transform.rowcol, which takes NumPy arrays; there is no
+    column form.
     """
     a, b, c, d, e, f = transform
     if b != 0 or d != 0:

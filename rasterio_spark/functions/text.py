@@ -18,14 +18,6 @@ STOPWORDS = {
 }
 
 
-def tokens_col(text: Column) -> Column:
-    return F.split(text, " ")
-
-
-def token_count_col(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
 # BPE-ish pre-tokenizer regex (GPT-2-style shape, engine-portable
 # subset: letter runs, single digits, punctuation runs — Java and RE2
 # agree on this class-only pattern)
@@ -178,300 +170,3 @@ def lang_id_sql(text_col: str = "text") -> str:
         best = f"CASE WHEN {h} > ({best_n}) THEN '{lang}' ELSE ({best}) END"
         best_n = f"CASE WHEN {h} > ({best_n}) THEN ({h}) ELSE ({best_n}) END"
     return f"CASE WHEN ({best_n}) > 0 THEN ({best}) ELSE 'unk' END"
-
-
-def with_repetition_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1,
-    public formulation) — pure JVM expressions, no UDFs, no shuffle:
-
-    - dup_line_frac:  1 - distinct(lines) / lines        (lines = \\n split)
-    - dup_line_char_frac: chars in duplicated lines / total line chars
-      (each repeated occurrence beyond the first counts its characters)
-
-    Documents exceeding thresholds (e.g. dup_line_frac > 0.3) are the
-    standard pre-training drop set; thresholding is the caller's
-    policy. The n-gram repetition signal needs a per-doc mode and lives
-    in :func:`top_bigram_features` (explode + groupBy — one shuffle,
-    linear; a per-row expression fold would be O(distinct²) per doc).
-    """
-    t = F.col(text_col)
-    lines = F.split(t, "\n")
-    n_lines = F.size(lines)
-    n_distinct = F.size(F.array_distinct(lines))
-    dup_line_frac = F.when(
-        n_lines > 0, F.round(1.0 - n_distinct / n_lines, 6)
-    ).otherwise(F.lit(0.0))
-
-    # char mass of repeated line occurrences beyond the first:
-    # sum(len(line) per occurrence) - sum(len(line) per distinct line)
-    total_chars = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    distinct_chars = F.aggregate(
-        F.array_distinct(lines), F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    dup_line_char_frac = F.when(
-        total_chars > 0,
-        F.round((total_chars - distinct_chars) / total_chars, 6),
-    ).otherwise(F.lit(0.0))
-
-    return docs.withColumn("dup_line_frac", dup_line_frac).withColumn(
-        "dup_line_char_frac", dup_line_char_frac
-    )
-
-
-def top_bigram_features(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, top_bigram, top_bigram_n, top_bigram_char_frac): the
-    most frequent word bigram per document (ties -> lexicographically
-    smallest, deterministic) and the Gopher top-n-gram character
-    fraction (bigram chars x count / doc chars).
-
-    Plan: explode bigrams -> groupBy (doc, bigram) with map-side
-    partial counts -> row_number window per doc. Linear in tokens; the
-    one shuffle is O(distinct bigrams), never O(distinct²).
-    """
-    from pyspark.sql import Window as W
-
-    t = F.col(text_col)
-    words = tokens_col(t)
-    bigrams = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.slice(words, 1, F.size(words) - 1),
-            lambda w, i: F.concat_ws(" ", w, F.element_at(words, i + 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.length(t).alias("_chars"), bigrams.alias("_bg")
-    )
-    counts = (
-        base.select("doc_id", "_chars", F.explode("_bg").alias("bg"))
-        .groupBy("doc_id", "_chars", "bg")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = W.partitionBy("doc_id").orderBy(F.col("n").desc(), F.col("bg").asc())
-    top = counts.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") == 1)
-    out = top.select(
-        "doc_id",
-        F.col("bg").alias("top_bigram"),
-        F.col("n").alias("top_bigram_n"),
-        F.when(
-            F.col("_chars") > 0,
-            F.round(F.length("bg") * F.col("n") / F.col("_chars"), 6),
-        ).otherwise(F.lit(0.0)).alias("top_bigram_char_frac"),
-    )
-    # docs with < 2 tokens keep a zero row (left join back)
-    all_docs = docs.select(F.col(id_col).alias("doc_id"))
-    return (
-        all_docs.join(out, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("top_bigram", F.lit("")).alias("top_bigram"),
-            F.coalesce("top_bigram_n", F.lit(0)).alias("top_bigram_n"),
-            F.coalesce("top_bigram_char_frac", F.lit(0.0)).alias("top_bigram_char_frac"),
-        )
-    )
-
-
-def repetition_features_sql(text_col: str = "text") -> dict[str, str]:
-    """DuckDB twins of with_repetition_features (same names/rounding)."""
-    t = text_col
-    lines = f"string_split({t}, chr(10))"
-    return {
-        "dup_line_frac": (
-            f"CASE WHEN len({lines}) > 0 THEN "
-            f"round(1.0 - len(list_distinct({lines})) / len({lines}), 6) "
-            f"ELSE 0.0 END"
-        ),
-        "dup_line_char_frac": (
-            f"CASE WHEN list_sum(list_transform({lines}, x -> length(x))) > 0 THEN "
-            f"round((list_sum(list_transform({lines}, x -> length(x))) - "
-            f"list_sum(list_transform(list_distinct({lines}), x -> length(x)))) "
-            f"/ list_sum(list_transform({lines}, x -> length(x))), 6) ELSE 0.0 END"
-        ),
-    }
-
-
-def top_bigram_sql(table: str = "documents", text_col: str = "text") -> str:
-    """DuckDB twin of top_bigram_features."""
-    words = f"string_split({text_col}, ' ')"  # same delimiter as tokens_col
-    return f"""
-        WITH bg AS (
-          SELECT doc_id, length({text_col}) AS chars,
-                 unnest([{words}[i] || ' ' || {words}[i+1]
-                         FOR i IN range(1, len({words}))]) AS bg
-          FROM {table} WHERE len({words}) >= 2
-        ),
-        counts AS (
-          SELECT doc_id, chars, bg, count(*) AS n FROM bg GROUP BY 1, 2, 3
-        ),
-        top AS (
-          SELECT doc_id, bg, n, chars,
-                 row_number() OVER (
-                   PARTITION BY doc_id ORDER BY n DESC, bg ASC
-                 ) AS rk
-          FROM counts
-        )
-        SELECT d.doc_id,
-               COALESCE(t.bg, '') AS top_bigram,
-               COALESCE(t.n, 0) AS top_bigram_n,
-               COALESCE(CASE WHEN t.chars > 0
-                             THEN round(length(t.bg) * t.n / t.chars, 6) END,
-                        0.0) AS top_bigram_char_frac
-        FROM {table} d LEFT JOIN (SELECT * FROM top WHERE rk = 1) t USING (doc_id)
-    """
-
-
-def with_url_features(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """Domain-level filter signals for crawl curation: host, tld,
-    path_depth, url_len. Pure split arithmetic (identical in the DuckDB
-    twin — parse_url is JVM-only) assuming scheme://host/path URLs."""
-    u = F.col(url_col)
-    parts = F.split(u, "/")
-    host = F.element_at(parts, 3)
-    host_bits = F.split(host, "\\.")
-    return (
-        pages.withColumn("host", host)
-        .withColumn("tld", F.element_at(host_bits, -1))
-        .withColumn("path_depth", F.greatest(F.size(parts) - 3, F.lit(0)))
-        .withColumn("url_len", F.length(u))
-    )
-
-
-def url_features_sql(url_col: str = "url") -> dict[str, str]:
-    """DuckDB twins of with_url_features (same names)."""
-    parts = f"string_split({url_col}, '/')"
-    host = f"{parts}[3]"
-    return {
-        "host": host,
-        "tld": f"string_split({host}, '.')[-1]",
-        "path_depth": f"greatest(len({parts}) - 3, 0)",
-        "url_len": f"length({url_col})",
-    }
-
-
-# --- PII redaction (training-data scrubbing) ------------------------------
-#
-# Regex subset chosen to behave identically under Java regex (Spark) and
-# RE2 (DuckDB): character classes, bounded repetition, \b, \d only.
-# Order matters: emails first (so local-part digits are gone before the
-# phone pass), then dotted IPs, then bare digit runs.
-PII_PATTERNS = [
-    ("email", r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}", "[EMAIL]"),
-    ("ip", r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "[IP]"),
-    ("phone", r"\+?\d[\d \-()]{7,}\d", "[PHONE]"),
-]
-
-
-def redact_pii(docs: DataFrame, text_col: str = "text", out_col: str = "text_redacted") -> DataFrame:
-    """Replace emails / IPv4s / phone-number-shaped digit runs with
-    typed placeholder tokens — the standard pre-training scrub pass.
-    Pure JVM regexp_replace chain (codegen, no UDF); the DuckDB twin
-    applies the identical patterns."""
-    expr = F.col(text_col)
-    for _, pat, repl in PII_PATTERNS:
-        expr = F.regexp_replace(expr, pat, repl)
-    return docs.withColumn(out_col, expr)
-
-
-def redact_pii_sql(text_col: str = "text") -> str:
-    """DuckDB twin of redact_pii (same patterns, same order)."""
-    e = text_col
-    for _, pat, repl in PII_PATTERNS:
-        e = f"regexp_replace({e}, '{pat}', '{repl}', 'g')"
-    return e
-
-
-# --- benchmark decontamination --------------------------------------------
-
-
-def ngram_keys(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    use_hash: bool = True,
-) -> DataFrame:
-    """(id, key) for every n-token shingle of every doc. ``use_hash``
-    keys by xxhash64 of the shingle (8 bytes/row through the shuffle —
-    the 100 TB layout); False keys by the shingle string itself (the
-    DuckDB-twin-exact form used by the equivalence tests)."""
-    words = F.split(F.lower(F.col(text_col)), "\\s+")
-    # guard short docs: sequence(1, 0) DESCENDS in Spark, so an under-n
-    # doc must yield an empty index array, not [1, 0]
-    n_sh = F.size(words) - (n - 1)
-    idx = F.when(n_sh > 0, F.sequence(F.lit(1), n_sh)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingle = lambda i: F.concat_ws(" ", F.slice(words, i, n))  # noqa: E731
-    key = (lambda i: F.xxhash64(shingle(i))) if use_hash else shingle
-    return docs.select(
-        F.col(id_col).alias("_id"), F.explode(F.transform(idx, key)).alias("key")
-    ).select(F.col("_id").alias(id_col), "key")
-
-
-def decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_text_col: str | None = None,
-    min_hits: int = 1,
-    use_hash: bool = True,
-) -> DataFrame:
-    """Drop training docs sharing >= ``min_hits`` distinct n-token
-    shingles with the evaluation corpus — benchmark-decontamination as
-    a broadcast anti-join: the eval side's distinct shingle keys are
-    tiny relative to the corpus (benchmarks are small by definition),
-    so the training scan never shuffles; only matched (id, key) rows
-    reach the hit-count groupBy. Returns ``docs`` minus contaminated
-    rows."""
-    ev = (
-        ngram_keys(eval_docs, n, eval_text_col or text_col, id_col, use_hash)
-        .select("key")
-        .distinct()
-    )
-    hits = (
-        ngram_keys(docs, n, text_col, id_col, use_hash)
-        .join(F.broadcast(ev), "key")
-        .groupBy(id_col)
-        .agg(F.count_distinct("key").alias("contam_hits"))
-        .where(F.col("contam_hits") >= min_hits)
-    )
-    return docs.join(hits.select(id_col), id_col, "left_anti")
-
-
-def decontaminate_sql(
-    n: int = 8,
-    table: str = "documents",
-    eval_table: str = "eval_docs",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_hits: int = 1,
-) -> str:
-    """DuckDB twin of decontaminate(use_hash=False): identical shingle
-    construction (lower + \\s+ split), string keys, same hit rule."""
-
-    def shingles(tbl):
-        w = f"regexp_split_to_array(lower({text_col}), '\\s+')"
-        return f"""
-          SELECT {id_col},
-                 unnest([array_to_string({w}[i:i+{n - 1}], ' ')
-                         FOR i IN range(1, len({w}) - {n - 2})]) AS key
-          FROM {tbl} WHERE len({w}) >= {n}
-        """
-
-    return f"""
-        WITH ev AS (SELECT DISTINCT key FROM ({shingles(eval_table)})),
-        hits AS (
-          SELECT {id_col}, count(DISTINCT key) AS contam_hits
-          FROM ({shingles(table)}) s JOIN ev USING (key)
-          GROUP BY {id_col}
-          HAVING count(DISTINCT key) >= {min_hits}
-        )
-        SELECT d.* FROM {table} d
-        WHERE {id_col} NOT IN (SELECT {id_col} FROM hits)
-    """

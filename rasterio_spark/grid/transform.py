@@ -96,13 +96,6 @@ def rowcol(transform: Affine, xs, ys, op=None):
     return rows, cols
 
 
-def rowcol_arrays(transform: Affine, xs: np.ndarray, ys: np.ndarray):
-    """Bulk rowcol for UDF hot path: float64 in, int32 out, no branching."""
-    t = guard_transform(transform)
-    fcols, frows = t.reverse(xs, ys)
-    return np.floor(frows).astype(np.int32), np.floor(fcols).astype(np.int32)
-
-
 def from_gcps(gcps) -> Affine:
     """Affine from ground control points by least squares
     (reference transform.py:312-326 from_gcps -> GDALGCPsToGeoTransform:

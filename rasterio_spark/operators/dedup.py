@@ -45,107 +45,6 @@ def dedup_exact_sql(table: str = "documents", text_col: str = "text", id_col: st
     """
 
 
-def dedup_paragraphs(
-    docs: DataFrame,
-    max_df: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
-    """C4-style cross-document span dedup at paragraph granularity
-    (public C4 recipe removes spans occurring elsewhere in the corpus):
-    a paragraph appearing in MORE than ``max_df`` distinct documents is
-    dropped from every document; the text is reassembled from the kept
-    paragraphs in original order.
-
-    Returns (doc_id, clean_text, n_paragraphs, n_dropped).
-
-    Plan: posexplode paragraphs -> document-frequency per paragraph
-    hash (two map-side-combining aggregations) -> broadcast-anti the
-    hot set -> re-aggregate ordered by position. The hot-paragraph set
-    is tiny (boilerplate tail) so the anti join broadcasts — the same
-    guard shape as the shingle df-cap; everything else is linear.
-    """
-    from rasterio_spark.plans.cache import scoped_persist
-
-    # the exploded paragraph table feeds THREE consumers (the
-    # document-frequency agg, the anti-join, the per-doc stats);
-    # unpersisted, each re-runs the scan + split + posexplode.
-    paras = scoped_persist(
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
-        ).withColumn("_h", F.xxhash64("para"))
-    )
-    hot = (
-        paras.groupBy("_h")
-        .agg(F.count_distinct("doc_id").alias("_df"))
-        .where(F.col("_df") > max_df)
-        .select("_h")
-    )
-    kept = paras.join(F.broadcast(hot), "_h", "left_anti")
-    stats = paras.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_paragraphs"))
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    return (
-        stats.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            "n_paragraphs",
-            (F.col("n_paragraphs") - F.coalesce("n_kept", F.lit(0))).alias("n_dropped"),
-        )
-    )
-
-
-def dedup_paragraphs_sql(
-    max_df: int = 1, table: str = "documents", text_col: str = "text", id_col: str = "doc_id"
-) -> str:
-    """DuckDB twin of dedup_paragraphs (hash-free: the df count groups
-    by the paragraph text itself — identical result, xxhash64 is not
-    DuckDB-reproducible and is only a grouping key)."""
-    return f"""
-        WITH paras AS (
-          SELECT doc_id, pos, para FROM (
-            SELECT {id_col} AS doc_id,
-                   unnest(list_transform(string_split({text_col}, chr(10)),
-                                         (p, i) -> {{'pos': i, 'para': p}}),
-                          recursive := true)
-            FROM {table}
-          )
-        ),
-        hot AS (
-          SELECT para FROM paras GROUP BY 1
-          HAVING count(DISTINCT doc_id) > {max_df}
-        ),
-        kept AS (
-          SELECT p.* FROM paras p ANTI JOIN hot h ON p.para = h.para
-        ),
-        stats AS (
-          SELECT doc_id, count(*) AS n_paragraphs FROM paras GROUP BY 1
-        ),
-        rebuilt AS (
-          SELECT doc_id,
-                 string_agg(para, chr(10) ORDER BY pos) AS clean_text,
-                 count(*) AS n_kept
-          FROM kept GROUP BY doc_id
-        )
-        SELECT s.doc_id,
-               COALESCE(r.clean_text, '') AS clean_text,
-               s.n_paragraphs,
-               s.n_paragraphs - COALESCE(r.n_kept, 0) AS n_dropped
-        FROM stats s LEFT JOIN rebuilt r USING (doc_id)
-    """
-
-
 def _shingles_expr(text_col: str, n: int) -> str:
     """Spark SQL: array of n-gram shingles over space tokens.
 

@@ -125,106 +125,3 @@ def fillnodata_sql(max_search_distance: int = 4, cells_cte: str = "cells") -> st
         FROM {cells_cte} c LEFT JOIN filled f
           ON f.band = c.band AND f.row = c.row AND f.col = c.col
     """
-
-
-def focal_filter(
-    cells: DataFrame,
-    kernel: list,
-    normalize: bool = False,
-) -> DataFrame:
-    """Generic distributed focal (map-algebra) convolution: the output
-    cell at (r, c) is sum(kernel[i][j] * value[r+i-cy, c+j-cx]) over
-    the kernel footprint, valid contributors only.
-
-    ``normalize=False``: raw weighted sum (missing/invalid neighbors
-    contribute 0) — the right semantics for difference kernels
-    (laplacian, sobel). ``normalize=True``: divide by the sum of
-    weights of the VALID contributors — the edge-renormalization rule
-    the warp kernels use (GDAL warper nodata convention), right for
-    smoothing kernels (box, gaussian).
-
-    Plan: each valid cell scatters its k*k weighted contributions
-    (one explode over a literal offset/weight array — no join against
-    a stencil table), then ONE groupBy (band, row, col) reduces them.
-    Shuffle volume is k^2 * cells with map-side partial aggregation;
-    zero Python. Output rows exist wherever any contributor landed;
-    valid mirrors contributor presence.
-    """
-    k = [[float(w) for w in row] for row in kernel]
-    kh, kw = len(k), len(k[0])
-    if any(len(r) != kw for r in k):
-        raise ValueError("kernel must be rectangular")
-    cy, cx = kh // 2, kw // 2
-    # scatter form of the GATHER rule out(r,c) = sum k[i][j] *
-    # v(r+i-cy, c+j-cx): the source cell at (r+i-cy, ...) contributes
-    # to (r, c), so its scatter offset is the NEGATED kernel offset
-    # (matters for asymmetric kernels like sobel)
-    contribs = [
-        (cy - i, cx - j, k[i][j])
-        for i in range(kh)
-        for j in range(kw)
-        if k[i][j] != 0.0
-    ]
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dr).alias("dr"), F.lit(dc).alias("dc"), F.lit(w).alias("w")
-            )
-            for dr, dc, w in contribs
-        ]
-    )
-    scattered = (
-        cells.where(F.col("valid"))
-        .select("band", "row", "col", "value", F.explode(offs).alias("o"))
-        .select(
-            "band",
-            (F.col("row") + F.col("o.dr")).alias("row"),
-            (F.col("col") + F.col("o.dc")).alias("col"),
-            (F.col("value") * F.col("o.w")).alias("wv"),
-            F.col("o.w").alias("w"),
-        )
-    )
-    if normalize and abs(sum(w for _, _, w in contribs)) < 1e-12:
-        # a zero-sum kernel (e.g. a difference/edge kernel) normalizes
-        # to 0/0 everywhere — reject up front rather than emit NULLs
-        raise ValueError("normalize=True requires a kernel with nonzero weight sum")
-    agg = scattered.groupBy("band", "row", "col").agg(
-        F.sum("wv").alias("_s"), F.sum("w").alias("_wsum")
-    )
-    if normalize:
-        # edge cells can still see a zero contributor-weight sum even
-        # for a nonzero-sum kernel (only the cancelling taps landed);
-        # those cells have no defined normalized value — drop them so
-        # valid=TRUE never rides with value=NULL
-        agg = agg.where(F.col("_wsum") != 0)
-        value = F.col("_s") / F.col("_wsum")
-    else:
-        value = F.col("_s")
-    return agg.select(
-        "band", "row", "col", F.round(value, 6).alias("value"), F.lit(True).alias("valid")
-    )
-
-
-def focal_filter_sql(
-    kernel: list, normalize: bool = False, cells_cte: str = "cells"
-) -> str:
-    """DuckDB twin of focal_filter (same offsets, rounding, semantics)."""
-    k = [[float(w) for w in row] for row in kernel]
-    kh, kw = len(k), len(k[0])
-    cy, cx = kh // 2, kw // 2
-    rows = ", ".join(
-        f"({cy - i}, {cx - j}, {k[i][j]!r})"
-        for i in range(kh)
-        for j in range(kw)
-        if k[i][j] != 0.0
-    )
-    val = "sum(value * w) / sum(w)" if normalize else "sum(value * w)"
-    having = "HAVING sum(w) <> 0" if normalize else ""
-    return f"""
-        SELECT band, row + dr AS row, col + dc AS col,
-               round({val}, 6) AS value, TRUE AS valid
-        FROM {cells_cte}, (VALUES {rows}) AS k(dr, dc, w)
-        WHERE valid
-        GROUP BY 1, 2, 3
-        {having}
-    """

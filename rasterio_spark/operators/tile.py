@@ -7,12 +7,8 @@ a block of cells (the partition / shuffle key). Edge tiles are clipped
 exactly like the reference (min(block, extent - off)) — grid.cells
 carries that rule; here tile indices are pure column math.
 
-Scale design (north_rule):
-- tiling itself is pure JVM expressions — no shuffle, no Python;
-- ``salted_repartition`` spreads hot cells over S salt buckets before a
-  shuffle-heavy downstream stage. Salting changes ONLY physical
-  placement: the tile/cell assignment columns are already materialized,
-  so operator output is byte-identical with any S (SURVEY.md §7.3).
+Scale design (north_rule): tiling itself is pure JVM expressions — no
+shuffle, no Python.
 """
 
 from __future__ import annotations
@@ -21,7 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rasterio_spark.functions import cell_exprs as CE
-from rasterio_spark.grid import cells as C
 from rasterio_spark.sources.pages import with_geocode
 
 DEFAULT_RES = 7
@@ -78,33 +73,6 @@ def cell_histogram(pages: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
             F.max("warc_ts").alias("latest_ts"),
         )
     )
-
-
-def salted_repartition(df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 8) -> DataFrame:
-    """Repartition by (key, salt) to split hot keys across tasks.
-
-    salt = pmod(hash(url), S) when a url column exists (deterministic),
-    else a hash of all columns. Downstream per-key aggregations must
-    re-combine across salt buckets (two-phase agg)."""
-    salt_src = F.col("url") if "url" in df.columns else F.concat_ws("\x00", *df.columns)
-    salted = df.withColumn("_salt", F.pmod(F.hash(salt_src), F.lit(salt_buckets)))
-    return salted.repartition(num_partitions, F.col(key), F.col("_salt")).drop("_salt")
-
-
-def tile_counts_salted(
-    pages: DataFrame, res: int = DEFAULT_RES, salt_buckets: int = 8
-) -> DataFrame:
-    """Skew-safe tile_counts: two-phase aggregation via an explicit salt.
-
-    Phase 1 aggregates (cell_id, salt) — hot cells split S ways —
-    phase 2 re-combines per cell. Output is identical to tile_counts
-    for any salt_buckets (the determinism requirement of SURVEY.md
-    §7.3 #4); only the shuffle layout changes.
-    """
-    tiled = tile_pages(pages, res=res)
-    salted = tiled.withColumn("_salt", F.pmod(F.hash(F.col("url")), F.lit(salt_buckets)))
-    partial = salted.groupBy("cell_id", "_salt").agg(F.count(F.lit(1)).alias("c"))
-    return partial.groupBy("cell_id").agg(F.sum("c").alias("n_pages"))
 
 
 def tile_counts_sql(res: int = DEFAULT_RES) -> str:

@@ -3,9 +3,8 @@
 The reference has no streaming; the north rule asks for batch +
 resumability (plans/lineage.py). This module is the optional stretch:
 the same tiling operators over ``readStream``, with event-time
-watermarks on ``warc_ts`` for late pages — so a crawl feed can be tiled
-incrementally with exactly-once sinks via ``foreachBatch`` +
-checkpointed_write.
+watermarks on ``warc_ts`` for late pages, plus batch sessionization of
+the same pages.
 """
 
 from __future__ import annotations
@@ -79,8 +78,7 @@ def sessionize_batch(pages: DataFrame, res: int = 7, gap_minutes: int = 30) -> D
     """Batch sessionization: per-cell event-time sessions split at gaps
     > gap_minutes — (cell_id, session_start, session_end, n_pages).
     Pure window functions (lag -> new-session flag -> running session
-    index -> groupBy); one shuffle on cell_id. The SQL twin is exact,
-    so this is the oracle for the stateful streaming variant."""
+    index -> groupBy); one shuffle on cell_id. The SQL twin is exact."""
     from pyspark.sql import Window as W
 
     from rasterio_spark.functions import cell_exprs as CE
@@ -133,196 +131,3 @@ def sessionize_batch_sql(pages_cte_cell: str, gap_minutes: int = 30) -> str:
                count(*) AS n_pages
         FROM sid GROUP BY cell_id, s
     """
-
-
-def sessionize_stream(
-    pages_stream: DataFrame,
-    res: int = 7,
-    gap_minutes: int = 30,
-    watermark: str = "3 hours",
-) -> DataFrame:
-    """Custom STATEFUL streaming operator (north_star 'custom stateful
-    operators' via applyInPandasWithState): per-cell event-time
-    sessions with a gap timeout. State = the one open session per cell
-    (start, end, count, all epoch seconds); a batch's events merge into
-    it (sessions closed by in-batch gaps emit immediately); the event-
-    time timeout fires once the watermark passes session_end + gap and
-    emits the final session. Emitted rows match sessionize_batch for
-    every session old enough to be closed."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    import pandas as pd
-
-    from rasterio_spark.functions import cell_exprs as CE
-    from rasterio_spark.sources.pages import with_geocode
-
-    gap = gap_minutes * 60
-    geo = with_geocode(pages_stream)
-    cell = CE.encode_cols(F.col("lon"), F.col("lat"), res)
-    df = (
-        geo.select(cell.alias("cell_id"), "warc_ts")
-        .withWatermark("warc_ts", watermark)
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        cell_id = key[0]
-        rows = []
-        if state.hasTimedOut:
-            s, e, n = state.get
-            rows.append((cell_id, s, e, n))
-            state.remove()
-        else:
-            ts: list[int] = []
-            for pdf in pdfs:
-                ts.extend((pdf["warc_ts"].astype("int64") // 1_000_000_000).tolist())
-            ts.sort()
-            if state.exists:
-                s, e, n = state.get
-            else:
-                s = e = None
-                n = 0
-            for t in ts:
-                if s is None:
-                    s, e, n = t, t, 1
-                elif t - e > gap:
-                    rows.append((cell_id, s, e, n))
-                    s, e, n = t, t, 1
-                else:
-                    e = max(e, t)
-                    n += 1
-            if s is not None:
-                state.update((int(s), int(e), int(n)))
-                state.setTimeoutTimestamp((int(e) + gap) * 1000)
-        out = pd.DataFrame(rows, columns=["cell_id", "s", "e", "n"])
-        yield pd.DataFrame(
-            {
-                "cell_id": out["cell_id"].astype("int64"),
-                "session_start": pd.to_datetime(out["s"], unit="s"),
-                "session_end": pd.to_datetime(out["e"], unit="s"),
-                "n_pages": out["n"].astype("int64"),
-            }
-        )
-
-    return df.groupBy("cell_id").applyInPandasWithState(
-        fn,
-        outputStructType="cell_id long, session_start timestamp, "
-        "session_end timestamp, n_pages long",
-        stateStructType="s long, e long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def dedup_exact_stream(
-    pages_stream: DataFrame,
-    watermark: str = "24 hours",
-    ttl_hours: int = 48,
-    hash_col: str = "text",
-) -> DataFrame:
-    """Streaming exact dedup with a deterministic keeper rule — the
-    stateful-streaming complement of operators/dedup.dedup_exact.
-
-    Emits one verdict row per input page: ``keep`` is true iff the page
-    is its text hash's keeper. The keeper is the min-(warc_ts, url) row
-    of the FIRST micro-batch that sees the hash (within-batch order is
-    sorted, so verdicts are deterministic regardless of arrival
-    interleaving; across batches append mode cannot retract an emitted
-    verdict, so a later-arriving earlier timestamp does not usurp —
-    feed in event-time order, or compare only hashes fully contained
-    in one batch, to match the batch chain exactly). Spark's built-in
-    ``dropDuplicatesWithinWatermark`` keeps an ARBITRARY first row —
-    this operator pins the batch dedup chain's min-(ts, id) rule.
-
-    State is bounded for 100-TB streams: an event-time timeout drops a
-    hash's state once the watermark passes last_seen + ``ttl_hours`` —
-    after that a recurrence is treated as new (the standard
-    watermarked-dedup tradeoff; size state TTL to the crawl's dup
-    horizon)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    import pandas as pd
-
-    ttl = ttl_hours * 3600
-    df = (
-        pages_stream.select(
-            F.sha2(F.col(hash_col).cast("binary"), 256).alias("text_hash"),
-            "url",
-            "warc_ts",
-        )
-        .withWatermark("warc_ts", watermark)
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        text_hash = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            empty = pd.DataFrame([], columns=["text_hash", "url", "warc_ts", "keep"])
-            yield pd.DataFrame(
-                {
-                    "text_hash": empty["text_hash"].astype("str"),
-                    "url": empty["url"].astype("str"),
-                    "warc_ts": pd.to_datetime(empty["warc_ts"]),
-                    "keep": empty["keep"].astype("bool"),
-                }
-            )
-            return
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch["_t"] = batch["warc_ts"].astype("int64") // 1_000_000_000
-        batch = batch.sort_values(["_t", "url"], ignore_index=True)
-        if state.exists:
-            best_t, best_url = state.get
-        else:
-            best_t, best_url = None, None
-        keeps = []
-        for t, u in zip(batch["_t"], batch["url"]):
-            if best_t is None:
-                best_t, best_url = int(t), u
-                keeps.append(True)
-            else:
-                keeps.append(False)
-        state.update((int(best_t), best_url))
-        last = int(batch["_t"].max())
-        state.setTimeoutTimestamp((last + ttl) * 1000)
-        yield pd.DataFrame(
-            {
-                "text_hash": text_hash,
-                "url": batch["url"],
-                "warc_ts": batch["warc_ts"],
-                "keep": keeps,
-            }
-        )
-
-    return df.groupBy("text_hash").applyInPandasWithState(
-        fn,
-        outputStructType="text_hash string, url string, warc_ts timestamp, keep boolean",
-        stateStructType="t long, u string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_pip_join_foreach_batch(
-    pages_stream: DataFrame,
-    polygons: list[dict],
-    out_dir: str,
-    checkpoint_dir: str,
-    res: int = 7,
-):
-    """Exactly-once streaming PIP join: each micro-batch runs the batch
-    pip_join and lands via the lineage-checkpointed idempotent writer —
-    a restart replays the batch into the same partitions with the same
-    digests."""
-    from rasterio_spark.operators.join import pip_join
-    from rasterio_spark.plans.lineage import checkpointed_write
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        joined = pip_join(batch_df, polygons, res=res)
-        out = joined.select("url", "cell_id", "tile_i", "polygon_id", "poly_value")
-        checkpointed_write(out, out_dir, f"pip_epoch_{epoch_id}", "tile_i")
-
-    return (
-        pages_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

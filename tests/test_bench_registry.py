@@ -26,7 +26,7 @@ def registry(spark, sf_dir, tmp_path_factory):
 
 def test_every_entry_builds_and_resolves_its_schema(registry):
     queries, untimed = registry
-    assert len(queries) == 19
+    assert len(queries) == 18
     assert "asof_latest_bucketed" in queries
     assert set(untimed) <= set(queries)
     for name, build in queries.items():

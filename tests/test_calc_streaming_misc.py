@@ -90,69 +90,6 @@ def test_streaming_tile_counts_equals_batch(spark, sf_dir, tmp_path):
     assert (g.n_pages.values == b.n_pages.values).all()
 
 
-def test_streaming_pip_join_foreach_batch_equals_batch(spark, sf_dir, tmp_path):
-    """Exactly-once streaming PIP join: the availableNow stream over
-    parquet shards must land the same (url, polygon_id) rows as the
-    batch pip_join on the same input, with every epoch's lineage
-    self-consistent; a restart with the same checkpoint replays
-    nothing."""
-    from rasterio_spark.operators.join import pip_join
-    from rasterio_spark.plans.lineage import verify_lineage
-    from rasterio_spark.sources.pages import pages_from_documents
-    from rasterio_spark.sources.polygons import rect_polygons
-    from rasterio_spark.streaming.pipeline import (
-        read_pages_stream,
-        streaming_pip_join_foreach_batch,
-    )
-
-    pages = pages_from_documents(spark, sf_dir)
-    stream_dir = str(tmp_path / "pages_stream")
-    pages.repartition(4).write.mode("overwrite").parquet(stream_dir)
-    out_dir = str(tmp_path / "join_out")
-    ckpt = str(tmp_path / "ckpt")
-    polys = rect_polygons()
-
-    q = streaming_pip_join_foreach_batch(
-        read_pages_stream(spark, stream_dir, max_files=2), polys, out_dir, ckpt
-    )
-    q.awaitTermination(300)
-
-    import glob
-    import os
-
-    stages = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(out_dir, "pip_epoch_*"))
-        if "_lineage" not in p
-    )
-    assert stages, "no epochs landed"
-    streamed = None
-    for s in stages:
-        part = spark.read.parquet(os.path.join(out_dir, s))
-        streamed = part if streamed is None else streamed.unionByName(part)
-        assert verify_lineage(spark, out_dir, s, "tile_i").count() == 0
-    got = sorted(
-        (r["url"], r["polygon_id"]) for r in streamed.select("url", "polygon_id").collect()
-    )
-    expect = sorted(
-        (r["url"], r["polygon_id"])
-        for r in pip_join(pages, polys).select("url", "polygon_id").collect()
-    )
-    assert got == expect
-
-    # restart with the same checkpoint: availableNow has consumed every
-    # file, so nothing replays and the output is unchanged
-    n_before = streamed.count()
-    q2 = streaming_pip_join_foreach_batch(
-        read_pages_stream(spark, stream_dir, max_files=2), polys, out_dir, ckpt
-    )
-    q2.awaitTermination(300)
-    total_after = sum(
-        spark.read.parquet(os.path.join(out_dir, s)).count() for s in stages
-    )
-    assert total_after == n_before
-
-
 def test_dtypes_helpers():
     assert get_minimum_dtype([0, 200]) == "uint8"
     assert get_minimum_dtype([-1, 200]) == "int16"

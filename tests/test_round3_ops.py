@@ -532,56 +532,6 @@ def test_read_resample_properties_ported(spark):
         downsample(cells, 2, "not_an_alg")
 
 
-def test_dedup_paragraphs_vs_duckdb(spark):
-    """C4-style paragraph dedup: engine == DuckDB twin at sf0.01."""
-    import duckdb
-
-    from rasterio_spark.operators.dedup import dedup_paragraphs, dedup_paragraphs_sql
-
-    sf = "/root/testdata/sf0.01"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    eng = (
-        dedup_paragraphs(docs, max_df=2)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
-    )
-    ora = (
-        con.execute(dedup_paragraphs_sql(max_df=2))
-        .df()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    assert len(eng) == len(ora) == docs.count()
-    for c in ("clean_text", "n_paragraphs", "n_dropped"):
-        assert (eng[c].astype(str) == ora[c].astype(str)).all(), c
-
-
-def test_dedup_paragraphs_hand_checked(spark):
-    from rasterio_spark.operators.dedup import dedup_paragraphs
-
-    rows = [
-        (0, "unique a\nBOILER\nunique b"),
-        (1, "BOILER\nonly here"),
-        (2, "BOILER\nalso unique"),
-        (3, "all mine"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in dedup_paragraphs(docs, max_df=1).collect()}
-    assert out[0]["clean_text"] == "unique a\nunique b"
-    assert out[0]["n_dropped"] == 1 and out[0]["n_paragraphs"] == 3
-    assert out[1]["clean_text"] == "only here"
-    assert out[3]["clean_text"] == "all mine" and out[3]["n_dropped"] == 0
-    # max_df=2: BOILER appears in 3 docs -> still dropped
-    out2 = {r["doc_id"]: r for r in dedup_paragraphs(docs, max_df=2).collect()}
-    assert out2[0]["n_dropped"] == 1
-    # max_df=3 keeps it
-    out3 = {r["doc_id"]: r for r in dedup_paragraphs(docs, max_df=3).collect()}
-    assert out3[0]["clean_text"] == rows[0][1]
-
-
 @pytest.mark.parametrize(
     "m_left,m_top,m_right,m_bot", [(1, 1, 1, 1), (3, 0, 2, 4), (0, 5, 0, 0)]
 )

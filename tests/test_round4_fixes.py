@@ -415,35 +415,6 @@ def test_zonal_stats_percentiles(spark):
         assert out[sid]["n_cells"] == base[sid]["n_cells"] == (hi - lo) ** 2
 
 
-def test_make_rowcol_udf_rotated_transform(spark):
-    """The generic affine UDF (rotated-transform fallback the JVM
-    expression path can't express) must match the driver-side
-    linear-solve on the same points."""
-    from rasterio_spark.functions.udfs import make_rowcol_udf
-    from rasterio_spark.grid.affine import Affine
-    from rasterio_spark.grid.transform import rowcol_arrays
-
-    import math
-
-    th = math.radians(30)
-    t = Affine(2 * math.cos(th), -2 * math.sin(th), 10.0,
-               2 * math.sin(th), 2 * math.cos(th), -5.0)
-    pts = [(float(x), float(y)) for x in range(-3, 4) for y in range(-3, 4)]
-    df = spark.createDataFrame(pts, "x double, y double")
-    udf = make_rowcol_udf(t)
-    got = {
-        (r["x"], r["y"]): (r["rc"]["row"], r["rc"]["col"])
-        for r in df.withColumn("rc", udf("x", "y")).collect()
-    }
-    import numpy as np
-
-    xs = np.array([p[0] for p in pts])
-    ys = np.array([p[1] for p in pts])
-    rows, cols = rowcol_arrays(t, xs, ys)
-    for (x, y), rr, cc in zip(pts, rows, cols):
-        assert got[(x, y)] == (rr, cc)
-
-
 def test_multimodal_decode_stub_and_descriptors():
     from rasterio_spark.sources.layers import doc_layer_descriptor, identity_layer
 

@@ -1,13 +1,9 @@
-"""Sessionization: batch window-function form vs the stateful
-streaming operator (applyInPandasWithState)."""
+"""Sessionization: the batch window-function form on hand-built
+sessions."""
 
 from __future__ import annotations
 
 import datetime as dt
-import os
-
-import pytest
-from pyspark.sql import functions as F
 
 
 def _mk_pages(spark, rows):
@@ -54,97 +50,3 @@ def test_sessionize_batch(spark):
     assert (
         (out["session_end"] - out["session_start"]) == dt.timedelta(minutes=10)
     ).all()
-
-
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    from rasterio_spark.streaming.pipeline import (
-        read_pages_stream,
-        run_stream_to_memory,
-        sessionize_batch,
-        sessionize_stream,
-    )
-
-    rows = _rows()
-    stream_dir = str(tmp_path / "sess_pages")
-    os.makedirs(stream_dir, exist_ok=True)
-    # one file per session start hour -> several micro-batches, so the
-    # watermark advances between batches
-    by_hour = {}
-    for url, ts in rows:
-        by_hour.setdefault(ts.hour, []).append((url, ts))
-    for i, hour in enumerate(sorted(by_hour)):
-        _mk_pages(spark, by_hour[hour]).coalesce(1).write.mode("append").parquet(
-            stream_dir
-        )
-
-    stream = read_pages_stream(spark, stream_dir, max_files=1)
-    out = run_stream_to_memory(
-        sessionize_stream(stream, gap_minutes=30, watermark="1 hour"),
-        "sessionize_stream_out",
-    ).toPandas()
-
-    batch = sessionize_batch(_mk_pages(spark, rows), gap_minutes=30).toPandas()
-    batch_keys = {
-        (r.cell_id, r.session_start, r.session_end, r.n_pages)
-        for r in batch.itertuples()
-    }
-    emitted = {
-        (r.cell_id, r.session_start, r.session_end, r.n_pages)
-        for r in out.itertuples()
-    }
-    # every emitted session must be exactly a batch session...
-    assert emitted <= batch_keys, emitted - batch_keys
-    # ...and all sessions closed by in-batch/new-batch gaps must have
-    # been emitted (only each cell's final open session may be held)
-    n_cells = batch["cell_id"].nunique()
-    assert len(emitted) >= len(batch_keys) - n_cells
-
-
-def test_dedup_exact_stream_matches_batch_keeper(spark, tmp_path):
-    """Streaming stateful exact dedup: keep verdicts == the batch
-    min-(warc_ts, url) keeper rule (single-directory feed)."""
-    from rasterio_spark.streaming.pipeline import (
-        dedup_exact_stream,
-        read_pages_stream,
-        run_stream_to_memory,
-    )
-
-    rows = []
-    # three distinct texts; text "dup" appears 4x across urls/times
-    for i, (url, minutes, text) in enumerate(
-        [
-            ("https://a/1", 0, "dup"),
-            ("https://a/2", 5, "dup"),
-            ("https://b/1", 1, "unique-one"),
-            ("https://b/2", 9, "dup"),
-            ("https://c/1", 3, "unique-two"),
-            ("https://a/0", 2, "dup"),
-        ]
-    ):
-        rows.append(
-            (
-                url,
-                BASE + dt.timedelta(minutes=minutes),
-                b"<html></html>",
-                text,
-                "en",
-            )
-        )
-    pages = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    d = str(tmp_path / "dedup_stream_src")
-    pages.repartition(1).write.parquet(d)
-
-    stream = read_pages_stream(spark, d)
-    out = run_stream_to_memory(
-        dedup_exact_stream(stream, watermark="0 seconds"), "dedup_stream_out"
-    ).toPandas()
-
-    assert len(out) == 6
-    kept = sorted(out[out["keep"]]["url"])
-    # batch keeper rule: min (warc_ts, url) per hash ->
-    # dup -> https://a/1 (t=0); unique-one -> b/1; unique-two -> c/1
-    assert kept == ["https://a/1", "https://b/1", "https://c/1"]
-    # every hash has exactly one keeper
-    assert out.groupby("text_hash")["keep"].sum().eq(1).all()

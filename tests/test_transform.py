@@ -14,7 +14,6 @@ from rasterio_spark.grid.transform import (
     from_bounds,
     from_origin,
     rowcol,
-    rowcol_arrays,
     xy,
 )
 
@@ -126,15 +125,6 @@ def test_rowcol_vectorized():
 def test_rowcol_op_float():
     rows, cols = rowcol(RGB_TRANSFORM, [101985.0 + 400.0], [2826915.0], op=float)
     assert cols[0] == pytest.approx(400.0 / RGB_TRANSFORM.a)
-
-
-def test_rowcol_arrays_matches_scalar():
-    xs = np.array([101985.0, 102385.0, 150000.0])
-    ys = np.array([2826915.0, 2826915.0, 2700000.0])
-    rows, cols = rowcol_arrays(RGB_TRANSFORM, xs, ys)
-    for i in range(len(xs)):
-        r, c = rowcol(RGB_TRANSFORM, float(xs[i]), float(ys[i]))
-        assert (rows[i], cols[i]) == (r, c)
 
 
 def test_affine_invert_roundtrip():

@@ -204,104 +204,3 @@ def test_similarity_ivf_equals_bruteforce(spark, sf_dir):
     # nprobe=1 is approximate: recall <= 1 but same shape
     approx = ivf_topk(emb, [0, 1], k=5, nprobe=1)
     assert approx.count() == 10
-
-
-def test_repetition_features_vs_duckdb(spark, sf_dir):
-    """Gopher-style repetition signals: engine == DuckDB twin on the
-    real documents table (test-level oracle; the driver registry is at
-    its 50-query cap)."""
-    import duckdb
-
-    from rasterio_spark.functions.text import (
-        repetition_features_sql,
-        top_bigram_features,
-        top_bigram_sql,
-        with_repetition_features,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    eng1 = (
-        with_repetition_features(docs)
-        .select("doc_id", "dup_line_frac", "dup_line_char_frac")
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    eng2 = top_bigram_features(docs).toPandas().sort_values("doc_id", ignore_index=True)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    rf = repetition_features_sql()
-    ora1 = con.execute(
-        f"SELECT doc_id, {rf['dup_line_frac']} AS dup_line_frac, "
-        f"{rf['dup_line_char_frac']} AS dup_line_char_frac FROM documents"
-    ).df().sort_values("doc_id", ignore_index=True)
-    ora2 = con.execute(top_bigram_sql()).df().sort_values("doc_id", ignore_index=True)
-
-    assert (abs(eng1["dup_line_frac"] - ora1["dup_line_frac"]) < 1e-9).all()
-    assert (abs(eng1["dup_line_char_frac"] - ora1["dup_line_char_frac"]) < 1e-9).all()
-    assert (eng2["top_bigram"] == ora2["top_bigram"]).all()
-    assert (eng2["top_bigram_n"].astype(int) == ora2["top_bigram_n"].astype(int)).all()
-    assert (
-        abs(eng2["top_bigram_char_frac"] - ora2["top_bigram_char_frac"]) < 1e-9
-    ).all()
-
-
-def test_repetition_features_hand_checked(spark):
-    from rasterio_spark.functions.text import (
-        top_bigram_features,
-        with_repetition_features,
-    )
-
-    rows = [
-        (0, "a b\na b\nc d"),        # 3 lines, 2 distinct
-        (1, "x y x y x y"),           # top bigram "x y" x3
-        (2, "one"),                   # < 2 tokens
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    rep = {r["doc_id"]: r for r in with_repetition_features(docs).collect()}
-    assert rep[0]["dup_line_frac"] == pytest.approx(1 / 3, abs=1e-6)
-    # chars: lines 'a b'(3) x2 + 'c d'(3) = 9 total, distinct = 6 -> 3/9
-    assert rep[0]["dup_line_char_frac"] == pytest.approx(1 / 3, abs=1e-6)
-    assert rep[1]["dup_line_frac"] == 0.0
-
-    bg = {r["doc_id"]: r for r in top_bigram_features(docs).collect()}
-    assert bg[1]["top_bigram"] == "x y" and bg[1]["top_bigram_n"] == 3
-    # char frac: len('x y')=3, n=3, chars=11 -> 9/11
-    assert bg[1]["top_bigram_char_frac"] == pytest.approx(9 / 11, abs=1e-6)
-    assert bg[2]["top_bigram"] == "" and bg[2]["top_bigram_n"] == 0
-
-
-def test_url_features_vs_duckdb(spark, sf_dir):
-    import duckdb
-
-    from rasterio_spark.functions.text import url_features_sql, with_url_features
-    from rasterio_spark.sources.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, sf_dir).limit(0).sparkSession.createDataFrame(
-        [
-            ("https://example.com/a/b/c", ),
-            ("http://sub.host.org/page", ),
-            ("https://xn--short.io/", ),
-            ("https://bare.net", ),
-        ],
-        "url string",
-    )
-    eng = (
-        with_url_features(pages)
-        .select("url", "host", "tld", "path_depth", "url_len")
-        .toPandas()
-        .sort_values("url", ignore_index=True)
-    )
-    con = duckdb.connect()
-    con.register("pages", eng[["url"]])
-    uf = url_features_sql()
-    ora = con.execute(
-        f"SELECT url, {uf['host']} AS host, {uf['tld']} AS tld, "
-        f"{uf['path_depth']} AS path_depth, {uf['url_len']} AS url_len FROM pages"
-    ).df().sort_values("url", ignore_index=True)
-    for c in ("host", "tld", "path_depth", "url_len"):
-        assert (eng[c].astype(str) == ora[c].astype(str)).all(), c
-    row = eng[eng["url"] == "https://example.com/a/b/c"].iloc[0]
-    assert row["host"] == "example.com" and row["tld"] == "com" and row["path_depth"] == 3
