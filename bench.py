@@ -49,6 +49,16 @@ def n_pages_for(sf: float) -> int:
 PAGES_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
 
 
+def write_format(spark) -> str:
+    """The session's parquet write format as a cache-name tag, e.g.
+    ``zstd_micros``: a cache written under another format (snappy and
+    INT96 timestamps before the write profile) is never read as this
+    one's."""
+    codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    ts = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    return f"{codec}_{ts.removeprefix('TIMESTAMP_').lower()}"
+
+
 def ensure_pages(spark, n: int) -> str:
     """Materialize the synthetic pages table to parquet once (untimed
     setup) — the real pipeline reads a stored table, so the timed job
@@ -58,7 +68,7 @@ def ensure_pages(spark, n: int) -> str:
     (lon, lat) are computed ONCE here at ingest (sha2 formulas, Zipf
     skew baked in) and persisted as columns, so the timed pipeline
     never hashes — queries then run with geocode='stored'."""
-    path = os.path.join(PAGES_CACHE, f"pages_geo_{n}")
+    path = os.path.join(PAGES_CACHE, f"pages_geo_{n}_{write_format(spark)}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from rasterio_spark.sources.pages import synth_pages, with_geocode
 
@@ -142,27 +152,29 @@ def suite(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     @functools.cache
     def bucketed():
         # the once-at-ingest shuffle: tile + bucketBy(32, cell_id)
-        # sortBy(cell_id, warc_ts), written once per session (the
-        # in-memory catalog does not outlive the process). Keyed by
-        # layout (bucket count, one file per bucket) as well as size.
+        # sortBy(cell_id, warc_ts). Keyed by layout (bucket count, one
+        # file per bucket), write format and size.
         buckets = 32
-        bt_name = f"bench_pages_bucketed_{n}_b{buckets}_clustered"
+        bt_name = f"bench_pages_bucketed_{n}_b{buckets}_clustered_{write_format(spark)}"
         if not spark.catalog.tableExists(bt_name):
-            # the warehouse dir outlives the Derby metastore (a fresh
-            # metastore_db with a stale /tmp warehouse makes saveAsTable
-            # fail with LOCATION_ALREADY_EXISTS) — this is a bench
-            # cache, so drop the orphaned location
-            import shutil
-
+            df = tile_pages(pages).select("url", "warc_ts", "lang", "cell_id")
             wh = spark.conf.get("spark.sql.warehouse.dir")
             loc = os.path.join(wh.removeprefix("file:"), bt_name)
-            if os.path.isdir(loc):
+            if os.path.exists(os.path.join(loc, "_SUCCESS")):
+                # the in-memory catalog forgets the table with the process,
+                # but its files stay: register them instead of rewriting
+                cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+                spark.sql(
+                    f"CREATE TABLE {bt_name} ({cols}) USING parquet CLUSTERED BY (cell_id) "
+                    f"SORTED BY (cell_id, warc_ts) INTO {buckets} BUCKETS LOCATION '{loc}'"
+                )
+            else:
+                # a partial write left no _SUCCESS; saveAsTable refuses a
+                # location that exists (LOCATION_ALREADY_EXISTS)
+                import shutil
+
                 shutil.rmtree(loc, ignore_errors=True)
-            write_bucketed(
-                tile_pages(pages).select("url", "warc_ts", "lang", "cell_id"),
-                bt_name,
-                buckets=buckets,
-            )
+                write_bucketed(df, bt_name, buckets=buckets)
         return read_bucketed(spark, bt_name)
 
     # production dedup config: xxh64 shingle hashes (one JVM hash call

@@ -60,8 +60,6 @@ UPS_FE = 2000000.0
 UPS_FN = 2000000.0
 # C = sqrt((1+e)^(1+e) * (1-e)^(1-e)) — EPSG GN7-2 polar stereographic
 _UPS_C = math.sqrt((1.0 + E_ECC) ** (1.0 + E_ECC) * (1.0 - E_ECC) ** (1.0 - E_ECC))
-# rho = RHO_SCALE * exp(-psi)
-_RHO_SCALE = 2.0 * A_WGS84 * UPS_K0 / _UPS_C
 
 MERC_3395 = 3395
 UPS_NORTH = 32661

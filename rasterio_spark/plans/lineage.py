@@ -39,6 +39,7 @@ import time
 from decimal import Decimal
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,15 +71,31 @@ def partition_lineage(df: DataFrame, stage: str, partition_col: str) -> DataFram
     )
 
 
-def read_lineage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | None:
-    """The committed lineage rows, or None when nothing was ever
-    committed (the lineage path does not exist). A lineage path that
-    exists but cannot be read raises."""
+def _lineage_pdf(spark: SparkSession, out_dir: str, stage: str) -> pd.DataFrame | None:
+    """The committed lineage rows, read with ``LINEAGE_SCHEMA`` (no
+    schema-inference job); None when the lineage path does not exist. A
+    Hadoop FS listing tells that apart from a lineage path holding no
+    data file, which raises AnalysisException instead of reading as
+    "nothing committed"; a file that cannot be read raises at the read."""
     path = os.path.join(out_dir, LINEAGE_DIR, stage)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
         return None
-    return spark.read.parquet(path)
+    # Spark's own filter: names starting with "_" or "." are not data
+    names = [s.getPath().getName() for s in fs.listStatus(jpath) if s.isFile()]
+    if not any(not n.startswith(("_", ".")) for n in names):
+        raise AnalysisException(message=f"lineage path {path} holds no data file")
+    df = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+    return pd.DataFrame.from_records(df.collect(), columns=df.columns)
+
+
+def read_lineage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | None:
+    """The committed lineage rows as a local relation, or None when
+    nothing was ever committed (the lineage path does not exist). A
+    lineage path that exists but cannot be read raises."""
+    pdf = _lineage_pdf(spark, out_dir, stage)
+    return None if pdf is None else spark.createDataFrame(pdf, LINEAGE_SCHEMA)
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, stage: str, rows: list) -> None:
@@ -112,8 +129,8 @@ def checkpointed_write(
     Returns {written: n, skipped: n}.
     """
     spark = df.sparkSession
-    done = read_lineage(spark, out_dir, stage)
-    done_ids = sorted({r[0] for r in done.select("partition_id").collect()}) if done is not None else []
+    done = _lineage_pdf(spark, out_dir, stage)
+    done_ids = [] if done is None else sorted(set(done["partition_id"].tolist()))
 
     todo = df if not done_ids else df.where(~F.col(partition_col).isin(done_ids))
     todo = todo.hint("rebalance", partition_col).persist()

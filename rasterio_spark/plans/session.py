@@ -4,6 +4,16 @@ Local-mode defaults mirror what a 1000-executor cluster deployment
 would set per-executor: AQE on (runtime re-plan + skew-join split),
 shuffle partitions ~ cores, Arrow enabled for pandas-UDF hot paths,
 UTC session timezone (oracle comparisons against DuckDB).
+
+Write profile: every table the engine writes (bucketed pages, lineage
+data and lineage files, windowed layer updates, bench and CLI outputs)
+uses Iceberg's physical parquet encoding. Timestamps are INT64
+``TIMESTAMP(MICROS)``; Spark's default INT96 is not allowed by the
+Iceberg spec. Pages are zstd-compressed (``PARQUET_CODEC``, Iceberg's
+default codec since 1.4); on the bucketed pages table that stores
+~13.5 instead of ~24.4 bytes per row. Reads are unchanged, so tables
+written with the old INT96/snappy defaults still read, resume and
+verify.
 """
 
 from __future__ import annotations
@@ -11,6 +21,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# parquet page codec of every engine write; DefaultLayerProfile's
+# "compress" default names the same constant
+PARQUET_CODEC = "zstd"
 
 
 def default_cores() -> int:
@@ -52,6 +66,9 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the write profile (module docstring)
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         # catalog tables (sources/bucketed.py) — keep the warehouse out
         # of whatever cwd the driver happens to run from
         .config(

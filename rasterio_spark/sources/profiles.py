@@ -13,6 +13,7 @@ fields (dtype/count/nodata/block_shape) plus writer options
 from __future__ import annotations
 
 from rasterio_spark.grid.affine import Affine
+from rasterio_spark.plans.session import PARQUET_CODEC
 from rasterio_spark.sources.layers import LayerDescriptor
 
 
@@ -42,7 +43,11 @@ class DefaultLayerProfile(Profile):
     DefaultGTiffProfile's fields mapped onto the engine's data model:
     blockxsize/blockysize -> block_shape, compress -> parquet codec
     (zstd: the columnar analogue of LZW-on-tiles), interleave/tiled ->
-    implied by the (band, row, col) cell layout and are not options."""
+    implied by the (band, row, col) cell layout and are not options.
+
+    "compress" defaults to ``session.PARQUET_CODEC``, the codec every
+    engine write uses, so a layer created from this profile is encoded
+    like every other engine-owned table."""
 
     defaults = {
         "dtype": "uint8",
@@ -50,7 +55,7 @@ class DefaultLayerProfile(Profile):
         "nodata": 0.0,
         "blockxsize": 256,
         "blockysize": 256,
-        "compress": "zstd",
+        "compress": PARQUET_CODEC,
         "rows_per_file": 4_000_000,
     }
 

@@ -88,3 +88,29 @@ def test_default_cores_come_from_the_host():
         check=True,
     )
     assert int(out.stdout.split()[-1]) == len(os.sched_getaffinity(0))
+
+
+def test_bucketed_cache_registers_files_the_catalog_forgot(spark, sf_dir, registry):
+    """A new process's in-memory catalog has no bench tables, but the
+    warehouse still holds their files: ``bucketed()`` registers them
+    instead of rewriting the table."""
+    from pyspark.sql import functions as F
+
+    queries, _ = registry
+    queries["asof_latest_bucketed"]()  # the table exists, written or registered
+    name = f"bench_pages_bucketed_6000_b32_clustered_{bench.write_format(spark)}"
+    assert name.endswith("_zstd_micros")
+    loc = spark.table(name).inputFiles()[0].removeprefix("file:").rsplit("/", 1)[0]
+    # forget the table but keep its files, as a process exit does
+    aside = loc + ".aside"
+    os.rename(loc, aside)
+    spark.sql(f"DROP TABLE {name}")
+    os.rename(aside, loc)
+    mtimes = {f: os.stat(os.path.join(loc, f)).st_mtime_ns for f in os.listdir(loc)}
+    assert "_SUCCESS" in mtimes
+
+    fresh, _ = bench.suite(spark, sf_dir, 6_000)
+    asof = fresh["asof_latest_bucketed"]()
+    assert {f: os.stat(os.path.join(loc, f)).st_mtime_ns for f in os.listdir(loc)} == mtimes
+    assert "Exchange" not in asof._jdf.queryExecution().executedPlan().toString()
+    assert spark.table(name).agg(F.count(F.lit(1))).first()[0] == 6_000
