@@ -300,11 +300,11 @@ def q_transform_points_3857(spark: SparkSession, sf_dir: str) -> DataFrame:
     """warp.transform to Web Mercator. JVM and libm ln/tan agree to
     ~4e-9 m (measured); both sides round to 4 decimals (0.1 mm) so the
     hash compare is deterministic."""
-    from rasterio_spark.grid.crs import forward_3857_cols
+    from rasterio_spark.grid.crs import transform_points
     from rasterio_spark.sources.pages import with_geocode
 
     geo = with_geocode(_pages(spark, sf_dir))
-    x, y = forward_3857_cols(F.col("lon"), F.col("lat"))
+    x, y = transform_points("EPSG:4326", "EPSG:3857", F.col("lon"), F.col("lat"))
     return geo.select(
         "url", F.round(x, 4).alias("merc_x"), F.round(y, 4).alias("merc_y")
     )
@@ -327,7 +327,7 @@ def q_transform_points_32618(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo = with_geocode(_pages(spark, sf_dir)).where(
         (F.col("lon") >= -81.0) & (F.col("lon") <= -69.0)
     )
-    ex, ny = utm.forward_cols(F.col("lon"), F.col("lat"), 32618)
+    ex, ny = utm.forward(F.col("lon"), F.col("lat"), 32618)
     return geo.select(
         "url", F.round(ex, 2).alias("utm_e"), F.round(ny, 2).alias("utm_n")
     )
@@ -345,7 +345,7 @@ def q_transform_points_3413(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rasterio_spark.sources.pages import with_geocode
 
     geo = with_geocode(_pages(spark, sf_dir))
-    ex, ny = projections.forward_cols(F.col("lon"), F.col("lat"), 3413)
+    ex, ny = projections.forward(F.col("lon"), F.col("lat"), 3413)
     return geo.select(
         "url", F.round(ex, 2).alias("ps_x"), F.round(ny, 2).alias("ps_y")
     )

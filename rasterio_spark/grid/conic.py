@@ -8,9 +8,9 @@ The reference hands these to PROJ (rasterio/warp.py:151-409,
 rasterio/crs.pyx); this engine ships the closed-form EPSG Guidance
 Note 7-2 formulas instead, on the same pattern as grid/utm.py and
 grid/projections.py: ONE set of double-precision constants, derived
-once per EPSG code at import, generates three agreeing forms —
-vectorized NumPy, Spark Column expressions (pure JVM, whole-stage
-codegen), and DuckDB SQL strings.
+once per EPSG code at import, feeds one body per direction that runs
+on NumPy arrays or Spark Columns (pure JVM, whole-stage codegen), plus
+a DuckDB SQL twin.
 
 Datum note: 2154/5070/3035 are defined on GRS80 (RGF93/NAD83/ETRS89).
 GRS80 and WGS84 share a and differ in 1/f at the 12th digit
@@ -47,13 +47,17 @@ from rasterio_spark.grid.utm import (
     CHI_TO_PHI,
     D2R,
     E_ECC,
+    _asinh,
     _atanh,
     _sinh,
-    wrap_lon_cols,
-    wrap_lon_np,
+    adjlon,
+    adjlon_sql,
+    math_for,
+    psi,
+    series,
+    wrap_lon,
     wrap_lon_sql,
-    wrap_rad_cols,
-    wrap_rad_np,
+    wrap_rad,
     wrap_rad_sql,
 )
 
@@ -266,182 +270,77 @@ def is_supported(code) -> bool:
     return code in PARAMS
 
 
-# ----------------------------------------------------------------- numpy
+# ------------------------------------------------ NumPy or Spark Column
 
 
-def _psi_np(lat_deg):
-    phi = np.asarray(lat_deg, dtype="float64") * D2R
-    return np.arcsinh(np.tan(phi)) - E_ECC * np.arctanh(E_ECC * np.sin(phi))
+def _q_lat(m, lat_deg):
+    """q of a latitude in degrees, on arrays or Columns."""
+    s = m.sin(lat_deg * D2R)
+    return (s / (1.0 - s * s * E2) + m.atanh(s * E_ECC) / E_ECC) * (1.0 - E2)
 
 
-def _q_np(lat_deg):
-    s = np.sin(np.asarray(lat_deg, dtype="float64") * D2R)
-    return (1.0 - E2) * (s / (1.0 - E2 * s * s) + np.arctanh(E_ECC * s) / E_ECC)
-
-
-from rasterio_spark.grid.utm import chi_to_phi_np as _chi_to_phi_np
-
-
-def _beta_to_phi_np(beta):
-    phi = beta.copy()
-    for j, c in enumerate(BETA_TO_PHI, start=1):
-        phi = phi + c * np.sin(2 * j * beta)
-    return phi
+def _asin(m, x):
+    """asin with a domain clamp: q/q_p can exceed 1 by an ulp at the
+    poles, asin(NaN) otherwise."""
+    return m.asin(m.clip(x, -1.0, 1.0))
 
 
 def forward(lon, lat, code):
-    """(lon, lat) degrees -> projected (x, y) meters."""
+    """(lon, lat) degrees -> projected (x, y) meters, on arrays or
+    Spark Columns."""
     p = _resolve(code)
-    lon = np.asarray(lon, dtype="float64")
-    lat = np.asarray(lat, dtype="float64")
-    if p["kind"] == "lcc":
-        rho = p["aF"] * np.exp(-p["n"] * _psi_np(lat))
-        th = p["n"] * wrap_rad_np(lon * D2R - p["lam_f"])
-        return p["fe"] + rho * np.sin(th), p["fn"] + p["rho_f"] - rho * np.cos(th)
-    if p["kind"] == "albers":
-        rho = A_WGS84 * np.sqrt(p["c"] - p["n"] * _q_np(lat)) / p["n"]
-        th = p["n"] * wrap_rad_np(lon * D2R - p["lam_f"])
-        return p["fe"] + rho * np.sin(th), p["fn"] + p["rho_f"] - rho * np.cos(th)
-    # laea
-    beta = np.arcsin(np.clip(_q_np(lat) / _QP, -1.0, 1.0))
-    dl = lon * D2R - p["lam_0"]
-    sb, cb = np.sin(beta), np.cos(beta)
-    b = p["rq"] * np.sqrt(
-        2.0 / (1.0 + p["sb0"] * sb + p["cb0"] * cb * np.cos(dl))
-    )
-    x = p["fe"] + b * p["d"] * cb * np.sin(dl)
-    y = p["fn"] + (b / p["d"]) * (p["cb0"] * sb - p["sb0"] * cb * np.cos(dl))
-    return x, y
+    with math_for(lon, lat) as (m, lon, lat):
+        if p["kind"] in ("lcc", "albers"):
+            if p["kind"] == "lcc":
+                rho = m.exp(psi(m, lat) * (-p["n"])) * p["aF"]
+            else:
+                # the order of the scalar rho_f: the false origin maps to 0
+                rho = A_WGS84 * m.sqrt(p["c"] - p["n"] * _q_lat(m, lat)) / p["n"]
+            th = adjlon(m, lon * D2R - p["lam_f"]) * p["n"]
+            return p["fe"] + rho * m.sin(th), (p["fn"] + p["rho_f"]) - rho * m.cos(th)
+        beta = _asin(m, _q_lat(m, lat) / _QP)
+        dl = lon * D2R - p["lam_0"]
+        sb, cb = m.sin(beta), m.cos(beta)
+        b = m.sqrt(2.0 / (1.0 + sb * p["sb0"] + cb * m.cos(dl) * p["cb0"])) * p["rq"]
+        x = p["fe"] + b * cb * m.sin(dl) * p["d"]
+        y = p["fn"] + (b / p["d"]) * (sb * p["cb0"] - cb * m.cos(dl) * p["sb0"])
+        return x, y
 
 
 def inverse(x, y, code):
     """Projected (x, y) meters -> (lon, lat) degrees."""
     p = _resolve(code)
-    x = np.asarray(x, dtype="float64")
-    y = np.asarray(y, dtype="float64")
-    if p["kind"] in ("lcc", "albers"):
-        sgn = 1.0 if p["n"] > 0 else -1.0  # GN7-2: rho' takes the sign of n
-        dx = x - p["fe"]
-        dy = p["rho_f"] - (y - p["fn"])
-        rho = sgn * np.hypot(dx, dy)
-        th = np.arctan2(sgn * dx, sgn * dy)
-        lam = th / p["n"] + p["lam_f"]
-        lam = wrap_rad_np(lam)
-        if p["kind"] == "lcc":
-            with np.errstate(divide="ignore"):
-                psi = -np.log(rho / p["aF"]) / p["n"]
-            chi = np.arctan(np.sinh(psi))
-            return lam / D2R, _chi_to_phi_np(chi) / D2R
-        qq = (p["c"] - (rho * p["n"] / A_WGS84) ** 2) / p["n"]
-        beta = np.arcsin(np.clip(qq / _QP, -1.0, 1.0))
-        return lam / D2R, _beta_to_phi_np(beta) / D2R
-    # laea
-    dx = (x - p["fe"]) / p["d"]
-    dy = (y - p["fn"]) * p["d"]
-    rho = np.hypot(dx, dy)
-    cc = 2.0 * np.arcsin(np.clip(rho / (2.0 * p["rq"]), -1.0, 1.0))
-    with np.errstate(invalid="ignore", divide="ignore"):
-        qq = _QP * (np.cos(cc) * p["sb0"] + dy * np.sin(cc) * p["cb0"] / rho)
-    qq = np.where(rho == 0.0, _QP * p["sb0"], qq)  # exact center
-    beta = np.arcsin(np.clip(qq / _QP, -1.0, 1.0))
-    lam = p["lam_0"] + np.arctan2(
-        dx * np.sin(cc),
-        rho * p["cb0"] * np.cos(cc) - dy * p["sb0"] * np.sin(cc),
-    )
-    lam = np.where(rho == 0.0, p["lam_0"], lam)
-    return wrap_lon_np(lam / D2R), _beta_to_phi_np(beta) / D2R
-
-
-# ------------------------------------------------------------ Spark cols
-
-
-def _psi_cols(lat):
-    from pyspark.sql import functions as F
-
-    phi = lat * D2R
-    return F.asinh(F.tan(phi)) - E_ECC * F.atanh(F.sin(phi) * E_ECC)
-
-
-def _asin_cols(x):
-    """asin with the domain clamp the NumPy form applies (np.clip):
-    q/q_p can exceed 1 by an ulp at the poles, asin(NaN) otherwise."""
-    from pyspark.sql import functions as F
-
-    return F.asin(F.least(F.greatest(x, F.lit(-1.0)), F.lit(1.0)))
-
-
-def _q_cols(lat):
-    from pyspark.sql import functions as F
-
-    s = F.sin(lat * D2R)
-    return (
-        (s / (F.lit(1.0) - s * s * E2) + F.atanh(s * E_ECC) / E_ECC) * (1.0 - E2)
-    )
-
-
-def _series_cols(x, coeffs):
-    from pyspark.sql import functions as F
-
-    out = x
-    for j, c in enumerate(coeffs, start=1):
-        out = out + F.lit(c) * F.sin(x * (2 * j))
-    return out
-
-
-def forward_cols(lon, lat, code):
-    """Spark Column (x, y) — pure JVM expressions, zero Python."""
-    from pyspark.sql import functions as F
-
-    p = _resolve(code)
-    if p["kind"] == "lcc":
-        rho = F.exp(_psi_cols(lat) * (-p["n"])) * p["aF"]
-        th = wrap_rad_cols(lon * D2R - p["lam_f"]) * p["n"]
-        return F.lit(p["fe"]) + rho * F.sin(th), F.lit(p["fn"] + p["rho_f"]) - rho * F.cos(th)
-    if p["kind"] == "albers":
-        rho = F.sqrt(F.lit(p["c"]) - _q_cols(lat) * p["n"]) * (A_WGS84 / p["n"])
-        th = wrap_rad_cols(lon * D2R - p["lam_f"]) * p["n"]
-        return F.lit(p["fe"]) + rho * F.sin(th), F.lit(p["fn"] + p["rho_f"]) - rho * F.cos(th)
-    beta = _asin_cols(_q_cols(lat) / _QP)
-    dl = lon * D2R - p["lam_0"]
-    sb, cb = F.sin(beta), F.cos(beta)
-    b = F.sqrt(F.lit(2.0) / (F.lit(1.0) + sb * p["sb0"] + cb * F.cos(dl) * p["cb0"])) * p["rq"]
-    x = F.lit(p["fe"]) + b * cb * F.sin(dl) * p["d"]
-    y = F.lit(p["fn"]) + (b / p["d"]) * (sb * p["cb0"] - cb * F.cos(dl) * p["sb0"])
-    return x, y
-
-
-def inverse_cols(x, y, code):
-    """Spark Column (lon, lat) from projected coordinates."""
-    from pyspark.sql import functions as F
-
-    p = _resolve(code)
-    if p["kind"] in ("lcc", "albers"):
-        sgn = 1.0 if p["n"] > 0 else -1.0  # GN7-2: rho' takes the sign of n
-        dx = x - F.lit(p["fe"])
-        dy = F.lit(p["rho_f"]) - (y - F.lit(p["fn"]))
-        rho = F.sqrt(dx * dx + dy * dy) * sgn
-        lam = wrap_rad_cols(F.atan2(dx * sgn, dy * sgn) / p["n"] + p["lam_f"])
-        if p["kind"] == "lcc":
-            psi = F.log(rho / p["aF"]) * (-1.0 / p["n"])
-            chi = F.atan(F.sinh(psi))
-            return lam / D2R, _series_cols(chi, CHI_TO_PHI) / D2R
-        qq = (F.lit(p["c"]) - (rho * (p["n"] / A_WGS84)) * (rho * (p["n"] / A_WGS84))) / p["n"]
-        beta = _asin_cols(qq / _QP)
-        return lam / D2R, _series_cols(beta, BETA_TO_PHI) / D2R
-    dx = (x - F.lit(p["fe"])) / p["d"]
-    dy = (y - F.lit(p["fn"])) * p["d"]
-    rho = F.sqrt(dx * dx + dy * dy)
-    cc = _asin_cols(rho / (2.0 * p["rq"])) * 2.0
-    # rho == 0 (the exact projection center) -> beta_0, lam_0
-    qq = F.when(rho == 0.0, _QP * p["sb0"]).otherwise(
-        (F.cos(cc) * p["sb0"] + dy * F.sin(cc) * (p["cb0"]) / rho) * _QP
-    )
-    beta = _asin_cols(qq / _QP)
-    lam = F.when(rho == 0.0, p["lam_0"]).otherwise(
-        F.lit(p["lam_0"])
-        + F.atan2(dx * F.sin(cc), rho * F.cos(cc) * p["cb0"] - dy * F.sin(cc) * p["sb0"])
-    )
-    return wrap_lon_cols(lam / D2R), _series_cols(beta, BETA_TO_PHI) / D2R
+    with math_for(x, y) as (m, x, y):
+        if p["kind"] in ("lcc", "albers"):
+            sgn = 1.0 if p["n"] > 0 else -1.0  # GN7-2: rho' takes the sign of n
+            dx = x - p["fe"]
+            dy = p["rho_f"] - (y - p["fn"])
+            rho = m.sqrt(dx * dx + dy * dy) * sgn
+            lam = wrap_rad(m, m.atan2(dx * sgn, dy * sgn) / p["n"] + p["lam_f"])
+            if p["kind"] == "lcc":
+                chi = m.atan(m.sinh(m.log(rho / p["aF"]) * (-1.0 / p["n"])))
+                return lam / D2R, series(m, chi, CHI_TO_PHI) / D2R
+            rn = rho * (p["n"] / A_WGS84)
+            beta = _asin(m, (p["c"] - rn * rn) / p["n"] / _QP)
+            return lam / D2R, series(m, beta, BETA_TO_PHI) / D2R
+        dx = (x - p["fe"]) / p["d"]
+        dy = (y - p["fn"]) * p["d"]
+        rho = m.sqrt(dx * dx + dy * dy)
+        cc = _asin(m, rho / (2.0 * p["rq"])) * 2.0
+        # rho == 0 (the exact projection center) -> beta_0, lam_0
+        qq = m.where(
+            rho == 0.0,
+            _QP * p["sb0"],
+            (m.cos(cc) * p["sb0"] + dy * m.sin(cc) * p["cb0"] / rho) * _QP,
+        )
+        lam = m.where(
+            rho == 0.0,
+            p["lam_0"],
+            p["lam_0"]
+            + m.atan2(dx * m.sin(cc), rho * m.cos(cc) * p["cb0"] - dy * m.sin(cc) * p["sb0"]),
+        )
+        beta = _asin(m, qq / _QP)
+        return wrap_lon(m, lam / D2R), series(m, beta, BETA_TO_PHI) / D2R
 
 
 # ------------------------------------------------------------ DuckDB SQL
@@ -449,8 +348,6 @@ def inverse_cols(x, y, code):
 
 def _psi_sql(lat_sql: str) -> str:
     phi = f"(({lat_sql}) * {D2R!r})"
-    from rasterio_spark.grid.utm import _asinh
-
     return f"({_asinh(f'tan({phi})')} - {E_ECC!r} * {_atanh(f'{E_ECC!r} * sin({phi})')})"
 
 
@@ -483,7 +380,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
     p = _resolve(code)
     if p["kind"] == "lcc":
         rho = f"({p['aF']!r} * exp(-{p['n']!r} * {_psi_sql(lat_sql)}))"
-        dlam = wrap_rad_sql(f"(({lon_sql}) * {D2R!r} - {p['lam_f']!r})")
+        dlam = adjlon_sql(f"(({lon_sql}) * {D2R!r} - {p['lam_f']!r})")
         th = f"({p['n']!r} * {dlam})"
         return (
             f"({p['fe']!r} + {rho} * sin({th}))",
@@ -491,7 +388,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
         )
     if p["kind"] == "albers":
         rho = f"({A_WGS84 / p['n']!r} * sqrt({p['c']!r} - {p['n']!r} * {_q_sql(lat_sql)}))"
-        dlam = wrap_rad_sql(f"(({lon_sql}) * {D2R!r} - {p['lam_f']!r})")
+        dlam = adjlon_sql(f"(({lon_sql}) * {D2R!r} - {p['lam_f']!r})")
         th = f"({p['n']!r} * {dlam})"
         return (
             f"({p['fe']!r} + {rho} * sin({th}))",

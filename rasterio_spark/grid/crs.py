@@ -8,9 +8,9 @@ science grids EPSG:3413/3995/3031/3976/3032) in grid/projections.py;
 the conic / equal-area family — EPSG:2154 (Lambert-93, LCC 2SP),
 EPSG:5070 (Conus Albers), EPSG:3035 (LAEA Europe) — in grid/conic.py;
 sinusoidal (incl. the MODIS sphere) and equidistant cylindrical
-(EPSG:4087) in grid/cylindrical.py. Pure NumPy public formulas; every
-projection is also emitted as Spark column expressions and DuckDB SQL
-so the whole warp stays JVM-side.
+(EPSG:4087) in grid/cylindrical.py. Public closed-form formulas, each
+written once to run on NumPy arrays or Spark Columns (so the whole warp
+stays JVM-side), plus a DuckDB SQL twin for the oracle.
 
 Reference behavior mirrored: warp.transform vectorized point transform
 (/root/reference/rasterio/warp.py:26-61), transform_bounds with 21-point
@@ -18,6 +18,8 @@ edge densification (warp.py:111-148).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -635,40 +637,41 @@ def transform_points(src_crs: str, dst_crs: str, xs, ys):
     transverse-Mercator, grid/utm.py), EPSG:3395 (World Mercator),
     EPSG:32661/32761 (UPS, grid/projections.py), and the conic/equal-area
     family EPSG:2154/5070/3035 (grid/conic.py). Arbitrary pairs compose
-    through geographic coordinates — the same hub-CRS pipeline PROJ builds."""
+    through geographic coordinates — the same hub-CRS pipeline PROJ builds.
+    ``xs``/``ys`` are arrays (NumPy out) or Spark Columns (Column
+    expressions out — the reproject / warp hot path stays JVM-side)."""
     from rasterio_spark.grid import projections, utm
 
-    xs = np.asarray(xs, dtype="float64")
-    ys = np.asarray(ys, dtype="float64")
     s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
-    if s == d:
-        return xs, ys
+    with utm.math_for(xs, ys) as (m, xs, ys):
+        if s == d:
+            return xs, ys
 
-    # src -> geographic
-    if s in GEOGRAPHIC_WGS84_FAMILY:
-        lon, lat = xs, ys
-    elif s == "EPSG:3857":
-        lon = xs / R * 180.0 / np.pi
-        lat = (2.0 * np.arctan(np.exp(ys / R)) - np.pi / 2.0) * 180.0 / np.pi
-    elif _utm_code(s) is not None:
-        lon, lat = utm.inverse(xs, ys, _utm_code(s))
-    elif _proj_code(s) is not None:
-        lon, lat = projections.inverse(xs, ys, _proj_code(s))
-    else:
+        # src -> geographic
+        if s in GEOGRAPHIC_WGS84_FAMILY:
+            lon, lat = xs, ys
+        elif s == "EPSG:3857":
+            lon = xs / R * (180.0 / math.pi)
+            lat = (m.atan(m.exp(ys / R)) * 2.0 - math.pi / 2.0) * (180.0 / math.pi)
+        elif _utm_code(s) is not None:
+            lon, lat = utm.inverse(xs, ys, _utm_code(s))
+        elif _proj_code(s) is not None:
+            lon, lat = projections.inverse(xs, ys, _proj_code(s))
+        else:
+            raise _unsupported_pair(s, d)
+
+        # geographic -> dst
+        if d in GEOGRAPHIC_WGS84_FAMILY:
+            return lon, lat
+        if d == "EPSG:3857":
+            x = lon * math.pi / 180.0 * R
+            y = m.log(m.tan(math.pi / 4.0 + lat * math.pi / 360.0)) * R
+            return x, y
+        if _utm_code(d) is not None:
+            return utm.forward(lon, lat, _utm_code(d))
+        if _proj_code(d) is not None:
+            return projections.forward(lon, lat, _proj_code(d))
         raise _unsupported_pair(s, d)
-
-    # geographic -> dst
-    if d in GEOGRAPHIC_WGS84_FAMILY:
-        return lon, lat
-    if d == "EPSG:3857":
-        x = lon * np.pi / 180.0 * R
-        y = np.log(np.tan(np.pi / 4.0 + lat * np.pi / 360.0)) * R
-        return x, y
-    if _utm_code(d) is not None:
-        return utm.forward(lon, lat, _utm_code(d))
-    if _proj_code(d) is not None:
-        return projections.forward(lon, lat, _proj_code(d))
-    raise _unsupported_pair(s, d)
 
 
 def transform_bounds(src_crs, dst_crs, left, bottom, right, top, densify_pts: int = 21):
@@ -852,56 +855,6 @@ def forward_3857_sql(lon_sql: str, lat_sql: str) -> tuple[str, str]:
     x = f"(({lon_sql}) * pi() / 180.0 * {R!r})"
     y = f"(ln(tan(pi() / 4.0 + ({lat_sql}) * pi() / 360.0)) * {R!r})"
     return x, y
-
-
-def forward_3857_cols(lon, lat):
-    """Spark Column (x, y) Web-Mercator expressions."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    x = lon * math.pi / 180.0 * R
-    y = F.log(F.tan(math.pi / 4.0 + lat * math.pi / 360.0)) * R
-    return x, y
-
-
-def transform_points_cols(src_crs, dst_crs, x, y):
-    """Spark Column twin of :func:`transform_points` — the reproject /
-    warp hot path stays JVM-side (whole-stage codegen, zero Python) for
-    every supported pair: 4326, 3857, UTM 326xx/327xx, 3395, UPS
-    32661/32761, composed through geographic exactly like the NumPy
-    form."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from rasterio_spark.grid import projections, utm
-
-    s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
-    if s == d:
-        return x, y
-
-    if s in GEOGRAPHIC_WGS84_FAMILY:
-        lon, lat = x, y
-    elif s == "EPSG:3857":
-        lon = x / R * (180.0 / math.pi)
-        lat = (F.atan(F.exp(y / R)) * 2.0 - math.pi / 2.0) * (180.0 / math.pi)
-    elif _utm_code(s) is not None:
-        lon, lat = utm.inverse_cols(x, y, _utm_code(s))
-    elif _proj_code(s) is not None:
-        lon, lat = projections.inverse_cols(x, y, _proj_code(s))
-    else:
-        raise _unsupported_pair(s, d)
-
-    if d in GEOGRAPHIC_WGS84_FAMILY:
-        return lon, lat
-    if d == "EPSG:3857":
-        return forward_3857_cols(lon, lat)
-    if _utm_code(d) is not None:
-        return utm.forward_cols(lon, lat, _utm_code(d))
-    if _proj_code(d) is not None:
-        return projections.forward_cols(lon, lat, _proj_code(d))
-    raise _unsupported_pair(s, d)
 
 
 def transform_points_sql(src_crs, dst_crs, x_sql: str, y_sql: str) -> tuple[str, str]:

@@ -23,9 +23,9 @@ Two more global raster grids the reference reaches through PROJ
   A nonzero ``+lat_0`` folds into an effective false northing
   ``fn_eff = y_0 - A_CAP * mu(lat_0)`` exactly like tmerc's.
 
-Like grid/utm.py / grid/conic.py, ONE parameter set generates three
-agreeing forms: vectorized NumPy, Spark Column expressions (pure JVM,
-whole-stage codegen), and DuckDB SQL strings. Parameterized CRSs
+Like grid/utm.py / grid/conic.py, ONE parameter set feeds one body per
+direction that runs on NumPy arrays or Spark Columns (pure JVM,
+whole-stage codegen), plus a DuckDB SQL twin. Parameterized CRSs
 normalize to a canonical "PROJ4:+proj=..." spec (crs.from_dict);
 specs that spell a registry code (EPSG:4087) normalize home.
 """
@@ -33,8 +33,6 @@ specs that spell a registry code (EPSG:4087) normalize home.
 from __future__ import annotations
 
 import math
-
-import numpy as np
 
 from rasterio_spark.grid.utm import (
     A_CAP,
@@ -47,13 +45,14 @@ from rasterio_spark.grid.utm import (
     _asinh,
     _atanh,
     _sinh,
+    adjlon,
+    adjlon_sql,
+    math_for,
+    psi,
+    series,
     spec_dict,
-    wrap_lon_cols,
-    wrap_lon_np,
+    wrap_lon,
     wrap_lon_sql,
-    wrap_rad_cols,
-    wrap_rad_np,
-    wrap_rad_sql,
 )
 
 E2 = E_ECC * E_ECC
@@ -160,147 +159,57 @@ def is_supported(code) -> bool:
     return _params(code) is not None
 
 
-# ----------------------------------------------------------------- numpy
+# ------------------------------------------------ NumPy or Spark Column
+
+_NEG_BETA = tuple(-b for b in BETA)
 
 
-def _mu_np(lat_deg):
-    phi = np.asarray(lat_deg, dtype="float64") * D2R
-    t = np.sinh(np.arcsinh(np.tan(phi)) - E_ECC * np.arctanh(E_ECC * np.sin(phi)))
-    xi_p = np.arctan(t)
-    mu = xi_p.copy()
-    for j, a in enumerate(ALPHA, start=1):
-        mu = mu + a * np.sin(2 * j * xi_p)
-    return mu
-
-
-def _mu_inv_np(mu):
-    """Rectifying -> geographic latitude: BETA (rectifying ->
-    conformal, the tmerc inverse at eta = 0) then CHI_TO_PHI."""
-    chi = mu.copy()
-    for j, b in enumerate(BETA, start=1):
-        chi = chi - b * np.sin(2 * j * mu)
-    phi = chi.copy()
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + c * np.sin(2 * j * chi)
-    return phi
-
-
-def forward(lon, lat, code):
-    """(lon, lat) degrees -> projected (x, y) meters."""
+def _require(code) -> dict:
     p = _params(code)
     if p is None:
         raise ValueError(f"not a supported cylindrical CRS: {code}")
-    lon = np.asarray(lon, dtype="float64")
-    lat = np.asarray(lat, dtype="float64")
-    phi = lat * D2R
-    dlam = wrap_rad_np(lon * D2R - p["lon0"])
-    if p["kind"] == "sinu_sph":
-        return p["fe"] + p["r"] * dlam * np.cos(phi), p["fn"] + p["r"] * phi
-    if p["kind"] == "sinu":
-        s = np.sin(phi)
-        nucos = A_WGS84 * np.cos(phi) / np.sqrt(1.0 - E2 * s * s)
-        return p["fe"] + nucos * dlam, p["fn"] + A_CAP * _mu_np(lat)
-    return p["fe"] + p["nu1cos"] * dlam, p["fn"] + A_CAP * _mu_np(lat)
+    return p
+
+
+def _nucos(m, phi):
+    """a cos phi / sqrt(1 - e^2 sin^2 phi): the parallel radius."""
+    s = m.sin(phi)
+    return m.cos(phi) / m.sqrt(1.0 - s * s * E2) * A_WGS84
+
+
+def forward(lon, lat, code):
+    """(lon, lat) degrees -> projected (x, y) meters, on arrays or
+    Spark Columns."""
+    p = _require(code)
+    with math_for(lon, lat) as (m, lon, lat):
+        phi = lat * D2R
+        dlam = adjlon(m, lon * D2R - p["lon0"])
+        if p["kind"] == "sinu_sph":
+            return p["fe"] + dlam * m.cos(phi) * p["r"], p["fn"] + phi * p["r"]
+        # M(phi) = A_CAP * mu(phi), mu the tmerc xi series at lam = 0
+        y = p["fn"] + series(m, m.atan(m.sinh(psi(m, lat))), ALPHA) * A_CAP
+        if p["kind"] == "sinu":
+            return p["fe"] + _nucos(m, phi) * dlam, y
+        return p["fe"] + dlam * p["nu1cos"], y
 
 
 def inverse(x, y, code):
     """Projected (x, y) meters -> (lon, lat) degrees."""
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
-    x = np.asarray(x, dtype="float64")
-    y = np.asarray(y, dtype="float64")
-    dx = x - p["fe"]
-    if p["kind"] == "sinu_sph":
-        phi = (y - p["fn"]) / p["r"]
-        cphi = np.cos(phi)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            lam = p["lon0"] + dx / (p["r"] * cphi)
-        lam = np.where(np.abs(cphi) < 1e-12, p["lon0"], lam)  # exact pole
-        return wrap_lon_np(lam / D2R), phi / D2R
-    phi = _mu_inv_np((y - p["fn"]) / A_CAP)
-    if p["kind"] == "sinu":
-        s = np.sin(phi)
-        nucos = A_WGS84 * np.cos(phi) / np.sqrt(1.0 - E2 * s * s)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            lam = p["lon0"] + dx / nucos
-        lam = np.where(np.abs(np.cos(phi)) < 1e-12, p["lon0"], lam)
-        return wrap_lon_np(lam / D2R), phi / D2R
-    return wrap_lon_np((p["lon0"] + dx / p["nu1cos"]) / D2R), phi / D2R
-
-
-# ------------------------------------------------------------ Spark cols
-
-
-def _mu_cols(lat):
-    from pyspark.sql import functions as F
-
-    phi = lat * D2R
-    t = F.sinh(F.asinh(F.tan(phi)) - E_ECC * F.atanh(F.sin(phi) * E_ECC))
-    xi_p = F.atan(t)
-    mu = xi_p
-    for j, a in enumerate(ALPHA, start=1):
-        mu = mu + F.lit(a) * F.sin(xi_p * (2 * j))
-    return mu
-
-
-def _mu_inv_cols(mu):
-    from pyspark.sql import functions as F
-
-    chi = mu
-    for j, b in enumerate(BETA, start=1):
-        chi = chi - F.lit(b) * F.sin(mu * (2 * j))
-    phi = chi
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + F.lit(c) * F.sin(chi * (2 * j))
-    return phi
-
-
-def forward_cols(lon, lat, code):
-    """Spark Column (x, y) — pure JVM expressions, zero Python."""
-    from pyspark.sql import functions as F
-
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
-    phi = lat * D2R
-    dlam = wrap_rad_cols(lon * D2R - p["lon0"])
-    if p["kind"] == "sinu_sph":
-        return F.lit(p["fe"]) + dlam * F.cos(phi) * p["r"], F.lit(p["fn"]) + phi * p["r"]
-    if p["kind"] == "sinu":
-        s = F.sin(phi)
-        nucos = F.cos(phi) / F.sqrt(F.lit(1.0) - s * s * E2) * A_WGS84
-        return F.lit(p["fe"]) + nucos * dlam, F.lit(p["fn"]) + _mu_cols(lat) * A_CAP
-    return (
-        F.lit(p["fe"]) + dlam * p["nu1cos"],
-        F.lit(p["fn"]) + _mu_cols(lat) * A_CAP,
-    )
-
-
-def inverse_cols(x, y, code):
-    """Spark Column (lon, lat) from projected coordinates."""
-    from pyspark.sql import functions as F
-
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
-    dx = x - F.lit(p["fe"])
-    if p["kind"] == "sinu_sph":
-        phi = (y - F.lit(p["fn"])) / p["r"]
-        cphi = F.cos(phi)
-        lam = F.when(F.abs(cphi) < 1e-12, p["lon0"]).otherwise(
-            F.lit(p["lon0"]) + dx / (cphi * p["r"])
-        )
-        return wrap_lon_cols(lam / D2R), phi / D2R
-    phi = _mu_inv_cols((y - F.lit(p["fn"])) / A_CAP)
-    if p["kind"] == "sinu":
-        s = F.sin(phi)
-        nucos = F.cos(phi) / F.sqrt(F.lit(1.0) - s * s * E2) * A_WGS84
-        lam = F.when(F.abs(F.cos(phi)) < 1e-12, p["lon0"]).otherwise(
-            F.lit(p["lon0"]) + dx / nucos
-        )
-        return wrap_lon_cols(lam / D2R), phi / D2R
-    return wrap_lon_cols((F.lit(p["lon0"]) + dx / p["nu1cos"]) / D2R), phi / D2R
+    p = _require(code)
+    with math_for(x, y) as (m, x, y):
+        dx = x - p["fe"]
+        if p["kind"] == "sinu_sph":
+            phi = (y - p["fn"]) / p["r"]
+            nucos = m.cos(phi) * p["r"]
+        else:
+            # rectifying -> conformal (BETA) -> geographic (CHI_TO_PHI)
+            phi = series(m, series(m, (y - p["fn"]) / A_CAP, _NEG_BETA), CHI_TO_PHI)
+            if p["kind"] == "eqc":
+                return wrap_lon(m, (p["lon0"] + dx / p["nu1cos"]) / D2R), phi / D2R
+            nucos = _nucos(m, phi)
+        # the exact pole: every x is the central meridian
+        lam = m.where(m.abs(m.cos(phi)) < 1e-12, p["lon0"], p["lon0"] + dx / nucos)
+        return wrap_lon(m, lam / D2R), phi / D2R
 
 
 # ------------------------------------------------------------ DuckDB SQL
@@ -335,7 +244,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
     # pure +/-/* chains (overflowing DECIMAL(38) at full precision);
     # every downstream product must see a DOUBLE operand
     phi = f"CAST((({lat_sql}) * {D2R!r}) AS DOUBLE)"
-    dlam = wrap_rad_sql(f"CAST((({lon_sql}) * {D2R!r} - {p['lon0']!r}) AS DOUBLE)")
+    dlam = adjlon_sql(f"CAST((({lon_sql}) * {D2R!r} - {p['lon0']!r}) AS DOUBLE)")
     if p["kind"] == "sinu_sph":
         return (
             f"({p['fe']!r} + {p['r']!r} * {dlam} * cos({phi}))",

@@ -25,9 +25,9 @@ machinery as :mod:`rasterio_spark.grid.utm` (Karney 2011 series):
   two variants share every formula. A nonzero central meridian
   (EPSG:3413 uses lon_0 = -45) rotates theta = lam - lon_0.
 
-Like utm.py, ONE set of constants generates three agreeing forms:
-vectorized NumPy, Spark Column expressions (pure JVM, whole-stage
-codegen), and DuckDB SQL twins (hyperbolics via exp/ln identities).
+Like utm.py, each direction is ONE body that runs on NumPy arrays or
+Spark Columns (pure JVM, whole-stage codegen), plus a DuckDB SQL twin
+(hyperbolics via exp/ln identities) from the same constants.
 
 The conic / equal-area family (grid/conic.py) and the cylindrical /
 sinusoidal world grids incl. the MODIS sphere (grid/cylindrical.py)
@@ -38,8 +38,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 from rasterio_spark.grid.utm import (
     A_WGS84,
     CHI_TO_PHI,
@@ -47,11 +45,12 @@ from rasterio_spark.grid.utm import (
     E_ECC,
     _asinh,
     _atanh,
-    _cosh,
     _sinh,
+    math_for,
+    psi,
+    series,
     spec_dict,
-    wrap_lon_cols,
-    wrap_lon_np,
+    wrap_lon,
     wrap_lon_sql,
 )
 
@@ -162,39 +161,29 @@ def is_supported(code) -> bool:
     )
 
 
-# ----------------------------------------------------------------- numpy
-
-
-def _psi_np(lat_deg):
-    """Isometric latitude from geographic latitude (degrees)."""
-    phi = np.asarray(lat_deg, dtype="float64") * D2R
-    return np.arcsinh(np.tan(phi)) - E_ECC * np.arctanh(E_ECC * np.sin(phi))
-
-
-from rasterio_spark.grid.utm import chi_to_phi_np as _chi_to_phi_np
+# ------------------------------------------------ NumPy or Spark Column
 
 
 def forward(lon, lat, code):
-    """(lon, lat) degrees -> projected (x, y) meters."""
+    """(lon, lat) degrees -> projected (x, y) meters, on arrays or
+    Spark Columns."""
     from rasterio_spark.grid import conic, cylindrical
 
     if conic.is_supported(code):
         return conic.forward(lon, lat, code)
     if cylindrical.is_supported(code):
         return cylindrical.forward(lon, lat, code)
-
-    lon = np.asarray(lon, dtype="float64")
-    lat = np.asarray(lat, dtype="float64")
-    if code == MERC_3395:
-        return lon * D2R * A_WGS84, A_WGS84 * _psi_np(lat)
     p = _stereo_params(code)
-    if p is not None:
+    if code != MERC_3395 and p is None:
+        raise ValueError(f"not a supported projection EPSG code: {code}")
+    with math_for(lon, lat) as (m, lon, lat):
+        if code == MERC_3395:
+            return lon * (D2R * A_WGS84), psi(m, lat) * A_WGS84
         sgn = p["sgn"]
-        rho = p["rho_scale"] * np.exp(-_psi_np(sgn * lat))
+        rho = m.exp(psi(m, lat * sgn) * -1.0) * p["rho_scale"]
         th = lon * D2R - p["lon0"]
         # north: y decreases away from the pole along lon_0; south mirrors
-        return p["fe"] + rho * np.sin(th), p["fn"] - sgn * rho * np.cos(th)
-    raise ValueError(f"not a supported projection EPSG code: {code}")
+        return p["fe"] + rho * m.sin(th), p["fn"] - rho * m.cos(th) * sgn
 
 
 def inverse(x, y, code):
@@ -205,95 +194,24 @@ def inverse(x, y, code):
         return conic.inverse(x, y, code)
     if cylindrical.is_supported(code):
         return cylindrical.inverse(x, y, code)
-
-    x = np.asarray(x, dtype="float64")
-    y = np.asarray(y, dtype="float64")
-    if code == MERC_3395:
-        chi = np.arctan(np.sinh(y / A_WGS84))
-        return x / A_WGS84 / D2R, _chi_to_phi_np(chi) / D2R
     p = _stereo_params(code)
-    if p is not None:
+    if code != MERC_3395 and p is None:
+        raise ValueError(f"not a supported projection EPSG code: {code}")
+    with math_for(x, y) as (m, x, y):
+        if code == MERC_3395:
+            chi = m.atan(m.sinh(y / A_WGS84))
+            return x / (A_WGS84 * D2R), series(m, chi, CHI_TO_PHI) / D2R
         sgn = p["sgn"]
         dx = x - p["fe"]
         dy = (p["fn"] - y) * sgn
-        rho = np.hypot(dx, dy)
-        with np.errstate(divide="ignore"):  # rho == 0 is the exact pole
-            psi = -np.log(rho / p["rho_scale"])
-        chi = np.arctan(np.sinh(psi))
-        chi = np.where(rho == 0.0, np.pi / 2.0, chi)
-        lam = p["lon0"] + np.arctan2(dx, dy)
-        return wrap_lon_np(lam / D2R), sgn * _chi_to_phi_np(chi) / D2R
-    raise ValueError(f"not a supported projection EPSG code: {code}")
-
-
-# ------------------------------------------------------------ Spark cols
-
-
-def _psi_cols(lat):
-    from pyspark.sql import functions as F
-
-    phi = lat * D2R
-    return F.asinh(F.tan(phi)) - E_ECC * F.atanh(F.sin(phi) * E_ECC)
-
-
-def _chi_to_phi_cols(chi):
-    from pyspark.sql import functions as F
-
-    phi = chi
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + F.lit(c) * F.sin(chi * (2 * j))
-    return phi
-
-
-def forward_cols(lon, lat, code):
-    """Spark Column (x, y) — pure JVM expressions, zero Python."""
-    from rasterio_spark.grid import conic, cylindrical
-
-    if conic.is_supported(code):
-        return conic.forward_cols(lon, lat, code)
-    if cylindrical.is_supported(code):
-        return cylindrical.forward_cols(lon, lat, code)
-
-    from pyspark.sql import functions as F
-
-    if code == MERC_3395:
-        return lon * (D2R * A_WGS84), _psi_cols(lat) * A_WGS84
-    p = _stereo_params(code)
-    if p is not None:
-        sgn = p["sgn"]
-        rho = F.exp(_psi_cols(lat * sgn) * -1.0) * p["rho_scale"]
-        th = lon * D2R - p["lon0"]
-        return F.lit(p["fe"]) + rho * F.sin(th), F.lit(p["fn"]) - rho * F.cos(th) * sgn
-    raise ValueError(f"not a supported projection EPSG code: {code}")
-
-
-def inverse_cols(x, y, code):
-    """Spark Column (lon, lat) from projected coordinates."""
-    from rasterio_spark.grid import conic, cylindrical
-
-    if conic.is_supported(code):
-        return conic.inverse_cols(x, y, code)
-    if cylindrical.is_supported(code):
-        return cylindrical.inverse_cols(x, y, code)
-
-    from pyspark.sql import functions as F
-
-    if code == MERC_3395:
-        chi = F.atan(F.sinh(y / A_WGS84))
-        return x / (A_WGS84 * D2R), _chi_to_phi_cols(chi) / D2R
-    p = _stereo_params(code)
-    if p is not None:
-        sgn = p["sgn"]
-        dx = x - F.lit(p["fe"])
-        dy = (F.lit(p["fn"]) - y) * sgn
-        rho = F.sqrt(dx * dx + dy * dy)
-        # rho == 0 (the exact pole) -> +inf psi -> chi = pi/2, lat = 90
-        chi = F.when(rho == 0.0, math.pi / 2.0).otherwise(
-            F.atan(F.sinh(F.log(rho / p["rho_scale"]) * -1.0))
+        rho = m.sqrt(dx * dx + dy * dy)
+        # rho == 0 (the exact pole) -> +inf psi -> chi = pi/2, lat = 90,
+        # lon = lon_0 (Spark's atan2 already maps -0.0 to +0.0 there)
+        chi = m.where(
+            rho == 0.0, math.pi / 2.0, m.atan(m.sinh(m.log(rho / p["rho_scale"]) * -1.0))
         )
-        lam = F.lit(p["lon0"]) + F.atan2(dx, dy)
-        return wrap_lon_cols(lam / D2R), _chi_to_phi_cols(chi) * (sgn / D2R)
-    raise ValueError(f"not a supported projection EPSG code: {code}")
+        lam = m.where(rho == 0.0, p["lon0"], p["lon0"] + m.atan2(dx, dy))
+        return wrap_lon(m, lam / D2R), series(m, chi, CHI_TO_PHI) * (sgn / D2R)
 
 
 # ------------------------------------------------------------ DuckDB SQL

@@ -20,11 +20,12 @@ closed form anywhere (GDAL iterates too) and is solved here with a
 vectorized Newton iteration on (L, P) using the analytic termwise
 Jacobian.
 
-One exponent table generates all three forms, the same architecture as
-``grid/utm.py``: vectorized NumPy (driver/UDF), Spark ``Column``
-expressions (pure arithmetic — stays in whole-stage codegen; zero
-coefficients are skipped so typical RPCs with sparse tails produce
-compact trees), and SQL strings usable verbatim in DuckDB twins.
+One exponent table generates both forms, the same architecture as
+``grid/utm.py``: :func:`forward` runs on NumPy arrays (driver/UDF) or
+Spark ``Column`` expressions (pure arithmetic — stays in whole-stage
+codegen; zero coefficients are skipped so typical RPCs with sparse
+tails produce compact trees), and :func:`forward_sql` emits SQL strings
+usable verbatim in DuckDB twins.
 """
 
 from __future__ import annotations
@@ -32,6 +33,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
+
+from rasterio_spark.grid.utm import math_for
 
 # RPC00B term exponents as (eL, eP, eH) per coefficient index.
 TERMS: tuple[tuple[int, int, int], ...] = (
@@ -185,20 +188,18 @@ class RPC:
 
 
 def _poly(coeffs, L, P, H):
-    """Evaluate one 20-term RPC00B polynomial (NumPy, vectorized)."""
-    acc = 0.0
+    """Evaluate one 20-term RPC00B polynomial on arrays or Columns
+    (zero coefficients skipped; each power is a repeated product)."""
+    acc = None
     for c, (el, ep, eh) in zip(coeffs, TERMS):
         if c == 0.0:
             continue
         term = c
-        if el:
-            term = term * L**el
-        if ep:
-            term = term * P**ep
-        if eh:
-            term = term * H**eh
-        acc = acc + term
-    return acc
+        for v, exp in ((L, el), (P, ep), (H, eh)):
+            for _ in range(exp):
+                term = term * v
+        acc = term if acc is None else acc + term
+    return 0.0 if acc is None else acc
 
 
 def _dpoly(coeffs, L, P, H, wrt: int):
@@ -220,26 +221,23 @@ def _dpoly(coeffs, L, P, H, wrt: int):
     return acc
 
 
-def _normalize(rpc: RPC, lons, lats, zs):
-    L = (np.asarray(lons, dtype=np.float64) - rpc.long_off) / rpc.long_scale
-    P = (np.asarray(lats, dtype=np.float64) - rpc.lat_off) / rpc.lat_scale
-    H = (np.asarray(zs, dtype=np.float64) - rpc.height_off) / rpc.height_scale
-    return L, P, H
-
-
 def forward(rpc: RPC, lons, lats, zs=0.0):
-    """Ground -> image: (lon, lat, z) -> float (row, col) arrays.
+    """Ground -> image: (lon, lat, z) -> float (row, col), as arrays or
+    as Spark Columns when given Columns.
 
     The closed-form RPC00B evaluation (what GDALRPCTransform computes
     in the dstTo direction)."""
-    L, P, H = _normalize(rpc, lons, lats, np.broadcast_to(np.asarray(zs, dtype=np.float64), np.shape(lons)))
-    row = rpc.line_off + rpc.line_scale * (
-        _poly(rpc.line_num_coeff, L, P, H) / _poly(rpc.line_den_coeff, L, P, H)
-    )
-    col = rpc.samp_off + rpc.samp_scale * (
-        _poly(rpc.samp_num_coeff, L, P, H) / _poly(rpc.samp_den_coeff, L, P, H)
-    )
-    return row, col
+    with math_for(lons, lats, zs) as (_, lons, lats, zs):
+        L = (lons - rpc.long_off) / rpc.long_scale
+        P = (lats - rpc.lat_off) / rpc.lat_scale
+        H = (zs - rpc.height_off) / rpc.height_scale
+        row = rpc.line_off + rpc.line_scale * (
+            _poly(rpc.line_num_coeff, L, P, H) / _poly(rpc.line_den_coeff, L, P, H)
+        )
+        col = rpc.samp_off + rpc.samp_scale * (
+            _poly(rpc.samp_num_coeff, L, P, H) / _poly(rpc.samp_den_coeff, L, P, H)
+        )
+        return row, col
 
 
 def inverse(rpc: RPC, rows, cols, zs=0.0, iterations: int = 20, tol: float = 1e-12):
@@ -331,42 +329,7 @@ class RPCTransformer:
 
 
 # ---------------------------------------------------------------------------
-# Spark Column / SQL forms (generated from the same TERMS table)
-
-def _poly_expr(coeffs, L, P, H):
-    """Polynomial as a Spark Column over Column inputs (pure JVM
-    arithmetic — whole-stage codegen; zero coefficients skipped)."""
-    from pyspark.sql import functions as F
-
-    acc = None
-    for c, (el, ep, eh) in zip(coeffs, TERMS):
-        if c == 0.0:
-            continue
-        term = F.lit(float(c))
-        for col, exp in ((L, el), (P, ep), (H, eh)):
-            for _ in range(exp):
-                term = term * col
-        acc = term if acc is None else acc + term
-    return acc if acc is not None else F.lit(0.0)
-
-
-def forward_cols(rpc: RPC, lon, lat, z=None):
-    """Ground -> image as Spark Columns: returns (row, col) Columns."""
-    from pyspark.sql import functions as F
-
-    if z is None:
-        z = F.lit(0.0)
-    L = (lon - F.lit(rpc.long_off)) / F.lit(rpc.long_scale)
-    P = (lat - F.lit(rpc.lat_off)) / F.lit(rpc.lat_scale)
-    H = (z - F.lit(rpc.height_off)) / F.lit(rpc.height_scale)
-    row = F.lit(rpc.line_off) + F.lit(rpc.line_scale) * (
-        _poly_expr(rpc.line_num_coeff, L, P, H) / _poly_expr(rpc.line_den_coeff, L, P, H)
-    )
-    col = F.lit(rpc.samp_off) + F.lit(rpc.samp_scale) * (
-        _poly_expr(rpc.samp_num_coeff, L, P, H) / _poly_expr(rpc.samp_den_coeff, L, P, H)
-    )
-    return row, col
-
+# SQL form (generated from the same TERMS table)
 
 def _poly_sql(coeffs, L: str, P: str, H: str) -> str:
     parts = []

@@ -8,22 +8,28 @@ Karney/Krueger 6th-order flattening series (Karney 2011, "Transverse
 Mercator with an accuracy of a few nanometers" — the same series PROJ's
 etmerc uses), sub-millimeter over the UTM domain.
 
-Three implementations are generated from ONE coefficient table so they
-agree bit-for-bit up to libm differences (~4e-9, CLAUDE.md rule —
-oracle queries round):
+Each direction is written ONCE, as a body over a small math namespace
+``m`` picked from the input type (:func:`math_for`):
 
-- :func:`forward` / :func:`inverse` — vectorized NumPy (driver-side
-  transform_points, bounds densification).
-- :func:`forward_cols` / :func:`inverse_cols` — Spark Column
-  expressions (native sinh/cosh/asinh/atanh): the reproject hot path
-  stays inside whole-stage codegen, zero Python.
+- :func:`forward` / :func:`inverse` on NumPy arrays (driver-side
+  transform_points, bounds densification), or on Spark Columns (native
+  sinh/cosh/asinh/atanh): the reproject hot path stays inside
+  whole-stage codegen, zero Python.
 - :func:`forward_sql` / :func:`inverse_sql` — DuckDB twins (DuckDB has
-  no hyperbolics, so they are emitted as exp/ln identities).
+  no hyperbolics, so they are emitted as exp/ln identities). They are
+  the oracle, so they stay an independent transcription.
+
+All forms read ONE coefficient table and agree up to libm differences
+(~4e-9 — oracle queries round).
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import math
+import sys
+from types import SimpleNamespace
 
 import numpy as np
 
@@ -73,41 +79,100 @@ D2R = math.pi / 180.0
 TWO_PI = 2.0 * math.pi
 
 
+# ------------------------------------------------------ math namespaces
+#
+# A projection body is written once over ``m``: NUMPY on arrays, or the
+# Column namespace (pure JVM expressions) on Spark Columns. Only the
+# function calls differ; + - * / and comparisons are Python operators
+# on both. Column bodies fix the operation order, so every constant is
+# applied in the order the engine has always evaluated it.
+
+NUMPY = SimpleNamespace(
+    sin=np.sin, cos=np.cos, tan=np.tan, atan=np.arctan, asin=np.arcsin,
+    atan2=np.arctan2, sinh=np.sinh, cosh=np.cosh, asinh=np.arcsinh,
+    atanh=np.arctanh, exp=np.exp, log=np.log, sqrt=np.sqrt, abs=np.abs,
+    floor=np.floor, clip=np.clip,
+    # [()] keeps scalar-in scalar-out (a 0-d where result is unwrapped)
+    where=lambda cond, a, b: np.where(cond, a, b)[()],
+)
+
+
+@functools.cache
+def _columns() -> SimpleNamespace:
+    from pyspark.sql import functions as F
+
+    return SimpleNamespace(
+        sin=F.sin, cos=F.cos, tan=F.tan, atan=F.atan, asin=F.asin,
+        atan2=F.atan2, sinh=F.sinh, cosh=F.cosh, asinh=F.asinh,
+        atanh=F.atanh, exp=F.exp, log=F.log, sqrt=F.sqrt, abs=F.abs,
+        floor=lambda x: F.floor(x).cast("double"),
+        clip=lambda x, lo, hi: F.least(F.greatest(x, F.lit(lo)), F.lit(hi)),
+        where=lambda cond, a, b: F.when(cond, a).otherwise(b),
+    )
+
+
+def _is_column(v) -> bool:
+    sql = sys.modules.get("pyspark.sql")  # no pyspark loaded -> no Columns
+    return sql is not None and isinstance(v, sql.Column)
+
+
+@contextlib.contextmanager
+def math_for(*xs):
+    """``with math_for(a, b) as (m, a, b):`` — the math namespace for
+    the inputs' type plus the inputs ready for it. Spark Columns pass
+    through unchanged; anything else becomes float64 arrays, and the
+    body runs under ``np.errstate(all="ignore")`` (guarded branches
+    such as the exact pole evaluate both sides of ``m.where``)."""
+    if any(_is_column(x) for x in xs):
+        yield (_columns(), *xs)
+        return
+    with np.errstate(all="ignore"):
+        yield (NUMPY, *(np.asarray(x, dtype="float64") for x in xs))
+
+
+def series(m, x, coeffs):
+    """x + sum_j c_j sin(2 j x) — the auxiliary-latitude series shape
+    every inverse (and the rectifying latitude) shares."""
+    out = x
+    for j, c in enumerate(coeffs, start=1):
+        out = out + c * m.sin(x * (2 * j))
+    return out
+
+
+def psi(m, lat_deg):
+    """Isometric latitude asinh(tan phi) - e atanh(e sin phi)."""
+    phi = lat_deg * D2R
+    return m.asinh(m.tan(phi)) - E_ECC * m.atanh(m.sin(phi) * E_ECC)
+
+
 # -------------------------------------------------- longitude wrapping
 #
-# PROJ adjusts longitudes around the central meridian (adjlon) before
-# projecting, and inverse longitudes back into range. The floor
-# identity here maps into [-pi, pi) — exactly +180 becomes -180 (same
-# meridian; the round-trip convention is the west side). Forwards
-# that are 2pi-periodic in lam (tmerc, polar stereographic, laea)
-# need no input wrap — sin/cos absorb it — but conic th = n*dlam and
-# the linear cylindrical x do, and every inverse with a nonzero lon_0
-# must wrap its output (NZTM antimeridian points, EPSG:3413's
-# lon_0=-45). Mercator (3857/3395) is also linear in lon but safe
-# UNWRAPPED only because both ship with lon_0 = 0 — a future
+# Forwards take PROJ's adjlon: |lam| <= pi passes through unchanged
+# (lon_0 + 180 stays on the east edge) and only out-of-range values
+# are folded by the floor identity. Inverses fold their output with the
+# floor identity alone, which maps into [-pi, pi) — exactly +180
+# becomes -180 (same meridian; the round-trip convention is the west
+# side). Forwards that are 2pi-periodic in lam (tmerc, polar
+# stereographic, laea) need no input wrap — sin/cos absorb it — but
+# conic th = n*dlam and the linear cylindrical x do, and every inverse
+# with a nonzero lon_0 must wrap its output (NZTM antimeridian points,
+# EPSG:3413's lon_0=-45). Mercator (3857/3395) is also linear in lon
+# but safe UNWRAPPED only because both ship with lon_0 = 0 — a future
 # nonzero-lon_0 Mercator must wrap like the cylindricals. The floor
 # identity keeps in-range values EXACTLY unchanged (subtracts 0.0) in
-# all three forms, so existing oracle hashes are untouched.
+# the body and its SQL twin, so existing oracle hashes are untouched.
 
 
-def wrap_lon_np(lon_deg):
-    return lon_deg - 360.0 * np.floor((lon_deg + 180.0) / 360.0)
+def wrap_lon(m, lon_deg):
+    return lon_deg - m.floor((lon_deg + 180.0) / 360.0) * 360.0
 
 
-def wrap_rad_np(lam):
-    return lam - TWO_PI * np.floor((lam + math.pi) / TWO_PI)
+def wrap_rad(m, lam):
+    return lam - m.floor((lam + math.pi) / TWO_PI) * TWO_PI
 
 
-def wrap_lon_cols(lon):
-    from pyspark.sql import functions as F
-
-    return lon - F.floor((lon + 180.0) / 360.0).cast("double") * 360.0
-
-
-def wrap_rad_cols(lam):
-    from pyspark.sql import functions as F
-
-    return lam - F.floor((lam + math.pi) / TWO_PI).cast("double") * TWO_PI
+def adjlon(m, lam):
+    return m.where(m.abs(lam) <= math.pi, lam, wrap_rad(m, lam))
 
 
 def wrap_lon_sql(lon_sql: str) -> str:
@@ -116,6 +181,13 @@ def wrap_lon_sql(lon_sql: str) -> str:
 
 def wrap_rad_sql(lam_sql: str) -> str:
     return f"(({lam_sql}) - {TWO_PI!r} * floor((({lam_sql}) + {math.pi!r}) / {TWO_PI!r}))"
+
+
+def adjlon_sql(lam_sql: str) -> str:
+    return (
+        f"(CASE WHEN abs({lam_sql}) <= {math.pi!r} THEN {lam_sql} "
+        f"ELSE {wrap_rad_sql(lam_sql)} END)"
+    )
 
 
 def utm_epsg_params(code: int) -> tuple[float, float] | None:
@@ -161,15 +233,6 @@ def _mu(lat0_deg: float) -> float:
     for j, a in enumerate(ALPHA, start=1):
         xi += a * math.sin(2 * j * xi_p)
     return xi
-
-
-def chi_to_phi_np(chi):
-    """Conformal -> geographic latitude via the public CHI_TO_PHI
-    series (shared by projections.py and conic.py)."""
-    phi = chi.copy()
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + c * np.sin(2 * j * chi)
-    return phi
 
 
 def spec_dict(spec: str) -> tuple[str, dict]:
@@ -252,96 +315,46 @@ def is_tm(code) -> bool:
         return False
 
 
-# ----------------------------------------------------------------- numpy
+# ------------------------------------------------ NumPy or Spark Column
 
 
-def forward(lon, lat, code: int):
-    """(lon, lat) degrees -> (easting, northing) meters for a UTM EPSG
-    code. Vectorized; same series as the column/SQL twins."""
+def _require_tm(code) -> tuple[float, float, float, float]:
     params = _tm_params(code)
     if params is None:
         raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
-    lam = (np.asarray(lon, dtype="float64") - lon0) * D2R
-    phi = np.asarray(lat, dtype="float64") * D2R
-    t = np.sinh(np.arcsinh(np.tan(phi)) - E_ECC * np.arctanh(E_ECC * np.sin(phi)))
-    cl = np.cos(lam)
-    xi_p = np.arctan2(t, cl)
-    eta_p = np.arcsinh(np.sin(lam) / np.hypot(t, cl))
-    xi = xi_p.copy()
-    eta = eta_p.copy()
-    for j, a in enumerate(ALPHA, start=1):
-        xi = xi + a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta = eta + a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    return fe + k0 * A_CAP * eta, fn + k0 * A_CAP * xi
+    return params
 
 
-def inverse(x, y, code: int):
+def forward(lon, lat, code):
+    """(lon, lat) degrees -> (easting, northing) meters for a UTM/TM
+    EPSG code or tmerc spec, on arrays or Spark Columns."""
+    lon0, k0, fe, fn = _require_tm(code)
+    with math_for(lon, lat) as (m, lon, lat):
+        lam = (lon - lon0) * D2R
+        t = m.sinh(psi(m, lat))
+        cl = m.cos(lam)
+        xi_p = m.atan2(t, cl)
+        eta_p = m.asinh(m.sin(lam) / m.sqrt(t * t + cl * cl))
+        xi, eta = xi_p, eta_p
+        for j, a in enumerate(ALPHA, start=1):
+            xi = xi + a * m.sin(xi_p * (2 * j)) * m.cosh(eta_p * (2 * j))
+            eta = eta + a * m.cos(xi_p * (2 * j)) * m.sinh(eta_p * (2 * j))
+        return fe + eta * (k0 * A_CAP), fn + xi * (k0 * A_CAP)
+
+
+def inverse(x, y, code):
     """(easting, northing) meters -> (lon, lat) degrees."""
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
-    xi = (np.asarray(y, dtype="float64") - fn) / (k0 * A_CAP)
-    eta = (np.asarray(x, dtype="float64") - fe) / (k0 * A_CAP)
-    xi_p = xi.copy()
-    eta_p = eta.copy()
-    for j, b in enumerate(BETA, start=1):
-        xi_p = xi_p - b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        eta_p = eta_p - b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
-    phi = chi.copy()
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + c * np.sin(2 * j * chi)
-    lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
-    return wrap_lon_np(lon0 + lam / D2R), phi / D2R
-
-
-# ------------------------------------------------------------ Spark cols
-
-
-def forward_cols(lon, lat, code: int):
-    """Spark Column (easting, northing) — pure JVM expressions, same
-    series; keeps reproject/tiling inside whole-stage codegen."""
-    from pyspark.sql import functions as F
-
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
-    lam = (lon - F.lit(lon0)) * D2R
-    phi = lat * D2R
-    t = F.sinh(F.asinh(F.tan(phi)) - E_ECC * F.atanh(F.sin(phi) * E_ECC))
-    cl = F.cos(lam)
-    xi_p = F.atan2(t, cl)
-    eta_p = F.asinh(F.sin(lam) / F.sqrt(t * t + cl * cl))
-    xi, eta = xi_p, eta_p
-    for j, a in enumerate(ALPHA, start=1):
-        xi = xi + F.lit(a) * F.sin(xi_p * (2 * j)) * F.cosh(eta_p * (2 * j))
-        eta = eta + F.lit(a) * F.cos(xi_p * (2 * j)) * F.sinh(eta_p * (2 * j))
-    return F.lit(fe) + eta * (k0 * A_CAP), F.lit(fn) + xi * (k0 * A_CAP)
-
-
-def inverse_cols(x, y, code: int):
-    """Spark Column (lon, lat) from UTM easting/northing."""
-    from pyspark.sql import functions as F
-
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
-    xi = (y - F.lit(fn)) / (k0 * A_CAP)
-    eta = (x - F.lit(fe)) / (k0 * A_CAP)
-    xi_p, eta_p = xi, eta
-    for j, b in enumerate(BETA, start=1):
-        xi_p = xi_p - F.lit(b) * F.sin(xi * (2 * j)) * F.cosh(eta * (2 * j))
-        eta_p = eta_p - F.lit(b) * F.cos(xi * (2 * j)) * F.sinh(eta * (2 * j))
-    chi = F.asin(F.sin(xi_p) / F.cosh(eta_p))
-    phi = chi
-    for j, c in enumerate(CHI_TO_PHI, start=1):
-        phi = phi + F.lit(c) * F.sin(chi * (2 * j))
-    lam = F.atan2(F.sinh(eta_p), F.cos(xi_p))
-    return wrap_lon_cols(F.lit(lon0) + lam / D2R), phi / D2R
+    lon0, k0, fe, fn = _require_tm(code)
+    with math_for(x, y) as (m, x, y):
+        xi = (y - fn) / (k0 * A_CAP)
+        eta = (x - fe) / (k0 * A_CAP)
+        xi_p, eta_p = xi, eta
+        for j, b in enumerate(BETA, start=1):
+            xi_p = xi_p - b * m.sin(xi * (2 * j)) * m.cosh(eta * (2 * j))
+            eta_p = eta_p - b * m.cos(xi * (2 * j)) * m.sinh(eta * (2 * j))
+        chi = m.asin(m.sin(xi_p) / m.cosh(eta_p))
+        lam = m.atan2(m.sinh(eta_p), m.cos(xi_p))
+        return wrap_lon(m, lon0 + lam / D2R), series(m, chi, CHI_TO_PHI) / D2R
 
 
 # ------------------------------------------------------------ DuckDB SQL
@@ -369,10 +382,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code: int) -> tuple[str, str]:
     """DuckDB (easting, northing) expression strings. Verbose but
     mechanical: the identical literal coefficients as the engine.
     Compare with round(4) — libm vs JVM differ at ~1e-9 relative."""
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
+    lon0, k0, fe, fn = _require_tm(code)
     lam = f"((({lon_sql}) - {lon0!r}) * {D2R!r})"
     phi = f"(({lat_sql}) * {D2R!r})"
     t = _sinh(f"({_asinh(f'tan({phi})')} - {E_ECC!r} * {_atanh(f'{E_ECC!r} * sin({phi})')})")
@@ -392,10 +402,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code: int) -> tuple[str, str]:
 
 def inverse_sql(x_sql: str, y_sql: str, code: int) -> tuple[str, str]:
     """DuckDB (lon, lat) expression strings from UTM easting/northing."""
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    lon0, k0, fe, fn = params
+    lon0, k0, fe, fn = _require_tm(code)
     xi = f"((({y_sql}) - {fn!r}) / {k0 * A_CAP!r})"
     eta = f"((({x_sql}) - {fe!r}) / {k0 * A_CAP!r})"
     xi_p = xi

@@ -111,8 +111,8 @@ def _dst_domain(spark, dst_width: int, dst_height: int) -> DataFrame:
 def _src_fractional_cols(dst_transform: Affine, src_transform: Affine, src_crs, dst_crs):
     """(src_col_frac, src_row_frac) Column expressions for a dst (row, col).
 
-    Same-CRS path is pure column arithmetic; CRS hops (4326, 3857, UTM
-    326xx/327xx — grid/crs.py transform_points_cols) inline as JVM
+    Same-CRS path is pure column arithmetic; CRS hops (every CRS
+    grid/crs.py transform_points supports, given Columns) inline as JVM
     expressions (still zero Python). Requires axis-aligned transforms
     (the merge/warp operators refuse rotation, like reference
     merge.py:302-313).
@@ -128,9 +128,9 @@ def _src_fractional_cols(dst_transform: Affine, src_transform: Affine, src_crs, 
     y = F.lit(e) * (F.col("row") + 0.5) + F.lit(f)
 
     if not crs_equal(src_crs, dst_crs):
-        from rasterio_spark.grid.crs import transform_points_cols
+        from rasterio_spark.grid.crs import transform_points
 
-        x, y = transform_points_cols(dst_crs, src_crs, x, y)
+        x, y = transform_points(dst_crs, src_crs, x, y)
 
     col_f = (x - F.lit(sc)) / F.lit(sa)
     row_f = (y - F.lit(sf)) / F.lit(se)
@@ -172,7 +172,7 @@ def reproject(
     inverse-map dst centers into the src grid; area methods
     (average/mode/min/max/med/q1/q3/sum/rms) forward-map src centers
     into dst cells and aggregate contributors. Both directions hop CRS
-    as pure JVM expressions (grid/crs.py transform_points_cols)."""
+    as pure JVM expressions (grid/crs.py transform_points on Columns)."""
     spark = src_cells.sparkSession
     if dst_nodata is None:
         dst_nodata = src_nodata
@@ -282,9 +282,9 @@ def reproject(
             # method bins contributors, so the hop runs src->dst — the
             # opposite direction from the inverse-mapping resamplers);
             # still pure JVM expressions via the same dispatch.
-            from rasterio_spark.grid.crs import transform_points_cols
+            from rasterio_spark.grid.crs import transform_points
 
-            x, y = transform_points_cols(src_crs, dst_crs, x, y)
+            x, y = transform_points(src_crs, dst_crs, x, y)
         dcol = F.floor((x - F.lit(c)) / F.lit(a)).cast("int")
         drow = F.floor((y - F.lit(f)) / F.lit(e)).cast("int")
         landed = src.select(

@@ -89,9 +89,9 @@ def synth_pages(
 ) -> DataFrame:
     """Standalone generator for benches: ``spark.range(n)``-driven, same
     formulas. For the Zipf skew variant, chain ``with_geocode(df,
-    skew=True)`` (FIXTURES.md §1). ``offset`` shifts the id range —
-    disjoint shards for the multi-process scaling harness
-    (pages i in [offset, offset + n))."""
+    skew=True)`` (FIXTURES.md §1). ``offset`` shifts the id range, so
+    shards drawn with different offsets are disjoint (pages i in
+    [offset, offset + n))."""
     ids = spark.range(offset, offset + n, 1, partitions or spark.sparkContext.defaultParallelism)
     return _build_pages(ids.select(F.col("id").alias("i")), "i")
 
@@ -108,10 +108,8 @@ def with_geocode(pages: DataFrame, skew: bool = False, method: str = "sha2") -> 
     lon = int(sha2(url)[9:13], 16) / 0xFFFF * 360 - 180
     lat = int(sha2(url)[13:17], 16) / 0xFFFF * 170 - 85     (FIXTURES.md §1)
 
-    method='xxh64' (production geocoder): same uniform distribution from
-    one xxhash64(url) call — Spark's MessageDigest-free hash, which
-    scales linearly with cores (sha2 measured ~2x for 4x threads due to
-    JVM digest allocation). Not DuckDB-reproducible; used by benches.
+    method='stored' trusts materialized lon/lat columns (ingest-time
+    geocode); method='auto' uses them when present, else 'sha2'.
 
     With ``skew=True``, ~20% of pages (u16 % 5 == 0 on the already-
     computed hash halfword — no extra parsing on the hot path) are
@@ -150,16 +148,11 @@ def with_geocode(pages: DataFrame, skew: bool = False, method: str = "sha2") -> 
                 "(run with_geocode at ingest and persist them)"
             )
         return pages
-    if method == "sha2":
-        h = F.sha2(F.col("url"), 256)
-        u16 = _hex2long(F.substring(h, 10, 4))  # hexdigest[9:13], 1-indexed substr
-        v16 = _hex2long(F.substring(h, 14, 4))  # hexdigest[13:17]
-    elif method == "xxh64":
-        hx = F.xxhash64(F.col("url"))
-        u16 = F.pmod(hx, F.lit(65536))
-        v16 = F.pmod(F.shiftright(hx, 16), F.lit(65536))
-    else:
+    if method != "sha2":
         raise ValueError(f"unknown geocode method {method!r}")
+    h = F.sha2(F.col("url"), 256)
+    u16 = _hex2long(F.substring(h, 10, 4))  # hexdigest[9:13], 1-indexed substr
+    v16 = _hex2long(F.substring(h, 14, 4))  # hexdigest[13:17]
     lon = u16 / 65535.0 * 360.0 - 180.0
     lat = v16 / 65535.0 * 170.0 - 85.0
     if skew:

@@ -50,3 +50,44 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def backends_agree(spark):
+    """Check one projection on both backends. ``fwd``/``inv`` map (x, y)
+    arrays or Columns to a pair of the same kind. The forward runs over
+    (lons, lats); the inverse over the NumPy forward's output plus
+    ``extra_xy`` (guard-branch inputs such as the exact pole). Column
+    plans must stay pure JVM: no Python node. Returns the NumPy inverse."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    def columns(fn, xs, ys):
+        df = spark.createDataFrame(
+            [(float(a), float(b)) for a, b in zip(xs, ys)], "x double, y double"
+        )
+        a, b = fn(F.col("x"), F.col("y"))
+        out = df.select(a.alias("a"), b.alias("b"))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Python" not in plan, plan
+        pdf = out.toPandas()
+        return pdf["a"].to_numpy(dtype="float64"), pdf["b"].to_numpy(dtype="float64")
+
+    def check(fwd, inv, lons, lats, extra_xy=(), atol_m=1e-6, atol_deg=1e-9):
+        lons = np.asarray(lons, dtype="float64")
+        lats = np.asarray(lats, dtype="float64")
+        x_np, y_np = fwd(lons, lats)
+        x_c, y_c = columns(fwd, lons, lats)
+        assert np.allclose(x_c, x_np, rtol=0, atol=atol_m), (x_c, x_np)
+        assert np.allclose(y_c, y_np, rtol=0, atol=atol_m), (y_c, y_np)
+        xs = np.concatenate([x_np, [float(p[0]) for p in extra_xy]])
+        ys = np.concatenate([y_np, [float(p[1]) for p in extra_xy]])
+        lo_np, la_np = inv(xs, ys)
+        lo_c, la_c = columns(inv, xs, ys)
+        # +180 and -180 are one meridian: compare longitudes modulo 360
+        dlon = (lo_c - lo_np + 180.0) % 360.0 - 180.0
+        assert np.all(np.abs(dlon) < atol_deg), (lo_c, lo_np)
+        assert np.allclose(la_c, la_np, rtol=0, atol=atol_deg), (la_c, la_np)
+        return lo_np, la_np
+
+    return check

@@ -153,7 +153,7 @@ def test_laea_center_inverse_guard():
     assert abs(float(lo) - 10.0) < 1e-9 and abs(float(la) - 52.0) < 1e-9
 
 
-def test_spark_cols_match_numpy(spark):
+def test_spark_cols_match_numpy(spark, backends_agree):
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(7)
@@ -165,15 +165,29 @@ def test_spark_cols_match_numpy(spark):
             [(float(lo), float(la)) for lo, la in zip(lons, lats)],
             "lon double, lat double",
         )
-        ex, ny = C.forward_cols(F.col("lon"), F.col("lat"), code)
+        ex, ny = C.forward(F.col("lon"), F.col("lat"), code)
         got = df.select(ex.alias("x"), ny.alias("y")).toPandas()
         x_np, y_np = C.forward(lons, lats, code)
         assert np.allclose(got["x"], x_np, atol=1e-6)
         assert np.allclose(got["y"], y_np, atol=1e-6)
-        lx, ly = C.inverse_cols(F.lit(float(x_np[3])), F.lit(float(y_np[3])), code)
+        lx, ly = C.inverse(F.lit(float(x_np[3])), F.lit(float(y_np[3])), code)
         back = df.limit(1).select(lx.alias("lon"), ly.alias("lat")).toPandas()
         assert abs(back["lon"][0] - lons[3]) < 1e-9
         assert abs(back["lat"][0] - lats[3]) < 1e-9
+        # guard branches on both backends, inverses at every point:
+        # lon_0 +/- 180 (the wrapped cone edge) and the false origin
+        # (the exact LAEA centre, rho == 0)
+        lon0, lat0, fe, fn = ORIGIN[code]
+        mid = (b0 + b1) / 2.0
+        lo, la = backends_agree(
+            lambda x, y, c=code: C.forward(x, y, c),
+            lambda x, y, c=code: C.inverse(x, y, c),
+            np.concatenate([lons, [lon0 - 180.0, lon0 + 180.0, lon0]]),
+            np.concatenate([lats, [mid, mid, lat0]]),
+            extra_xy=[(fe, fn)],
+        )
+        if code == 3035:
+            assert abs(lo[-1] - lon0) < 1e-12 and abs(la[-1] - lat0) < 1e-9
 
 
 def test_duckdb_sql_match_numpy():
@@ -351,7 +365,7 @@ def test_proj4_custom_three_forms_agree(spark):
         [(float(lo), float(la)) for lo, la in zip(lons, lats)],
         "lon double, lat double",
     )
-    ex, ny = CC.forward_cols(F.col("lon"), F.col("lat"), spec)
+    ex, ny = CC.forward(F.col("lon"), F.col("lat"), spec)
     got = df.select(ex.alias("x"), ny.alias("y")).toPandas()
     assert np.allclose(got["x"], x_np, atol=1e-6)
     assert np.allclose(got["y"], y_np, atol=1e-6)
@@ -443,7 +457,7 @@ def test_tmerc_three_forms(spark):
         [(float(lo), float(la)) for lo, la in zip(lons, lats)],
         "lon double, lat double",
     )
-    ex, ny = U.forward_cols(F.col("lon"), F.col("lat"), spec)
+    ex, ny = U.forward(F.col("lon"), F.col("lat"), spec)
     got = df.select(ex.alias("x"), ny.alias("y")).toPandas()
     assert np.allclose(got["x"], x_np, atol=1e-6)
     assert np.allclose(got["y"], y_np, atol=1e-6)

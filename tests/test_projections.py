@@ -113,7 +113,7 @@ def test_transform_bounds_3395_pole_clip():
     assert abs(lo + 180) < 1e-6 and abs(ro - 180) < 1e-6
 
 
-def test_spark_cols_match_numpy(spark):
+def test_spark_cols_match_numpy(spark, backends_agree):
     lons = np.linspace(-170, 170, 9)
     lats = np.array([82.0, 75.0, 66.0, 61.0, 70.0, 88.0, 83.0, 72.0, 64.0])
     df = spark.createDataFrame(
@@ -122,21 +122,35 @@ def test_spark_cols_match_numpy(spark):
     from pyspark.sql import functions as F
 
     for code, la_col in ((P.MERC_3395, "lat"), (P.UPS_NORTH, "lat")):
-        ex, ny = P.forward_cols(F.col("lon"), F.col(la_col), code)
+        ex, ny = P.forward(F.col("lon"), F.col(la_col), code)
         got = df.select(ex.alias("x"), ny.alias("y")).toPandas()
         E_np, N_np = P.forward(lons, lats, code)
         assert np.allclose(got["x"], E_np, atol=1e-6)
         assert np.allclose(got["y"], N_np, atol=1e-6)
-        lx, ly = P.inverse_cols(F.lit(float(E_np[3])), F.lit(float(N_np[3])), code)
+        lx, ly = P.inverse(F.lit(float(E_np[3])), F.lit(float(N_np[3])), code)
         back = df.limit(1).select(lx.alias("lon"), ly.alias("lat")).toPandas()
         assert abs(back["lon"][0] - lons[3]) < 1e-9
         assert abs(back["lat"][0] - lats[3]) < 1e-9
     # south via the composed dispatch (negative lats)
-    sx, sy = P.forward_cols(F.col("lon"), -F.col("lat"), P.UPS_SOUTH)
+    sx, sy = P.forward(F.col("lon"), -F.col("lat"), P.UPS_SOUTH)
     got = df.select(sx.alias("x"), sy.alias("y")).toPandas()
     E_np, N_np = P.forward(lons, -lats, P.UPS_SOUTH)
     assert np.allclose(got["x"], E_np, atol=1e-6)
     assert np.allclose(got["y"], N_np, atol=1e-6)
+    # guard branches on both backends, inverses at every point: lon_0
+    # +/- 180, the pole itself, and the exact pole of the inverse
+    # (rho == 0 at the false origin)
+    cases = ((P.MERC_3395, 1.0, 85.0), (P.UPS_NORTH, 1.0, 90.0), (P.UPS_SOUTH, -1.0, 90.0))
+    for code, sgn, top in cases:
+        _, la = backends_agree(
+            lambda x, y, c=code: P.forward(x, y, c),
+            lambda x, y, c=code: P.inverse(x, y, c),
+            np.concatenate([lons, [-180.0, 180.0, 0.0]]),
+            sgn * np.concatenate([lats, [60.0, 60.0, top]]),
+            extra_xy=[(P.UPS_FE, P.UPS_FN)],
+        )
+        if code != P.MERC_3395:
+            assert la[-1] == sgn * 90.0
 
 
 def test_duckdb_sql_match_numpy():
@@ -304,7 +318,7 @@ def test_reproject_gauss_rejected(spark):
 
 
 def test_reproject_3395_pure_jvm(spark):
-    """reproject 4326 -> 3395 composes through transform_points_cols;
+    """reproject 4326 -> 3395 composes through transform_points on Columns;
     the plan stays JVM-only (no Python eval nodes)."""
     from rasterio_spark.grid.affine import Affine
     from rasterio_spark.operators.warp import calculate_default_transform, reproject

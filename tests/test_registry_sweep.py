@@ -39,7 +39,7 @@ def _registry_codes():
             lats = [15.0 * sgn, 45.0 * sgn, 70.0 * sgn]
             # wrap in-zone offsets back into [-180, 180]: zone 1
             # (lon0=-177) legitimately samples across the antimeridian
-            lons = [float(utm.wrap_lon_np(np.array([v]))[0]) for v in
+            lons = [float(utm.wrap_lon(utm.NUMPY, np.array([v]))[0]) for v in
                     (lon0 - 2.5, lon0, lon0 + 2.9)]
             out.append((code, lons, lats))
     # named TM registry (NZTM2000 etc.) — incl. the Chatham Islands
@@ -60,7 +60,7 @@ def _registry_codes():
             lats = [lat_0 - 12.0, lat_0, lat_0 + 12.0]
         else:
             lats = [min(lat_1, lat_2), (lat_1 + lat_2) / 2.0, max(lat_1, lat_2)]
-        far = float(utm.wrap_lon_np(np.array([lon_0 + 170.0]))[0])
+        far = float(utm.wrap_lon(utm.NUMPY, np.array([lon_0 + 170.0]))[0])
         out.append((code, [lon_0 - 12.0, far, lon_0 + 12.0], lats))
     # world grids
     out.append((3395, [-170.0, 0.0, 150.0], [-75.0, 10.0, 80.0]))

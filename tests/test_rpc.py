@@ -16,7 +16,6 @@ from rasterio_spark.grid.rpc import (
     RPC,
     RPCTransformer,
     forward,
-    forward_cols,
     forward_sql,
     inverse,
 )
@@ -226,7 +225,7 @@ def test_forward_cols_matches_numpy(spark):
         [(float(a), float(b), float(c)) for a, b, c in zip(lons, lats, zs)],
         "lon double, lat double, z double",
     )
-    row_c, col_c = forward_cols(rpcs, F.col("lon"), F.col("lat"), F.col("z"))
+    row_c, col_c = forward(rpcs, F.col("lon"), F.col("lat"), F.col("z"))
     got = df.select(row_c.alias("r"), col_c.alias("c")).toPandas()
     np.testing.assert_allclose(got["r"].to_numpy(), exp_row, rtol=1e-12, atol=1e-9)
     np.testing.assert_allclose(got["c"].to_numpy(), exp_col, rtol=1e-12, atol=1e-9)
@@ -235,6 +234,12 @@ def test_forward_cols_matches_numpy(spark):
         df.select(row_c.alias("r"))._jdf.queryExecution().executedPlan().toString()
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # the default height (z omitted) on both backends
+    row_0, col_0 = forward(rpcs, F.col("lon"), F.col("lat"))
+    got = df.select(row_0.alias("r"), col_0.alias("c")).toPandas()
+    exp_row, exp_col = forward(rpcs, lons, lats)
+    np.testing.assert_allclose(got["r"].to_numpy(), exp_row, rtol=1e-12, atol=1e-9)
+    np.testing.assert_allclose(got["c"].to_numpy(), exp_col, rtol=1e-12, atol=1e-9)
 
 
 def test_forward_sql_duckdb_twin():

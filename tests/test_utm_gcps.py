@@ -129,8 +129,8 @@ def test_crs_inputs_normalize_utm():
         from_user_input({"proj": "utm", "zone": 18, "datum": "NAD27"})
 
 
-def test_spark_cols_match_numpy(spark):
-    """The Spark Column twin evaluates the identical series."""
+def test_spark_cols_match_numpy(spark, backends_agree):
+    """The Spark Column form evaluates the identical series."""
     lons = np.linspace(-80.9, -75.1, 23)
     lats = np.linspace(-79.0, 83.0, 23)
     df = spark.createDataFrame(
@@ -138,17 +138,26 @@ def test_spark_cols_match_numpy(spark):
     )
     from pyspark.sql import functions as F
 
-    ex, ny = utm.forward_cols(F.col("lon"), F.col("lat"), 32618)
+    ex, ny = utm.forward(F.col("lon"), F.col("lat"), 32618)
     rows = df.select(ex.alias("E"), ny.alias("N")).collect()
     E_np, N_np = utm.forward(lons, lats, 32618)
     got = np.array([[r["E"], r["N"]] for r in rows])
     assert np.allclose(got[:, 0], E_np, rtol=0, atol=1e-6)
     assert np.allclose(got[:, 1], N_np, rtol=0, atol=1e-6)
 
-    lx, ly = utm.inverse_cols(F.lit(float(E_np[5])), F.lit(float(N_np[5])), 32618)
+    lx, ly = utm.inverse(F.lit(float(E_np[5])), F.lit(float(N_np[5])), 32618)
     r = df.limit(1).select(lx.alias("lon"), ly.alias("lat")).first()
     assert abs(r["lon"] - lons[5]) < 1e-9
     assert abs(r["lat"] - lats[5]) < 1e-9
+    # both hemispheres on both backends, inverses at every point, incl.
+    # the poles and lon_0 +/- 180 (the far side of the cylinder)
+    for code in (32618, 32718):
+        backends_agree(
+            lambda x, y, c=code: utm.forward(x, y, c),
+            lambda x, y, c=code: utm.inverse(x, y, c),
+            np.concatenate([lons, [-255.0, 105.0, -75.0, -75.0]]),
+            np.concatenate([lats, [0.0, 30.0, 90.0, -90.0]]),
+        )
 
 
 def test_duckdb_sql_match_numpy():

@@ -36,7 +36,6 @@ from rasterio_spark.grid.crs import (
     from_proj4,
     normalize_crs,
     transform_points,
-    transform_points_cols,
     transform_points_sql,
 )
 from rasterio_spark.grid.utm import A_WGS84, E_ECC
@@ -213,7 +212,7 @@ def _sample_pts(code):
     return lons, lats
 
 
-def test_spark_cols_match_numpy(spark):
+def test_spark_cols_match_numpy(spark, backends_agree):
     from pyspark.sql import functions as F
 
     for code in _GRID_CODES + [C.MODIS_SINU, C.sinu_canonical_spec(10.0, 100.0, 0.0)]:
@@ -222,15 +221,40 @@ def test_spark_cols_match_numpy(spark):
             [(float(lo), float(la)) for lo, la in zip(lons, lats)],
             "lon double, lat double",
         )
-        ex, ny = P.forward_cols(F.col("lon"), F.col("lat"), code)
+        ex, ny = P.forward(F.col("lon"), F.col("lat"), code)
         got = df.select(ex.alias("x"), ny.alias("y")).toPandas()
         E_np, N_np = P.forward(lons, lats, code)
         assert np.allclose(got["x"], E_np, atol=1e-6), code
         assert np.allclose(got["y"], N_np, atol=1e-6), code
-        lx, ly = P.inverse_cols(F.lit(float(E_np[3])), F.lit(float(N_np[3])), code)
+        lx, ly = P.inverse(F.lit(float(E_np[3])), F.lit(float(N_np[3])), code)
         back = df.limit(1).select(lx.alias("lon"), ly.alias("lat")).toPandas()
         assert abs(back["lon"][0] - lons[3]) < 1e-8, code
         assert abs(back["lat"][0] - lats[3]) < 1e-9, code
+        # guard branches on both backends, inverses at every point:
+        # lon_0 +/- 180 (the wrapped cylindrical edge), the exact pole
+        # of the stereographic inverse (rho == 0 at the false origin)
+        # and the sinusoidal poles (|cos phi| < 1e-12)
+        if code in (3413, 3031):
+            lon0, sgn = (-45.0, 1.0) if code == 3413 else (0.0, -1.0)
+            edge = [(lon0 - 180.0, sgn * 70.0), (lon0 + 180.0, sgn * 70.0), (lon0, sgn * 90.0)]
+            guards = [(0.0, 0.0)]
+        else:
+            p = C._params(code)
+            lon0, fe, fn = p["lon0"] / C.D2R, p["fe"], p["fn"]
+            edge = [(lon0 - 180.0, 0.0), (lon0 + 180.0, 0.0), (lon0 + 180.0, 45.0)]
+            pole_y = p["r"] * math.pi / 2.0 if p["kind"] == "sinu_sph" else None
+            if p["kind"] == "sinu":
+                pole_y = C.A_CAP * math.pi / 2.0
+            guards = [] if pole_y is None else [(fe + 5.0, fn + pole_y), (fe, fn - pole_y)]
+        lo, la = backends_agree(
+            lambda x, y, c=code: P.forward(x, y, c),
+            lambda x, y, c=code: P.inverse(x, y, c),
+            np.concatenate([lons, [e[0] for e in edge]]),
+            np.concatenate([lats, [e[1] for e in edge]]),
+            extra_xy=guards,
+        )
+        for k in range(1, len(guards) + 1):
+            assert abs(abs(la[-k]) - 90.0) < 1e-9, code
 
 
 def test_duckdb_sql_match_numpy():
@@ -307,6 +331,33 @@ def test_composed_pairs_through_hub():
     gx, gy = con.execute(f"SELECT {sx}, {sy}").fetchone()
     ex2, ey2 = transform_points("EPSG:3413", "EPSG:4087", [x[0]], [y[0]])
     assert abs(float(gx) - ex2[0]) < 1e-6 and abs(float(gy) - ey2[0]) < 1e-6
+
+
+def test_wrapped_forwards_keep_the_east_edge():
+    """lon_0 + 180 projects to the east edge (PROJ adjlon leaves
+    |lam| <= pi alone); only the inverses fold +180 to -180."""
+    from rasterio_spark.grid.crs import transform_bounds
+    from rasterio_spark.operators.warp import calculate_default_transform
+
+    l, b, r, t = transform_bounds("EPSG:4326", "EPSG:4087", -180, -90, 180, 90)
+    assert abs(l + 20037508.342789244) < 1e-6 and abs(r - 20037508.342789244) < 1e-6
+    assert abs(b + 10001965.729312722) < 1e-6 and abs(t - 10001965.729312722) < 1e-6
+    # a global grid keeps its east edge (to within a pixel): width
+    # ~ 3600, not the 7697 a -180 east edge gave
+    aff, w, h = calculate_default_transform(
+        "EPSG:4326", "EPSG:4087", 3600, 1800, -180, -90, 180, 90
+    )
+    assert aff.c + aff.a * (w + 1) >= r and w < 3700
+    x, y = C.forward([180.0, -180.0], [0.0, 0.0], C.MODIS_SINU)
+    assert abs(x[0] - math.pi * C.MODIS_R) < 1e-6 and abs(x[1] + math.pi * C.MODIS_R) < 1e-6
+    # the DuckDB twins agree at +/-180 from lon_0, cone included
+    con = duckdb.connect()
+    for code, lon0, lat in ((4087, 0.0, 10.0), (C.MODIS_SINU, 0.0, 10.0), (5070, -96.0, 40.0)):
+        for lon in (lon0 - 180.0, lon0 + 180.0):
+            sx, sy = P.forward_sql(repr(lon), repr(lat), code)
+            gx, gy = con.execute(f"SELECT {sx}, {sy}").fetchone()
+            ex, ey = P.forward([lon], [lat], code)
+            assert abs(gx - ex[0]) < 1e-6 and abs(gy - ey[0]) < 1e-6, (code, lon)
 
 
 # ------------------------------------------- WGS84-family geographic CRSs
@@ -390,7 +441,7 @@ def test_ref_issue1609_stere_dict_is_3976():
 
 def test_reproject_3413_pure_jvm(spark):
     """reproject 4326 -> 3413 (polar science grid) composes through
-    transform_points_cols; the plan stays JVM-only."""
+    transform_points on Columns; the plan stays JVM-only."""
     from rasterio_spark.grid.affine import Affine
     from rasterio_spark.operators.warp import calculate_default_transform, reproject
 
