@@ -301,10 +301,16 @@ def forward(lon, lat, code):
         beta = _asin(m, _q_lat(m, lat) / _QP)
         dl = lon * D2R - p["lam_0"]
         sb, cb = m.sin(beta), m.cos(beta)
-        b = m.sqrt(2.0 / (1.0 + sb * p["sb0"] + cb * m.cos(dl) * p["cb0"])) * p["rq"]
+        den = 1.0 + sb * p["sb0"] + cb * m.cos(dl) * p["cb0"]
+        # den is exactly 0 only at the antipode of the centre, which the
+        # projection spreads over its whole bounding circle: (inf, inf)
+        # there on both backends, as PROJ gives, where a Column division
+        # by 0 would fail the whole job under ANSI mode
+        anti = den == 0.0
+        b = m.sqrt(2.0 / m.where(anti, 1.0, den)) * p["rq"]
         x = p["fe"] + b * cb * m.sin(dl) * p["d"]
         y = p["fn"] + (b / p["d"]) * (sb * p["cb0"] - cb * m.cos(dl) * p["sb0"])
-        return x, y
+        return m.where(anti, math.inf, x), m.where(anti, math.inf, y)
 
 
 def inverse(x, y, code):

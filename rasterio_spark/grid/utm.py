@@ -106,7 +106,9 @@ def _columns() -> SimpleNamespace:
         atan2=F.atan2, sinh=F.sinh, cosh=F.cosh, asinh=F.asinh,
         atanh=F.atanh, exp=F.exp, log=F.log, sqrt=F.sqrt, abs=F.abs,
         floor=lambda x: F.floor(x).cast("double"),
-        clip=lambda x, lo, hi: F.least(F.greatest(x, F.lit(lo)), F.lit(hi)),
+        # np.clip passes NaN (and here null) through; least/greatest
+        # would not, as Spark orders NaN above every number
+        clip=lambda x, lo, hi: F.when(F.isnan(x), x).when(x < lo, lo).when(x > hi, hi).otherwise(x),
         where=lambda cond, a, b: F.when(cond, a).otherwise(b),
     )
 

@@ -23,9 +23,21 @@ once. One aggregate over them gives the partitions to write, their row
 counts and digests; the files are written from the same rows, so the
 lineage describes what was written even for a nondeterministic input.
 Clustering leaves each partition in one task, so each partition is one
-file (AQE splits only a partition larger than the advisory size), and
-each commit appends one lineage file. Re-running a partition is
-idempotent: dynamic partition overwrite replaces it whole.
+file (AQE splits only a partition larger than the advisory size, and
+coalesces small ones into fewer tasks; the session lets it re-plan
+persisted plans). Re-running a partition is idempotent: dynamic
+partition overwrite replaces it whole.
+
+Commits and read-backs are driver-side file operations through the
+Hadoop FileSystem API, as an Iceberg snapshot commit is, and run no
+Spark job. Each commit is one zstd parquet file of ``LINEAGE_SCHEMA``
+rows, built with pyarrow, written under a dot-prefixed name that every
+reader skips and renamed into place; Spark reads it like its own. A
+missing lineage path reads as "nothing committed", a path with no
+lineage file raises AnalysisException, and an unreadable file raises
+OSError. ``verify_lineage`` runs one aggregate over the data, diffs
+its collected rows (one per partition) against the committed ones on
+the driver and returns the mismatches as a local relation.
 
 (The north-star names Iceberg; this sandbox has no Iceberg jars, so the
 same contract is implemented over parquet partitions + a lineage table.
@@ -34,17 +46,37 @@ Swapping the writer for ``df.writeTo(table)`` keeps the logic.)
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import time
+import uuid
 from decimal import Decimal
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from rasterio_spark.plans.session import PARQUET_CODEC
 
 LINEAGE_DIR = "_lineage"
 LINEAGE_SCHEMA = "stage string, partition_id long, row_count long, digest long, committed_at long"
+# verify_lineage's result: the recomputed lineage beside the committed one
+_VERIFY_SCHEMA = "partition_id long, stage string, row_count long, digest long, c_rows long, c_digest long"
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a DDL schema of string and long columns."""
+    fields = (f.split() for f in ddl.split(", "))
+    return pa.schema([(n, pa.string() if t == "string" else pa.int64()) for n, t in fields])
+
+
+_LINEAGE_ARROW = _arrow_schema(LINEAGE_SCHEMA)
+_VERIFY_ARROW = _arrow_schema(_VERIFY_SCHEMA)
 
 
 def _digest(df: DataFrame, partition_col: str) -> Column:
@@ -71,44 +103,70 @@ def partition_lineage(df: DataFrame, stage: str, partition_col: str) -> DataFram
     )
 
 
-def _lineage_pdf(spark: SparkSession, out_dir: str, stage: str) -> pd.DataFrame | None:
-    """The committed lineage rows, read with ``LINEAGE_SCHEMA`` (no
-    schema-inference job); None when the lineage path does not exist. A
-    Hadoop FS listing tells that apart from a lineage path holding no
-    data file, which raises AnalysisException instead of reading as
-    "nothing committed"; a file that cannot be read raises at the read."""
-    path = os.path.join(out_dir, LINEAGE_DIR, stage)
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``: works on any storage."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _hidden(name: str) -> bool:
+    """Spark's own filter: names starting with "_" or "." are not data."""
+    return name.startswith(("_", "."))
+
+
+def _lineage_table(spark: SparkSession, out_dir: str, stage: str) -> pa.Table | None:
+    """The committed lineage rows, read on the driver (no Spark job);
+    None when the lineage path does not exist. A lineage path holding
+    no data file raises AnalysisException instead of reading as
+    "nothing committed", and a file that cannot be read raises OSError."""
+    path = os.path.join(out_dir, LINEAGE_DIR, stage)
+    fs, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return None
-    # Spark's own filter: names starting with "_" or "." are not data
-    names = [s.getPath().getName() for s in fs.listStatus(jpath) if s.isFile()]
-    if not any(not n.startswith(("_", ".")) for n in names):
+    files = [s.getPath() for s in fs.listStatus(jpath) if s.isFile() and not _hidden(s.getPath().getName())]
+    if not files:
         raise AnalysisException(message=f"lineage path {path} holds no data file")
-    df = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    return pd.DataFrame.from_records(df.collect(), columns=df.columns)
+    read_all = spark._jvm.org.apache.commons.io.IOUtils.toByteArray
+    tables = []
+    for f in files:
+        try:
+            with contextlib.closing(fs.open(f)) as stream:
+                table = pq.read_table(pa.py_buffer(read_all(stream)))
+        except (Py4JJavaError, pa.ArrowException) as e:
+            raise OSError(f"lineage file {f.toString()} is unreadable: {e}") from e
+        tables.append(table.select(_LINEAGE_ARROW.names).cast(_LINEAGE_ARROW))
+    return pa.concat_tables(tables)
 
 
 def read_lineage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | None:
     """The committed lineage rows as a local relation, or None when
     nothing was ever committed (the lineage path does not exist). A
     lineage path that exists but cannot be read raises."""
-    pdf = _lineage_pdf(spark, out_dir, stage)
-    return None if pdf is None else spark.createDataFrame(pdf, LINEAGE_SCHEMA)
+    table = _lineage_table(spark, out_dir, stage)
+    return None if table is None else spark.createDataFrame(table, LINEAGE_SCHEMA)
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, stage: str, rows: list) -> None:
-    """Commit lineage rows as one parquet file. A pandas local relation
-    with a DDL schema: a Python-list createDataFrame would start Python
-    workers."""
-    pdf = pd.DataFrame([r.asDict() for r in rows]).assign(committed_at=int(time.time()))
-    (
-        spark.createDataFrame(pdf, LINEAGE_SCHEMA)
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(out_dir, LINEAGE_DIR, stage))
+    """Commit lineage rows as one parquet file, as an Iceberg snapshot
+    commit is: built on the driver, written under a dot-prefixed name
+    that every reader skips, then renamed into place. The file holds no
+    statistics, dictionary pages or Arrow/pandas footer metadata: its
+    readers read whole files, and those would more than double its size
+    (a 4-row commit: 902 B, with pyarrow's defaults 2,230 B)."""
+    now = int(time.time())
+    table = pa.Table.from_pylist([{**r.asDict(), "committed_at": now} for r in rows], schema=_LINEAGE_ARROW)
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        table, buf, compression=PARQUET_CODEC, use_dictionary=False, write_statistics=False, store_schema=False
     )
+    fs, jdir = _fs(spark, os.path.join(out_dir, LINEAGE_DIR, stage))
+    name = f"part-{uuid.uuid4().hex}.{PARQUET_CODEC}.parquet"
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(jdir, f".{name}")
+    with contextlib.closing(fs.create(tmp, False)) as stream:
+        stream.write(buf.getvalue().to_pybytes())
+    if not fs.rename(tmp, Path(jdir, name)):
+        raise OSError(f"could not commit lineage file {name} under {jdir.toString()}")
 
 
 def checkpointed_write(
@@ -129,8 +187,8 @@ def checkpointed_write(
     Returns {written: n, skipped: n}.
     """
     spark = df.sparkSession
-    done = _lineage_pdf(spark, out_dir, stage)
-    done_ids = [] if done is None else sorted(set(done["partition_id"].tolist()))
+    done = _lineage_table(spark, out_dir, stage)
+    done_ids = [] if done is None else sorted(set(done.column("partition_id").to_pylist()))
 
     todo = df if not done_ids else df.where(~F.col(partition_col).isin(done_ids))
     todo = todo.hint("rebalance", partition_col).persist()
@@ -234,34 +292,59 @@ def write_window(
     # explicitly so the replace semantics hold.
     present = {r[0] for r in out.select(partition_col).distinct().collect()}
     stale = [tid for tid in affected if tid not in present]
-    if stale:
-        # Hadoop FS API so the delete works on any storage (HDFS/S3/local)
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for tid in stale:
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(table_dir, f"{partition_col}={tid}")
-            )
-            fs = jpath.getFileSystem(hconf)
-            if fs.exists(jpath):
-                fs.delete(jpath, True)
+    for tid in stale:
+        fs, jpath = _fs(spark, os.path.join(table_dir, f"{partition_col}={tid}"))
+        if fs.exists(jpath):
+            fs.delete(jpath, True)
     return {"partitions": affected}
 
 
+def _written_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark schema recorded in the footer of one data file under
+    ``path``: what Spark's schema inference reads, read here on the
+    driver instead of in a job. None when there is no such file or it
+    records no Spark schema."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    root = len(jpath.toUri().getPath())
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        f = files.next().getPath()
+        if not any(_hidden(part) for part in f.toUri().getPath()[root:].split("/") if part):
+            footer = spark._jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+                spark._jsc.hadoopConfiguration(), f
+            )
+            meta = footer.getFileMetaData().getKeyValueMetaData()
+            row = meta.get("org.apache.spark.sql.parquet.row.metadata")
+            return None if row is None else StructType.fromJson(json.loads(row))
+    return None
+
+
 def verify_lineage(spark: SparkSession, out_dir: str, stage: str, partition_col: str) -> DataFrame:
-    """Recompute digests from the written data and diff against the
-    lineage table: returns mismatching partitions (empty = consistent).
-    With no lineage committed, every data partition is reported."""
-    data = spark.read.parquet(os.path.join(out_dir, stage))
-    actual = partition_lineage(data, stage, partition_col)
-    committed = read_lineage(spark, out_dir, stage)
-    if committed is None:
-        committed = spark.createDataFrame([], "partition_id long, row_count long, digest long")
-    committed = committed.select(
-        "partition_id", F.col("row_count").alias("c_rows"), F.col("digest").alias("c_digest")
-    )
-    j = actual.join(committed, "partition_id", "full")
-    return j.where(
-        (F.col("row_count") != F.col("c_rows")) | (F.col("digest") != F.col("c_digest"))
-        | F.col("row_count").isNull() | F.col("c_rows").isNull()
-    )
+    """Recompute digests from the written data and diff them against
+    the committed lineage: returns the mismatching partitions, sorted by
+    id (empty = consistent), as a local relation. With no lineage
+    committed, every data partition is reported. One aggregate over the
+    data runs in Spark; the diff runs on the driver."""
+    path = os.path.join(out_dir, stage)
+    schema = _written_schema(spark, path)
+    data = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    actual = {
+        r["partition_id"]: (r["stage"], r["row_count"], r["digest"])
+        for r in partition_lineage(data, stage, partition_col).collect()
+    }
+    committed = _lineage_table(spark, out_dir, stage)
+    bad, seen = [], set()
+    for c in [] if committed is None else committed.to_pylist():
+        pid = c["partition_id"]
+        seen.add(pid)
+        got = actual.get(pid, (None, None, None))
+        if got[1:] != (c["row_count"], c["digest"]):
+            bad.append((pid, *got, c["row_count"], c["digest"]))
+    bad += [(pid, *got, None, None) for pid, got in actual.items() if pid not in seen]
+    bad.sort(key=lambda r: (r[0] is None, r[0] or 0))
+    rows = [dict(zip(_VERIFY_ARROW.names, r)) for r in bad]
+    # an Arrow table, even an empty one, becomes a local relation; an
+    # empty pandas frame or list would become an RDD scan
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=_VERIFY_ARROW), _VERIFY_SCHEMA)

@@ -190,6 +190,48 @@ def test_spark_cols_match_numpy(spark, backends_agree):
             assert abs(lo[-1] - lon0) < 1e-12 and abs(la[-1] - lat0) < 1e-9
 
 
+def _columns_and_numpy(spark, fn, pts):
+    """``fn`` over (a, b) pairs on Columns and on NumPy arrays."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pts, "a double, b double")  # a list keeps NaN a NaN
+    x, y = fn(F.col("a"), F.col("b"))
+    got = df.select(x.alias("x"), y.alias("y")).toPandas()
+    a, b = (np.array([p[i] for p in pts]) for i in (0, 1))
+    return got["x"].to_numpy(), got["y"].to_numpy(), *fn(a, b)
+
+
+@pytest.mark.parametrize("code", [2154, 5070, 3035])  # lcc, albers, laea
+def test_columns_match_numpy_on_nan(spark, code):
+    """A NaN input gives NumPy's output on Columns: the asin clamp
+    passes NaN through instead of sending it to a pole."""
+    nan = float("nan")
+    lon0, lat0, fe, fn = ORIGIN[code]
+    for fn_, pts in (
+        (C.forward, [(10.0, nan), (nan, lat0), (nan, nan), (lon0, lat0)]),
+        (C.inverse, [(fe, nan), (nan, fn), (nan, nan), (fe, fn)]),
+    ):
+        xc, yc, xn, yn = _columns_and_numpy(spark, lambda a, b: fn_(a, b, code), pts)
+        assert np.isnan(xn[:3]).all() and np.isnan(yn[:3]).all()
+        np.testing.assert_allclose(xc, xn, rtol=0, atol=1e-6, equal_nan=True)
+        np.testing.assert_allclose(yc, yn, rtol=0, atol=1e-6, equal_nan=True)
+
+
+def test_laea_antipode_under_ansi(spark):
+    """At the antipode of the LAEA centre both backends return PROJ's
+    (inf, inf), and the Column forward does not fail the job on its
+    division by 0 under ANSI mode."""
+    spec = C.canonical_spec("laea", None, None, 45.0, -100.0, 1000000.0, 2000000.0)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        xc, yc, xn, yn = _columns_and_numpy(spark, lambda a, b: C.forward(a, b, spec), [(-280.0, -45.0)])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert (xn[0], yn[0]) == (math.inf, math.inf)
+    assert (xc[0], yc[0]) == (xn[0], yn[0])
+
+
 def test_duckdb_sql_match_numpy():
     con = duckdb.connect()
     rng = np.random.default_rng(11)

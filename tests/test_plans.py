@@ -4,7 +4,6 @@ import os
 
 import pandas as pd
 import pytest
-from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
@@ -58,9 +57,9 @@ def test_read_lineage_missing_vs_unreadable(spark, tmp_path):
         read_lineage(spark, out, "stage2")
     with open(os.path.join(broken, "part-00000.parquet"), "wb") as f:
         f.write(b"not parquet")
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(OSError, match="unreadable"):
         read_lineage(spark, out, "stage2")
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(OSError, match="unreadable"):
         checkpointed_write(_tiles(spark), out, "stage2", "tile")
 
 
@@ -72,6 +71,14 @@ def test_verify_lineage_without_lineage_reports_every_partition(spark, tmp_path)
     bad = verify_lineage(spark, out, "stage1", "tile").collect()
     assert sorted(r["partition_id"] for r in bad) == [0, 1, 2]
     assert all(r["row_count"] == 20 and r["c_rows"] is None for r in bad)
+    # files whose footers record no Spark schema: the read infers it
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = pa.Table.from_pandas(_tiles(spark).toPandas(), preserve_index=False)
+    by_arrow = str(tmp_path / "arrow")
+    pq.write_to_dataset(rows, os.path.join(by_arrow, "stage1"), partition_cols=["tile"])
+    assert verify_lineage(spark, by_arrow, "stage1", "tile").collect() == bad
 
 
 def _eight_tiles(spark):
@@ -112,6 +119,70 @@ def test_checkpointed_write_one_file_per_tile_and_commit(spark, tmp_path):
     assert verify_lineage(spark, resumed, "s", "tile").count() == 0
 
 
+def _only_tile_file(out, tile):
+    d = os.path.join(out, "s", f"tile={tile}")
+    (name,) = _parquet_files(d)
+    return os.path.join(d, name)
+
+
+def _drop_crc(path):
+    """Remove the local checksum beside ``path``, as storage without
+    checksums would have none, so the reader sees the bytes as they are."""
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _committed(spark, tmp_path):
+    out = str(tmp_path)
+    assert checkpointed_write(_eight_tiles(spark), out, "s", "tile") == {"written": 8, "skipped": 0}
+    return out
+
+
+def test_verify_reports_a_changed_value_as_a_digest_mismatch(spark, tmp_path):
+    """One value changed in one tile's file, row count unchanged: only
+    that partition is reported, with equal counts and a different digest."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = _committed(spark, tmp_path)
+    path = _only_tile_file(out, 5)
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("v")
+    v = t.column(i).to_pylist()
+    v[0] += 1
+    t = t.set_column(i, "v", pc.cast(v, t.schema.field(i).type))
+    _drop_crc(path)
+    pq.write_table(t, path)
+    (bad,) = verify_lineage(spark, out, "s", "tile").collect()
+    assert bad["partition_id"] == 5
+    assert bad["row_count"] == bad["c_rows"] == 500
+    assert bad["digest"] != bad["c_digest"]
+
+
+def test_verify_reports_a_deleted_tile(spark, tmp_path):
+    """A committed tile whose directory is gone is reported alone, with
+    no recomputed row count."""
+    import shutil
+
+    out = _committed(spark, tmp_path)
+    shutil.rmtree(os.path.join(out, "s", "tile=2"))
+    (bad,) = verify_lineage(spark, out, "s", "tile").collect()
+    assert bad["partition_id"] == 2
+    assert bad["row_count"] is None and bad["c_rows"] == 500
+
+
+def test_verify_reports_a_partition_without_lineage(spark, tmp_path):
+    """A data partition that no lineage row covers is reported alone,
+    with no committed row count."""
+    out = _committed(spark, tmp_path)
+    extra = _eight_tiles(spark).where("tile = 0").withColumn("tile", F.lit(9))
+    extra.write.mode("append").partitionBy("tile").parquet(os.path.join(out, "s"))
+    (bad,) = verify_lineage(spark, out, "s", "tile").collect()
+    assert bad["partition_id"] == 9
+    assert bad["row_count"] == 500 and bad["c_rows"] is None
+
+
 def test_truncated_lineage_file_raises(spark, tmp_path):
     """A lineage file cut to half its bytes fails every reader instead of
     reading as 'uncommitted' (which would rewrite its partitions)."""
@@ -126,11 +197,11 @@ def test_truncated_lineage_file_raises(spark, tmp_path):
     newest = max(paths, key=lambda p: os.stat(p).st_mtime_ns)
     with open(newest, "r+b") as f:
         f.truncate(os.path.getsize(newest) // 2)
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(OSError, match="unreadable"):
         read_lineage(spark, out, "s").count()
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(OSError, match="unreadable"):
         verify_lineage(spark, out, "s", "tile").collect()
-    with pytest.raises(Py4JJavaError):
+    with pytest.raises(OSError, match="unreadable"):
         checkpointed_write(df, out, "s", "tile")
 
 
@@ -232,3 +303,74 @@ def test_crash_between_data_write_and_lineage_is_reported_then_repaired(spark, t
     assert checkpointed_write(df, out, "s", "tile") == {"written": 8, "skipped": 0}
     assert verify_lineage(spark, out, "s", "tile").count() == 0
     _assert_one_file_per_tile(out, "s", commits=1)
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted by the status
+    tracker over a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_lineage_job_counts(spark, tmp_path):
+    """Commits and read-backs run on the driver: a crash plus resume on
+    the 8-tile fixture runs only the aggregate and write jobs of its two
+    calls, and verify runs at most 3 (its aggregate and the count)."""
+    df = _eight_tiles(spark)
+    out = str(tmp_path)
+
+    def crash_resume():
+        with pytest.raises(RuntimeError, match="after 4 partitions"):
+            checkpointed_write(df, out, "s", "tile", fail_after_partitions=4)
+        return checkpointed_write(df, out, "s", "tile")
+
+    assert _jobs(spark, crash_resume) == ({"written": 4, "skipped": 4}, 8)
+    assert _jobs(spark, lambda: verify_lineage(spark, out, "s", "tile").count())[1] <= 3
+
+
+def test_verify_result_is_a_local_relation(spark, tmp_path):
+    """Consistent or with no lineage, the result is a local relation:
+    no RDD scan (whose actions start Python workers), and collecting it
+    runs no Spark job."""
+    out = _committed(spark, tmp_path)
+    ok = verify_lineage(spark, out, "s", "tile")
+    assert "LocalRelation" in _plan(ok) and "LogicalRDD" not in _plan(ok)
+    assert _jobs(spark, ok.collect) == ([], 0)
+    # a global count has a result stage even over no rows
+    assert _jobs(spark, ok.count) == (0, 1)
+
+    bare = str(tmp_path / "bare")
+    _tiles(spark).write.partitionBy("tile").parquet(os.path.join(bare, "s"))
+    unverified = verify_lineage(spark, bare, "s", "tile")
+    assert "LocalRelation" in _plan(unverified) and "LogicalRDD" not in _plan(unverified)
+    assert [r["partition_id"] for r in _jobs(spark, unverified.collect)[0]] == [0, 1, 2]
+
+
+def test_committed_lineage_file_format(spark, tmp_path):
+    """A commit is one zstd parquet file in LINEAGE_SCHEMA that Spark
+    reads back, with no Arrow or pandas footer metadata."""
+    import pyarrow.parquet as pq
+
+    out = _committed(spark, tmp_path)
+    lin = os.path.join(out, LINEAGE_DIR, "s")
+    (name,) = _parquet_files(lin)
+    assert not [f for f in os.listdir(lin) if f.startswith(".") and not f.endswith(".crc")]
+    meta = pq.ParquetFile(os.path.join(lin, name)).metadata
+    assert not {b"pandas", b"ARROW:schema"} & set(meta.metadata or {})
+    assert {meta.row_group(0).column(j).compression for j in range(meta.num_columns)} == {"ZSTD"}
+    by_spark = spark.read.schema(lineage.LINEAGE_SCHEMA).parquet(lin)
+    assert sorted(by_spark.collect()) == sorted(read_lineage(spark, out, "s").collect())
+    assert sorted(r["partition_id"] for r in by_spark.collect()) == list(range(8))
