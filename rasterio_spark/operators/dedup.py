@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rasterio_spark.operators.shapes import connected_components_pairs
+
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 # deterministic (a, b) per permutation; a odd, < 2^31
 MINHASH_COEFFS = [(2 * j + 1, (j * j + j + 41) % MINHASH_P) for j in range(16)]
@@ -416,110 +418,6 @@ def lsh_verified_pairs(
         .where(F.col("jaccard") >= threshold)
     )
     return j.select("doc_a", "doc_b", "jaccard")
-
-
-def connected_components_pairs(
-    pairs: DataFrame, max_iter: int = 25, driver_threshold: int = 1_000_000
-) -> DataFrame:
-    """(node, label) — connected components over an edge list.
-
-    Adaptive: the verified near-dup edge set is usually FAR smaller
-    than the corpus (it only contains actual duplicates), so when it
-    fits under ``driver_threshold`` edges we collect it and run an
-    exact union-find in milliseconds — the same hybrid a production
-    dedup uses. Above the threshold: distributed min-label propagation
-    (each iteration every node takes the min label among itself and
-    its neighbors; one join + one groupBy per round, O(component
-    diameter) rounds — shallow for near-dup clusters; nothing
-    driver-side)."""
-    import warnings
-
-    from rasterio_spark.plans.cache import scoped_persist
-
-    # persist BEFORE the size probe: the limit().collect() below would
-    # otherwise run the entire upstream candidate+verify pipeline, and
-    # the distributed fallback would run it all over again (round-3
-    # ADVICE fix). Every loop iteration reuses the same cache.
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).persist()
-    spark = pairs.sparkSession
-    try:
-        if driver_threshold:
-            small = edges.limit(driver_threshold + 1).collect()
-            if len(small) <= driver_threshold:
-                uf: dict[int, int] = {}
-
-                def find(x: int) -> int:
-                    r = x
-                    while uf.get(r, r) != r:
-                        r = uf[r]
-                    while uf.get(x, x) != x:
-                        uf[x], x = r, uf[x]
-                    return r
-
-                for e in small:
-                    ra, rb = find(e["src"]), find(e["dst"])
-                    if ra != rb:
-                        lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                        uf[hi] = lo
-                nodes = {n for e in small for n in (e["src"], e["dst"])}
-                rows = [(int(n), int(find(n))) for n in nodes]
-                return spark.createDataFrame(rows, "node long, label long")
-        und = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # each iteration's labels are localCheckpoint'ed: the loop body
-        # references labels twice, so without lineage truncation the
-        # logical plan DOUBLES per round (2^iters nodes — planning OOM
-        # long before data is a problem). Checkpointing keeps every
-        # round's plan O(1) — the same pattern GraphFrames' connected
-        # components uses.
-        labels = (
-            und.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint()
-        )
-        changed = -1
-        for _ in range(max_iter):
-            prop = (
-                und.join(labels, und["src"] == labels["node"])
-                .select(F.col("dst").alias("node"), "label")
-            )
-            new_labels = (
-                labels.select("node", "label")
-                .unionByName(prop)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .where(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        if changed != 0:
-            # silent fragmentation would keep docs that should be
-            # dropped AND diverge from the exact recursive-CTE oracle —
-            # make it loud (round-3 ADVICE fix)
-            warnings.warn(
-                f"connected_components_pairs: min-label propagation did not "
-                f"converge in max_iter={max_iter} rounds (component diameter "
-                f"exceeds it); labels are fragmented. Raise max_iter.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        # labels is localCheckpoint-backed (already materialized);
-        # intermediate checkpoints are reclaimed by the ContextCleaner
-        # once their Python references drop (standard iterative-Spark
-        # lifecycle)
-        return labels
-    finally:
-        edges.unpersist()
 
 
 def dedup_groups(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -25,8 +26,9 @@ def _stencil(spark, d: int, include_origin: bool = False):
         for dc in range(-d, d + 1):
             if not include_origin and dr == 0 and dc == 0:
                 continue
-            rows.append((dr, dc, 1.0 / math.hypot(dr, dc) if (dr or dc) else 1.0))
-    return spark.createDataFrame(rows, "dr int, dc int, w double")
+            rows.append({"dr": dr, "dc": dc, "w": 1.0 / math.hypot(dr, dc) if (dr or dc) else 1.0})
+    schema = pa.schema([("dr", pa.int32()), ("dc", pa.int32()), ("w", pa.float64())])
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema), "dr int, dc int, w double")
 
 
 def fillnodata(

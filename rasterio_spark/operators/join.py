@@ -462,7 +462,13 @@ def sample_points(
     from rasterio_spark.functions.cell_exprs import affine_rowcol_cols
 
     spark = cells.sparkSession
-    pts = spark.createDataFrame(list(points), "pt_id long, x double, y double")
+    pts = spark.createDataFrame(
+        pa.Table.from_pylist(
+            [{"pt_id": i, "x": x, "y": y} for i, x, y in points],
+            schema=pa.schema([("pt_id", pa.int64()), ("x", pa.float64()), ("y", pa.float64())]),
+        ),
+        "pt_id long, x double, y double",
+    )
     row, col = affine_rowcol_cols(F.col("x"), F.col("y"), transform)
     pts = pts.withColumn("row", row).withColumn("col", col)
     data = cells if bands is None else cells.where(F.col("band").isin(bands))

@@ -1,5 +1,5 @@
-"""shapes / sieve — raster -> vector via distributed connected
-components (SURVEY.md §2.3; reference /root/reference/rasterio/features.py:88-197
+"""shapes / sieve — raster -> vector via connected components
+(SURVEY.md §2.3; reference /root/reference/rasterio/features.py:88-197
 + _features.pyx:35-300).
 
 Reference semantics mirrored:
@@ -12,31 +12,56 @@ Reference semantics mirrored:
   with the value of the neighboring region with the largest shared
   border (ties -> smaller label), like GDALSieveFilter.
 
-Scale design (SURVEY.md §7.3 #3): one ``applyInPandas`` pass computes
-per-tile local components with an array-based union-find (no per-row
-Python); only tile-boundary adjacencies (O(perimeter), not O(area))
-leave the executors; the driver unions the tiny cross-tile edge graph
-and broadcasts the relabel map. Exactly one shuffle over the cells.
-Labels are deterministic: the minimum cell key (row * 2^32 + col) of
-the component.
+Scale design (SURVEY.md §7.3 #3): one ``applyInPandas`` pass labels
+each tile's cells (no per-row Python); only tile-boundary adjacencies
+(O(perimeter), not O(area)) leave the executors; the driver labels the
+small cross-tile edge graph and broadcasts the relabel map. Exactly one
+shuffle over the cells. Every graph — a tile's cells, the cross-tile
+labels, a near-dup edge list — is labelled by the one NumPy kernel
+:func:`min_labels`. Labels are deterministic: the minimum cell key
+(row * 2^32 + col) of the component.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 KEY_SHIFT = 32  # cell key = (row << 32) | col — fits int64 for grids < 2^31
 
 
+def min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
+    """Connected components of the graph on nodes 0..n-1 with edges
+    (src[i], dst[i]): each node's label is the smallest node of its
+    component. Shiloach-Vishkin style min-label propagation with pointer
+    jumping — zero per-node Python, O(E log N) vectorized passes."""
+    # symmetric edge arrays so min labels flow both ways
+    ei = np.concatenate([src, dst])
+    ej = np.concatenate([dst, src])
+    labels = np.arange(n, dtype=np.int64)
+    while True:
+        # hook: every endpoint takes the min label across its edges
+        new = labels.copy()
+        np.minimum.at(new, ei, labels[ej])
+        # pointer jumping: collapse label chains to their roots
+        while True:
+            nn = new[new]
+            if np.array_equal(nn, new):
+                break
+            new = nn
+        if np.array_equal(new, labels):
+            return labels
+        labels = new
+
+
 def _local_components(pdf: pd.DataFrame, connectivity: int) -> pd.DataFrame:
     """Fully vectorized per-tile connected components: neighbor matching
-    via np.searchsorted over the sorted cell keys, then Shiloach-Vishkin
-    style min-label propagation with pointer jumping — zero per-cell
-    Python (round-3 fix; the r2 kernel probed a dict per cell per
-    offset). O(E log N) vectorized passes; labels = min cell key."""
+    via np.searchsorted over the sorted cell keys, then :func:`min_labels`
+    over the cell positions (round-3 fix; the r2 kernel probed a dict
+    per cell per offset). Labels = min cell key."""
     rows = pdf["row"].values.astype(np.int64)
     cols = pdf["col"].values.astype(np.int64)
     vals = pdf["value"].values
@@ -47,7 +72,7 @@ def _local_components(pdf: pd.DataFrame, connectivity: int) -> pd.DataFrame:
     if n == 0:
         return pd.DataFrame({"row": rows, "col": cols, "value": vals, "label": keys})
 
-    # neighbor offsets (only "forward" ones; edges are made symmetric below)
+    # neighbor offsets (only "forward" ones; min_labels makes edges symmetric)
     offsets = [(0, 1), (1, 0)]
     if connectivity == 8:
         offsets += [(1, 1), (1, -1)]
@@ -61,30 +86,36 @@ def _local_components(pdf: pd.DataFrame, connectivity: int) -> pd.DataFrame:
         ii = np.nonzero(hit)[0]
         ei_parts.append(ii)
         ej_parts.append(pos_c[ii])
-    ii = np.concatenate(ei_parts) if ei_parts else np.empty(0, dtype=np.int64)
-    jj = np.concatenate(ej_parts) if ej_parts else np.empty(0, dtype=np.int64)
-    # symmetric edge arrays so min labels flow both ways
-    ei = np.concatenate([ii, jj])
-    ej = np.concatenate([jj, ii])
-
-    labels = np.arange(n, dtype=np.int64)
-    while True:
-        # hook: every endpoint takes the min label across its edges
-        new = labels.copy()
-        np.minimum.at(new, ei, labels[ej])
-        # pointer jumping: collapse label chains to their roots
-        while True:
-            nn = new[new]
-            if np.array_equal(nn, new):
-                break
-            new = nn
-        if np.array_equal(new, labels):
-            break
-        labels = new
+    labels = min_labels(np.concatenate(ei_parts), np.concatenate(ej_parts), n)
     # labels are positions; position order == key order, so the min
     # position in a component is its min cell key
     return pd.DataFrame(
         {"row": rows, "col": cols, "value": vals, "label": keys[labels]}
+    )
+
+
+def connected_components_pairs(pairs: DataFrame) -> DataFrame:
+    """(node, label) — connected components over an edge list
+    (doc_a, doc_b); a node's label is the minimum node id of its
+    component.
+
+    The edge lists this serves are small next to their inputs (verified
+    near-dup pairs hold only actual duplicates; the cross-tile label
+    graph of :func:`connected_components` is O(tile perimeter)), so the
+    edges are collected once and labelled on the driver by
+    :func:`min_labels` over their ``np.unique``-factorised ids. Sorted
+    ids keep the minimum position the minimum id. The result is a local
+    relation built from a pyarrow Table: actions over it start no
+    Python worker."""
+    edges = pairs.select("doc_a", "doc_b").toArrow()
+    ends = np.concatenate(
+        [edges.column("doc_a").to_numpy(), edges.column("doc_b").to_numpy()]
+    ).astype(np.int64)
+    nodes, idx = np.unique(ends, return_inverse=True)
+    m = edges.num_rows
+    labels = nodes[min_labels(idx[:m], idx[m:], len(nodes))]
+    return pairs.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "label": labels}), "node long, label long"
     )
 
 
@@ -144,14 +175,8 @@ def connected_components(
     pairs = pair_frames[0]
     for pf in pair_frames[1:]:
         pairs = pairs.unionByName(pf)
-    # cross-tile label graph is O(tile-boundary adjacencies) — usually
-    # tiny, but a continent-sized same-value region makes it grow with
-    # total boundary length. Route it through the adaptive component
-    # finder (round-3 fix): exact driver union-find under its 1M-edge
-    # threshold, distributed min-label propagation above — never an
-    # unconditional collect.
-    from rasterio_spark.operators.dedup import connected_components_pairs
-
+    # cross-tile label graph: O(tile-boundary adjacencies), labelled on
+    # the driver by the same kernel as the tiles
     roots = connected_components_pairs(
         pairs.distinct()
         .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
@@ -160,8 +185,8 @@ def connected_components(
         roots.where(F.col("node") != F.col("label"))
         .select(F.col("node").alias("label"), F.col("label").alias("root"))
     )
-    # no explicit broadcast hint: the driver path yields a local
-    # relation (auto-broadcast), the distributed path lets AQE decide
+    # no explicit broadcast hint: the map is a local relation, which
+    # auto-broadcasts
     out = local.join(map_df, "label", "left").select(
         "row", "col", "value", F.coalesce("root", "label").alias("label")
     )
@@ -411,159 +436,11 @@ def _sieve_region_graph(
     return root_of, val
 
 
-def _sieve_region_graph_distributed(
-    reg: DataFrame, edges: DataFrame, size: int, max_rounds: int = 50
-) -> DataFrame:
-    """Distributed GDAL-sieve merge over the region graph — the fallback
-    when the graph exceeds the driver threshold.
-
-    Round-synchronous schedule of the same rule as
-    :func:`_sieve_region_graph`: each round, every under-threshold
-    region that is a strict local minimum by (n_cells, label) among the
-    currently-merging candidates merges into its largest live neighbor
-    (ties -> smaller label); merged values then fuse adjacent same-value
-    regions exactly (adaptive connected components). Local-minima-only
-    merging makes each round's merge set an independent set — no two
-    merging sources are adjacent, and every target is stable within the
-    round — so the schedule is deterministic and always progresses (the
-    global minimum is always a local minimum). It coincides with the
-    sequential driver order whenever concurrently-merging regions don't
-    contend (isolated small regions — the common sparse-noise case);
-    under contention the merge ORDER may differ while the merge RULE is
-    identical. The exact-sequential driver path remains the default
-    whenever the region graph fits (see :func:`sieve`).
-
-    ``reg``: (label, value, n); ``edges``: (la, lb) distinct, la != lb.
-    Returns (label, new_value): final value for every original label.
-    All state (mapping, live regions, edges) stays region-graph-sized
-    and distributed; each round localCheckpoints to keep plans O(1).
-    """
-    import warnings
-
-    from rasterio_spark.operators.dedup import connected_components_pairs
-
-    mapping = reg.select(
-        F.col("label").alias("node"), F.col("label").alias("root")
-    ).localCheckpoint()
-    live = reg.select(F.col("label").alias("root"), "value", "n").localCheckpoint()
-    e = (
-        edges.select(
-            F.least("la", "lb").alias("la"), F.greatest("la", "lb").alias("lb")
-        )
-        .where(F.col("la") != F.col("lb"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _remap(df, col, delta):
-        d = delta.select(F.col("old_root").alias(col), F.col("new_root").alias(f"_n_{col}"))
-        return df.join(d, col, "left").withColumn(
-            col, F.coalesce(f"_n_{col}", col)
-        ).drop(f"_n_{col}")
-
-    converged = False
-    for _ in range(max_rounds):
-        nbr = e.select(F.col("la").alias("src"), F.col("lb").alias("dst")).unionByName(
-            e.select(F.col("lb").alias("src"), F.col("la").alias("dst"))
-        )
-        small = live.where(F.col("n") < size).select(
-            F.col("root").alias("src"), F.col("n").alias("n_src")
-        )
-        cand = nbr.join(small, "src").join(
-            live.select(F.col("root").alias("dst"), F.col("n").alias("n_dst")), "dst"
-        )
-        # target = largest live neighbor, ties -> smaller label
-        choice = cand.groupBy("src", "n_src").agg(
-            F.min(F.struct((-F.col("n_dst")).alias("k"), F.col("dst"))).getField("dst").alias("tgt")
-        ).select("src", "n_src", "tgt")
-        mergers_all = choice.localCheckpoint()
-        if mergers_all.limit(1).count() == 0:
-            converged = True  # no small region has a live neighbor
-            break
-        # local-minimum filter: src merges iff no merging neighbor has a
-        # strictly smaller (n, label) key
-        s_keys = mergers_all.select("src", "n_src")
-        both = (
-            nbr.join(s_keys, "src")
-            .join(
-                s_keys.select(
-                    F.col("src").alias("dst"), F.col("n_src").alias("n_dst_s")
-                ),
-                "dst",
-            )
-        )
-        blocked = both.where(
-            F.struct(F.col("n_dst_s").alias("n"), F.col("dst").alias("l"))
-            < F.struct(F.col("n_src").alias("n"), F.col("src").alias("l"))
-        ).select("src").distinct()
-        mergers = mergers_all.join(blocked, "src", "left_anti").localCheckpoint()
-
-        delta = mergers.select(
-            F.col("src").alias("old_root"), F.col("tgt").alias("new_root")
-        )
-        mapping = _remap(mapping, "root", delta).localCheckpoint()
-        gains = mergers.groupBy("tgt").agg(F.sum("n_src").alias("gain"))
-        live = (
-            live.join(mergers.select(F.col("src").alias("root")), "root", "left_anti")
-            .join(gains.select(F.col("tgt").alias("root"), "gain"), "root", "left")
-            .withColumn("n", F.col("n") + F.coalesce("gain", F.lit(0)))
-            .drop("gain")
-            .localCheckpoint()
-        )
-        e = (
-            _remap(_remap(e, "la", delta), "lb", delta)
-            .select(F.least("la", "lb").alias("la"), F.greatest("la", "lb").alias("lb"))
-            .where(F.col("la") != F.col("lb"))
-            .distinct()
-            .localCheckpoint()
-        )
-
-        # fuse adjacent same-value regions (absorbed cells took the
-        # target's value; neighbors sharing it are now one polygon)
-        ev = (
-            e.join(live.select(F.col("root").alias("la"), F.col("value").alias("va")), "la")
-            .join(live.select(F.col("root").alias("lb"), F.col("value").alias("vb")), "lb")
-        )
-        same = ev.where(F.col("va") == F.col("vb")).select("la", "lb").localCheckpoint()
-        if same.limit(1).count() > 0:
-            fused = connected_components_pairs(
-                same.select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
-            )
-            fdelta = fused.where(F.col("node") != F.col("label")).select(
-                F.col("node").alias("old_root"), F.col("label").alias("new_root")
-            )
-            mapping = _remap(mapping, "root", fdelta).localCheckpoint()
-            live = (
-                _remap(live, "root", fdelta)
-                .groupBy("root")
-                .agg(F.first("value").alias("value"), F.sum("n").alias("n"))
-                .localCheckpoint()
-            )
-            e = (
-                _remap(_remap(e, "la", fdelta), "lb", fdelta)
-                .select(F.least("la", "lb").alias("la"), F.greatest("la", "lb").alias("lb"))
-                .where(F.col("la") != F.col("lb"))
-                .distinct()
-                .localCheckpoint()
-            )
-    if not converged:
-        warnings.warn(
-            f"sieve: distributed region merge did not converge in "
-            f"{max_rounds} rounds; small regions may remain. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return mapping.join(live.select("root", "value"), "root").select(
-        F.col("node").alias("label"), F.col("value").alias("new_value")
-    )
-
-
 def sieve(
     cells: DataFrame,
     size: int,
     connectivity: int = 4,
     mode: str = "longest_border",
-    driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Remove regions smaller than ``size`` cells
     (reference features.py:146-197 / GDALSieveFilter). Returns
@@ -579,24 +456,18 @@ def sieve(
 
     mode='gdal': GDAL parity — iterative merge into the LARGEST
     neighbor polygon (which may itself be small) until stable, run on
-    the REGION GRAPH (labels, sizes, adjacency). Adaptive: when the
-    graph fits under ``driver_threshold`` edges+regions (region graphs
-    are perimeter-bounded, so this is the overwhelmingly common case)
-    an exact sequential union-find runs on the driver and the relabel
-    map is broadcast back; above it, a round-synchronous distributed
-    merge (:func:`_sieve_region_graph_distributed`) applies the same
-    rule with nothing driver-side. ``driver_threshold=0`` forces the
-    distributed path (tests pin its equivalence to the driver path).
+    the REGION GRAPH (labels, sizes, adjacency). The region graph is
+    perimeter-bounded, so it is collected once and merged on the driver
+    in GDAL's sequential order (:func:`_sieve_region_graph`); the
+    relabel map goes back as a broadcast local relation.
     """
     from rasterio_spark.plans.cache import scoped_persist
 
     if mode == "gdal":
         cc = scoped_persist(connected_components(cells, connectivity))
-        reg = scoped_persist(
-            cc.groupBy("label").agg(
-                F.first("value").alias("value"), F.count(F.lit(1)).alias("n")
-            )
-        )
+        reg = cc.groupBy("label").agg(
+            F.first("value").alias("value"), F.count(F.lit(1)).alias("n")
+        ).toArrow()
         offsets = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if connectivity == 8 else [])
         a = cc.alias("a")
         b = cc.alias("b")
@@ -616,33 +487,25 @@ def sieve(
         ef = edge_frames[0]
         for x in edge_frames[1:]:
             ef = ef.unionByName(x)
-        ef = scoped_persist(ef.distinct())
+        ef = ef.distinct().toArrow()
 
-        # probe-then-threshold (same hybrid as connected_components_pairs):
-        # limit(N+1) caps driver transfer; persist above makes the probe
-        # and any fallback share one computation of the edge set
-        edge_rows = reg_rows = None
-        if driver_threshold:
-            edge_rows = ef.limit(driver_threshold + 1).collect()
-            if len(edge_rows) <= driver_threshold:
-                reg_rows = reg.limit(driver_threshold + 1).collect()
-                if len(reg_rows) > driver_threshold:
-                    reg_rows = None
-        if reg_rows is not None:
-            regions = {
-                int(r["label"]): (float(r["value"]), int(r["n"])) for r in reg_rows
-            }
-            edges = [(r["la"], r["lb"]) for r in edge_rows]
-            root_of, val = _sieve_region_graph(regions, edges, size)
-            spark = cells.sparkSession
-            relabel = F.broadcast(
-                spark.createDataFrame(
-                    [(l, float(val[r])) for l, r in root_of.items()],
-                    "label long, new_value double",
-                )
+        regions = dict(
+            zip(
+                reg.column("label").to_pylist(),
+                zip(reg.column("value").to_pylist(), reg.column("n").to_pylist()),
             )
-        else:
-            relabel = _sieve_region_graph_distributed(reg, ef, size)
+        )
+        edges = list(zip(ef.column("la").to_pylist(), ef.column("lb").to_pylist()))
+        root_of, val = _sieve_region_graph(regions, edges, size)
+        relabel = pa.table(
+            {
+                "label": pa.array(list(root_of), pa.int64()),
+                "new_value": pa.array([val[r] for r in root_of.values()], pa.float64()),
+            }
+        )
+        relabel = F.broadcast(
+            cells.sparkSession.createDataFrame(relabel, "label long, new_value double")
+        )
         return cc.join(relabel, "label", "left").select(
             "row",
             "col",

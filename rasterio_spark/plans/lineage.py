@@ -152,7 +152,12 @@ def _append_lineage(spark: SparkSession, out_dir: str, stage: str, rows: list) -
     that every reader skips, then renamed into place. The file holds no
     statistics, dictionary pages or Arrow/pandas footer metadata: its
     readers read whole files, and those would more than double its size
-    (a 4-row commit: 902 B, with pyarrow's defaults 2,230 B)."""
+    (a 4-row commit: 902 B, with pyarrow's defaults 2,230 B).
+
+    A failed commit removes its temp file, and the stage's lineage
+    directory when this commit created it: a directory holding no data
+    file reads as unreadable lineage, so a failed first commit would
+    otherwise block every later resume."""
     now = int(time.time())
     table = pa.Table.from_pylist([{**r.asDict(), "committed_at": now} for r in rows], schema=_LINEAGE_ARROW)
     buf = pa.BufferOutputStream()
@@ -163,10 +168,17 @@ def _append_lineage(spark: SparkSession, out_dir: str, stage: str, rows: list) -
     name = f"part-{uuid.uuid4().hex}.{PARQUET_CODEC}.parquet"
     Path = spark._jvm.org.apache.hadoop.fs.Path
     tmp = Path(jdir, f".{name}")
-    with contextlib.closing(fs.create(tmp, False)) as stream:
-        stream.write(buf.getvalue().to_pybytes())
-    if not fs.rename(tmp, Path(jdir, name)):
-        raise OSError(f"could not commit lineage file {name} under {jdir.toString()}")
+    created = not fs.exists(jdir)
+    try:
+        with contextlib.closing(fs.create(tmp, False)) as stream:
+            stream.write(buf.getvalue().to_pybytes())
+        if not fs.rename(tmp, Path(jdir, name)):
+            raise OSError(f"could not commit lineage file {name} under {jdir.toString()}")
+    except BaseException:
+        fs.delete(tmp, False)
+        if created:
+            fs.delete(jdir, False)
+        raise
 
 
 def checkpointed_write(

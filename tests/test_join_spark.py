@@ -81,14 +81,19 @@ def test_pip_join_generic_polygons(spark, pages):
     assert got == expected
 
 
-def test_sample_points(spark):
-    cells = spark.range(0, 100).select(
+def _grid100(spark):
+    """A 10x10 single-band grid: value = row * 10 + col; column 9 invalid."""
+    return spark.range(0, 100).select(
         F.lit(1).alias("band"),
         F.expr("CAST(id DIV 10 AS INT)").alias("row"),
         (F.col("id") % 10).cast("int").alias("col"),
         F.col("id").cast("double").alias("value"),
         (F.col("id") % 10 != 9).alias("valid"),
     )
+
+
+def test_sample_points(spark):
+    cells = _grid100(spark)
     t = Affine.identity()
     pts = [(0, 2.5, 3.5), (1, 0.0, 0.0), (2, 99.0, 99.0), (3, 9.5, 0.5)]
     got = {r["pt_id"]: r["value"] for r in sample_points(cells, pts, t, nodata=-1.0).collect()}
@@ -96,6 +101,24 @@ def test_sample_points(spark):
     assert got[1] == 0.0
     assert got[2] == -1.0  # out of bounds -> nodata
     assert got[3] == -1.0  # invalid cell (col 9) -> nodata
+
+
+def test_sample_points_and_fillnodata_plans_hold_no_rdd_scan(spark):
+    """The point set and the fill stencil are local relations built from
+    pyarrow: no LogicalRDD, whose actions would start Python workers."""
+    from rasterio_spark.operators.fill import fillnodata
+
+    cells = _grid100(spark)
+    pts = [(0, 2.5, 3.5), (1, 0.0, 0.0), (2, 99.0, 99.0)]
+    for df in (
+        sample_points(cells, pts, Affine.identity(), nodata=-1.0),
+        fillnodata(cells, max_search_distance=2),
+        fillnodata(cells, max_search_distance=1, smoothing_iterations=1),
+    ):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    got = {r["pt_id"]: r["value"] for r in sample_points(cells, pts, Affine.identity(), nodata=-1.0).collect()}
+    assert got == {0: 32.0, 1: 0.0, 2: -1.0}
 
 
 def test_asof_latest(spark, pages):

@@ -305,6 +305,49 @@ def test_crash_between_data_write_and_lineage_is_reported_then_repaired(spark, t
     _assert_one_file_per_tile(out, "s", commits=1)
 
 
+def test_failed_first_lineage_commit_leaves_a_resumable_stage(spark, tmp_path, monkeypatch):
+    """A first commit whose file write fails removes its temp file and
+    the lineage directory it created, so the next call resumes instead
+    of reading a directory with no data file as unreadable lineage."""
+    out = str(tmp_path)
+    df = _tiles(spark).union(
+        spark.range(60, 80).select(F.lit(3).alias("tile"), F.col("id").alias("v"))
+    )
+    real_fs = lineage._fs
+
+    class FailingWrites:
+        """A Hadoop FS whose created streams fail on write."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def create(self, path, overwrite):
+            stream = self._fs.create(path, overwrite)
+
+            class Stream:
+                close = stream.close
+
+                def write(self, data):
+                    raise OSError("disk gone mid-commit")
+
+            return Stream()
+
+    def failing_fs(spark, path):
+        fs, jpath = real_fs(spark, path)
+        return FailingWrites(fs), jpath
+
+    monkeypatch.setattr(lineage, "_fs", failing_fs)
+    with pytest.raises(OSError, match="disk gone"):
+        checkpointed_write(df, out, "s", "tile")
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, LINEAGE_DIR, "s"))
+    assert checkpointed_write(df, out, "s", "tile") == {"written": 4, "skipped": 0}
+    assert verify_lineage(spark, out, "s", "tile").count() == 0
+
+
 def _jobs(spark, fn):
     """(fn(), the number of Spark jobs it ran), counted by the status
     tracker over a job group of its own."""

@@ -4,9 +4,9 @@
    bands >= 2);
 2. pip_join layer-cache key must include geometry;
 3. merge_sources mixed-resolution sources are nearest-resampled onto
-   the output grid (reference merge.py:488-494 out_shape read);
-4. sieve mode='gdal': iterative largest-neighbor merge (clusters of
-   adjacent small regions that jointly exceed the threshold DO merge).
+   the output grid (reference merge.py:488-494 out_shape read).
+
+The sieve mode='gdal' merge test lives in test_connected_components.py.
 """
 
 from __future__ import annotations
@@ -164,42 +164,3 @@ def test_merge_sources_mixed_resolution(spark):
     # non-overlapped cells keep the coarse value
     assert got[(2, 0)] == 1.0
     assert got[(3, 1)] == 1.0
-
-
-def test_sieve_gdal_merges_small_cluster(spark):
-    """Two adjacent small regions (values 1 and 2, each 2 cells) inside
-    a big value-0 sea, threshold 5: longest_border keeps them (no >=5
-    neighbor among themselves... they do have the big sea neighbor), but
-    GDAL mode merges them into the sea step by step."""
-    from rasterio_spark.operators.shapes import _sieve_region_graph, sieve
-
-    # region graph unit test: A(val 1, n=2) - B(val 2, n=2), both adjacent
-    # to SEA(val 0, n=50), threshold 5
-    regions = {10: (0.0, 50), 20: (1.0, 2), 30: (2.0, 2)}
-    edges = [(10, 20), (10, 30), (20, 30)]
-    root_of, val = _sieve_region_graph(regions, edges, 5)
-    assert root_of[20] == 10 and root_of[30] == 10
-    assert val[10] == 0.0
-
-    # end-to-end: 8x8 sea of 0 with a 2x1 island of 1 and adjacent 2x1 of 2
-    rows = []
-    for r in range(8):
-        for c in range(8):
-            v = 0.0
-            if r == 3 and c in (3, 4):
-                v = 1.0
-            if r == 4 and c in (3, 4):
-                v = 2.0
-            rows.append((1, r, c, v, True))
-    cells = spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-    out = sieve(cells, size=5, connectivity=4, mode="gdal").toPandas()
-    assert (out["value"] == 0.0).all()  # everything merged into the sea
-
-    # longest_border mode: islands each have the sea as their only >=5
-    # neighbor -> also replaced; use a jointly-big cluster to see the
-    # documented divergence: threshold 3, each island is 2 cells
-    out2 = sieve(cells, size=3, connectivity=4, mode="longest_border").toPandas()
-    got2 = {(int(r.row), int(r.col)): r.value for r in out2.itertuples()}
-    assert got2[(3, 3)] == 0.0  # small islands -> sea value under both rules

@@ -62,17 +62,6 @@ def test_dedup_groups_end_to_end(spark):
     assert out.loc[3, "group_id"] == 3 and bool(out.loc[3, "keep"])
 
 
-def test_connected_components_pairs_chain(spark):
-    from rasterio_spark.operators.dedup import connected_components_pairs
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a long, doc_b long"
-    )
-    labels = connected_components_pairs(pairs).toPandas().set_index("node")["label"]
-    assert labels[1] == labels[2] == labels[3] == labels[4] == 1
-    assert labels[7] == labels[8] == 7
-
-
 def test_merge_callable_range(spark):
     from rasterio_spark.operators.merge import merge
 
@@ -182,27 +171,3 @@ def test_bpe_token_count(spark):
     n = df.select(bpe_token_count_col(F.col("text")).alias("n")).first()["n"]
     # Hello / , / world / 4 / 2 / !  -> 6
     assert n == 6
-
-
-def test_connected_components_pairs_distributed_path(spark):
-    """Force the min-label-propagation branch (driver_threshold=0) and
-    check it matches the driver union-find result."""
-    from rasterio_spark.operators.dedup import connected_components_pairs
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    dist = (
-        connected_components_pairs(pairs, driver_threshold=0)
-        .toPandas()
-        .set_index("node")["label"]
-        .to_dict()
-    )
-    drv = (
-        connected_components_pairs(pairs)
-        .toPandas()
-        .set_index("node")["label"]
-        .to_dict()
-    )
-    assert dist == drv == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 7, 20: 20, 21: 20}

@@ -143,93 +143,6 @@ def test_kmeans_seed_centroids_no_window(spark):
     assert assign.count() == 40
 
 
-def _grid_cells(spark, arr):
-    rows = [
-        (int(r), int(c), float(arr[r, c]), True)
-        for r in range(arr.shape[0])
-        for c in range(arr.shape[1])
-    ]
-    return spark.createDataFrame(rows, "row int, col int, value double, valid boolean")
-
-
-def test_sieve_gdal_distributed_matches_driver_sparse(spark):
-    """driver_threshold=0 forces the distributed region-graph path; on
-    non-contended inputs (isolated small regions — the common
-    sparse-noise case) it must equal the exact sequential driver path,
-    including a contended same-size cluster the round-synchronous
-    local-min schedule resolves in the sequential order."""
-    import numpy as np
-
-    from rasterio_spark.operators.shapes import sieve
-
-    # isolated specks in a background + one 2x2 cluster of distinct values
-    a = np.zeros((12, 12))
-    a[2, 2] = 1
-    a[2, 3] = 2
-    a[3, 2] = 3
-    a[3, 3] = 4
-    a[7, 9] = 7
-    a[10, 1] = 5
-    cells = _grid_cells(spark, a)
-    drv = [
-        (r["row"], r["col"], r["value"])
-        for r in sieve(cells, 5, 4, "gdal").orderBy("row", "col").collect()
-    ]
-    dist = [
-        (r["row"], r["col"], r["value"])
-        for r in sieve(cells, 5, 4, "gdal", driver_threshold=0).orderBy("row", "col").collect()
-    ]
-    assert drv == dist
-    # everything merged into the zero background
-    assert {v for _, _, v in dist} == {0.0}
-
-
-def test_sieve_gdal_distributed_postcondition_and_determinism(spark):
-    """On contended inputs GDAL's own result depends on its sequential
-    processing order, which no parallel schedule reproduces in general;
-    the distributed path must still (a) be deterministic and (b) satisfy
-    the shared post-condition: no under-threshold region with a live
-    neighbor remains."""
-    import numpy as np
-
-    from rasterio_spark.operators.shapes import sieve
-
-    rng = np.random.RandomState(3)
-    arr = rng.randint(0, 3, (10, 10)).astype(float)
-    cells = _grid_cells(spark, arr)
-    out1 = sieve(cells, 3, 4, "gdal", driver_threshold=0)
-    got1 = [(r["row"], r["col"], r["value"]) for r in out1.orderBy("row", "col").collect()]
-    out2 = sieve(cells, 3, 4, "gdal", driver_threshold=0)
-    got2 = [(r["row"], r["col"], r["value"]) for r in out2.orderBy("row", "col").collect()]
-    assert got1 == got2  # deterministic schedule
-
-    # post-condition: every remaining under-threshold region is isolated
-    # (no neighbor) — same invariant the sequential driver guarantees
-    from rasterio_spark.operators.shapes import connected_components
-
-    res = spark.createDataFrame(
-        [(r, c, v, True) for r, c, v in got1],
-        "row int, col int, value double, valid boolean",
-    )
-    lab = {
-        (r["row"], r["col"]): r["label"]
-        for r in connected_components(res, 4).collect()
-    }
-    from collections import Counter
-
-    region_n = Counter(lab.values())
-    for (r, c), l in lab.items():
-        if region_n[l] >= 3:
-            continue
-        for dr, dc in ((0, 1), (0, -1), (1, 0), (-1, 0)):
-            p = (r + dr, c + dc)
-            if p in lab:
-                assert lab[p] == l, (
-                    f"under-threshold region {l} at ({r},{c}) still has a "
-                    f"live neighbor at {p}"
-                )
-
-
 def test_colormap_roundtrip(tmp_path):
     """write_colormap/colormap parity with the reference round-trip
     (reference tests/test_colormap.py): 3-tuples get alpha 255, the

@@ -83,7 +83,13 @@ def main() -> int:
     from rasterio_spark.plans.cache import release_persisted
     from rasterio_spark.plans.session import get_session
 
-    spark = get_session(app_name="oracle_check", cores=8, shuffle_partitions=8)
+    # no console progress bar: its redraws would share lines with the OK lines
+    spark = get_session(
+        app_name="oracle_check",
+        cores=8,
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     con = duckdb.connect()
     for t in TABLES:
@@ -93,10 +99,11 @@ def main() -> int:
 
     qs = entry.queries()
     oq = entry.oracle_sql()
-    failures = 0
+    failures = ran = ok = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -122,8 +129,10 @@ def main() -> int:
             failures += 1
             print(f"FAIL {name}: " + "; ".join(problems[:4]))
         else:
+            ok += 1
             print(f"OK   {name}: {len(sdf)} rows")
     spark.stop()
+    print(f"{ok}/{ran} OK")
     return 1 if failures else 0
 
 
