@@ -206,11 +206,15 @@ def main(argv: list[str] | None = None) -> int:
         # rio create: a new dataset = empty (band,row,col,value,valid)
         # table with the layer header in the descriptor sidecar; cells
         # appear later via partition-overwrite writes (plans/lineage)
+        import pyarrow as pa
+
         from rasterio_spark.sources.layers import LayerDescriptor, write_descriptor
 
-        empty = spark.createDataFrame(
-            [], "band int, row int, col int, value double, valid boolean"
-        )
+        # from pyarrow: a list-built frame would scan a PythonRDD
+        empty = spark.createDataFrame(pa.schema(
+            [("band", pa.int32()), ("row", pa.int32()), ("col", pa.int32()),
+             ("value", pa.float64()), ("valid", pa.bool_())]
+        ).empty_table())
         if args.profile is not None:
             # rio create --co twin: creation profile drives the header
             # (DefaultLayerProfile defaults beneath) and the writer

@@ -1,7 +1,7 @@
 """Dtype helpers — planning-time ports of the reference's dtype module
 (/root/reference/rasterio/dtypes.py): ranges, minimum-dtype inference
 (used by rasterize when no dtype is given, features.py:379-383),
-lossless-cast checks, and the mapping to Spark SQL types.
+and lossless-cast checks.
 
 float16/complex are documented out (no Spark equivalent; SURVEY.md §1.2).
 """
@@ -22,19 +22,6 @@ DTYPE_RANGES: dict[str, tuple[float, float]] = {
     "int64": (-9223372036854775808, 9223372036854775807),
     "float32": (-3.4028235e38, 3.4028235e38),
     "float64": (-1.7976931348623157e308, 1.7976931348623157e308),
-}
-
-SPARK_TYPES: dict[str, str] = {
-    "uint8": "smallint",  # Spark has no unsigned: widen
-    "int8": "tinyint",
-    "uint16": "int",
-    "int16": "smallint",
-    "uint32": "bigint",
-    "int32": "int",
-    "uint64": "decimal(20,0)",
-    "int64": "bigint",
-    "float32": "float",
-    "float64": "double",
 }
 
 
@@ -89,10 +76,3 @@ def can_cast_dtype(values, dtype: str) -> bool:
         with np.errstate(over="ignore", invalid="ignore"):
             return bool(np.allclose(arr, arr.astype(dtype), equal_nan=True))
     return np.array_equal(arr, arr.astype(dtype))
-
-
-def spark_type_for(dtype: str) -> str:
-    """Spark SQL type carrying the given raster dtype losslessly."""
-    if dtype not in SPARK_TYPES:
-        raise ValueError(f"unsupported dtype {dtype!r} (float16/complex are out of scope)")
-    return SPARK_TYPES[dtype]

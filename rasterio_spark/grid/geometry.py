@@ -185,7 +185,8 @@ class FlatPolygons:
     Layout: edges of polygon k occupy [starts[k], starts[k] + counts[k])
     in (x0, y0, x1, y1); ``index`` maps polygon_id -> k. Built on the
     driver: :meth:`contains` is the exact reference pip_join's refine is
-    tested against, and rasterize scans it with :meth:`center_spans`.
+    tested against, and rasterize burns it with :meth:`center_spans` or
+    :meth:`touched_spans`.
     """
 
     __slots__ = ("index", "starts", "counts", "x0", "y0", "x1", "y1")
@@ -271,9 +272,7 @@ class FlatPolygons:
         # min(y0, y1) <= r + 0.5 < max(y0, y1)
         lo = np.maximum(_first_center_at_or_above(np.minimum(self.y0, self.y1)), win[k, 0])
         hi = np.minimum(_first_center_at_or_above(np.maximum(self.y0, self.y1)), win[k, 1])
-        n = np.maximum(hi - lo, 0).astype(np.int64)
-        e = np.repeat(np.arange(len(k)), n)
-        row = lo[e] + (np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n))
+        e, row = _ramp(lo, hi - 1)
         ry = row + 0.5
         ex0, ey0, ex1, ey1 = self.x0[e], self.y0[e], self.x1[e], self.y1[e]
         x_at_y = ex0 + (ry - ey0) * (ex1 - ex0) / (ey1 - ey0)
@@ -303,6 +302,64 @@ class FlatPolygons:
         last = np.minimum(last, win[sk, 3] - 1)
         keep = first <= last
         return sk[keep], *(a[keep].astype(np.int64) for a in (srow, first, last))
+
+    def touched_spans(self, windows: np.ndarray) -> tuple[np.ndarray, ...]:
+        """``all_touched`` form of :meth:`center_spans`, same windows and
+        output: the center spans plus every cell a ring edge touches, i.e.
+        the cells ``cells_touched_by_polygon`` accepts, as disjoint spans.
+
+        Each edge enumerates candidates row band by row band, its x-range
+        in the band widened by one cell on each side and clipped to the
+        window, and keeps those the closed-rectangle Liang-Barsky test of
+        ``_segments_intersect_rects`` accepts: a segment along a grid line
+        touches both neighbours. Cost is O(edge cells), not O(window).
+        """
+        win = np.asarray(windows, dtype="float64").reshape(-1, 4)
+        k = np.repeat(np.arange(len(self.counts)), self.counts)
+        x0, y0, x1, y1 = self.x0, self.y0, self.x1, self.y1
+        ymin, ymax = np.minimum(y0, y1), np.maximum(y0, y1)
+        lo = np.maximum(np.floor(ymin) - 1, win[k, 0])
+        e, row = _ramp(lo, np.minimum(np.floor(ymax) + 1, win[k, 1] - 1))
+        # the edge's x-range within the band row <= y <= row + 1
+        flat = (y0 == y1)[e]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            slope = ((x1 - x0) / (y1 - y0))[e]
+            xa = np.where(flat, x0[e], x0[e] + (np.clip(row, ymin[e], ymax[e]) - y0[e]) * slope)
+            xb = np.where(flat, x1[e], x0[e] + (np.clip(row + 1, ymin[e], ymax[e]) - y0[e]) * slope)
+        lo = np.maximum(np.floor(np.minimum(xa, xb)) - 1, win[k[e], 2])
+        j, col = _ramp(lo, np.minimum(np.floor(np.maximum(xa, xb)) + 1, win[k[e], 3] - 1))
+        e, row = e[j], row[j]
+        hit = _segment_touches_rect(x0[e], y0[e], x1[e], y1[e], col, row, col + 1, row + 1)
+        edges = (k[e][hit], row[hit], col[hit], col[hit])
+        return merge_spans(*map(np.concatenate, zip(self.center_spans(windows), edges)))
+
+
+def _ramp(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(i, v) for every integer v in [lo[i], hi[i]] (integer-valued
+    floats), i ascending."""
+    n = np.maximum(hi - lo + 1, 0).astype(np.int64)
+    i = np.repeat(np.arange(len(n)), n)
+    return i, lo[i] + (np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n))
+
+
+def merge_spans(k, row, first, last) -> tuple[np.ndarray, ...]:
+    """Union of inclusive column spans per (k, row), as sorted disjoint
+    int64 spans: overlapping and adjacent spans join, no cell repeats."""
+    k, row, first, last = (np.asarray(a, dtype=np.int64) for a in (k, row, first, last))
+    if len(k) == 0:
+        return k, row, first, last
+    order = np.lexsort((first, row, k))
+    k, row, first, last = k[order], row[order], first[order], last[order]
+    start = np.ones(len(k), dtype=bool)
+    start[1:] = (k[1:] != k[:-1]) | (row[1:] != row[:-1])
+    # running max of `last` per (k, row): each group is lifted above the
+    # one before, so one accumulate never crosses a group boundary
+    lift = (np.cumsum(start) - 1) * (last.max() - first.min() + 2) - first.min()
+    reach = np.maximum.accumulate(last + lift)
+    start[1:] |= first[1:] + lift[1:] > reach[:-1] + 1
+    s = np.flatnonzero(start)
+    end = np.append(s[1:], len(k)) - 1
+    return k[s], row[s], first[s], reach[end] - lift[end]
 
 
 def _first_center_at_or_above(v: np.ndarray) -> np.ndarray:
@@ -344,6 +401,24 @@ def _segments_intersect_rects(p0: np.ndarray, p1: np.ndarray, rects: np.ndarray)
         ok &= ~parallel | inside_band
     ok &= t0 <= t1
     return ok.any(axis=1)
+
+
+def _segment_touches_rect(ax, ay, bx, by, x0, y0, x1, y1) -> np.ndarray:
+    """Pairwise form of :func:`_segments_intersect_rects`: does segment
+    i meet closed rectangle i? The same Liang-Barsky arithmetic,
+    elementwise instead of rects x segments."""
+    t0 = np.zeros(len(ax))
+    t1 = np.ones(len(ax))
+    ok = np.ones(len(ax), dtype=bool)
+    for d, lo, hi, a in ((bx - ax, x0, x1, ax), (by - ay, y0, y1, ay)):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tlo = (lo - a) / d
+            thi = (hi - a) / d
+        parallel = d == 0
+        t0 = np.where(parallel, t0, np.maximum(t0, np.minimum(tlo, thi)))
+        t1 = np.where(parallel, t1, np.minimum(t1, np.maximum(tlo, thi)))
+        ok &= ~parallel | ((a >= lo) & (a <= hi))
+    return ok & (t0 <= t1)
 
 
 def cells_touched_by_polygon(

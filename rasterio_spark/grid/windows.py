@@ -400,17 +400,3 @@ def disjoint_bounds(bounds1, bounds2) -> bool:
         or bounds1[3] > bounds2[1]
         or bounds2[3] > bounds1[1]
     )
-
-
-def window_predicate_sql(window: Window, row_col: str = "row", col_col: str = "col") -> str:
-    """Compile a Window to a SQL predicate over integer cell coordinates.
-
-    Uses the ``toslices`` discretization (floor start / ceil stop,
-    clamped at 0) so the relational scan selects exactly the cells an
-    ndarray indexer would.
-    """
-    rs, cs = window.toslices()
-    return (
-        f"({row_col} >= {rs.start} AND {row_col} < {rs.stop} "
-        f"AND {col_col} >= {cs.start} AND {col_col} < {cs.stop})"
-    )

@@ -16,18 +16,17 @@ Semantics mirrored from the reference:
 - output dtype inference from values uses grid.dtypes-free minimal rule
   (the engine emits double and lets the writer narrow).
 
-Plan shape: shapes (small, driver-side) -> burned (shape, row, col)
-cells -> REPLACE/ADD resolution (one aggregation). Center-rule
-polygons are scanned on the driver in NumPy: each row center line's
-sorted even-odd edge crossings give inclusive column spans, O(edge
-crossings) with the same half-open test and crossing arithmetic as
-FlatPolygons.contains (Raptor-style per-row intervals instead of
-per-cell tests). The spans load as a pandas LocalTableScan and
-``sequence`` + explode them in the JVM — no Python worker runs.
-``all_touched`` polygons explode their bbox window
-(geometry_window, features.py:457-547) and keep an Arrow-batched touch
-refine with the rings broadcast once; points and lines burn their
-cells on the driver.
+Plan shape: one relation of burned column spans (shape_idx, orig_idx,
+value, row, c0, c1), computed in NumPy on the driver, loaded from one
+pyarrow Table and exploded once with ``sequence`` in the JVM, then the
+REPLACE/ADD resolution (one aggregation). No mode runs a Python worker.
+Every rule yields spans, Raptor-style row intervals plus boundary cells:
+center-rule polygons ``FlatPolygons.center_spans`` (per-row even-odd
+crossings, the arithmetic of ``FlatPolygons.contains``); ``all_touched``
+polygons ``FlatPolygons.touched_spans`` (those plus every cell a ring
+edge touches), both clipped to the bbox window (geometry_window,
+features.py:457-547); points and lines one-cell spans inside the grid.
+A part's spans are disjoint, so no part burns a cell twice.
 """
 
 from __future__ import annotations
@@ -35,20 +34,19 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from pyspark.sql.types import BooleanType
 
 from rasterio_spark.grid.affine import Affine
 from rasterio_spark.grid.geometry import (
     FlatPolygons,
-    cells_touched_by_polygon,
     explode_geometries,
     geom_bounds,
     is_valid_geom,
     line_cells,
+    merge_spans,
     polygon_rings,
 )
 from rasterio_spark.grid.transform import rowcol
@@ -112,21 +110,18 @@ def rasterize(
     if not flat:
         raise ValueError("no valid geometry objects found for rasterize")
 
-    rows_out: list[pd.DataFrame] = []
-    poly_entries = []  # (sid, shape_idx, value, (r0, r1, c0, c1), grid rings)
-    # sid = exploded-part index in input order; REPLACE orders by it
+    # every burn rule yields inclusive column spans (sid, row, c0, c1);
+    # sid = exploded-part index in input order. REPLACE orders by it
     # (parts of one shape share a value, so part order == shape order),
     # ADD contributes once per part per cell (GDAL burns per geometry).
-    for sid, (shape_idx, geom, value) in enumerate(flat):
+    cells = []  # (sid, row, col) of points and lines
+    rings_by_sid, windows = {}, []
+    for sid, (_, geom, _) in enumerate(flat):
         gtype = geom["type"]
         if gtype in ("Point", "MultiPoint"):
             pts = np.atleast_2d(np.asarray(geom["coordinates"], dtype="float64"))[:, :2]
             rr, cc = rowcol(transform, pts[:, 0], pts[:, 1])
-            rows_out.append(
-                pd.DataFrame(
-                    {"shape_idx": sid, "orig_idx": shape_idx, "row": rr, "col": cc, "value": value}
-                )
-            )
+            cells.append(np.stack([np.full(len(rr), sid), rr, cc], axis=1))
         elif gtype in ("LineString", "MultiLineString", "LinearRing"):
             lines = geom["coordinates"]
             if gtype != "MultiLineString":
@@ -135,18 +130,8 @@ def rasterize(
                 pts = np.asarray(line, dtype="float64")[:, :2]
                 # to grid coords via reverse transform (fractional)
                 cols_f, rows_f = transform.reverse(pts[:, 0], pts[:, 1])
-                cells = line_cells(np.stack([cols_f, rows_f], axis=1))
-                rows_out.append(
-                    pd.DataFrame(
-                        {
-                            "shape_idx": sid,
-                            "orig_idx": shape_idx,
-                            "row": cells[:, 0],
-                            "col": cells[:, 1],
-                            "value": value,
-                        }
-                    )
-                )
+                rc = line_cells(np.stack([cols_f, rows_f], axis=1))
+                cells.append(np.column_stack([np.full(len(rc), sid), rc]))
         elif gtype == "Polygon":
             win = _shape_window(geom, transform, height, width)
             if win is None:
@@ -157,74 +142,40 @@ def rasterize(
                 cols_f, rows_f = transform.reverse(ring[:, 0], ring[:, 1])
                 rings.append(np.stack([cols_f, rows_f], axis=1))
             rs, cs = win.toslices()
-            bounds = tuple(int(v) for v in (rs.start, rs.stop, cs.start, cs.stop))
-            poly_entries.append((sid, shape_idx, value, bounds, rings))
+            rings_by_sid[sid] = rings
+            windows.append((rs.start, rs.stop, cs.start, cs.stop))
         else:
             warnings.warn(f"geometry type {gtype} not burnable; skipped")
 
-    parts: list[DataFrame] = []
-    rings_by_sid = {sid: rings for sid, _, _, _, rings in poly_entries}
-
-    if poly_entries and all_touched:
-        rings_bc = spark.sparkContext.broadcast(rings_by_sid)
-
-        @F.pandas_udf(BooleanType())
-        def touched(sid_s: pd.Series, row_s: pd.Series, col_s: pd.Series) -> pd.Series:
-            sids = sid_s.values
-            rr = row_s.values.astype("float64")
-            cc = col_s.values.astype("float64")
-            by_sid = rings_bc.value
-            out = np.zeros(len(sids), dtype=bool)
-            for s in pd.unique(sids):
-                m = sids == s
-                out[m] = cells_touched_by_polygon(rr[m], cc[m], by_sid[s])
-            return pd.Series(out)
-
-        cand = spark.createDataFrame(
-            [(sid, orig_idx, value, *w) for sid, orig_idx, value, w, _ in poly_entries],
-            "sid long, orig_idx long, value double, r0 int, r1 int, c0 int, c1 int",
-        )
-        cand = (
-            cand.withColumn("row", F.explode(F.sequence(F.col("r0"), F.col("r1") - 1)))
-            .withColumn("col", F.explode(F.sequence(F.col("c0"), F.col("c1") - 1)))
-            .where(touched(F.col("sid"), F.col("row"), F.col("col")))
-            .select(F.col("sid").alias("shape_idx"), "orig_idx", "row", "col", "value")
-        )
-        parts.append(cand)
-    elif poly_entries:
-        # center rule: per-row column spans scanned on the driver, loaded
-        # from pandas (a LocalTableScan, no Python RDD) and exploded in
-        # the JVM — no Python worker touches a cell
-        k, row, c0, c1 = FlatPolygons(rings_by_sid).center_spans(
-            np.array([w for _, _, _, w, _ in poly_entries])
-        )
-        meta = pd.DataFrame([e[:3] for e in poly_entries], columns=["sid", "orig_idx", "value"])
-        spans = meta.iloc[k].reset_index(drop=True).assign(row=row, c0=c0, c1=c1)
-        spans = spark.createDataFrame(
-            spans.astype({"row": "int32", "c0": "int32", "c1": "int32"}),
-            "sid long, orig_idx long, value double, row int, c0 int, c1 int",
-        )
-        parts.append(
-            spans.select(
-                F.col("sid").alias("shape_idx"),
-                "orig_idx",
-                "row",
-                F.explode(F.sequence("c0", "c1")).alias("col"),
-                "value",
-            )
-        )
-
-    if rows_out:
-        pdf = pd.concat(rows_out, ignore_index=True)
-        pdf = pdf[(pdf.row >= 0) & (pdf.row < height) & (pdf.col >= 0) & (pdf.col < width)]
-        sdf = spark.createDataFrame(
-            pdf.astype({"shape_idx": "int64", "orig_idx": "int64", "row": "int64", "col": "int64"})
-        )
-        parts.append(sdf.select("shape_idx", "orig_idx", "row", "col", "value"))
-
-    burned = parts[0]
-    for p in parts[1:]:
-        burned = burned.unionByName(p)
+    polys = FlatPolygons(rings_by_sid)
+    burn = polys.touched_spans if all_touched else polys.center_spans
+    k, row, c0, c1 = burn(np.array(windows))
+    sid = np.fromiter(rings_by_sid, dtype=np.int64, count=len(rings_by_sid))[k]
+    if cells:
+        c = np.concatenate(cells)
+        c = c[(c[:, 1] >= 0) & (c[:, 1] < height) & (c[:, 2] >= 0) & (c[:, 2] < width)]
+        # one-cell spans, merged so a part that crosses itself burns once
+        more = merge_spans(c[:, 0], c[:, 1], c[:, 2], c[:, 2])
+        sid, row, c0, c1 = map(np.concatenate, zip((sid, row, c0, c1), more))
+    orig_idx = np.array([i for i, _, _ in flat], dtype=np.int64)
+    value = np.array([v for _, _, v in flat], dtype="float64")
+    spans = pa.table(
+        {
+            "shape_idx": sid,
+            "orig_idx": orig_idx[sid],
+            "value": value[sid],
+            "row": row.astype(np.int32),
+            "c0": c0.astype(np.int32),
+            "c1": c1.astype(np.int32),
+        }
+    )
+    # a pyarrow-built relation is a LocalRelation, empty or not, and the
+    # explode runs in the JVM: no Python worker touches a cell
+    burned = spark.createDataFrame(
+        spans, "shape_idx long, orig_idx long, value double, row int, c0 int, c1 int"
+    ).select(
+        "shape_idx", "orig_idx", "row", F.explode(F.sequence("c0", "c1")).alias("col"), "value"
+    )
 
     if per_shape:
         # cover relation: dedup multi-part double covers per input shape.
@@ -233,10 +184,7 @@ def rasterize(
         # col) is already unique, so the dedup aggregation (a full
         # Exchange of the cover) is a no-op; skip it (r6, guide §2.4
         # "a distinct on data that is already unique").
-        orig_counts: dict[int, int] = {}
-        for shape_idx, _, _ in flat:
-            orig_counts[shape_idx] = orig_counts.get(shape_idx, 0) + 1
-        if all(c == 1 for c in orig_counts.values()):
+        if len({i for i, _, _ in flat}) == len(flat):
             return burned.select(
                 F.col("orig_idx").alias("shape_id"), "row", "col", "value"
             )

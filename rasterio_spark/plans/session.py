@@ -33,6 +33,14 @@ def default_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY`` if set (a deployment setting), else half
+    of this host's physical memory, so the driver JVM never claims all
+    of it."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    return os.environ.get("SPARK_DRIVER_MEMORY", f"{half_mb}m")
+
+
 def get_session(
     app_name: str = "rasterio_spark",
     cores: int | None = None,
@@ -66,7 +74,7 @@ def get_session(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the write profile (module docstring)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -146,8 +147,14 @@ def apply_colormap(cells: DataFrame, desc: LayerDescriptor, bidx: int) -> DataFr
     Returns cells + (r, g, b, a) int columns."""
     table = colormap(desc, bidx)  # validates band + presence
     spark = cells.sparkSession
-    rows = [(float(v), r, g, b, a) for v, (r, g, b, a) in sorted(table.items())]
-    lut = spark.createDataFrame(rows, "value double, r int, g int, b int, a int")
+    values = sorted(table)
+    lut = pa.table(
+        {
+            "value": pa.array(values, pa.float64()),
+            **{ch: pa.array([table[v][i] for v in values], pa.int32()) for i, ch in enumerate("rgba")},
+        }
+    )
+    lut = spark.createDataFrame(lut, "value double, r int, g int, b int, a int")
     return cells.where(F.col("band") == bidx).join(F.broadcast(lut), "value", "left")
 
 
@@ -188,21 +195,6 @@ def doc_cells_sql() -> str:
                (n_chars % {DOC_VALUE_MOD}) != 0 AS valid
         FROM documents
     """
-
-
-def doc_layer_descriptor(n_docs: int) -> LayerDescriptor:
-    """Descriptor for the documents-derived grid (identity transform)."""
-    height = (n_docs + DOC_GRID_WIDTH - 1) // DOC_GRID_WIDTH
-    return LayerDescriptor(
-        width=DOC_GRID_WIDTH,
-        height=height,
-        count=1,
-        dtype="float64",
-        crs="EPSG:4326",
-        transform=Affine.identity(),
-        nodata=0.0,
-        block_shape=(8, 8),
-    )
 
 
 def source_layers_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

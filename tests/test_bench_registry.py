@@ -90,6 +90,16 @@ def test_default_cores_come_from_the_host():
     assert int(out.stdout.split()[-1]) == len(os.sched_getaffinity(0))
 
 
+def test_default_driver_memory_is_half_the_host(monkeypatch):
+    from rasterio_spark.plans.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    host_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    assert default_driver_memory() == f"{host_mb // 2}m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert default_driver_memory() == "3g"
+
+
 def test_bucketed_cache_registers_files_the_catalog_forgot(spark, sf_dir, registry):
     """A new process's in-memory catalog has no bench tables, but the
     warehouse still holds their files: ``bucketed()`` registers them

@@ -10,7 +10,6 @@ from rasterio_spark.grid.dtypes import (
     can_cast_dtype,
     get_minimum_dtype,
     in_dtype_range,
-    spark_type_for,
     validate_dtype,
 )
 from rasterio_spark.operators.calc import calc
@@ -100,9 +99,6 @@ def test_dtypes_helpers():
     assert not in_dtype_range(300, "uint8")
     assert can_cast_dtype([1.0, 2.0], "uint8")
     assert not can_cast_dtype([1.5], "uint8")
-    assert spark_type_for("uint8") == "smallint"
-    with pytest.raises(ValueError):
-        spark_type_for("complex64")
 
 
 def test_cli_smoke(spark, sf_dir, tmp_path, capsys):

@@ -1,0 +1,102 @@
+"""Python stays out of every declared query's plan except where it is
+kept by design: each query in ``__spark_entry__.queries()`` is built on
+the test scale factor, and its executed plan and RDD lineage are
+searched for the nodes through which Python enters a Spark plan (Arrow
+and batch UDFs, grouped and mapped pandas/Arrow functions, and the
+PythonRDD scan behind a list-built relation)."""
+
+import importlib.util
+import os
+
+PLAN_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "MapInPandas",
+    "MapInArrow",
+)
+
+# kept by design: shapes/sieve's per-tile applyInPandas keeps driver
+# input O(tile perimeter); merge(method=callable) runs a user callable;
+# extract_image_features is a mapInPandas
+ALLOWED = {
+    "merge_callable_range": {"FlatMapGroupsInPandas"},
+    "shapes_summary": {"FlatMapGroupsInPandas"},
+    "sieve": {"FlatMapGroupsInPandas"},
+    "image_features_stub": {"MapInPandas"},
+}
+
+
+def python_nodes(df) -> set[str]:
+    """Python nodes of ``df``'s executed plan, plus ``PythonRDD`` if its
+    RDD lineage scans one. Building the RDD runs the query's stages."""
+    qe = df._jdf.queryExecution()
+    lineage = qe.toRdd().toDebugString()
+    plan = qe.executedPlan().toString()
+    found = {node for node in PLAN_NODES if node in plan}
+    if "PythonRDD" in lineage:
+        found.add("PythonRDD")
+    return found
+
+
+def test_declared_queries_run_python_only_where_allowed(spark, sf_dir):
+    from rasterio_spark.plans.cache import release_persisted
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry_python_nodes", path)
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+
+    found = {}
+    for name, query in entry.queries().items():
+        try:
+            nodes = python_nodes(query(spark, sf_dir))
+        finally:
+            release_persisted()
+            spark.catalog.clearCache()
+        if nodes:
+            found[name] = nodes
+    assert found == ALLOWED
+
+
+def test_colormap_lut_and_cli_create_scan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """apply_colormap's lookup table and ``cli create``'s empty layer are
+    local relations built from pyarrow: no plan scans an RDD that Python
+    feeds, the broadcast build side included."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from rasterio_spark import cli
+    from rasterio_spark.sources.layers import apply_colormap, identity_layer, write_colormap
+
+    def scans_python(df) -> bool:
+        nodes = python_nodes(df)
+        return bool(nodes) or "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+    desc = write_colormap(identity_layer(4, 1), 1, {0: (255, 0, 0), 2: (0, 0, 255, 128)})
+    cells = spark.range(4).select(
+        F.lit(1).alias("band"),
+        F.lit(0).alias("row"),
+        F.col("id").cast("int").alias("col"),
+        F.col("id").cast("double").alias("value"),
+        F.lit(True).alias("valid"),
+    )
+    rgba = apply_colormap(cells, desc, 1)
+    assert not scans_python(rgba)
+    assert {r["col"]: (r["r"], r["a"]) for r in rgba.collect()} == {
+        0: (255, 255), 1: (None, None), 2: (0, 128), 3: (None, None)
+    }
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    assert cli.main(["create", "--output", str(tmp_path / "layer"), "--width", "4", "--height", "2"]) == 0
+    (empty,) = written
+    assert empty.schema.simpleString() == "struct<band:int,row:int,col:int,value:double,valid:boolean>"
+    assert not scans_python(empty)

@@ -222,8 +222,9 @@ def test_center_spans_equal_contains_random_polygons():
     """>= 300 seeded random polygons (half-integer vertices, holes,
     self-intersections, open rings, windows that clip): at every cell
     center of each window the scanline spans equal
-    FlatPolygons.contains, the per-cell ray cast they replace."""
-    from rasterio_spark.grid.geometry import FlatPolygons
+    FlatPolygons.contains, the per-cell ray cast they replace, and the
+    all_touched spans equal cells_touched_by_polygon."""
+    from rasterio_spark.grid.geometry import FlatPolygons, cells_touched_by_polygon
 
     rng = np.random.default_rng(20261017)
     shape = (24, 28)
@@ -237,6 +238,7 @@ def test_center_spans_equal_contains_random_polygons():
         windows.append((r0, r0 + rng.integers(1, 13), c0, c0 + rng.integers(1, 17)))
     fp = FlatPolygons(rings_by_id)
     spans = fp.center_spans(np.array(windows))
+    touched = fp.touched_spans(np.array(windows))
     rr, cc = np.mgrid[0 : shape[0], 0 : shape[1]]
     vertex_on_center_line = 0
     for k, (pid, rings) in enumerate(rings_by_id.items()):
@@ -246,8 +248,32 @@ def test_center_spans_equal_contains_random_polygons():
         want = np.zeros(shape, dtype=bool)
         want[inside] = fp.contains(np.full(inside.sum(), pid), cc[inside] + 0.5, rr[inside] + 0.5)
         np.testing.assert_array_equal(_spans_grid(spans, k, shape), want, err_msg=f"polygon {pid}")
+        want[inside] = cells_touched_by_polygon(rr[inside], cc[inside], rings)
+        np.testing.assert_array_equal(_spans_grid(touched, k, shape), want, err_msg=f"polygon {pid}")
         vertex_on_center_line += any(((r[:, 1] - 0.5) % 1 == 0).any() for r in rings)
     assert vertex_on_center_line >= 100  # the degenerate cases were exercised
+
+
+def test_touched_spans_equal_reference_grid_aligned():
+    """all_touched spans on polygons whose vertices sit on grid lines
+    and cell centers (integer and half-integer): edges along grid lines
+    touch both neighbours, exactly as cells_touched_by_polygon."""
+    from rasterio_spark.grid.geometry import FlatPolygons, cells_touched_by_polygon
+
+    rng = np.random.default_rng(17)
+    shape = (22, 22)
+    rings_by_id = {}
+    for t in range(400):
+        pts = rng.integers(0, 40, (int(rng.integers(3, 9)), 2)) / (2 if t % 2 else 1)
+        rings_by_id[t] = [np.vstack([pts, pts[:1]]).astype("float64")]
+    rings_by_id[400] = [np.array([[2.0, 2.0], [6.0, 2.0], [6.0, 5.0], [2.0, 5.0], [2.0, 2.0]])]
+    touched = FlatPolygons(rings_by_id).touched_spans(np.tile([0, shape[0], 0, shape[1]], (401, 1)))
+    rr, cc = np.mgrid[0 : shape[0], 0 : shape[1]]
+    for k, rings in rings_by_id.items():
+        want = cells_touched_by_polygon(rr.ravel(), cc.ravel(), rings).reshape(shape)
+        np.testing.assert_array_equal(_spans_grid(touched, k, shape), want, err_msg=f"polygon {k}")
+    # the axis-aligned rectangle [2, 6] x [2, 5] touches rows 1..5, cols 1..6
+    assert _spans_grid(touched, 400, shape).sum() == 5 * 6
 
 
 def _center_rule_cells(geom, transform, shape):
@@ -322,10 +348,9 @@ def _python_free(df) -> str:
     return ""
 
 
-def test_center_rule_plans_run_no_python(spark):
-    """Center-rule rasterize and zonal_stats execute with no Python UDF
-    node and no Python RDD scan; the all_touched refine still has its
-    Arrow UDF (so the check can see one)."""
+def test_rasterize_plans_run_no_python(spark):
+    """rasterize in both burn rules and zonal_stats execute with no
+    Python UDF node and no Python RDD scan."""
     from pyspark.sql import functions as F
 
     from rasterio_spark.operators.stats import zonal_stats
@@ -339,4 +364,41 @@ def test_center_rule_plans_run_no_python(spark):
     )
     assert _python_free(rasterize(spark, [BASIC_GEOMETRY], SHAPE)) == ""
     assert _python_free(zonal_stats(cells, [BASIC_GEOMETRY], SHAPE)) == ""
-    assert _python_free(rasterize(spark, [BASIC_GEOMETRY], SHAPE, all_touched=True)) == "ArrowEvalPython"
+    assert _python_free(rasterize(spark, [BASIC_GEOMETRY], SHAPE, all_touched=True)) == ""
+
+
+def test_rasterize_no_burned_center_has_no_python_rdd(spark):
+    """A polygon inside the grid that contains no cell center burns
+    nothing, and its empty relation still scans no PythonRDD."""
+    tiny = {"type": "Polygon", "coordinates": [[(2.1, 2.1), (2.2, 2.1), (2.2, 2.2), (2.1, 2.2), (2.1, 2.1)]]}
+    df = rasterize(spark, [tiny], SHAPE, per_shape=True)
+    assert df.count() == 0
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("all_touched", [False, True], ids=["center", "all_touched"])
+def test_rasterize_polygon_outside_grid_burns_nothing(spark, all_touched):
+    """A polygon wholly outside the grid burns no cell; the dense grid
+    is all ``fill``, as the reference returns."""
+    outside = {"type": "Polygon", "coordinates": [[(20, 20), (20, 25), (25, 25), (25, 20), (20, 20)]]}
+    assert rasterize(spark, [outside], SHAPE, all_touched=all_touched).count() == 0
+    dense = rasterize(spark, [outside], SHAPE, all_touched=all_touched, fill=7.0, dense=True)
+    np.testing.assert_array_equal(to_array(dense, fill=0.0), np.full(SHAPE, 7.0))
+
+
+def test_rasterize_point_outside_grid_burns_nothing(spark):
+    pt = {"type": "Point", "coordinates": (-3.0, 42.0)}
+    assert rasterize(spark, [pt], SHAPE).count() == 0
+
+
+def test_rasterize_crossing_multilinestring_burns_each_cell_once(spark):
+    """Two diagonals of one MultiLineString share their crossing cell:
+    the per-shape cover lists it once, so zonal counts it once."""
+    cross = {
+        "type": "MultiLineString",
+        "coordinates": [[(1.5, 1.5), (7.5, 7.5)], [(1.5, 7.5), (7.5, 1.5)]],
+    }
+    cover = rasterize(spark, [cross], SHAPE, per_shape=True).collect()
+    keys = [(r["shape_id"], r["row"], r["col"]) for r in cover]
+    assert len(keys) == len(set(keys)) == 13
+    assert (0, 4, 4) in set(keys)

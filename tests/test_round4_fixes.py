@@ -329,11 +329,8 @@ def test_zonal_stats_percentiles(spark):
 
 
 def test_multimodal_decode_stub_and_descriptors():
-    from rasterio_spark.sources.layers import doc_layer_descriptor, identity_layer
-
-    d = doc_layer_descriptor(100)
-    assert (d.width, d.height, d.nodata) == (32, 4, 0.0)
     from rasterio_spark.grid.windows import shape as win_shape
+    from rasterio_spark.sources.layers import identity_layer
 
     assert win_shape(identity_layer(5, 7).window()) == (7, 5)
 

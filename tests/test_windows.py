@@ -32,7 +32,6 @@ from rasterio_spark.grid.windows import (
     union,
     win_align,
     window_index,
-    window_predicate_sql,
 )
 
 EPS = 1.0e-8
@@ -348,12 +347,6 @@ def test_rounding_rules():
     assert (ro2.col_off, ro2.row_off) == (1, 0)
     wa = win_align(w)
     assert wa == Window(1, 1, 10, 9)
-
-
-def test_window_predicate_sql():
-    sql = window_predicate_sql(Window(1.2, -0.5, 3.9, 4.0))
-    # toslices discretization: rows [0, ceil(3.5))=[0,4), cols [1, ceil(5.1))=[1,6)
-    assert sql == "(row >= 0 AND row < 4 AND col >= 1 AND col < 6)"
 
 
 def test_disjoint_bounds_ported():
