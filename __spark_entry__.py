@@ -641,7 +641,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #   pip_join strategy variants == pairs
     #     (tests/test_join_spark.py::test_pip_join_strategies_agree)
     #   per-method downsample == the columns of downsample_stats
-    #     (tests/test_round3_ops.py::test_downsample_stats_matches_per_method)
+    #     (tests/test_resample.py::test_downsample_stats_matches_per_method)
     #     — mode keeps its own row (different plan shape).
     qs: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "tile_counts": q_tile_counts,

@@ -4,31 +4,25 @@ GDALFillNodata: inverse-distance-weighted values from valid pixels
 within ``max_search_distance``, then ``smoothing_iterations`` 3x3 mean
 passes over the filled cells).
 
-Engine form: the neighbor gather is a bounded stencil join — invalid
-cells explode a (2d+1)^2 offset stencil (minus origin) and equi-join
-valid cells; IDW weights 1/euclidean(offset). Smoothing is the same
-3x3 stencil join applied to filled cells. Aggregates round to 6
-decimals (summation-order noise).
+Engine form: both passes are warp's one stencil gather
+(``warp._gather``). Invalid cells explode the (2d+1)^2 offset stencil
+(minus origin) and equi-join valid cells with IDW weights
+1/euclidean(offset); each smoothing pass is the 3x3 stencil with unit
+weights over the valid cells. Values round to 6 decimals
+(summation-order noise).
 """
 
 from __future__ import annotations
 
-import math
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rasterio_spark.operators.warp import _gather
 
-def _stencil(spark, d: int, include_origin: bool = False):
-    rows = []
-    for dr in range(-d, d + 1):
-        for dc in range(-d, d + 1):
-            if not include_origin and dr == 0 and dc == 0:
-                continue
-            rows.append({"dr": dr, "dc": dc, "w": 1.0 / math.hypot(dr, dc) if (dr or dc) else 1.0})
-    schema = pa.schema([("dr", pa.int32()), ("dc", pa.int32()), ("w", pa.float64())])
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema), "dr int, dc int, w double")
+
+def _anchored(cells: DataFrame) -> DataFrame:
+    """(band, row, col) gather targets anchored at their own cell."""
+    return cells.select("band", "row", "col", F.col("row").alias("_r0"), F.col("col").alias("_c0"))
 
 
 def fillnodata(
@@ -39,64 +33,34 @@ def fillnodata(
     """Fill invalid cells from valid neighbors within the search
     distance (Chebyshev stencil, IDW weights); cells with no valid
     neighbor stay invalid. Returns the full cell set."""
-    spark = cells.sparkSession
-    sten = _stencil(spark, max_search_distance)
-    invalid = cells.where(~F.col("valid")).select("band", "row", "col")
-    valid = cells.where(F.col("valid")).select(
-        "band", F.col("row").alias("vrow"), F.col("col").alias("vcol"), F.col("value").alias("vval")
-    )
-    probes = invalid.crossJoin(F.broadcast(sten)).select(
+    d = max_search_distance
+    offsets = [(dr, dc) for dr in range(-d, d + 1) for dc in range(-d, d + 1) if dr or dc]
+    # 1 / euclidean(offset): the square root of the exact integer
+    # dr^2 + dc^2 is the same double as math.hypot(dr, dc)
+    o = F.col("_o")
+    idw = 1.0 / F.sqrt(o.dr * o.dr + o.dc * o.dc)
+    valid = cells.where(F.col("valid"))
+    filled = _gather(_anchored(cells.where(~F.col("valid"))), valid, offsets, idw)
+    filled = filled.select("band", "row", "col", F.col("value").alias("_fv"))
+    out = cells.join(filled, ["band", "row", "col"], "left").select(
         "band",
         "row",
         "col",
-        (F.col("row") + F.col("dr")).alias("vrow"),
-        (F.col("col") + F.col("dc")).alias("vcol"),
-        "w",
+        F.when(F.col("valid"), F.col("value")).otherwise(F.col("_fv")).alias("value"),
+        (F.col("valid") | F.col("_fv").isNotNull()).alias("valid"),
     )
-    gathered = probes.join(valid, ["band", "vrow", "vcol"])
-    filled = gathered.groupBy("band", "row", "col").agg(
-        F.round(F.sum(F.col("w") * F.col("vval")) / F.sum("w"), 6).alias("value")
-    )
-    out = (
-        cells.join(filled.withColumnRenamed("value", "_fv"), ["band", "row", "col"], "left")
-        .select(
-            "band",
-            "row",
-            "col",
-            F.when(F.col("valid"), F.col("value")).otherwise(F.col("_fv")).alias("value"),
-            (F.col("valid") | F.col("_fv").isNotNull()).alias("valid"),
-        )
-    )
+    smooth = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
     for _ in range(smoothing_iterations):
-        out = _smooth3x3(out)
-    return out
-
-
-def _smooth3x3(cells: DataFrame) -> DataFrame:
-    """One 3x3 mean pass over valid cells (GDALFillNodata smoothing)."""
-    spark = cells.sparkSession
-    sten = _stencil(spark, 1, include_origin=True)
-    valid = cells.where(F.col("valid")).select(
-        "band", F.col("row").alias("vrow"), F.col("col").alias("vcol"), F.col("value").alias("vval")
-    )
-    probes = cells.where(F.col("valid")).select("band", "row", "col").crossJoin(
-        F.broadcast(sten)
-    ).select(
-        "band", "row", "col", (F.col("row") + F.col("dr")).alias("vrow"), (F.col("col") + F.col("dc")).alias("vcol")
-    )
-    sm = probes.join(valid, ["band", "vrow", "vcol"]).groupBy("band", "row", "col").agg(
-        F.round(F.avg("vval"), 6).alias("_sv")
-    )
-    return (
-        cells.join(sm, ["band", "row", "col"], "left")
-        .select(
-            "band",
-            "row",
-            "col",
-            F.when(F.col("valid"), F.coalesce("_sv", "value")).otherwise(F.col("value")).alias("value"),
-            "valid",
+        # one 3x3 mean pass over the valid cells (GDALFillNodata
+        # smoothing); each valid cell contributes to its own mean, so
+        # exactly the valid cells get a smoothed value
+        valid = out.where(F.col("valid"))
+        sm = _gather(_anchored(valid), valid, smooth, F.lit(1.0))
+        sm = sm.select("band", "row", "col", F.col("value").alias("_sv"))
+        out = out.join(sm, ["band", "row", "col"], "left").select(
+            "band", "row", "col", F.coalesce("_sv", "value").alias("value"), "valid"
         )
-    )
+    return out
 
 
 def fillnodata_sql(max_search_distance: int = 4, cells_cte: str = "cells") -> str:

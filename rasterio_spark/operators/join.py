@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,7 +57,7 @@ def _ragged(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.repeat(starts - (np.cumsum(counts) - counts), counts) + np.arange(int(counts.sum()))
 
 
-def _polygon_cover(entries, res: int, rings_by_id) -> pd.DataFrame:
+def _polygon_cover(entries, res: int, rings_by_id) -> pa.Table:
     """The join's build side (COVER_SCHEMA): one row per (cell, polygon)
     for the cells of the polygon's bbox that the polygon touches.
 
@@ -89,8 +88,15 @@ def _polygon_cover(entries, res: int, rings_by_id) -> pd.DataFrame:
     cell_w = C.LON_SPAN / nx
     cell_h = C.LAT_SPAN / ny
     mx, my = cell_w * _CELL_MARGIN, cell_h * _CELL_MARGIN
-    out = {k: [] for k in ("cell_id", "polygon_id", "poly_value", "interior")}
-    n_edges, edges = [], []
+    # one empty part per column, so a layer with no polygon left
+    # concatenates to a zero-row cover
+    out = {
+        "cell_id": [np.empty(0, np.int64)],
+        "polygon_id": [np.empty(0, np.int64)],
+        "poly_value": [np.empty(0)],
+        "interior": [np.empty(0, bool)],
+    }
+    n_edges, edges = [np.empty(0, np.int64)], [np.empty((0, 4))]
     for pid, value, (left, bottom, right, top) in entries:
         rings = rings_by_id[pid]
         r_lo, c_lo = C.rowcol_of(left, top, res)
@@ -138,15 +144,15 @@ def _polygon_cover(entries, res: int, rings_by_id) -> pd.DataFrame:
         out["polygon_id"].append(np.full(ids.shape, pid, dtype=np.int64))
         out["poly_value"].append(np.full(ids.shape, value, dtype="float64"))
         out["interior"].append(interior)
-    pdf = pd.DataFrame({k: np.concatenate(v) for k, v in out.items()})
+    cols = {k: pa.array(np.concatenate(v)) for k, v in out.items()}
     e = np.concatenate(edges)
     offsets = np.concatenate([[0], np.cumsum(np.concatenate(n_edges))]).astype(np.int32)
-    pdf["_edges"] = pa.ListArray.from_arrays(
+    cols["_edges"] = pa.ListArray.from_arrays(
         pa.array(offsets),
         pa.StructArray.from_arrays([pa.array(c) for c in np.ascontiguousarray(e.T)], ["x0", "y0", "x1", "y1"]),
-        mask=pa.array(pdf["interior"].values),
-    ).to_pandas()
-    return pdf
+        mask=cols["interior"],
+    )
+    return pa.table(cols)
 
 
 def _refine(lon: Column, lat: Column) -> Column:
@@ -360,9 +366,12 @@ def knn_join(
     from rasterio_spark.functions.cell_exprs import rowcol_cols
 
     if not isinstance(queries, DataFrame):
+        # an Arrow-backed local relation, like sample_points' point set:
+        # even an empty list never becomes a Python-fed RDD scan
         queries = pages.sparkSession.createDataFrame(
-            pd.DataFrame(list(queries), columns=["query_id", "qlon", "qlat"]).astype(
-                {"query_id": "int64", "qlon": "float64", "qlat": "float64"}
+            pa.Table.from_pylist(
+                [{"query_id": i, "qlon": x, "qlat": y} for i, x, y in queries],
+                schema=pa.schema([("query_id", pa.int64()), ("qlon", pa.float64()), ("qlat", pa.float64())]),
             ),
             "query_id long, qlon double, qlat double",
         )

@@ -11,13 +11,15 @@ _warp.pyx:230-858).
 - ``reproject``: inverse-mapping re-grid — for every dst cell, compute
   the fractional src coordinate and gather:
   nearest -> equi-join on the floored src cell;
-  bilinear -> 4-neighbor gather join with edge-clamped weights;
-  average (area) -> groupBy of src cells landing in each dst cell.
-  The shuffle is a single repartition by dst cell.
+  bilinear/cubic/cubic_spline/lanczos -> the stencil gather
+  (``_gather``) with separable kernel weights;
+  area methods -> src cells forward-mapped into dst cells, reduced by
+  the aggregate table (``_AGGS``, ``_mode``).
 - ``downsample``: rasterio build_overviews/decimated-read aggregations
   (_io.pyx:2019, enums.py:75-126): average, mode, max, min, med, q1,
-  q3, sum, rms, count over each f x f block of child cells — all
-  expressible as one groupBy (pre-aggregated map-side).
+  q3, sum, rms, count over each f x f block of child cells — one
+  groupBy through the same aggregate table; gauss is the stencil
+  gather around each block's center cell.
 
 Affine-to-affine re-gridding in one CRS is exact integer/float column
 math (oracle-checkable); the 4326<->3857 hop goes through ln/tan and is
@@ -137,21 +139,102 @@ def _src_fractional_cols(dst_transform: Affine, src_transform: Affine, src_crs, 
     return col_f, row_f
 
 
-# area-method warp aggregates (reference enums.py Resampling values
-# valid for reprojection beyond the interpolating kernels); rounding
-# and quantile semantics match downsample's so overviews and warps of
-# the same layer agree. mode is handled separately (tie rule).
-_AREA_METHODS = {
-    "average": lambda: F.round(F.avg("value"), 6),
-    "mode": None,
-    "max": lambda: F.max("value"),
-    "min": lambda: F.min("value"),
-    "sum": lambda: F.sum("value"),
-    "rms": lambda: F.round(F.sqrt(F.avg(F.col("value") * F.col("value"))), 6),
-    "med": lambda: F.round(F.expr("percentile(value, 0.5)"), 6),
-    "q1": lambda: F.round(F.expr("percentile(value, 0.25)"), 6),
-    "q3": lambda: F.round(F.expr("percentile(value, 0.75)"), 6),
+# The one aggregate table: method -> (Spark aggregate over ``value``,
+# its DuckDB twin, downsample_stats alias). downsample, downsample_stats
+# and reproject's area path read from it (reference enums.py:75-126);
+# ``count`` is downsample-only, and ``mode`` ranks counts in ``_mode``.
+# Float aggregates round to 6 decimals: their sums depend on the order
+# in which the shuffle delivers the values.
+_AGGS = {
+    "average": (lambda: F.round(F.avg("value"), 6), "round(avg(value), 6)", "avg_v"),
+    "min": (lambda: F.min("value"), "min(value)", "min_v"),
+    "max": (lambda: F.max("value"), "max(value)", "max_v"),
+    "sum": (lambda: F.round(F.sum("value"), 6), "round(sum(value), 6)", "sum_v"),
+    "count": (lambda: F.count("value").cast("double"), "CAST(count(value) AS DOUBLE)", "cnt_v"),
+    "rms": (
+        lambda: F.round(F.sqrt(F.avg(F.col("value") * F.col("value"))), 6),
+        "round(sqrt(avg(value * value)), 6)",
+        "rms_v",
+    ),
+    "med": (lambda: F.round(F.expr("percentile(value, 0.5)"), 6), "round(quantile_cont(value, 0.5), 6)", "med_v"),
+    "q1": (lambda: F.round(F.expr("percentile(value, 0.25)"), 6), "round(quantile_cont(value, 0.25), 6)", "q1_v"),
+    "q3": (lambda: F.round(F.expr("percentile(value, 0.75)"), 6), "round(quantile_cont(value, 0.75), 6)", "q3_v"),
 }
+
+
+def _mode(landed: DataFrame) -> DataFrame:
+    """Most frequent ``value`` per (band, row, col); ties go to the
+    smallest value, so the result is deterministic."""
+    counts = landed.groupBy("band", "row", "col", "value").agg(F.count(F.lit(1)).alias("_n"))
+    w = W.partitionBy("band", "row", "col").orderBy(F.col("_n").desc(), F.col("value").asc())
+    return (
+        counts.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") == 1)
+        .select("band", "row", "col", "value")
+    )
+
+
+def _aggregate(landed: DataFrame, method: str) -> DataFrame:
+    """(band, row, col, value): the values landed in each cell, reduced
+    by ``method`` (``mode`` or a key of ``_AGGS``)."""
+    if method == "mode":
+        return _mode(landed)
+    return landed.groupBy("band", "row", "col").agg(_AGGS[method][0]().alias("value"))
+
+
+def _blocks(cells: DataFrame, factor: int) -> DataFrame:
+    """The valid cells, keyed by the factor x factor block they lie in."""
+    return cells.where(F.col("valid")).select(
+        "band",
+        F.expr(f"row DIV {factor}").cast("int").alias("row"),
+        F.expr(f"col DIV {factor}").cast("int").alias("col"),
+        "value",
+    )
+
+
+def _gather(targets: DataFrame, src: DataFrame, offsets, weight) -> DataFrame:
+    """The one stencil gather behind every weighted resampler (the
+    interpolating kernels, gauss overviews, fillnodata's IDW and its
+    smoothing).
+
+    Each target cell (band, row, col and an anchor ``_r0``, ``_c0``)
+    explodes the literal ``offsets`` [(dr, dc), ...] into ``_o`` and
+    left-joins ``src`` (band, row, col, value, valid) on (band,
+    _r0 + dr, _c0 + dc). ``weight`` is a Column over ``_o.dr``,
+    ``_o.dc`` and the target's columns. Returns (band, row, col, value,
+    valid) per target: value is round(sum(w * v) / sum(w), 6) over the
+    valid contributors, NULL unless at least one contributor is valid
+    and |sum(w)| > 1e-12 (the GDAL warper's nodata renormalization).
+    One explode, one equi-join, one aggregation, no Python.
+    """
+    stencil = [F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr, dc in offsets]
+    g = (
+        targets.withColumn("_o", F.explode(F.array(*stencil)))
+        .withColumn("_sr", F.col("_r0") + F.col("_o.dr"))
+        .withColumn("_sc", F.col("_c0") + F.col("_o.dc"))
+        .withColumn("_w", weight)
+    )
+    s = src.where(F.col("valid") & F.col("value").isNotNull()).select(
+        "band", F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value"
+    )
+    # an unmatched offset joins a NULL value, which every sum skips
+    agg = (
+        g.join(s, ["band", "_sr", "_sc"], "left")
+        .groupBy("band", "row", "col")
+        .agg(
+            F.sum(F.col("_w") * F.col("value")).alias("_num"),
+            F.sum(F.when(F.col("value").isNotNull(), F.col("_w"))).alias("_tw"),
+            F.count("value").alias("_nv"),
+        )
+    )
+    good = (F.col("_nv") > 0) & (F.abs(F.col("_tw")) > 1e-12)
+    return agg.select(
+        "band",
+        "row",
+        "col",
+        F.when(good, F.round(F.col("_num") / F.col("_tw"), 6)).alias("value"),
+        good.alias("valid"),
+    )
 
 
 def reproject(
@@ -206,8 +289,12 @@ def reproject(
             F.coalesce("valid", F.lit(False)).alias("valid"),
         )
 
-    if resampling == "bilinear":
-        # fractional position of the dst cell center among src centers
+    if resampling in _KERNEL_SUPPORT:
+        # separable kernel over the (2s)x(2s) src cells around the dst
+        # center's fractional position among src centers; with a fully
+        # valid stencil the weights sum to 1 and this is the textbook
+        # convolution (bilinear: the 2x2 cells, weights 1 - f and f)
+        s = _KERNEL_SUPPORT[resampling]
         dom = (
             dom.withColumn("_gx", F.col("_cf") - 0.5)
             .withColumn("_gy", F.col("_rf") - 0.5)
@@ -216,59 +303,18 @@ def reproject(
             .withColumn("_wx", F.col("_gx") - F.col("_c0"))
             .withColumn("_wy", F.col("_gy") - F.col("_r0"))
         )
-        # 4-neighbor gather: explode the 2x2 stencil
-        off = F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("dr"), F.lit(0).alias("dc")),
-                F.struct(F.lit(0).alias("dr"), F.lit(1).alias("dc")),
-                F.struct(F.lit(1).alias("dr"), F.lit(0).alias("dc")),
-                F.struct(F.lit(1).alias("dr"), F.lit(1).alias("dc")),
-            )
+        offsets = [(dr, dc) for dr in range(1 - s, s + 1) for dc in range(1 - s, s + 1)]
+        weight = _kernel_weight(resampling, F.col("_o.dr"), F.col("_wy")) * _kernel_weight(
+            resampling, F.col("_o.dc"), F.col("_wx")
         )
-        g = dom.withColumn("_o", off)
-        g = g.withColumn("_sr", F.col("_r0") + F.col("_o.dr")).withColumn(
-            "_sc", F.col("_c0") + F.col("_o.dc")
-        ).crossJoin(F.broadcast(bands))
-        wgt = (
-            F.when(F.col("_o.dr") == 0, 1.0 - F.col("_wy")).otherwise(F.col("_wy"))
-        ) * (F.when(F.col("_o.dc") == 0, 1.0 - F.col("_wx")).otherwise(F.col("_wx")))
-        g = g.withColumn("_w", wgt)
-        src = src_cells.select(
-            "band",
-            F.col("row").alias("_sr"),
-            F.col("col").alias("_sc"),
-            "value",
-            "valid",
-        )
-        # band is a join key: the 2x2 gather and the weight
-        # normalization below stay within one band (no cross-band mix)
-        j = g.join(src, ["band", "_sr", "_sc"], "left")
-        j = j.withColumn(
-            "_wv",
-            F.when(F.col("valid") & F.col("value").isNotNull(), F.col("_w")).otherwise(0.0),
-        )
-        agg = j.groupBy("band", "row", "col").agg(
-            F.round(
-                F.sum(F.when(F.col("_wv") > 0, F.col("_w") * F.col("value")).otherwise(0.0))
-                / F.sum("_wv"),
-                6,
-            ).alias("_v"),
-            F.sum("_wv").alias("_tw"),
-        )
-        return agg.select(
-            "band",
-            "row",
-            "col",
-            F.coalesce(F.when(F.col("_tw") > 0, F.col("_v")), F.lit(dst_nodata)).alias("value"),
-            (F.col("_tw") > 0).alias("valid"),
+        # band is a join key: the gather and its weight normalization
+        # stay within one band (no cross-band mix)
+        out = _gather(dom.crossJoin(F.broadcast(bands)), src_cells, offsets, weight)
+        return out.select(
+            "band", "row", "col", F.coalesce("value", F.lit(dst_nodata)).alias("value"), "valid"
         )
 
-    if resampling in ("cubic", "cubic_spline", "lanczos"):
-        return _kernel_reproject(
-            dom, src_cells, bands, resampling, dst_nodata
-        )
-
-    if resampling in _AREA_METHODS:
+    if resampling == "mode" or (resampling in _AGGS and resampling != "count"):
         # area method (reference enums.py Resampling average/mode/min/
         # max/med/q1/q3/sum/rms for warping): each valid src cell lands
         # in one dst cell; the dst cell aggregates its contributors.
@@ -298,24 +344,7 @@ def reproject(
             & (F.col("col") >= 0)
             & (F.col("col") < dst_width)
         )
-        if resampling == "mode":
-            # deterministic mode, same tie rule as downsample: highest
-            # count, ties -> smallest value
-            counts = landed.groupBy("band", "row", "col", "value").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            w = W.partitionBy("band", "row", "col").orderBy(
-                F.col("_n").desc(), F.col("value").asc()
-            )
-            agg = (
-                counts.withColumn("_rk", F.row_number().over(w))
-                .where(F.col("_rk") == 1)
-                .select("band", "row", "col", "value")
-            )
-        else:
-            agg = landed.groupBy("band", "row", "col").agg(
-                _AREA_METHODS[resampling]().alias("value")
-            )
+        agg = _aggregate(landed, resampling)
         # dense output per input band (band=1 only was a bug: bands >= 2
         # were silently dropped from the dense domain)
         dom2 = _dst_domain(spark, dst_width, dst_height).crossJoin(F.broadcast(bands))
@@ -336,15 +365,21 @@ def reproject(
     raise ValueError(f"unsupported resampling {resampling!r}")
 
 
-def _kernel_weight(method: str, t):
-    """Separable resampling kernel weight at |distance| t (a Column).
+def _kernel_weight(method: str, o, f):
+    """Separable resampling kernel weight of the src cell at integer
+    offset ``o`` (a Column) from the anchor, for a dst center at
+    fraction ``f`` past the anchor: the kernel at |o - f|.
 
     Formulas are the public GDAL/standard kernels (reference
     enums.py:75-126 names; kernels per Keys 1981 / B-spline / Lanczos):
+      bilinear     — tent, support 1: exactly 1 - f and f
       cubic        — Keys convolution, a = -0.5, support 2
       cubic_spline — cubic B-spline (smoothing), support 2
       lanczos      — sinc windowed sinc, a = 3, support 3
     """
+    if method == "bilinear":
+        return F.when(o == 0, 1.0 - f).otherwise(f)
+    t = F.abs(o.cast("double") - f)
     t2, t3 = t * t, t * t * t
     if method == "cubic":
         a = -0.5
@@ -365,184 +400,37 @@ def _kernel_weight(method: str, t):
     raise ValueError(f"no kernel for {method!r}")
 
 
-_KERNEL_SUPPORT = {"cubic": 2, "cubic_spline": 2, "lanczos": 3}
+_KERNEL_SUPPORT = {"bilinear": 1, "cubic": 2, "cubic_spline": 2, "lanczos": 3}
 
 
-def _kernel_reproject(dom, src_cells, bands, method: str, dst_nodata: float):
-    """Separable-kernel inverse-map warp: explode the (2s)x(2s) source
-    stencil per dst cell, weight with the 1-D kernel in each axis, and
-    normalize by the sum of valid weights (the GDAL warper's nodata
-    renormalization; with a fully-valid stencil the kernel sums to 1
-    and this is the textbook convolution). All arithmetic is JVM
-    expressions — one explode, one equi-join on (band, row, col), one
-    aggregation; no Python in the path.
-    """
-    s = _KERNEL_SUPPORT[method]
-    dom = (
-        dom.withColumn("_gx", F.col("_cf") - 0.5)
-        .withColumn("_gy", F.col("_rf") - 0.5)
-        .withColumn("_c0", F.floor("_gx").cast("int"))
-        .withColumn("_r0", F.floor("_gy").cast("int"))
-        .withColumn("_wx", F.col("_gx") - F.col("_c0"))
-        .withColumn("_wy", F.col("_gy") - F.col("_r0"))
-    )
-    offs = [
-        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-        for dr in range(1 - s, s + 1)
-        for dc in range(1 - s, s + 1)
-    ]
-    g = dom.withColumn("_o", F.explode(F.array(*offs)))
-    g = (
-        g.withColumn("_sr", F.col("_r0") + F.col("_o.dr"))
-        .withColumn("_sc", F.col("_c0") + F.col("_o.dc"))
-        .crossJoin(F.broadcast(bands))
-    )
-    wy = _kernel_weight(method, F.abs(F.col("_o.dr").cast("double") - F.col("_wy")))
-    wx = _kernel_weight(method, F.abs(F.col("_o.dc").cast("double") - F.col("_wx")))
-    g = g.withColumn("_w", wy * wx)
-    src = src_cells.select(
-        "band", F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value", "valid"
-    )
-    j = g.join(src, ["band", "_sr", "_sc"], "left")
-    ok = F.col("valid") & F.col("value").isNotNull()
-    j = (
-        j.withColumn("_wv", F.when(ok, F.col("_w")).otherwise(0.0))
-        .withColumn("_n", F.when(ok, 1).otherwise(0))
-    )
-    agg = j.groupBy("band", "row", "col").agg(
-        F.sum(F.when(F.col("_n") == 1, F.col("_w") * F.col("value")).otherwise(0.0)).alias("_num"),
-        F.sum("_wv").alias("_tw"),
-        F.sum("_n").alias("_nv"),
-    )
-    good = (F.col("_nv") > 0) & (F.abs(F.col("_tw")) > 1e-12)
-    return agg.select(
-        "band",
-        "row",
-        "col",
-        F.coalesce(
-            F.when(good, F.round(F.col("_num") / F.col("_tw"), 6)), F.lit(dst_nodata)
-        ).alias("value"),
-        good.alias("valid"),
-    )
-
-
-RESAMPLING_AGGS = (
-    "average",
-    "mode",
-    "max",
-    "min",
-    "med",
-    "q1",
-    "q3",
-    "sum",
-    "rms",
-    "count",
-)
-
-
-def downsample(
-    cells: DataFrame, factor: int, method: str = "average", exact: bool = True
-) -> DataFrame:
+def downsample(cells: DataFrame, factor: int, method: str = "average") -> DataFrame:
     """Overview level: aggregate each factor x factor block of valid
     child cells into a parent cell (build_overviews semantics; full
     resampling set from reference enums.py:75-126 — gauss via the
-    3x3 overview kernel).
-
-    ``exact=False`` switches the quantile methods (med/q1/q3) to
-    ``approx_percentile`` (t-digest style sketch, accuracy 1e-4): the
-    exact ``percentile`` buffers every value per group, which a 100-TB
-    overview build with huge factor^2 blocks cannot afford; the sketch
-    is constant-memory per group. Oracle queries use exact=True."""
+    3x3 overview kernel)."""
     if method == "gauss":
-        return _gauss_downsample(cells, factor)
-    if method not in RESAMPLING_AGGS:
+        # Gaussian overview (GDAL overview kernel): each block gathers
+        # the 3x3 src neighborhood of its center cell (factor*r +
+        # factor//2, factor*c + factor//2) with separable [1, 2, 1]
+        # weights, normalized over valid cells. Neighborhoods of
+        # adjacent blocks overlap by one src row/col, like GDAL's. The
+        # dst cells are the blocks holding a valid cell, the domain of
+        # every other method.
+        half = factor // 2
+        dst = (
+            _blocks(cells, factor)
+            .select("band", "row", "col")
+            .distinct()
+            .withColumn("_r0", F.col("row") * factor + half)
+            .withColumn("_c0", F.col("col") * factor + half)
+        )
+        offsets = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
+        weight = (2.0 - F.abs(F.col("_o.dr"))) * (2.0 - F.abs(F.col("_o.dc")))
+        out = _gather(dst, cells.where(F.col("valid")), offsets, weight)
+        return out.where(F.col("valid")).select("band", "row", "col", "value")
+    if method != "mode" and method not in _AGGS:
         raise ValueError(f"unsupported downsample method {method!r}")
-    src = cells.where(F.col("valid"))
-    g = src.groupBy(
-        "band",
-        F.expr(f"row DIV {factor}").cast("int").alias("row"),
-        F.expr(f"col DIV {factor}").cast("int").alias("col"),
-    )
-    if method == "average":
-        agg = F.round(F.avg("value"), 6)
-    elif method == "max":
-        agg = F.max("value")
-    elif method == "min":
-        agg = F.min("value")
-    elif method == "sum":
-        agg = F.sum("value")
-    elif method == "count":
-        agg = F.count("value").cast("double")
-    elif method == "rms":
-        agg = F.round(F.sqrt(F.avg(F.col("value") * F.col("value"))), 6)
-    elif method in ("med", "q1", "q3"):
-        q = {"med": 0.5, "q1": 0.25, "q3": 0.75}[method]
-        fn = "percentile" if exact else "approx_percentile"
-        agg = F.round(F.expr(f"{fn}(value, {q})"), 6)
-    elif method == "mode":
-        # deterministic mode: highest count, ties -> smallest value
-        counts = src.groupBy(
-            "band",
-            F.expr(f"row DIV {factor}").cast("int").alias("row"),
-            F.expr(f"col DIV {factor}").cast("int").alias("col"),
-            "value",
-        ).agg(F.count(F.lit(1)).alias("_n"))
-        w = W.partitionBy("band", "row", "col").orderBy(
-            F.col("_n").desc(), F.col("value").asc()
-        )
-        return (
-            counts.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
-            .select("band", "row", "col", "value")
-        )
-    return g.agg(agg.alias("value"))
-
-
-def _gauss_downsample(cells: DataFrame, factor: int) -> DataFrame:
-    """Gaussian overview (reference enums.py Resampling.gauss; GDAL
-    overview kernel): each dst cell gathers the 3x3 source neighborhood
-    around the block center cell (factor*r + factor//2,
-    factor*c + factor//2) with separable [1, 2, 1] weights, normalized
-    over valid cells. Neighborhoods of adjacent blocks overlap by one
-    source row/col, like GDAL's gaussian overviews. Pure JVM: dst cells
-    come from integer-dividing the SOURCE extent (no driver action),
-    one 9-way explode + equi-join + aggregation."""
-    src = cells.where(F.col("valid"))
-    # dst domain derived from the source cells themselves (block ids
-    # that contain at least one src cell — matches the groupBy domain
-    # of the other downsample methods)
-    dst = (
-        src.select(
-            "band",
-            F.expr(f"row DIV {factor}").cast("int").alias("row"),
-            F.expr(f"col DIV {factor}").cast("int").alias("col"),
-        )
-        .distinct()
-    )
-    half = factor // 2
-    offs = [
-        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-        for dr in (-1, 0, 1)
-        for dc in (-1, 0, 1)
-    ]
-    g = dst.withColumn("_o", F.explode(F.array(*offs)))
-    g = (
-        g.withColumn("_sr", F.col("row") * factor + half + F.col("_o.dr"))
-        .withColumn("_sc", F.col("col") * factor + half + F.col("_o.dc"))
-        .withColumn(
-            "_w",
-            (2.0 - F.abs(F.col("_o.dr"))) * (2.0 - F.abs(F.col("_o.dc"))),
-        )
-    )
-    s = src.select("band", F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value")
-    j = g.join(s, ["band", "_sr", "_sc"], "left")
-    agg = j.groupBy("band", "row", "col").agg(
-        F.sum(F.when(F.col("value").isNotNull(), F.col("_w") * F.col("value")).otherwise(0.0)).alias("_num"),
-        F.sum(F.when(F.col("value").isNotNull(), F.col("_w")).otherwise(0.0)).alias("_tw"),
-    )
-    return agg.where(F.col("_tw") > 0).select(
-        "band", "row", "col", F.round(F.col("_num") / F.col("_tw"), 6).alias("value")
-    )
+    return _aggregate(_blocks(cells, factor), method)
 
 
 def downsample_sql(factor: int, method: str, cells_cte: str = "cells") -> str:
@@ -565,26 +453,10 @@ def downsample_sql(factor: int, method: str, cells_cte: str = "cells") -> str:
               FROM ({base}) GROUP BY band, row, col, value
             ) WHERE rk = 1
         """
-    agg = {
-        "average": "round(avg(value), 6)",
-        "max": "max(value)",
-        "min": "min(value)",
-        "sum": "sum(value)",
-        "count": "CAST(count(value) AS DOUBLE)",
-        "rms": "round(sqrt(avg(value * value)), 6)",
-        "med": "round(quantile_cont(value, 0.5), 6)",
-        "q1": "round(quantile_cont(value, 0.25), 6)",
-        "q3": "round(quantile_cont(value, 0.75), 6)",
-    }[method]
-    return f"SELECT band, row, col, {agg} AS value FROM ({base}) GROUP BY band, row, col"
+    return f"SELECT band, row, col, {_AGGS[method][1]} AS value FROM ({base}) GROUP BY band, row, col"
 
 
-DOWNSAMPLE_STATS_METHODS = ("average", "min", "max", "sum", "count", "rms", "med", "q1", "q3")
-
-
-def downsample_stats(
-    cells: DataFrame, factor: int, methods: tuple[str, ...] = DOWNSAMPLE_STATS_METHODS
-) -> DataFrame:
+def downsample_stats(cells: DataFrame, factor: int, methods: tuple[str, ...] = tuple(_AGGS)) -> DataFrame:
     """All groupable overview aggregates in ONE shuffle: (band, row, col,
     avg_v, min_v, max_v, sum_v, cnt_v, rms_v, med_v, q1_v, q3_v).
 
@@ -594,54 +466,19 @@ def downsample_stats(
     pass, not nine. ``mode`` needs a different plan shape (count-rank
     window) and stays in ``downsample``.
     """
-    aggs = []
     for m in methods:
-        if m == "average":
-            aggs.append(F.round(F.avg("value"), 6).alias("avg_v"))
-        elif m == "min":
-            aggs.append(F.min("value").alias("min_v"))
-        elif m == "max":
-            aggs.append(F.max("value").alias("max_v"))
-        elif m == "sum":
-            # round like avg/rms: float sums are order-dependent across
-            # engines once values are non-integer
-            aggs.append(F.round(F.sum("value"), 6).alias("sum_v"))
-        elif m == "count":
-            aggs.append(F.count("value").cast("double").alias("cnt_v"))
-        elif m == "rms":
-            aggs.append(F.round(F.sqrt(F.avg(F.col("value") * F.col("value"))), 6).alias("rms_v"))
-        elif m in ("med", "q1", "q3"):
-            q = {"med": 0.5, "q1": 0.25, "q3": 0.75}[m]
-            aggs.append(F.round(F.expr(f"percentile(value, {q})"), 6).alias(f"{m}_v"))
-        else:
+        if m not in _AGGS:
             raise ValueError(f"unsupported downsample_stats method {m!r}")
     return (
-        cells.where(F.col("valid"))
-        .groupBy(
-            "band",
-            F.expr(f"row DIV {factor}").cast("int").alias("row"),
-            F.expr(f"col DIV {factor}").cast("int").alias("col"),
-        )
-        .agg(*aggs)
+        _blocks(cells, factor)
+        .groupBy("band", "row", "col")
+        .agg(*(_AGGS[m][0]().alias(_AGGS[m][2]) for m in methods))
     )
 
 
-def downsample_stats_sql(
-    factor: int, methods: tuple[str, ...] = DOWNSAMPLE_STATS_METHODS, cells_cte: str = "cells"
-) -> str:
+def downsample_stats_sql(factor: int, methods: tuple[str, ...] = tuple(_AGGS), cells_cte: str = "cells") -> str:
     """DuckDB twin of downsample_stats (same aliases, same rounding)."""
-    col_sql = {
-        "average": "round(avg(value), 6) AS avg_v",
-        "min": "min(value) AS min_v",
-        "max": "max(value) AS max_v",
-        "sum": "round(sum(value), 6) AS sum_v",
-        "count": "CAST(count(value) AS DOUBLE) AS cnt_v",
-        "rms": "round(sqrt(avg(value * value)), 6) AS rms_v",
-        "med": "round(quantile_cont(value, 0.5), 6) AS med_v",
-        "q1": "round(quantile_cont(value, 0.25), 6) AS q1_v",
-        "q3": "round(quantile_cont(value, 0.75), 6) AS q3_v",
-    }
-    cols = ", ".join(col_sql[m] for m in methods)
+    cols = ", ".join(f"{_AGGS[m][1]} AS {_AGGS[m][2]}" for m in methods)
     return f"""
         SELECT band,
                CAST(row // {factor} AS INTEGER) AS row,

@@ -1,6 +1,8 @@
 """Spatial join operators: pip_join strategy equivalence + rect oracle,
 sample_points, asof_latest."""
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +94,19 @@ def _grid100(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "polys",
+    [[], [{"polygon_id": 1, "value": 1.0, "geom": {"type": "Polygon", "coordinates": [[]]}}]],
+    ids=["no_polygons", "empty_ring"],
+)
+def test_pip_join_layer_without_valid_polygon_is_empty(spark, pages, polys):
+    """A layer left with no valid polygon covers no cell: the join
+    returns zero rows instead of failing to build its cover."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the empty ring is skipped with a warning
+        assert pip_join(pages, polys).count() == 0
+
+
 def test_sample_points(spark):
     cells = _grid100(spark)
     t = Affine.identity()
@@ -104,19 +119,21 @@ def test_sample_points(spark):
 
 
 def test_sample_points_and_fillnodata_plans_hold_no_rdd_scan(spark):
-    """The point set and the fill stencil are local relations built from
-    pyarrow: no LogicalRDD, whose actions would start Python workers."""
+    """The point set is a local relation built from pyarrow and the fill
+    stencil an explode of literal offsets: no LogicalRDD, whose actions
+    would start Python workers."""
     from rasterio_spark.operators.fill import fillnodata
 
     cells = _grid100(spark)
     pts = [(0, 2.5, 3.5), (1, 0.0, 0.0), (2, 99.0, 99.0)]
+    plan = sample_points(cells, pts, Affine.identity(), nodata=-1.0)._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
     for df in (
-        sample_points(cells, pts, Affine.identity(), nodata=-1.0),
         fillnodata(cells, max_search_distance=2),
         fillnodata(cells, max_search_distance=1, smoothing_iterations=1),
     ):
         plan = df._jdf.queryExecution().analyzed().toString()
-        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+        assert "LocalRelation" not in plan and "LogicalRDD" not in plan, plan
     got = {r["pt_id"]: r["value"] for r in sample_points(cells, pts, Affine.identity(), nodata=-1.0).collect()}
     assert got == {0: 32.0, 1: 0.0, 2: -1.0}
 

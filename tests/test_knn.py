@@ -129,3 +129,13 @@ def test_knn_leaves_no_persisted_storage(spark, synth, input_kind):
     knn_join(pages, _queries(spark, input_kind), k=4).count()
     release_persisted()
     assert rdds().size() == before
+
+
+def test_knn_empty_query_list_scans_no_rdd(spark, synth):
+    """An empty query list is an Arrow-backed local relation like any
+    other list: no rows, and no RDD scan (which Python would feed) in
+    the executed plan."""
+    pages, _ = synth
+    df = knn_join(pages, [], k=2)
+    assert df.count() == 0
+    assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()

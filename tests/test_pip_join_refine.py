@@ -191,7 +191,7 @@ def test_cover_invariants(layer, cover_res):
     non-horizontal edges whose y-range meets its (widened) band."""
     polys = layer[0]
     entries, rings_by_id = prepare_layer(polys)
-    cover = J._polygon_cover(entries, cover_res, rings_by_id)
+    cover = J._polygon_cover(entries, cover_res, rings_by_id).to_pandas()
     ny, nx = C.grid_shape(cover_res)
     cw, ch = C.LON_SPAN / nx, C.LAT_SPAN / ny
     _, row, col = C.decode(cover["cell_id"].values)
@@ -227,7 +227,7 @@ def test_cover_invariants(layer, cover_res):
     # a shortcut never rests on an open ring
     open_ring = [{"polygon_id": 9, "geom": {"type": "Polygon", "coordinates": [[(0, 0), (0, 30), (30, 30), (30, 0)]]}, "value": 0.0}]
     entries, rings_by_id = prepare_layer(open_ring)
-    cover = J._polygon_cover(entries, cover_res, rings_by_id)
+    cover = J._polygon_cover(entries, cover_res, rings_by_id).to_pandas()
     assert not cover["interior"].any() and cover["_edges"].notna().all()
 
 

@@ -60,6 +60,42 @@ def test_declared_queries_run_python_only_where_allowed(spark, sf_dir):
     assert found == ALLOWED
 
 
+def test_resamplers_outside_the_declared_queries_run_no_python(spark):
+    """The resamplers no declared query builds go through the same
+    stencil gather: reproject bilinear, cubic_spline and lanczos,
+    gauss overviews and fillnodata's smoothing plan no Python node and
+    scan no RDD."""
+    from pyspark.sql import functions as F
+
+    from rasterio_spark.grid.affine import Affine
+    from rasterio_spark.operators.fill import fillnodata
+    from rasterio_spark.operators.warp import downsample, reproject
+
+    cells = spark.range(0, 2 * 12 * 12).select(
+        (1 + F.col("id") % 2).cast("int").alias("band"),
+        F.expr("CAST((id DIV 2) DIV 12 AS INT)").alias("row"),
+        F.expr("CAST((id DIV 2) % 12 AS INT)").alias("col"),
+        ((F.col("id") * 37) % 101).cast("double").alias("value"),
+        (F.col("id") % 7 != 0).alias("valid"),
+    )
+    plans = {
+        m: reproject(
+            cells, Affine.identity(), "EPSG:4326", Affine(0.75, 0.0, 0.1, 0.0, 0.75, 0.1), "EPSG:4326", 15, 15, m
+        )
+        for m in ("bilinear", "cubic_spline", "lanczos")
+    }
+    plans["gauss"] = downsample(cells, 2, "gauss")
+    plans["fillnodata_smoothing"] = fillnodata(cells, max_search_distance=2, smoothing_iterations=1)
+    found = {}
+    for name, df in plans.items():
+        nodes = python_nodes(df)
+        if "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString():
+            nodes.add("ExistingRDD")
+        if nodes:
+            found[name] = nodes
+    assert found == {}
+
+
 def test_colormap_lut_and_cli_create_scan_no_python_rdd(spark, tmp_path, monkeypatch):
     """apply_colormap's lookup table and ``cli create``'s empty layer are
     local relations built from pyarrow: no plan scans an RDD that Python

@@ -1,96 +1,16 @@
 """Round-2 regression tests for the ADVICE findings:
 
-1. multiband reproject (bilinear cross-band mixing, average dropping
-   bands >= 2);
-2. pip_join layer-cache key must include geometry;
-3. merge_sources mixed-resolution sources are nearest-resampled onto
+1. pip_join layer-cache key must include geometry;
+2. merge_sources mixed-resolution sources are nearest-resampled onto
    the output grid (reference merge.py:488-494 out_shape read).
 
-The sieve mode='gdal' merge test lives in test_connected_components.py.
+The multiband reproject tests live in test_resample.py, the sieve
+mode='gdal' merge test in test_connected_components.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
 from rasterio_spark.grid.affine import Affine
-
-
-def _two_band_cells(spark, size=8, v1=10.0, v2=100.0):
-    rows = []
-    for b, v in ((1, v1), (2, v2)):
-        for r in range(size):
-            for c in range(size):
-                rows.append((b, r, c, v, True))
-    return spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-
-
-def test_reproject_bilinear_multiband_no_cross_mix(spark):
-    """Constant 10.0 band-1 / 100.0 band-2 input must reproject to
-    exactly those constants per band (the r1 bug returned 55.0)."""
-    from rasterio_spark.operators.warp import reproject
-
-    cells = _two_band_cells(spark)
-    out = reproject(
-        cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
-        dst_crs="EPSG:4326",
-        dst_width=4,
-        dst_height=4,
-        resampling="bilinear",
-        src_nodata=0.0,
-    ).toPandas()
-    assert set(out["band"]) == {1, 2}
-    b1 = out[out["band"] == 1]
-    b2 = out[out["band"] == 2]
-    assert len(b1) == 16 and len(b2) == 16
-    assert (b1["value"] == 10.0).all(), b1
-    assert (b2["value"] == 100.0).all(), b2
-
-
-def test_reproject_average_multiband_keeps_band2(spark):
-    from rasterio_spark.operators.warp import reproject
-
-    cells = _two_band_cells(spark)
-    out = reproject(
-        cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
-        dst_crs="EPSG:4326",
-        dst_width=4,
-        dst_height=4,
-        resampling="average",
-        src_nodata=0.0,
-    ).toPandas()
-    b2 = out[out["band"] == 2]
-    assert len(b2) == 16
-    assert (b2["value"] == 100.0).all()
-
-
-def test_reproject_nearest_multiband(spark):
-    from rasterio_spark.operators.warp import reproject
-
-    cells = _two_band_cells(spark)
-    out = reproject(
-        cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
-        dst_crs="EPSG:4326",
-        dst_width=4,
-        dst_height=4,
-        resampling="nearest",
-        src_nodata=0.0,
-    ).toPandas()
-    assert len(out) == 32  # 16 cells x 2 bands
-    assert (out[out["band"] == 2]["value"] == 100.0).all()
 
 
 def _pages_at(spark, pts):

@@ -1,5 +1,6 @@
-"""Round-3 additions: zonal_stats, downsample_stats, multiband stack,
-kmeans oracle determinism, geocode skew signal."""
+"""Round-3 additions: zonal_stats, multiband stack, kmeans oracle
+determinism, geocode skew signal. The resampling tests live in
+test_resample.py."""
 
 from __future__ import annotations
 
@@ -18,31 +19,6 @@ def _cells(spark):
         ((F.col("id") * 37) % 101).cast("double").alias("value"),
         (F.col("id") % 7 != 0).alias("valid"),
     )
-
-
-def test_downsample_stats_matches_per_method(spark):
-    """Every column of the fused query equals the standalone method."""
-    from rasterio_spark.operators.warp import downsample, downsample_stats
-
-    cells = _cells(spark)
-    fused = {
-        (r["band"], r["row"], r["col"]): r
-        for r in downsample_stats(cells, factor=4).collect()
-    }
-    col_of = {
-        "average": "avg_v", "min": "min_v", "max": "max_v", "sum": "sum_v",
-        "count": "cnt_v", "rms": "rms_v", "med": "med_v", "q1": "q1_v", "q3": "q3_v",
-    }
-    for method, col in col_of.items():
-        solo = downsample(cells, factor=4, method=method).collect()
-        assert solo, method
-        for r in solo:
-            got = fused[(r["band"], r["row"], r["col"])][col]
-            want = r["value"]
-            if method == "sum":
-                assert abs(got - want) < 1e-9, (method, r)
-            else:
-                assert got == pytest.approx(want, abs=1e-6), (method, r)
 
 
 def test_stack_multiband_offsets(spark):
@@ -217,147 +193,6 @@ def test_cli_env_edit_info(spark, tmp_path, capsys):
     assert not os.path.exists(new_table)
 
 
-def _kernel_np(method, t):
-    import numpy as np
-
-    t = np.abs(t)
-    if method == "cubic":
-        a = -0.5
-        return np.where(
-            t <= 1.0, (a + 2) * t**3 - (a + 3) * t**2 + 1,
-            np.where(t < 2.0, a * t**3 - 5 * a * t**2 + 8 * a * t - 4 * a, 0.0),
-        )
-    if method == "cubic_spline":
-        return np.where(
-            t <= 1.0, (4 - 6 * t**2 + 3 * t**3) / 6,
-            np.where(t < 2.0, (2 - t) ** 3 / 6, 0.0),
-        )
-    if method == "lanczos":
-        import numpy as np
-
-        out = np.where(t < 3.0, np.sinc(t) * np.sinc(t / 3.0), 0.0)
-        return out
-    raise ValueError(method)
-
-
-@pytest.mark.parametrize("method", ["cubic", "cubic_spline", "lanczos"])
-def test_kernel_reproject_matches_numpy(spark, method):
-    """2x upsample of a random grid == independent numpy convolution
-    (interior cells, fully-valid stencils)."""
-    import numpy as np
-
-    from rasterio_spark.grid.affine import Affine
-    from rasterio_spark.operators.warp import reproject
-
-    rng = np.random.default_rng(3)
-    H = W_ = 12
-    grid = rng.uniform(0, 100, size=(H, W_))
-    rows = [
-        (1, r, c, float(grid[r, c]), True) for r in range(H) for c in range(W_)
-    ]
-    cells = spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-    out = reproject(
-        cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(0.5, 0.0, 0.0, 0.0, 0.5, 0.0),
-        dst_crs="EPSG:4326",
-        dst_width=2 * W_,
-        dst_height=2 * H,
-        resampling=method,
-        src_nodata=-1.0,
-    )
-    got = {(r["row"], r["col"]): (r["value"], r["valid"]) for r in out.collect()}
-    support = 3 if method == "lanczos" else 2
-    checked = 0
-    for dr in range(2 * H):
-        for dc in range(2 * W_):
-            gx = 0.5 * (dc + 0.5) - 0.5  # src fractional col of dst center
-            gy = 0.5 * (dr + 0.5) - 0.5
-            c0, r0 = int(np.floor(gx)), int(np.floor(gy))
-            if (
-                r0 - support + 1 < 0 or r0 + support >= H
-                or c0 - support + 1 < 0 or c0 + support >= W_
-            ):
-                continue  # stencil leaves the grid: engine renormalizes
-            num = tw = 0.0
-            for odr in range(1 - support, support + 1):
-                for odc in range(1 - support, support + 1):
-                    w = _kernel_np(method, odr - (gy - r0)) * _kernel_np(
-                        method, odc - (gx - c0)
-                    )
-                    num += w * grid[r0 + odr, c0 + odc]
-                    tw += w
-            want = round(num / tw, 6)
-            val, valid = got[(dr, dc)]
-            assert valid
-            assert val == pytest.approx(want, abs=2e-6), (method, dr, dc)
-            checked += 1
-    assert checked > 100
-
-
-def test_cubic_reproduces_linear_field(spark):
-    """Keys cubic interpolates linear functions exactly (interior)."""
-    from rasterio_spark.grid.affine import Affine
-    from rasterio_spark.operators.warp import reproject
-
-    rows = [
-        (1, r, c, float(2.0 * r + 3.0 * c + 5.0), True)
-        for r in range(10)
-        for c in range(10)
-    ]
-    cells = spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-    out = reproject(
-        cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(0.5, 0.0, 0.0, 0.0, 0.5, 0.0),
-        dst_crs="EPSG:4326",
-        dst_width=20,
-        dst_height=20,
-        resampling="cubic",
-        src_nodata=-1.0,
-    )
-    for r in out.where("row >= 4 AND row < 16 AND col >= 4 AND col < 16").collect():
-        gy = 0.5 * (r["row"] + 0.5) - 0.5
-        gx = 0.5 * (r["col"] + 0.5) - 0.5
-        assert r["value"] == pytest.approx(2.0 * gy + 3.0 * gx + 5.0, abs=1e-5)
-
-
-def test_gauss_downsample_hand_checked(spark):
-    """factor-2 gauss: 3x3 [1,2,1] kernel around the block center."""
-    import numpy as np
-
-    from rasterio_spark.operators.warp import downsample
-
-    H = W_ = 8
-    grid = np.arange(H * W_, dtype="float64").reshape(H, W_)
-    rows = [(1, r, c, float(grid[r, c]), True) for r in range(H) for c in range(W_)]
-    cells = spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-    got = {
-        (r["row"], r["col"]): r["value"]
-        for r in downsample(cells, 2, "gauss").collect()
-    }
-    wts = np.array([[1, 2, 1], [2, 4, 2], [1, 2, 1]], dtype="float64")
-    for br in range(4):
-        for bc in range(4):
-            cr, cc = 2 * br + 1, 2 * bc + 1
-            num = tw = 0.0
-            for i, odr in enumerate((-1, 0, 1)):
-                for j, odc in enumerate((-1, 0, 1)):
-                    rr, cc2 = cr + odr, cc + odc
-                    if 0 <= rr < H and 0 <= cc2 < W_:
-                        num += wts[i, j] * grid[rr, cc2]
-                        tw += wts[i, j]
-            assert got[(br, bc)] == pytest.approx(round(num / tw, 6), abs=1e-6)
-
-
 def test_ivf_build_end_to_end_recall(spark):
     """Train-from-scratch IVF: ivf_build labels + full-probe ivf_topk
     == brute-force cosine_topk."""
@@ -386,38 +221,6 @@ def test_ivf_build_end_to_end_recall(spark):
         for r in ivf_topk(indexed, qids, k=5, nprobe=4).collect()
     }
     assert full_probe == brute
-
-
-def test_downsample_approx_quantile(spark):
-    """exact=False med/q1/q3: the sketch returns a nearest-rank member
-    of the block (no interpolation), so it must be an actual block
-    value bracketing the exact interpolated quantile."""
-    from collections import defaultdict
-
-    from rasterio_spark.operators.warp import downsample
-
-    cells = _cells(spark)
-    blocks = defaultdict(list)
-    for r in cells.where("valid").collect():
-        blocks[(r["band"], r["row"] // 4, r["col"] // 4)].append(r["value"])
-    for m in ("med", "q1", "q3"):
-        exact = {
-            (r["band"], r["row"], r["col"]): r["value"]
-            for r in downsample(cells, 4, m).collect()
-        }
-        approx = {
-            (r["band"], r["row"], r["col"]): r["value"]
-            for r in downsample(cells, 4, m, exact=False).collect()
-        }
-        assert set(exact) == set(approx)
-        for k in exact:
-            vals = sorted(blocks[k])
-            # a real member of the block...
-            assert approx[k] in [round(v, 6) for v in vals], (m, k)
-            # ...adjacent to the exact quantile in the sorted order
-            lo = max((v for v in vals if v <= exact[k]), default=vals[0])
-            hi = min((v for v in vals if v >= exact[k]), default=vals[-1])
-            assert round(lo, 6) <= approx[k] <= round(hi, 6), (m, k)
 
 
 def test_spark_submit_pyfiles_package(tmp_path):
@@ -461,75 +264,6 @@ def test_spark_submit_pyfiles_package(tmp_path):
         env=env,
     )
     assert "SUBMIT_OK" in out.stdout, out.stderr[-2000:]
-
-
-def test_read_resample_properties_ported(spark):
-    """Ported reference tests/test_read_resample.py properties over a
-    synthetic grid: integer-factor nearest upsample preserves the mean;
-    distinct resampling algorithms produce distinct outputs."""
-    import numpy as np
-
-    from rasterio_spark.grid.affine import Affine
-    from rasterio_spark.operators.warp import downsample, reproject
-
-    rng = np.random.default_rng(5)
-    H = W_ = 16
-    grid = rng.uniform(0, 255, size=(H, W_)).round()
-    rows = [(1, r, c, float(grid[r, c]), True) for r in range(H) for c in range(W_)]
-    cells = spark.createDataFrame(
-        rows, "band int, row int, col int, value double, valid boolean"
-    )
-
-    def vals(df):
-        return {(r["row"], r["col"]): r["value"] for r in df.where("valid").collect()}
-
-    # 2x nearest upsample: each src cell appears 4x -> mean preserved
-    up = reproject(
-        cells, Affine.identity(), "EPSG:4326",
-        Affine(0.5, 0.0, 0.0, 0.0, 0.5, 0.0), "EPSG:4326",
-        2 * W_, 2 * H, resampling="nearest", src_nodata=-1.0,
-    )
-    upv = vals(up)
-    assert len(upv) == 4 * H * W_
-    assert np.mean(list(upv.values())) == pytest.approx(grid.mean(), abs=1e-9)
-
-    # test_resample_alg_effect: nearest != cubic, average != bilinear
-    half = dict(
-        dst_transform=Affine(2.0, 0.0, 0.0, 0.0, 2.0, 0.0),
-        dst_crs="EPSG:4326", dst_width=W_ // 2, dst_height=H // 2,
-        src_nodata=-1.0,
-    )
-    near = vals(reproject(cells, Affine.identity(), "EPSG:4326", resampling="nearest", **half))
-    cub = vals(reproject(cells, Affine.identity(), "EPSG:4326", resampling="cubic", **half))
-    assert any(near[k] != cub.get(k) for k in near)
-    # average vs bilinear: at an EXACT aligned 2:1 ratio bilinear equals
-    # the 4-cell average (wx = wy = 0.5), so like the reference's odd
-    # 791x718 dims, use a non-integer ratio to expose the difference
-    ratio = 16.0 / 7.0
-    uneven = dict(
-        dst_transform=Affine(ratio, 0.0, 0.0, 0.0, ratio, 0.0),
-        dst_crs="EPSG:4326", dst_width=7, dst_height=7, src_nodata=-1.0,
-    )
-    avg = vals(reproject(cells, Affine.identity(), "EPSG:4326", resampling="average", **uneven))
-    bil = vals(reproject(cells, Affine.identity(), "EPSG:4326", resampling="bilinear", **uneven))
-    assert any(avg[k] != bil.get(k) for k in avg)
-
-    # test_resampling_rms analogue: rms downsample equals the numpy rms
-    rmsv = {
-        (r["row"], r["col"]): r["value"]
-        for r in downsample(cells, 8, "rms").collect()
-    }
-    for br in range(2):
-        for bc in range(2):
-            block = grid[8 * br: 8 * br + 8, 8 * bc: 8 * bc + 8]
-            want = round(float(np.sqrt((block ** 2).mean())), 6)
-            assert rmsv[(br, bc)] == pytest.approx(want, abs=1e-6)
-
-    # test_resampling_alg_error analogue: warp-only vs read-only sets
-    with pytest.raises(ValueError):
-        reproject(cells, Affine.identity(), "EPSG:4326", resampling="not_an_alg", **half)
-    with pytest.raises(ValueError):
-        downsample(cells, 2, "not_an_alg")
 
 
 @pytest.mark.parametrize(

@@ -218,82 +218,6 @@ def test_colormap_cli_and_apply(spark, tmp_path):
     assert out[1] == (None, None, None, None)  # unmapped -> NULL components
 
 
-def test_build_pyramid_cascade_equals_from_base(spark):
-    """The cascading pyramid (weighted state carried factor-to-factor)
-    must equal the from-base downsample_stats at every level, including
-    avg/rms where avg-of-avgs would be wrong (valid-cell counts vary
-    between blocks here by construction)."""
-    from rasterio_spark.operators.warp import build_pyramid, downsample_stats
-
-    cells = spark.range(0, 64 * 64).select(
-        F.lit(1).alias("band"),
-        F.expr("CAST(id DIV 64 AS INT)").alias("row"),
-        (F.col("id") % 64).cast("int").alias("col"),
-        ((F.col("id") * 37 % 97) / 7.0).alias("value"),
-        (F.col("id") % 5 != 0).alias("valid"),  # uneven valid counts
-    )
-    pyr = build_pyramid(cells, [2, 4, 8])
-    methods = ("average", "min", "max", "sum", "count", "rms")
-    for f in (2, 4, 8):
-        base = {
-            (r["band"], r["row"], r["col"]): (
-                r["avg_v"], r["min_v"], r["max_v"], r["sum_v"], r["cnt_v"], r["rms_v"]
-            )
-            for r in downsample_stats(cells, f, methods).collect()
-        }
-        casc = {
-            (r["band"], r["row"], r["col"]): (
-                r["avg_v"], r["min_v"], r["max_v"], r["sum_v"], r["cnt_v"], r["rms_v"]
-            )
-            for r in pyr[f].collect()
-        }
-        assert set(base) == set(casc)
-        for k in base:
-            for b, c in zip(base[k], casc[k]):
-                assert abs(b - c) < 1e-6, (f, k, base[k], casc[k])
-
-    import pytest
-
-    with pytest.raises(ValueError, match="divisible"):
-        build_pyramid(cells, [2, 5])
-    with pytest.raises(ValueError, match="divisible"):
-        build_pyramid(cells, [4, 2])
-    # non-power-of-two chains are fine as long as each divides the next
-    assert set(build_pyramid(cells, [2, 6])) == {2, 6}
-
-
-def test_build_pyramid_resumable_write(spark, tmp_path):
-    """out_dir writes each level via checkpointed_write: kill the job
-    mid-level, re-run, and only the missing partitions are written —
-    the north-rule lineage contract applied to the pyramid build."""
-    from rasterio_spark.operators.warp import build_pyramid
-    from rasterio_spark.plans.lineage import read_lineage, verify_lineage
-
-    cells = spark.range(0, 4 * 2048).select(
-        F.lit(1).alias("band"),
-        F.expr("CAST(id DIV 4 AS INT)").alias("row"),
-        (F.col("id") % 4).cast("int").alias("col"),
-        (F.col("id") % 11).cast("double").alias("value"),
-        F.lit(True).alias("valid"),
-    )
-    out = str(tmp_path / "pyr")
-    build_pyramid(cells, [2, 4], out_dir=out, tile_height=256)
-    for f in (2, 4):
-        lin = read_lineage(spark, out, f"overview_{f}")
-        assert lin is not None and lin.count() > 0
-        assert verify_lineage(spark, out, f"overview_{f}", "tile_i").count() == 0
-        written = spark.read.parquet(f"{out}/overview_{f}")
-        assert written.count() == (2048 // f) * max(4 // f, 1)
-    # re-run = pure resume: every level's partitions already committed
-    from rasterio_spark.plans import lineage as L
-
-    before = {f: read_lineage(spark, out, f"overview_{f}").count() for f in (2, 4)}
-    build_pyramid(cells, [2, 4], out_dir=out, tile_height=256)
-    after = {f: read_lineage(spark, out, f"overview_{f}").count() for f in (2, 4)}
-    assert before == after  # no partitions rewritten, no lineage rows appended
-    assert L is not None
-
-
 def test_zonal_stats_percentiles(spark):
     """percentiles=(0.5, 0.9) adds exact p50/p90 in the same shuffle;
     values match numpy's linear-interpolation percentile (Spark's

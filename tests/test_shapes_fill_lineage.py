@@ -1,6 +1,7 @@
 """Connected components / shapes / sieve (reference test_features.py
 shapes+sieve semantics: 4- vs 8-connectivity, pixelated/diagonal
-fixtures), fillnodata, and lineage kill/resume."""
+fixtures) and lineage kill/resume. fillnodata lives in
+test_resample.py."""
 
 import json
 
@@ -8,7 +9,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from rasterio_spark.operators.fill import fillnodata
 from rasterio_spark.operators.shapes import connected_components, shapes, shapes_summary, sieve
 
 
@@ -106,35 +106,6 @@ def test_sieve_removes_small(spark):
     assert arr[0, 0] == 0.0 and arr[8, 8] == 0.0
     # the 3x3 square (size 9 >= 3) survives
     assert (arr[2:5, 2:5] == 1.0).all()
-
-
-def test_fillnodata_idw(spark):
-    # single invalid cell surrounded by known values
-    arr = np.array([[1.0, 1.0, 1.0], [1.0, -9, 2.0], [1.0, 2.0, 2.0]])
-    cells = cells_from_array(spark, arr, nodata=-9)
-    out = fillnodata(cells, max_search_distance=1).toPandas()
-    filled = out[(out.row == 1) & (out.col == 1)]
-    assert bool(filled.valid.iloc[0])
-    # IDW: orthogonal weight 1, diagonal 1/sqrt(2)
-    # orthogonal neighbors: (0,1)=1 (1,0)=1 (1,2)=2 (2,1)=2;
-    # diagonal: (0,0)=1 (0,2)=1 (2,0)=1 (2,2)=2
-    w_o, w_d = 1.0, 1.0 / np.sqrt(2.0)
-    vals = [(1, w_o), (1, w_o), (2, w_o), (2, w_o), (1, w_d), (1, w_d), (1, w_d), (2, w_d)]
-    expected = sum(v * w for v, w in vals) / sum(w for _, w in vals)
-    assert filled.value.iloc[0] == pytest.approx(round(expected, 6))
-    # far-away invalid cells stay invalid
-    arr2 = np.full((9, 9), -9.0)
-    arr2[0, 0] = 5.0
-    cells2 = cells_from_array(spark, arr2, nodata=-9)
-    out2 = fillnodata(cells2, max_search_distance=2).toPandas()
-    assert not out2[(out2.row == 8) & (out2.col == 8)].valid.iloc[0]
-
-
-def test_fillnodata_smoothing(spark):
-    arr = np.array([[1.0, 1.0], [1.0, -9]])
-    cells = cells_from_array(spark, arr, nodata=-9)
-    out = fillnodata(cells, max_search_distance=1, smoothing_iterations=1).toPandas()
-    assert out.valid.all()
 
 
 def test_lineage_kill_resume(spark, tmp_path):

@@ -1,10 +1,9 @@
 """Warp/CRS + training-data op tests: mercator round-trip and bounds
-(port of reference test_warp.py transform/bounds subset), downsample vs
-NumPy, dedup sanity, similarity identity."""
+(port of reference test_warp.py transform/bounds subset), dedup sanity,
+similarity identity. downsample and reproject live in test_resample.py."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from rasterio_spark.grid.affine import Affine
 from rasterio_spark.grid.crs import (
@@ -16,8 +15,6 @@ from rasterio_spark.grid.crs import (
 from rasterio_spark.operators.warp import (
     aligned_target,
     calculate_default_transform,
-    downsample,
-    reproject,
 )
 
 
@@ -83,85 +80,6 @@ def test_aligned_target():
     t2, w, h = aligned_target(t, 10, 10, 2.0)
     assert t2.c % 2.0 == 0 and t2.f % 2.0 == 0
     assert w * 2.0 >= 10
-
-
-@pytest.fixture(scope="module")
-def small_cells(spark):
-    # 8x8 grid, value = row*8+col, (0,0) invalid
-    return spark.range(0, 64).select(
-        F.lit(1).alias("band"),
-        F.expr("CAST(id DIV 8 AS INT)").alias("row"),
-        (F.col("id") % 8).cast("int").alias("col"),
-        F.col("id").cast("double").alias("value"),
-        (F.col("id") != 0).alias("valid"),
-    )
-
-
-def test_downsample_average_vs_numpy(spark, small_cells):
-    got = {(r["row"], r["col"]): r["value"] for r in downsample(small_cells, 2, "average").collect()}
-    arr = np.arange(64, dtype="float64").reshape(8, 8)
-    for pr in range(4):
-        for pc in range(4):
-            block = arr[2 * pr : 2 * pr + 2, 2 * pc : 2 * pc + 2].ravel()
-            if (pr, pc) == (0, 0):
-                block = block[1:]  # (0,0) invalid
-            assert got[(pr, pc)] == pytest.approx(round(float(block.mean()), 6))
-
-
-def test_downsample_mode_deterministic(spark):
-    cells = spark.createDataFrame(
-        [(1, 0, 0, 5.0, True), (1, 0, 1, 7.0, True), (1, 1, 0, 7.0, True), (1, 1, 1, 5.0, True)],
-        "band int, row int, col int, value double, valid boolean",
-    )
-    got = downsample(cells, 2, "mode").collect()
-    assert len(got) == 1 and got[0]["value"] == 5.0  # tie -> smallest value
-
-
-def test_reproject_nearest_upscale(spark, small_cells):
-    # upscale x2: dst 16x16, each src cell replicated 2x2
-    out = reproject(
-        small_cells,
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(0.5, 0, 0, 0, 0.5, 0),
-        dst_crs="EPSG:4326",
-        dst_width=16,
-        dst_height=16,
-        resampling="nearest",
-    )
-    got = {(r["row"], r["col"]): r["value"] for r in out.collect()}
-    assert got[(2, 2)] == 9.0  # src (1,1)
-    assert got[(15, 15)] == 63.0
-    assert got[(0, 0)] == 0.0  # invalid src -> nodata 0
-
-
-def test_reproject_bilinear_midpoint(spark, small_cells):
-    out = reproject(
-        small_cells.where("valid"),
-        src_transform=Affine.identity(),
-        src_crs="EPSG:4326",
-        dst_transform=Affine(0.5, 0, 0, 0, 0.5, 0),
-        dst_crs="EPSG:4326",
-        dst_width=16,
-        dst_height=16,
-        resampling="bilinear",
-    )
-    got = {(r["row"], r["col"]): r["value"] for r in out.collect()}
-    # dst (3,3) center = src grid (1.75, 1.75): bilinear of 9,10,17,18
-    arr = np.arange(64, dtype="float64").reshape(8, 8)
-    expected = (
-        arr[1, 1] * 0.25 * 0.25 * 16
-        + 0  # placeholder; compute directly:
-    )
-    gx = gy = 0.5 * 3.5 - 0.5  # = 1.25
-    w = np.array([[1 - 0.25, 0.25]])
-    exp = (
-        arr[1, 1] * 0.75 * 0.75
-        + arr[1, 2] * 0.75 * 0.25
-        + arr[2, 1] * 0.25 * 0.75
-        + arr[2, 2] * 0.25 * 0.25
-    )
-    assert got[(3, 3)] == pytest.approx(round(exp, 6))
 
 
 def test_text_and_dedup(spark):
