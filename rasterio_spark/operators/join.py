@@ -19,15 +19,13 @@
 
 Scale notes: the polygon cover is pip_join's only index, built on the
 driver once per (layer, resolution) and capped by
-:func:`cover_cell_budget`; the pages side never collects.
+``COVER_CELL_BUDGET``; the pages side never collects.
 ``strategy='sort_merge'`` joins the same cover after repartitioning by
 range on cell_id and sorting (cell_id, warc_ts) within partitions — the
 north_star's sort-merge layout; output is identical.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pyarrow as pa
@@ -179,13 +177,10 @@ _LAYER_CACHE: dict = {}
 # (~0.2 s for the same layer). The old 2M cap optimized the wrong side
 # of that trade at every scale we can measure; 150k cells keeps the
 # per-action broadcast ~0.3 s. Jobs whose refine really dominates
-# (hour-long scans over 10^10+ pages) should raise
-# RASTERIO_SPARK_COVER_CELLS or pass cover_res explicitly — the cover
-# is a pure performance parameter, output is identical at any
-# resolution.
-def cover_cell_budget() -> int:
-    """The cover-cell budget, read from the environment at call time."""
-    return int(os.environ.get("RASTERIO_SPARK_COVER_CELLS", "150000"))
+# (hour-long scans over 10^10+ pages) should pass cover_res explicitly
+# — the cover is a pure performance parameter, output is identical at
+# any resolution.
+COVER_CELL_BUDGET = 150_000
 
 
 def _layer_index(spark, polygons: list[dict], cover_res: int, prepared=None):
@@ -252,7 +247,7 @@ def pip_join(
     entirely; only the O(perimeter) boundary sliver is ray-cast, in the
     JVM against the few edges its cover row carries. The working
     ``cell_id``/tile columns stay at ``res``. A layer whose bbox area
-    exceeds :func:`cover_cell_budget` at every finer resolution is
+    exceeds ``COVER_CELL_BUDGET`` at every finer resolution is
     covered at ``res`` itself: a coarser cover drops the bbox pre-filter
     the cells give, so every page of a coarse cell becomes a candidate
     of every polygon in it (measured 3-30x slower than a per-page probe
@@ -275,8 +270,7 @@ def pip_join(
     if cover_res is None:
         cover_res = res + 3
         # cap the cover size: total bbox area in cells at cover_res
-        # (budget rationale at cover_cell_budget above)
-        budget = cover_cell_budget()
+        # (budget rationale at COVER_CELL_BUDGET above)
 
         def bbox_cells_at(r_est: int) -> int:
             ny, nx = C.grid_shape(r_est)
@@ -286,7 +280,7 @@ def pip_join(
                 for _, _, (l, b, r, t) in prepared[0]
             )
 
-        while cover_res > res and bbox_cells_at(cover_res) > budget:
+        while cover_res > res and bbox_cells_at(cover_res) > COVER_CELL_BUDGET:
             cover_res -= 1
 
     index = _layer_index(spark, polygons, cover_res, prepared=prepared)

@@ -39,7 +39,7 @@ def _pre_reduce(layers: DataFrame) -> DataFrame:
     )
 
 
-def merge(layers: DataFrame, method="first", nodata: float = 0.0) -> DataFrame:
+def merge(layers: DataFrame, method="first") -> DataFrame:
     """Merge overlapping source layers.
 
     layers: (src_idx int, band int, row int, col int, value double,
@@ -133,12 +133,16 @@ def merge_sources(
     the mem_limit subdivide loop; compositing is ONE groupBy. Rotated
     transforms are refused, like the reference (merge.py:302-313).
     Mixed-resolution sources are nearest-resampled onto the output grid
-    (the reference's out_shape read, merge.py:488-494) via an inverse-
-    mapping gather; equal-resolution sources take the integer-offset
-    fast path.
+    (the reference's out_shape read, merge.py:488-494) by the engine's
+    one nearest read (``window_read._nearest_read``); equal-resolution
+    sources take the integer-offset fast path. ``dense=True`` returns
+    every cell of every output band (1..count of the first source),
+    ``nodata`` where no source is valid.
     """
     from rasterio_spark.grid import windows as WIN
     from rasterio_spark.grid.transform import array_bounds, from_origin
+    from rasterio_spark.operators.warp import _src_fractional_cols
+    from rasterio_spark.operators.window_read import _nearest_read, window_domain
 
     if not sources:
         raise ValueError("merge_sources needs at least one source")
@@ -205,56 +209,34 @@ def merge_sources(
         else:
             # mixed-resolution source: the reference reads each source
             # with out_shape=(cw.height, cw.width), i.e. nearest-
-            # resamples onto the output grid (merge.py:488-494). Gather:
-            # generate the source's dst-window domain and fetch, per dst
-            # cell center, the containing src cell. Domain size is the
-            # source's output-grid footprint, so at scale it is O(output
-            # cells touched), never O(src cells x dst cells).
-            spark = cells.sparkSession
+            # resamples onto the output grid (merge.py:488-494): each
+            # cell of the source's output-grid footprint reads the src
+            # cell holding its center. The domain is that footprint, so
+            # at scale it is O(output cells touched), never O(src cells
+            # x dst cells).
             r0 = max(0, int(cw.row_off))
             c0 = max(0, int(cw.col_off))
             r1 = min(out_height, int(cw.row_off + cw.height))
             c1 = min(out_width, int(cw.col_off + cw.width))
             if r1 <= r0 or c1 <= c0:
                 continue
-            dom = (
-                spark.range(r0, r1)
-                .select(F.col("id").cast("int").alias("row"))
-                .withColumn("col", F.explode(F.sequence(F.lit(c0), F.lit(c1 - 1))))
+            dom = window_domain(
+                cells.sparkSession, WIN.Window(c0, r0, c1 - c0, r1 - r0), list(range(1, d.count + 1))
             )
-            x = F.lit(dst_w) + (F.col("col") + 0.5) * F.lit(xres)
-            y = F.lit(dst_n) - (F.col("row") + 0.5) * F.lit(yres)
-            dom = dom.withColumn(
-                "_sc", F.floor((x - F.lit(d.transform.c)) / F.lit(d.transform.a)).cast("int")
-            ).withColumn(
-                "_sr", F.floor((y - F.lit(d.transform.f)) / F.lit(d.transform.e)).cast("int")
-            )
-            src = cells.select(
-                "band",
-                F.col("row").alias("_sr"),
-                F.col("col").alias("_sc"),
-                "value",
-                "valid",
-            )
-            placed.append(
-                dom.join(src, ["_sr", "_sc"]).select(
-                    F.lit(idx).alias("src_idx"), "band", "row", "col", "value", "valid"
-                )
-            )
+            col_f, row_f = _src_fractional_cols(out_transform, d.transform, d.crs, d.crs)
+            read = _nearest_read(dom, cells, F.floor(row_f).cast("int"), F.floor(col_f).cast("int"), nodata)
+            placed.append(read.select(F.lit(idx).alias("src_idx"), "band", "row", "col", "value", "valid"))
     if not placed:
         raise ValueError("no sources intersect the output bounds")
     layers = placed[0]
     for p in placed[1:]:
         layers = layers.unionByName(p)
-    merged = merge(layers, method=method, nodata=nodata)
+    merged = merge(layers, method=method)
     if not dense:
         return merged
-    spark = merged.sparkSession
-    dom = (
-        spark.range(0, out_height)
-        .select(F.col("id").cast("int").alias("row"))
-        .withColumn("col", F.explode(F.sequence(F.lit(0), F.lit(out_width - 1))))
-        .withColumn("band", F.lit(1))
+    # every output band, 1..count of the first source (rasterio's merge)
+    dom = window_domain(
+        merged.sparkSession, WIN.Window(0, 0, out_width, out_height), list(range(1, descs[0].count + 1))
     )
     return dom.join(merged, ["band", "row", "col"], "left").select(
         "band", "row", "col", F.coalesce("value", F.lit(nodata)).alias("value")

@@ -51,6 +51,7 @@ from rasterio_spark.grid.geometry import (
 )
 from rasterio_spark.grid.transform import rowcol
 from rasterio_spark.grid.windows import Window, crop, from_bounds
+from rasterio_spark.operators.window_read import window_domain
 
 
 def _shape_window(geom, transform: Affine, height: int, width: int) -> Window | None:
@@ -207,11 +208,7 @@ def rasterize(
         raise ValueError(f"unknown merge_alg {merge_alg!r}")
 
     if dense:
-        dom = (
-            spark.range(0, height)
-            .select(F.col("id").cast("int").alias("row"))
-            .withColumn("col", F.explode(F.sequence(F.lit(0), F.lit(width - 1))))
-        )
+        dom = window_domain(spark, Window(0, 0, width, height))
         result = (
             dom.join(result, ["row", "col"], "left")
             .select("row", "col", F.coalesce("value", F.lit(fill)).alias("value"))

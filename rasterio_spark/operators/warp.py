@@ -10,7 +10,8 @@ _warp.pyx:230-858).
   warp.py:412-451).
 - ``reproject``: inverse-mapping re-grid — for every dst cell, compute
   the fractional src coordinate and gather:
-  nearest -> equi-join on the floored src cell;
+  nearest -> the nearest read (``window_read._nearest_read``) of the
+  floored src cell;
   bilinear/cubic/cubic_spline/lanczos -> the stencil gather
   (``_gather``) with separable kernel weights;
   area methods -> src cells forward-mapped into dst cells, reduced by
@@ -38,6 +39,8 @@ from pyspark.sql import Window as W
 from rasterio_spark.grid.affine import Affine
 from rasterio_spark.grid.crs import crs_equal, transform_bounds, transform_points
 from rasterio_spark.grid.transform import array_bounds
+from rasterio_spark.grid.windows import Window
+from rasterio_spark.operators.window_read import _nearest_read, window_domain
 
 
 def calculate_default_transform(
@@ -100,14 +103,6 @@ def aligned_target(transform: Affine, width: int, height: int, resolution) -> tu
     w = int((right - left) / xres)
     h = int((top - bottom) / yres)
     return Affine.translation(left, top) * Affine.scale(xres, -yres), w, h
-
-
-def _dst_domain(spark, dst_width: int, dst_height: int) -> DataFrame:
-    return (
-        spark.range(0, dst_height)
-        .select(F.col("id").cast("int").alias("row"))
-        .withColumn("col", F.explode(F.sequence(F.lit(0), F.lit(dst_width - 1))))
-    )
 
 
 def _src_fractional_cols(dst_transform: Affine, src_transform: Affine, src_crs, dst_crs):
@@ -256,38 +251,19 @@ def reproject(
     (average/mode/min/max/med/q1/q3/sum/rms) forward-map src centers
     into dst cells and aggregate contributors. Both directions hop CRS
     as pure JVM expressions (grid/crs.py transform_points on Columns)."""
-    spark = src_cells.sparkSession
     if dst_nodata is None:
         dst_nodata = src_nodata
-    dom = _dst_domain(spark, dst_width, dst_height)
+    dst = window_domain(src_cells.sparkSession, Window(0, 0, dst_width, dst_height))
     col_f, row_f = _src_fractional_cols(dst_transform, src_transform, src_crs, dst_crs)
-    dom = dom.withColumn("_cf", col_f).withColumn("_rf", row_f)
+    dom = dst.withColumn("_cf", col_f).withColumn("_rf", row_f)
     # each band is warped independently (reference reproject iterates
     # bands, _warp.pyx band loop): dst domain x distinct input bands —
     # the band list is tiny, so the cross join stays a broadcast.
-    bands = src_cells.select("band").distinct()
+    bands = F.broadcast(src_cells.select("band").distinct())
 
     if resampling == "nearest":
-        dom = dom.withColumn("_sc", F.floor("_cf").cast("int")).withColumn(
-            "_sr", F.floor("_rf").cast("int")
-        ).crossJoin(F.broadcast(bands))
-        src = src_cells.select(
-            F.col("band"),
-            F.col("row").alias("_sr"),
-            F.col("col").alias("_sc"),
-            "value",
-            "valid",
-        )
-        joined = dom.join(src, ["band", "_sr", "_sc"], "left")
-        return joined.select(
-            "band",
-            "row",
-            "col",
-            F.coalesce(
-                F.when(F.col("valid"), F.col("value")), F.lit(dst_nodata)
-            ).alias("value"),
-            F.coalesce("valid", F.lit(False)).alias("valid"),
-        )
+        src_row, src_col = F.floor("_rf").cast("int"), F.floor("_cf").cast("int")
+        return _nearest_read(dom.crossJoin(bands), src_cells, src_row, src_col, dst_nodata)
 
     if resampling in _KERNEL_SUPPORT:
         # separable kernel over the (2s)x(2s) src cells around the dst
@@ -309,7 +285,7 @@ def reproject(
         )
         # band is a join key: the gather and its weight normalization
         # stay within one band (no cross-band mix)
-        out = _gather(dom.crossJoin(F.broadcast(bands)), src_cells, offsets, weight)
+        out = _gather(dom.crossJoin(bands), src_cells, offsets, weight)
         return out.select(
             "band", "row", "col", F.coalesce("value", F.lit(dst_nodata)).alias("value"), "valid"
         )
@@ -344,18 +320,9 @@ def reproject(
             & (F.col("col") >= 0)
             & (F.col("col") < dst_width)
         )
-        agg = _aggregate(landed, resampling)
-        # dense output per input band (band=1 only was a bug: bands >= 2
-        # were silently dropped from the dense domain)
-        dom2 = _dst_domain(spark, dst_width, dst_height).crossJoin(F.broadcast(bands))
-        out = dom2.join(agg, ["band", "row", "col"], "left")
-        return out.select(
-            "band",
-            "row",
-            "col",
-            F.coalesce("value", F.lit(dst_nodata)).alias("value"),
-            F.col("value").isNotNull().alias("valid"),
-        )
+        agg = _aggregate(landed, resampling).withColumn("valid", F.col("value").isNotNull())
+        # dense output: every dst cell of every input band
+        return _nearest_read(dst.crossJoin(bands), agg, F.col("row"), F.col("col"), dst_nodata)
 
     if resampling == "gauss":
         raise ValueError(

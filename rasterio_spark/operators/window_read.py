@@ -4,9 +4,12 @@
 - ``read``: window predicate pushed into the scan (Catalyst shows it
   under PushedFilters for parquet sources); optional masked semantics
   (invalid -> NULL) or nodata fill.
-- ``read_boundless``: windows beyond the extent are composited against
-  a generated fill domain (reference builds an in-memory VRT,
-  _io.pyx:596-657; here it's domain LEFT JOIN data + coalesce).
+- ``read_boundless`` and ``pad``: windows beyond the extent are
+  composited against a generated fill domain (reference builds an
+  in-memory VRT, _io.pyx:596-657; here it's domain LEFT JOIN data +
+  coalesce). ``window_domain`` builds every generated grid domain of
+  the engine, and ``_nearest_read`` is its one nearest read, shared
+  with reproject and merge's out_shape placement.
 - ``dataset_mask``: OR of band masks (reference _io.pyx:903-995
   precedence; engine has explicit ``valid`` so only the OR remains).
 
@@ -64,8 +67,12 @@ def read(
 
 
 def window_domain(spark, window: Window, bands: list[int] | None = None) -> DataFrame:
-    """All (band, row, col) triples of a window — the boundless fill
-    domain. sequence+explode stays in the JVM and parallelizes by rows."""
+    """All (row, col) cells of a window, crossed with ``bands`` when
+    given: the one builder of every generated grid domain (boundless
+    reads, pad, reproject's dst grid, merge placement and dense
+    outputs); callers without a literal band list attach bands
+    themselves. sequence+explode stays in the JVM and parallelizes by
+    rows."""
     import math
 
     # boundless windows keep negative offsets (no clamping, unlike toslices)
@@ -77,11 +84,36 @@ def window_domain(spark, window: Window, bands: list[int] | None = None) -> Data
     dom = rows.withColumn(
         "col", F.explode(F.sequence(F.lit(c0), F.lit(c1 - 1)))
     )
-    if bands:
-        dom = dom.withColumn("band", F.explode(F.array(*[F.lit(b) for b in bands])))
-    else:
-        dom = dom.withColumn("band", F.lit(1))
-    return dom.select("band", "row", "col")
+    if bands is None:
+        return dom
+    # one band stays a literal, which Catalyst carries across the join
+    # into the source side as a band filter
+    band = F.lit(bands[0]) if len(bands) == 1 else F.explode(F.array(*map(F.lit, bands)))
+    return dom.withColumn("band", band).select("band", "row", "col")
+
+
+def _nearest_read(domain: DataFrame, cells: DataFrame, src_row, src_col, fill) -> DataFrame:
+    """The one nearest read behind boundless reads, pad, reproject's
+    nearest and area outputs and merge's out_shape placement (the
+    reference's ``read(window, boundless=True, out_shape=...)``).
+
+    Each ``domain`` cell (band, row, col) reads the ``cells`` cell
+    (band, ``src_row``, ``src_col``), two Columns over the domain: one
+    left equi-join. A missing or invalid source cell reads as ``fill``
+    with ``valid`` false (reference fill semantics, _io.pyx:596-657).
+    Returns (band, row, col, value, valid).
+    """
+    src = cells.select(
+        F.col("band").alias("_sb"), F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value", "valid"
+    )
+    on = (F.col("_sb") == F.col("band")) & (F.col("_sr") == src_row) & (F.col("_sc") == src_col)
+    return domain.join(src, on, "left").select(
+        "band",
+        "row",
+        "col",
+        F.coalesce(F.when(F.col("valid"), F.col("value")), F.lit(fill)).alias("value"),
+        F.coalesce(F.col("valid"), F.lit(False)).alias("valid"),
+    )
 
 
 def read_boundless(
@@ -90,26 +122,20 @@ def read_boundless(
     fill_value: float = 0.0,
     bands: list[int] | None = None,
 ) -> DataFrame:
-    """Boundless read: full window domain LEFT JOIN data, fill misses.
+    """Boundless read: the window's domain read cell for cell
+    (:func:`_nearest_read` with the identity map).
 
     Matches reference fill semantics (_io.pyx:596-657): cells outside
     the dataset extent (or invalid) read as ``fill_value`` and invalid.
+    ``bands=None`` reads band 1 only, unlike the reference's ``read``,
+    which returns every band: the cell table carries no band count, and
+    finding it would cost a Spark job. Pass ``bands`` to read others.
     The join broadcasts the smaller side automatically; for big windows
     both sides shuffle-hash on (band, row, col).
     """
-    spark = cells.sparkSession
-    dom = window_domain(spark, window, bands)
+    dom = window_domain(cells.sparkSession, window, bands or [1])
     data = cells if bands is None else cells.where(F.col("band").isin(bands))
-    joined = dom.join(data, ["band", "row", "col"], "left")
-    return joined.select(
-        "band",
-        "row",
-        "col",
-        F.coalesce(
-            F.when(F.col("valid"), F.col("value")), F.lit(fill_value)
-        ).alias("value"),
-        F.coalesce(F.col("valid"), F.lit(False)).alias("valid"),
-    )
+    return _nearest_read(dom, data, F.col("row"), F.col("col"), fill_value)
 
 
 def dataset_mask(
@@ -160,33 +186,21 @@ def pad(
 
     from rasterio_spark.grid.affine import Affine
 
+    if mode == "edge":
+        h, wd = descriptor.height, descriptor.width
+        src_row = F.greatest(F.lit(0), F.least(F.lit(h - 1), F.col("row"))).cast("int")
+        src_col = F.greatest(F.lit(0), F.least(F.lit(wd - 1), F.col("col"))).cast("int")
+    elif mode == "constant":
+        src_row, src_col = F.col("row"), F.col("col")
+    else:
+        raise ValueError(f"unsupported pad mode {mode!r} (constant | edge)")
     if bands is None:
         bands = list(range(1, descriptor.count + 1))
     w = Window(
         -pad_width, -pad_width, descriptor.width + 2 * pad_width, descriptor.height + 2 * pad_width
     )
-    if mode == "edge":
-        dom = window_domain(cells.sparkSession, w, bands=bands)
-        h, wd = descriptor.height, descriptor.width
-        dom = dom.withColumn(
-            "_sr", F.greatest(F.lit(0), F.least(F.lit(h - 1), F.col("row"))).cast("int")
-        ).withColumn(
-            "_sc", F.greatest(F.lit(0), F.least(F.lit(wd - 1), F.col("col"))).cast("int")
-        )
-        src = cells.select(
-            "band", F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value", "valid"
-        )
-        out = dom.join(src, ["band", "_sr", "_sc"], "left").select(
-            "band",
-            "row",
-            "col",
-            F.coalesce(F.when(F.col("valid"), F.col("value")), F.lit(fill_value)).alias("value"),
-            F.coalesce("valid", F.lit(False)).alias("valid"),
-        )
-    elif mode == "constant":
-        out = read_boundless(cells, w, fill_value=fill_value, bands=bands)
-    else:
-        raise ValueError(f"unsupported pad mode {mode!r} (constant | edge)")
+    dom = window_domain(cells.sparkSession, w, bands)
+    out = _nearest_read(dom, cells.where(F.col("band").isin(bands)), src_row, src_col, fill_value)
     out = out.select(
         "band",
         (F.col("row") + pad_width).cast("long").alias("row"),

@@ -150,9 +150,11 @@ def test_asof_latest(spark, pages):
     assert got[got.cell_id == cell].url.iloc[0] == grp.url.iloc[0]
 
 
-def test_cover_cell_budget_read_at_call_time(spark, pages, monkeypatch):
-    """RASTERIO_SPARK_COVER_CELLS set after import still caps the cover
-    resolution pip_join picks."""
+def test_cover_res_falls_below_res_plus_3_when_the_bbox_exceeds_the_budget(spark, pages, monkeypatch):
+    """A 180 x 90 degree box spans 1025 x 543 = 556,575 bbox cells at
+    res 10 (working res 7 + 3), over COVER_CELL_BUDGET, and 513 x 272
+    at res 9, under it: pip_join covers it at res 9. A budget that holds
+    the res-10 count exactly keeps res 10."""
     from rasterio_spark.operators import join
 
     picked = []
@@ -161,9 +163,11 @@ def test_cover_cell_budget_read_at_call_time(spark, pages, monkeypatch):
         picked.append(cover_res)
         raise StopIteration
 
+    box = [(-90.0, -45.0), (-90.0, 45.0), (90.0, 45.0), (90.0, -45.0), (-90.0, -45.0)]
+    layer = [{"polygon_id": 0, "geom": {"type": "Polygon", "coordinates": [box]}, "value": 1.0}]
     monkeypatch.setattr(join, "_layer_index", capture)
-    for budget in ("150000", "1"):
-        monkeypatch.setenv("RASTERIO_SPARK_COVER_CELLS", budget)
+    for budget in (join.COVER_CELL_BUDGET, 556_575):
+        monkeypatch.setattr(join, "COVER_CELL_BUDGET", budget)
         with pytest.raises(StopIteration):
-            pip_join(pages, rect_polygons(), strategy="broadcast")
-    assert picked[1] < picked[0]
+            pip_join(pages, layer, res=7)
+    assert picked == [9, 10]

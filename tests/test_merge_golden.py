@@ -68,6 +68,31 @@ def test_merge_sources_skips_disjoint(spark):
     assert set(out.value.unique()) == {1.0}
 
 
+def test_merge_sources_dense_keeps_every_band(spark):
+    """A 2x2 two-band source merged densely gives every cell of both
+    bands, like the sparse merge: the output bands are 1..count."""
+    desc = LayerDescriptor(
+        width=2, height=2, count=2, dtype="float64",
+        crs="EPSG:4326", transform=Affine(1.0, 0.0, 0.0, 0.0, -1.0, 2.0), nodata=0.0,
+    )
+    cells = spark.range(0, 8).select(
+        F.expr("CAST(1 + id DIV 4 AS INT)").alias("band"),
+        F.expr("CAST((id % 4) DIV 2 AS INT)").alias("row"),
+        (F.col("id") % 2).cast("int").alias("col"),
+        F.col("id").cast("double").alias("value"),
+        F.lit(True).alias("valid"),
+    )
+    sparse = merge_sources([(desc, cells)]).toPandas()
+    dense = merge_sources([(desc, cells)], dense=True).toPandas()
+    key = ["band", "row", "col"]
+    assert len(dense) == 8
+    assert sorted(dense.band.unique()) == [1, 2]
+    assert (
+        dense.sort_values(key)[key + ["value"]].values.tolist()
+        == sparse.sort_values(key)[key + ["value"]].values.tolist()
+    )
+
+
 def test_merge_sources_rejects_rotation(spark):
     rot = Affine(0.2, 0.01, -114.0, 0.0, -0.2, 46.0)
     with pytest.raises(ValueError):

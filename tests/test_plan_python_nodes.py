@@ -136,3 +136,53 @@ def test_colormap_lut_and_cli_create_scan_no_python_rdd(spark, tmp_path, monkeyp
     (empty,) = written
     assert empty.schema.simpleString() == "struct<band:int,row:int,col:int,value:double,valid:boolean>"
     assert not scans_python(empty)
+
+
+def test_nearest_reads_plan_one_keyed_join_and_no_python(spark):
+    """Boundless reads, pad in both modes, reproject nearest and average
+    and merge's mixed-resolution placement all go through the one
+    nearest read: each optimized plan holds exactly one keyed join, on
+    the read's source cell keys (_sr, _sc), beside at most reproject's
+    band cross join, and plans no Python node and scans no RDD."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from rasterio_spark.grid.affine import Affine
+    from rasterio_spark.grid.windows import Window
+    from rasterio_spark.operators.merge import merge_sources
+    from rasterio_spark.operators.warp import reproject
+    from rasterio_spark.operators.window_read import pad, read_boundless
+    from rasterio_spark.sources.layers import LayerDescriptor
+
+    cells = spark.range(0, 2 * 6 * 6).select(
+        (1 + F.col("id") % 2).cast("int").alias("band"),
+        F.expr("CAST((id DIV 2) DIV 6 AS INT)").alias("row"),
+        F.expr("CAST((id DIV 2) % 6 AS INT)").alias("col"),
+        F.col("id").cast("double").alias("value"),
+        (F.col("id") % 5 != 0).alias("valid"),
+    )
+    desc = LayerDescriptor(width=6, height=6, count=2, transform=Affine(0.5, 0.0, 2.0, 0.0, -0.5, 4.0))
+    dst = Affine(1.5, 0.0, 0.1, 0.0, 1.5, 0.1)
+    plans = {
+        "read_boundless": read_boundless(cells, Window(-2, -1, 5, 9)),
+        "pad_constant": pad(cells, desc, 2)[1],
+        "pad_edge": pad(cells, desc, 2, mode="edge")[1],
+        "reproject_nearest": reproject(cells, Affine.identity(), "EPSG:4326", dst, "EPSG:4326", 4, 4),
+        "reproject_average": reproject(
+            cells, Affine.identity(), "EPSG:4326", dst, "EPSG:4326", 4, 4, "average"
+        ),
+        "merge_mixed_resolution": merge_sources([(desc, cells)], res=(1.0, 1.0)),
+    }
+    found = {}
+    for name, df in plans.items():
+        joins = re.findall(r"Join (\w+)(.*)", df._jdf.queryExecution().optimizedPlan().toString())
+        keyed = [cond for _, cond in joins if " = " in cond]
+        others = {kind for kind, cond in joins if " = " not in cond}
+        nodes = python_nodes(df)
+        if "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString():
+            nodes.add("ExistingRDD")
+        one_read = len(keyed) == 1 and "_sr#" in keyed[0] and "_sc#" in keyed[0]
+        if not one_read or others - {"Cross"} or nodes:
+            found[name] = (keyed, others, nodes)
+    assert found == {}
