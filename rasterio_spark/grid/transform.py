@@ -15,6 +15,8 @@ The same functions run driver-side (planning) and inside pandas UDFs
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from rasterio_spark.grid.affine import Affine, guard_transform
@@ -52,6 +54,15 @@ _OFFSETS = {
     "ll": (0.0, 1.0),
     "lr": (1.0, 1.0),
 }
+
+
+def _cells_spanned(span: float, res: float) -> int:
+    """ceil(span / res): the cells a grid of resolution ``res`` needs to
+    cover ``span``. A ratio within a relative 1e-9 of an integer is that
+    integer, so float error in a span that is a whole number of cells
+    ((-113.6 + 114) / 0.2 = 2.0000000000000284) adds no cell."""
+    n = span / res
+    return round(n) if math.isclose(n, round(n), rel_tol=1e-9) else math.ceil(n)
 
 
 def xy(transform: Affine, rows, cols, offset: str = "center"):

@@ -5,7 +5,9 @@ Behavioral parity with the reference's window module
 rounding rules are oracle-critical and intentionally byte-match the
 reference (cited per function):
 
-- ``toslices``        floor(start) / ceil(stop), negatives clamped to 0
+- ``cell_ranges``     floor(start) / ceil(stop), unclamped (boundless
+                      domains, windowed writes)
+- ``toslices``        the same, negatives clamped to 0
                       (windows.py:600-619)
 - ``round_lengths``   floor(x + 0.5)            (windows.py:715-733)
 - ``round_offsets``   floor(x + 0.1)            (windows.py:741-760)
@@ -77,17 +79,23 @@ class Window:
             (self.col_off, self.col_off + self.width),
         )
 
+    def cell_ranges(self) -> tuple[tuple[int, int], tuple[int, int]]:
+        """((row_start, row_stop), (col_start, col_stop)) of the cells
+        the window touches: floor(start), ceil(stop), not clamped, so a
+        boundless window keeps its negative offsets."""
+        (r0, r1), (c0, c1) = self.toranges()
+        return (
+            (int(math.floor(r0)), int(math.ceil(r1))),
+            (int(math.floor(c0)), int(math.ceil(c1))),
+        )
+
     def toslices(self) -> tuple[slice, slice]:
         """ndarray indexer: floor(start), ceil(stop), negatives -> 0.
 
         Parity: rasterio windows.py:600-619.
         """
-        (r0, r1), (c0, c1) = self.toranges()
-        r0, r1, c0, c1 = (max(v, 0) for v in (r0, r1, c0, c1))
-        return (
-            slice(int(math.floor(r0)), int(math.ceil(r1))),
-            slice(int(math.floor(c0)), int(math.ceil(c1))),
-        )
+        (r0, r1), (c0, c1) = self.cell_ranges()
+        return slice(max(r0, 0), max(r1, 0)), slice(max(c0, 0), max(c1, 0))
 
     # ---- constructors ----------------------------------------------------
     @classmethod
@@ -344,12 +352,7 @@ def win_align(window: Window) -> Window:
     """Round offsets down (floor(x+0.1)) and lengths to nearest
     (floor(x+0.5)) — the seam-free compositing rule used by merge
     (parity: merge.py:441-457)."""
-    return Window(
-        math.floor(window.col_off + 0.1),
-        math.floor(window.row_off + 0.1),
-        math.floor(window.width + 0.5),
-        math.floor(window.height + 0.5),
-    )
+    return window.round_offsets().round_lengths()
 
 
 def get_data_window(arr: np.ndarray, nodata=None) -> Window:

@@ -140,7 +140,7 @@ def merge_sources(
     ``nodata`` where no source is valid.
     """
     from rasterio_spark.grid import windows as WIN
-    from rasterio_spark.grid.transform import array_bounds, from_origin
+    from rasterio_spark.grid.transform import _cells_spanned, array_bounds, from_origin
     from rasterio_spark.operators.warp import _src_fractional_cols
     from rasterio_spark.operators.window_read import _nearest_read, window_domain
 
@@ -164,10 +164,8 @@ def merge_sources(
         xres, yres = first.a, -first.e
     else:
         xres, yres = res
-    import math
-
-    out_width = int(math.ceil((dst_e - dst_w) / xres))
-    out_height = int(math.ceil((dst_n - dst_s) / yres))
+    out_width = _cells_spanned(dst_e - dst_w, xres)
+    out_height = _cells_spanned(dst_n - dst_s, yres)
     out_transform = from_origin(dst_w, dst_n, xres, yres)
 
     placed = []

@@ -20,6 +20,11 @@ shuffle over the cells. Every graph — a tile's cells, the cross-tile
 labels, a near-dup edge list — is labelled by the one NumPy kernel
 :func:`min_labels`. Labels are deterministic: the minimum cell key
 (row * 2^32 + col) of the component.
+
+Every neighbour relation in Spark — the cross-tile pairs, sieve's
+region edges and its border votes — is the one neighbour stencil
+(``window_read._stencil`` over :func:`_offsets`) plus one equi-join on
+the neighbour cell, so 8-connectivity plans no more joins than 4.
 """
 
 from __future__ import annotations
@@ -30,7 +35,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rasterio_spark.operators.window_read import _stencil
+
 KEY_SHIFT = 32  # cell key = (row << 32) | col — fits int64 for grids < 2^31
+
+
+def _offsets(connectivity: int) -> list[tuple[int, int]]:
+    """The forward neighbour offsets (dr, dc) of 4- or 8-connectivity;
+    their mirrors (-dr, -dc) complete the neighbourhood. Forward ones
+    are enough wherever adjacency is symmetric."""
+    return [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if connectivity == 8 else [])
 
 
 def min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
@@ -72,13 +86,9 @@ def _local_components(pdf: pd.DataFrame, connectivity: int) -> pd.DataFrame:
     if n == 0:
         return pd.DataFrame({"row": rows, "col": cols, "value": vals, "label": keys})
 
-    # neighbor offsets (only "forward" ones; min_labels makes edges symmetric)
-    offsets = [(0, 1), (1, 0)]
-    if connectivity == 8:
-        offsets += [(1, 1), (1, -1)]
-
+    # forward offsets only: min_labels makes edges symmetric
     ei_parts, ej_parts = [], []
-    for dr, dc in offsets:
+    for dr, dc in _offsets(connectivity):
         nkeys = ((rows + dr) << KEY_SHIFT) | (cols + dc)
         pos = np.searchsorted(keys, nkeys)
         pos_c = np.minimum(pos, n - 1)
@@ -155,32 +165,21 @@ def connected_components(
     )
     edge_cells = local.where(on_edge).select("row", "col", "value", "label")
 
-    offsets = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if connectivity == 8 else [])
-    a = edge_cells.alias("a")
-    b = edge_cells.alias("b")
-    pair_frames = []
-    for dr, dc in offsets:
-        cross_tile = F.expr(f"(a.row DIV {th}) != (b.row DIV {th})") | F.expr(
-            f"(a.col DIV {tw}) != (b.col DIV {tw})"
-        )
-        pair_frames.append(
-            a.join(
-                b,
-                (F.col("b.row") == F.col("a.row") + dr)
-                & (F.col("b.col") == F.col("a.col") + dc)
-                & (F.col("a.value") == F.col("b.value"))
-                & cross_tile,
-            ).select(F.col("a.label").alias("la"), F.col("b.label").alias("lb"))
-        )
-    pairs = pair_frames[0]
-    for pf in pair_frames[1:]:
-        pairs = pairs.unionByName(pf)
+    # each edge cell's forward neighbours in another tile, joined to the
+    # same-value edge cells there: one stencil, one equi-join
+    cross_tile = F.expr(f"row DIV {th} != _sr DIV {th} OR col DIV {tw} != _sc DIV {tw}")
+    nbrs = edge_cells.select(
+        F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value", F.col("label").alias("doc_b")
+    )
+    pairs = (
+        _stencil(edge_cells, _offsets(connectivity), F.col("row"), F.col("col"))
+        .where(cross_tile)
+        .join(nbrs, ["_sr", "_sc", "value"])
+        .select(F.col("label").alias("doc_a"), "doc_b")
+    )
     # cross-tile label graph: O(tile-boundary adjacencies), labelled on
     # the driver by the same kernel as the tiles
-    roots = connected_components_pairs(
-        pairs.distinct()
-        .select(F.col("la").alias("doc_a"), F.col("lb").alias("doc_b"))
-    )
+    roots = connected_components_pairs(pairs.distinct())
     map_df = (
         roots.where(F.col("node") != F.col("label"))
         .select(F.col("node").alias("label"), F.col("label").alias("root"))
@@ -468,26 +467,16 @@ def sieve(
         reg = cc.groupBy("label").agg(
             F.first("value").alias("value"), F.count(F.lit(1)).alias("n")
         ).toArrow()
-        offsets = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if connectivity == 8 else [])
-        a = cc.alias("a")
-        b = cc.alias("b")
-        edge_frames = []
-        for dr, dc in offsets:
-            edge_frames.append(
-                a.join(
-                    b,
-                    (F.col("b.row") == F.col("a.row") + dr)
-                    & (F.col("b.col") == F.col("a.col") + dc)
-                    & (F.col("a.label") != F.col("b.label")),
-                ).select(
-                    F.least(F.col("a.label"), F.col("b.label")).alias("la"),
-                    F.greatest(F.col("a.label"), F.col("b.label")).alias("lb"),
-                )
-            )
-        ef = edge_frames[0]
-        for x in edge_frames[1:]:
-            ef = ef.unionByName(x)
-        ef = ef.distinct().toArrow()
+        # region adjacency is unordered: forward offsets find each pair
+        nbrs = cc.select(F.col("row").alias("_sr"), F.col("col").alias("_sc"), F.col("label").alias("_nl"))
+        ef = (
+            _stencil(cc, _offsets(connectivity), F.col("row"), F.col("col"))
+            .join(nbrs, ["_sr", "_sc"])
+            .where(F.col("label") != F.col("_nl"))
+            .select(F.least("label", "_nl").alias("la"), F.greatest("label", "_nl").alias("lb"))
+            .distinct()
+            .toArrow()
+        )
 
         regions = dict(
             zip(
@@ -519,26 +508,20 @@ def sieve(
     cc2 = cc.join(F.broadcast(sizes), "label")
     small = cc2.where(F.col("n") < size).select("row", "col", "label")
     big = cc2.where(F.col("n") >= size).select(
-        "row", "col", F.col("label").alias("nlabel"), F.col("value").alias("nvalue")
+        F.col("row").alias("_sr"),
+        F.col("col").alias("_sc"),
+        F.col("label").alias("nlabel"),
+        F.col("value").alias("nvalue"),
     )
-    offsets = [(0, 1), (0, -1), (1, 0), (-1, 0)]
-    if connectivity == 8:
-        offsets += [(1, 1), (1, -1), (-1, 1), (-1, -1)]
-    adj_frames = []
-    for dr, dc in offsets:
-        adj_frames.append(
-            small.alias("s")
-            .join(
-                big.alias("g"),
-                (F.col("g.row") == F.col("s.row") + dr)
-                & (F.col("g.col") == F.col("s.col") + dc),
-            )
-            .select(F.col("s.label").alias("label"), "nlabel", "nvalue")
-        )
-    adj = adj_frames[0]
-    for af in adj_frames[1:]:
-        adj = adj.unionByName(af)
-    votes = adj.groupBy("label", "nlabel", "nvalue").agg(F.count(F.lit(1)).alias("shared"))
+    # every neighbour of every small cell (forward and mirrored offsets):
+    # only the small cells explode the stencil
+    fwd = _offsets(connectivity)
+    votes = (
+        _stencil(small, fwd + [(-dr, -dc) for dr, dc in fwd], F.col("row"), F.col("col"))
+        .join(big, ["_sr", "_sc"])
+        .groupBy("label", "nlabel", "nvalue")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
     from pyspark.sql import Window as W
 
     w = W.partitionBy("label").orderBy(F.col("shared").desc(), F.col("nlabel").asc())

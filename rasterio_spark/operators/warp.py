@@ -38,9 +38,9 @@ from pyspark.sql import Window as W
 
 from rasterio_spark.grid.affine import Affine
 from rasterio_spark.grid.crs import crs_equal, transform_bounds, transform_points
-from rasterio_spark.grid.transform import array_bounds
+from rasterio_spark.grid.transform import _cells_spanned, array_bounds
 from rasterio_spark.grid.windows import Window
-from rasterio_spark.operators.window_read import _nearest_read, window_domain
+from rasterio_spark.operators.window_read import _nearest_read, _stencil, window_domain
 
 
 def calculate_default_transform(
@@ -72,8 +72,8 @@ def calculate_default_transform(
             xres = yres = float(resolution)
         else:
             xres, yres = map(float, resolution)
-        w = max(1, int(math.ceil((dr - dl) / xres)))
-        h = max(1, int(math.ceil((dt - db) / yres)))
+        w = max(1, _cells_spanned(dr - dl, xres))
+        h = max(1, _cells_spanned(dt - db, yres))
         return Affine.translation(dl, dt) * Affine.scale(xres, -yres), w, h
 
     # default rule (GDAL SuggestedWarpOutput, pinned by the reference
@@ -193,22 +193,17 @@ def _gather(targets: DataFrame, src: DataFrame, offsets, weight) -> DataFrame:
     smoothing).
 
     Each target cell (band, row, col and an anchor ``_r0``, ``_c0``)
-    explodes the literal ``offsets`` [(dr, dc), ...] into ``_o`` and
-    left-joins ``src`` (band, row, col, value, valid) on (band,
-    _r0 + dr, _c0 + dc). ``weight`` is a Column over ``_o.dr``,
+    takes the neighbour stencil (``window_read._stencil``) of its
+    anchor over the literal ``offsets`` [(dr, dc), ...] and left-joins
+    ``src`` (band, row, col, value, valid) on (band, _r0 + dr,
+    _c0 + dc). ``weight`` is a Column over ``_o.dr``,
     ``_o.dc`` and the target's columns. Returns (band, row, col, value,
     valid) per target: value is round(sum(w * v) / sum(w), 6) over the
     valid contributors, NULL unless at least one contributor is valid
     and |sum(w)| > 1e-12 (the GDAL warper's nodata renormalization).
     One explode, one equi-join, one aggregation, no Python.
     """
-    stencil = [F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr, dc in offsets]
-    g = (
-        targets.withColumn("_o", F.explode(F.array(*stencil)))
-        .withColumn("_sr", F.col("_r0") + F.col("_o.dr"))
-        .withColumn("_sc", F.col("_c0") + F.col("_o.dc"))
-        .withColumn("_w", weight)
-    )
+    g = _stencil(targets, offsets, F.col("_r0"), F.col("_c0")).withColumn("_w", weight)
     s = src.where(F.col("valid") & F.col("value").isNotNull()).select(
         "band", F.col("row").alias("_sr"), F.col("col").alias("_sc"), "value"
     )

@@ -73,13 +73,7 @@ def window_domain(spark, window: Window, bands: list[int] | None = None) -> Data
     outputs); callers without a literal band list attach bands
     themselves. sequence+explode stays in the JVM and parallelizes by
     rows."""
-    import math
-
-    # boundless windows keep negative offsets (no clamping, unlike toslices)
-    r0 = int(math.floor(window.row_off))
-    r1 = int(math.ceil(window.row_off + window.height))
-    c0 = int(math.floor(window.col_off))
-    c1 = int(math.ceil(window.col_off + window.width))
+    (r0, r1), (c0, c1) = window.cell_ranges()
     rows = spark.range(r0, r1).select(F.col("id").cast("int").alias("row"))
     dom = rows.withColumn(
         "col", F.explode(F.sequence(F.lit(c0), F.lit(c1 - 1)))
@@ -90,6 +84,21 @@ def window_domain(spark, window: Window, bands: list[int] | None = None) -> Data
     # into the source side as a band filter
     band = F.lit(bands[0]) if len(bands) == 1 else F.explode(F.array(*map(F.lit, bands)))
     return dom.withColumn("band", band).select("band", "row", "col")
+
+
+def _stencil(df: DataFrame, offsets, row, col) -> DataFrame:
+    """The one neighbour stencil: each ``df`` row explodes the literal
+    ``offsets`` [(dr, dc), ...] into ``_o`` and gains the neighbour cell
+    ``_sr = row + _o.dr``, ``_sc = col + _o.dc`` (``row``, ``col``:
+    Columns over ``df``). One equi-join on (_sr, _sc) then reaches every
+    offset at once: the resampling gather and the 4/8-neighbour joins
+    of connected components and sieve."""
+    o = [F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr, dc in offsets]
+    return (
+        df.withColumn("_o", F.explode(F.array(*o)))
+        .withColumn("_sr", row + F.col("_o.dr"))
+        .withColumn("_sc", col + F.col("_o.dc"))
+    )
 
 
 def _nearest_read(domain: DataFrame, cells: DataFrame, src_row, src_col, fill) -> DataFrame:

@@ -260,12 +260,7 @@ def write_window(
 
     Returns {"partitions": [affected tile ids]}.
     """
-    import math
-
-    rs_start = int(math.floor(window.row_off))
-    rs_stop = int(math.ceil(window.row_off + window.height))
-    cs_start = int(math.floor(window.col_off))
-    cs_stop = int(math.ceil(window.col_off + window.width))
+    (rs_start, rs_stop), (cs_start, cs_stop) = window.cell_ranges()
     t0 = max(0, rs_start) // tile_height
     t1 = max(0, rs_stop - 1) // tile_height
     affected = list(range(t0, t1 + 1))

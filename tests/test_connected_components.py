@@ -5,23 +5,30 @@ region-graph merge. Every graph is labelled by one NumPy kernel,
 
 from __future__ import annotations
 
+import re
 import time
 from collections import Counter
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from rasterio_spark.operators.dedup import connected_components_pairs
+from rasterio_spark.operators import shapes as shapes_mod
 from rasterio_spark.operators.shapes import (
     KEY_SHIFT,
     _local_components,
     _sieve_region_graph,
     connected_components,
     min_labels,
+    shapes_summary,
+    shapes_summary_sql,
     sieve,
+    sieve_sql,
 )
+from rasterio_spark.plans.cache import release_persisted
 
 
 def _old_dict_kernel(pdf: pd.DataFrame, connectivity: int) -> pd.DataFrame:
@@ -234,22 +241,32 @@ def _grid_cells(spark, arr):
     return spark.createDataFrame(pdf, "row long, col long, value double, valid boolean")
 
 
-def test_sieve_gdal_postcondition_and_determinism(spark):
+def _neighbour_offsets(connectivity):
+    return [
+        (dr, dc)
+        for dr in (-1, 0, 1)
+        for dc in (-1, 0, 1)
+        if (dr or dc) and (connectivity == 8 or abs(dr) + abs(dc) == 1)
+    ]
+
+
+@pytest.mark.parametrize("connectivity", [4, 8])
+def test_sieve_gdal_postcondition_and_determinism(spark, connectivity):
     """On a contended seeded grid the merge is deterministic and leaves
     no under-threshold region with a live neighbor."""
     arr = np.random.RandomState(3).randint(0, 3, (10, 10)).astype(float)
     cells = _grid_cells(spark, arr)
-    got1 = [(r["row"], r["col"], r["value"]) for r in sieve(cells, 3, 4, "gdal").orderBy("row", "col").collect()]
-    got2 = [(r["row"], r["col"], r["value"]) for r in sieve(cells, 3, 4, "gdal").orderBy("row", "col").collect()]
+    got1 = [(r["row"], r["col"], r["value"]) for r in sieve(cells, 3, connectivity, "gdal").orderBy("row", "col").collect()]
+    got2 = [(r["row"], r["col"], r["value"]) for r in sieve(cells, 3, connectivity, "gdal").orderBy("row", "col").collect()]
     assert got1 == got2
 
     res = _grid_cells(spark, np.array([v for _, _, v in got1]).reshape(10, 10))
-    lab = {(r["row"], r["col"]): r["label"] for r in connected_components(res, 4).collect()}
+    lab = {(r["row"], r["col"]): r["label"] for r in connected_components(res, connectivity).collect()}
     region_n = Counter(lab.values())
     for (r, c), l in lab.items():
         if region_n[l] >= 3:
             continue
-        for dr, dc in ((0, 1), (0, -1), (1, 0), (-1, 0)):
+        for dr, dc in _neighbour_offsets(connectivity):
             p = (r + dr, c + dc)
             if p in lab:
                 assert lab[p] == l, (
@@ -270,3 +287,82 @@ def test_sieve_gdal_relabel_is_a_local_relation(spark):
     assert out.count() == 144
     assert {r["value"] for r in out.collect()} == {0.0}
     release_persisted()
+
+
+def test_components_and_sieve_match_duckdb_across_tiles(spark):
+    """A seeded 300x40 grid (3 values, 10% invalid) spans two 256-row
+    tiles, so the cross-tile merge runs. shapes_summary and
+    sieve(longest_border) match their DuckDB twins at 4- and
+    8-connectivity."""
+    rng = np.random.default_rng(21)
+    rr, cc = np.meshgrid(np.arange(300), np.arange(40), indexing="ij")
+    pdf = pd.DataFrame(
+        {
+            "row": rr.ravel(),
+            "col": cc.ravel(),
+            "value": rng.integers(0, 3, rr.size).astype(float),
+            "valid": rng.random(rr.size) >= 0.1,
+        }
+    )
+    cells = spark.createDataFrame(pdf, "row long, col long, value double, valid boolean")
+    con = duckdb.connect()
+    con.register("grid", pdf)
+    valid_cells = "SELECT row, col, value FROM grid WHERE valid"
+
+    def rows(records):
+        return sorted(tuple(r) for r in records)
+
+    for connectivity in (4, 8):
+        got = shapes_summary(cells, connectivity)
+        want = con.execute(shapes_summary_sql(valid_cells, connectivity)).fetchall()
+        assert rows(got.select(*got.columns).collect()) == rows(want), connectivity
+        release_persisted()
+        for size in (2, 4):
+            got = sieve(cells, size, connectivity)
+            want = con.execute(sieve_sql(valid_cells, size, connectivity)).fetchall()
+            assert rows(got.collect()) == rows(want), (connectivity, size)
+            release_persisted()
+
+
+def _joins(df):
+    """The Join nodes of ``df``'s optimized logical plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"(?m)^[\s:|+-]*Join ", plan))
+
+
+def test_neighbour_joins_plan_one_join_whatever_the_connectivity(spark, monkeypatch):
+    """Each neighbour relation is one stencil and one equi-join: the
+    longest_border sieve plans as many joins at 8-connectivity as at 4,
+    and the cross-tile pair relation and the gdal region-edge relation
+    each plan exactly one join."""
+    arr = np.random.RandomState(5).randint(0, 3, (12, 12)).astype(float)
+    cells = _grid_cells(spark, arr)
+    assert _joins(sieve(cells, 3, 4)) == _joins(sieve(cells, 3, 8))
+    release_persisted()
+
+    pairs_seen, collected = [], []
+    pairs_fn = shapes_mod.connected_components_pairs
+    to_arrow = type(cells).toArrow
+
+    def pairs_spy(pairs):
+        pairs_seen.append(pairs)
+        return pairs_fn(pairs)
+
+    def to_arrow_spy(df):
+        collected.append(df)
+        return to_arrow(df)
+
+    monkeypatch.setattr(shapes_mod, "connected_components_pairs", pairs_spy)
+    monkeypatch.setattr(type(cells), "toArrow", to_arrow_spy)
+    for connectivity in (4, 8):
+        pairs_seen.clear()
+        connected_components(cells, connectivity, tile_shape=(4, 4)).count()
+        (pairs,) = pairs_seen
+        assert _joins(pairs) == 1, connectivity
+        release_persisted()
+
+        collected.clear()
+        sieve(cells, 3, connectivity, "gdal").count()
+        (edges,) = [df for df in collected if df.columns == ["la", "lb"]]
+        assert _joins(edges) == 1, connectivity
+        release_persisted()

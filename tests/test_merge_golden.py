@@ -93,6 +93,25 @@ def test_merge_sources_dense_keeps_every_band(spark):
     )
 
 
+def test_merge_sources_dense_grid_ignores_float_error(spark):
+    """A 2x2 two-band source at 0.2 deg from (-114, 46) merges onto a
+    2x2 grid: (-113.6 + 114) / 0.2 = 2.0000000000000284 must not add a
+    column of nodata (dense gave 12 rows)."""
+    desc = LayerDescriptor(
+        width=2, height=2, count=2, dtype="float64", crs="EPSG:4326", transform=NW, nodata=0.0
+    )
+    cells = spark.range(0, 8).select(
+        F.expr("CAST(1 + id DIV 4 AS INT)").alias("band"),
+        F.expr("CAST((id % 4) DIV 2 AS INT)").alias("row"),
+        (F.col("id") % 2).cast("int").alias("col"),
+        (F.col("id") + 1).cast("double").alias("value"),
+        F.lit(True).alias("valid"),
+    )
+    out = merge_sources([(desc, cells)], dense=True).toPandas()
+    assert len(out) == 8
+    assert sorted(out.value) == [float(v) for v in range(1, 9)]
+
+
 def test_merge_sources_rejects_rotation(spark):
     rot = Affine(0.2, 0.01, -114.0, 0.0, -0.2, 46.0)
     with pytest.raises(ValueError):

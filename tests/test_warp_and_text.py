@@ -75,6 +75,21 @@ def test_calculate_default_transform_identity_pair():
     assert t3.a == pytest.approx(0.25)
 
 
+def test_calculate_default_transform_resolution_float_error():
+    """A span that is a whole number of cells stays that number when its
+    ratio to the resolution carries float error:
+    (-113.6 + 114) / 0.2 = 2.0000000000000284 is 2 columns, not 3."""
+    t, w, h = calculate_default_transform(
+        "EPSG:4326", "EPSG:4326", 2, 2, -114.0, 45.6, -113.6, 46.0, resolution=0.2
+    )
+    assert (w, h) == (2, 2)
+    # a span just over a whole number of cells still gets its partial cell
+    _, w2, _ = calculate_default_transform(
+        "EPSG:4326", "EPSG:4326", 2, 2, -114.0, 45.6, -113.59, 46.0, resolution=0.2
+    )
+    assert w2 == 3
+
+
 def test_aligned_target():
     t = Affine.translation(0.3, 9.7) * Affine.scale(1.0, -1.0)
     t2, w, h = aligned_target(t, 10, 10, 2.0)
