@@ -317,7 +317,7 @@ def q_transform_points_32618(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree to ~1.5e-8 m (measured, 4000 random points); both sides
     round to 2 decimals (cm) over a derived-key subset so a boundary
     flip is vanishingly unlikely."""
-    from rasterio_spark.grid import utm
+    from rasterio_spark.grid.crs import transform_points
     from rasterio_spark.sources.pages import with_geocode
 
     # zone-18 neighborhood only (lon0 = -75): the TM series has its
@@ -327,7 +327,7 @@ def q_transform_points_32618(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo = with_geocode(_pages(spark, sf_dir)).where(
         (F.col("lon") >= -81.0) & (F.col("lon") <= -69.0)
     )
-    ex, ny = utm.forward(F.col("lon"), F.col("lat"), 32618)
+    ex, ny = transform_points("EPSG:4326", "EPSG:32618", F.col("lon"), F.col("lat"))
     return geo.select(
         "url", F.round(ex, 2).alias("utm_e"), F.round(ny, 2).alias("utm_n")
     )
@@ -341,11 +341,11 @@ def q_transform_points_3413(spark: SparkSession, sf_dir: str) -> DataFrame:
     stereographic forward is defined to the opposite pole); measured
     JVM-vs-DuckDB divergence stays < 1e-6 m even at the largest radii,
     so cm rounding is deterministic."""
-    from rasterio_spark.grid import projections
+    from rasterio_spark.grid.crs import transform_points
     from rasterio_spark.sources.pages import with_geocode
 
     geo = with_geocode(_pages(spark, sf_dir))
-    ex, ny = projections.forward(F.col("lon"), F.col("lat"), 3413)
+    ex, ny = transform_points("EPSG:4326", "EPSG:3413", F.col("lon"), F.col("lat"))
     return geo.select(
         "url", F.round(ex, 2).alias("ps_x"), F.round(ny, 2).alias("ps_y")
     )
@@ -983,19 +983,17 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY 1, 2
     """
     # --- formerly rows-only, now oracled ------------------------------------
-    from rasterio_spark.grid.crs import forward_3857_sql
+    from rasterio_spark.grid.crs import transform_points_sql
     from rasterio_spark.operators.shapes import shapes_summary_sql, sieve_sql
 
-    mx, my = forward_3857_sql(lon_sql, lat_sql)
+    mx, my = transform_points_sql("EPSG:4326", "EPSG:3857", lon_sql, lat_sql)
     sqls["transform_points_3857"] = f"""
         {_pages_cte()}
         SELECT url, round({mx}, 4) AS merc_x, round({my}, 4) AS merc_y
         FROM pages
     """
 
-    from rasterio_spark.grid import utm as _utm
-
-    ue, un = _utm.forward_sql(lon_sql, lat_sql, 32618)
+    ue, un = transform_points_sql("EPSG:4326", "EPSG:32618", lon_sql, lat_sql)
     sqls["transform_points_32618"] = f"""
         {_pages_cte()}
         SELECT url, round({ue}, 2) AS utm_e, round({un}, 2) AS utm_n
@@ -1003,9 +1001,7 @@ def oracle_sql() -> dict[str, str]:
         WHERE ({lon_sql}) >= -81.0 AND ({lon_sql}) <= -69.0
     """
 
-    from rasterio_spark.grid import projections as _projections
-
-    px, py = _projections.forward_sql(lon_sql, lat_sql, 3413)
+    px, py = transform_points_sql("EPSG:4326", "EPSG:3413", lon_sql, lat_sql)
     sqls["transform_points_3413"] = f"""
         {_pages_cte()}
         SELECT url, round({px}, 2) AS ps_x, round({py}, 2) AS ps_y

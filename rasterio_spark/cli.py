@@ -179,7 +179,28 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(desc.to_dict()))
         return 0
 
+    if args.op == "bench":
+        import bench  # repo-root harness
+
+        bench.main()
+        return 0
+
     spark, owned = _session(args)
+    try:
+        return _run(spark, args)
+    finally:
+        if owned:
+            spark.stop()
+
+
+def _grid_shape(df) -> tuple[int, int]:
+    """(height, width) of a cells table: one max(row), max(col) job."""
+    r = df.selectExpr("max(row)", "max(col)").first()
+    return r[0] + 1, r[1] + 1
+
+
+def _run(spark, args) -> int:
+    """The ops that need a Spark session; main stops an owned one."""
     out = None
 
     if args.op == "env":
@@ -198,8 +219,6 @@ def main(argv: list[str] | None = None) -> int:
             "arrow_enabled": spark.conf.get("spark.sql.execution.arrow.pyspark.enabled"),
             "session_timezone": spark.conf.get("spark.sql.session.timeZone"),
         }))
-        if owned:
-            spark.stop()
         return 0
 
     if args.op == "create":
@@ -240,8 +259,6 @@ def main(argv: list[str] | None = None) -> int:
             )
         write_descriptor(args.output, desc)
         print(json.dumps({"created": args.output, "descriptor": desc.to_dict()}))
-        if owned:
-            spark.stop()
         return 0
 
     if args.op == "info":
@@ -261,8 +278,6 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 info["descriptor"] = None
         print(json.dumps(info))
-        if owned:
-            spark.stop()
         return 0
 
     warped_desc = None
@@ -275,10 +290,7 @@ def main(argv: list[str] | None = None) -> int:
 
         layer = json.loads(args.polygons)
         shapes_in = [(pol["geom"], pol.get("value", 1.0)) for pol in layer]
-        df = spark.read.parquet(args.input)
-        height = df.agg({"row": "max"}).first()[0] + 1
-        width = df.agg({"col": "max"}).first()[0] + 1
-        out = rasterize(spark, shapes_in, (height, width))
+        out = rasterize(spark, shapes_in, _grid_shape(spark.read.parquet(args.input)))
     elif args.op == "shapes":
         from rasterio_spark.operators.shapes import shapes
 
@@ -364,21 +376,13 @@ def main(argv: list[str] | None = None) -> int:
 
         layer = json.loads(args.polygons)
         df = spark.read.parquet(args.input)
-        height = df.agg({"row": "max"}).first()[0] + 1
-        width = df.agg({"col": "max"}).first()[0] + 1
         out = mask_cells(
-            df,
-            spark,
-            [pol["geom"] for pol in layer],
-            Affine.identity(),
-            (height, width),
+            df, spark, [pol["geom"] for pol in layer], Affine.identity(), _grid_shape(df)
         )
     elif args.op == "blocks":
         from rasterio_spark.grid.cells import block_windows
 
-        df = spark.read.parquet(args.input)
-        height = df.agg({"row": "max"}).first()[0] + 1
-        width = df.agg({"col": "max"}).first()[0] + 1
+        height, width = _grid_shape(spark.read.parquet(args.input))
         bh, bw = (int(x) for x in args.block_shape.split(","))
         for (i, j), win in block_windows(height, width, (bh, bw)):
             print(
@@ -389,8 +393,6 @@ def main(argv: list[str] | None = None) -> int:
                     }
                 )
             )
-        if owned:
-            spark.stop()
         return 0
     elif args.op == "bounds":
         df = spark.read.parquet(args.input)
@@ -398,8 +400,6 @@ def main(argv: list[str] | None = None) -> int:
             "min(col) AS w", "min(row) AS n0", "max(col) AS e", "max(row) AS s0"
         ).first()
         print(json.dumps({"bbox": [r["w"], r["n0"], r["e"] + 1, r["s0"] + 1]}))
-        if owned:
-            spark.stop()
         return 0
     elif args.op == "transform":
         from rasterio_spark.grid.crs import transform_points
@@ -412,8 +412,6 @@ def main(argv: list[str] | None = None) -> int:
             [p[1] for p in pts],
         )
         print(json.dumps([[float(x), float(y)] for x, y in zip(xs, ys)]))
-        if owned:
-            spark.stop()
         return 0
     elif args.op == "convert":
         from pyspark.sql import functions as F
@@ -498,13 +496,6 @@ def main(argv: list[str] | None = None) -> int:
 
         pts = [tuple(x) for x in json.loads(args.points)]
         out = knn_join(spark.read.parquet(args.input), pts, k=args.k, res=args.res)
-    elif args.op == "bench":
-        if owned:
-            spark.stop()
-        import bench  # repo-root harness
-
-        bench.main()
-        return 0
 
     if args.output:
         out.write.mode("overwrite").parquet(args.output)
@@ -516,8 +507,6 @@ def main(argv: list[str] | None = None) -> int:
     else:
         for row in out.limit(args.limit).collect():
             print(row)
-    if owned:
-        spark.stop()
     return 0
 
 

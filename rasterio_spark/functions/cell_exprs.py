@@ -72,12 +72,3 @@ def affine_rowcol_cols(x: Column, y: Column, transform) -> tuple[Column, Column]
     col = F.floor((x - F.lit(c)) / F.lit(a)).cast("int")
     row = F.floor((y - F.lit(f)) / F.lit(e)).cast("int")
     return row, col
-
-
-def affine_rowcol_sql(x_sql: str, y_sql: str, transform) -> tuple[str, str]:
-    a, b, c, d, e, f = transform
-    if b != 0 or d != 0:
-        raise ValueError("affine_rowcol_sql requires an axis-aligned transform")
-    col = f"CAST(FLOOR((({x_sql}) - ({c!r})) / ({a!r})) AS INTEGER)"
-    row = f"CAST(FLOOR((({y_sql}) - ({f!r})) / ({e!r})) AS INTEGER)"
-    return row, col

@@ -8,9 +8,10 @@ The reference hands these to PROJ (rasterio/warp.py:151-409,
 rasterio/crs.pyx); this engine ships the closed-form EPSG Guidance
 Note 7-2 formulas instead, on the same pattern as grid/utm.py and
 grid/projections.py: ONE set of double-precision constants, derived
-once per EPSG code at import, feeds one body per direction that runs
-on NumPy arrays or Spark Columns (pure JVM, whole-stage codegen), plus
-a DuckDB SQL twin.
+per CRS by ``lcc_consts`` / ``aea_consts`` / ``laea_consts`` when the
+registry (grid/projections.py) resolves it, feeds one body per
+direction that runs on NumPy arrays or Spark Columns (pure JVM,
+whole-stage codegen), plus a DuckDB SQL twin.
 
 Datum note: 2154/5070/3035 are defined on GRS80 (RGF93/NAD83/ETRS89).
 GRS80 and WGS84 share a and differ in 1/f at the 12th digit
@@ -52,6 +53,7 @@ from rasterio_spark.grid.utm import (
     _sinh,
     adjlon,
     adjlon_sql,
+    consts_for,
     math_for,
     psi,
     series,
@@ -62,10 +64,6 @@ from rasterio_spark.grid.utm import (
 )
 
 E2 = E_ECC * E_ECC
-
-LCC_2154 = 2154
-ALBERS_5070 = 5070
-LAEA_3035 = 3035
 
 
 def _m(phi: float) -> float:
@@ -122,11 +120,11 @@ def _authalic_series(nterms: int = 6) -> tuple[float, ...]:
 BETA_TO_PHI = _authalic_series()
 
 
-def _lcc_consts(phi1_deg, phi2_deg, phif_deg, lamf_deg, fe, fn) -> dict:
-    phi1, phi2, phif = phi1_deg * D2R, phi2_deg * D2R, phif_deg * D2R
+def lcc_consts(lat_1, lat_2, lat_0, lon_0, x_0, y_0) -> dict:
+    phi1, phi2, phif = lat_1 * D2R, lat_2 * D2R, lat_0 * D2R
     m1, m2 = _m(phi1), _m(phi2)
     t1, t2, tf = _t(phi1), _t(phi2), _t(phif)
-    if phi1_deg == phi2_deg:
+    if lat_1 == lat_2:
         # single-parallel limit (LCC 1SP with k0=1): n -> sin(phi1)
         n = math.sin(phi1)
     else:
@@ -137,17 +135,17 @@ def _lcc_consts(phi1_deg, phi2_deg, phif_deg, lamf_deg, fe, fn) -> dict:
         "n": n,
         "aF": A_WGS84 * f_,
         "rho_f": A_WGS84 * f_ * tf**n,
-        "lam_f": lamf_deg * D2R,
-        "fe": float(fe),
-        "fn": float(fn),
+        "lam_f": lon_0 * D2R,
+        "fe": float(x_0),
+        "fn": float(y_0),
     }
 
 
-def _albers_consts(phi1_deg, phi2_deg, phif_deg, lamf_deg, fe, fn) -> dict:
-    phi1, phi2, phif = phi1_deg * D2R, phi2_deg * D2R, phif_deg * D2R
+def aea_consts(lat_1, lat_2, lat_0, lon_0, x_0, y_0) -> dict:
+    phi1, phi2, phif = lat_1 * D2R, lat_2 * D2R, lat_0 * D2R
     m1, m2 = _m(phi1), _m(phi2)
     q1, q2, qf = _q(phi1), _q(phi2), _q(phif)
-    if phi1_deg == phi2_deg:
+    if lat_1 == lat_2:
         # single-parallel limit: n -> sin(phi1)
         n = math.sin(phi1)
     else:
@@ -158,14 +156,14 @@ def _albers_consts(phi1_deg, phi2_deg, phif_deg, lamf_deg, fe, fn) -> dict:
         "n": n,
         "c": c,
         "rho_f": A_WGS84 * math.sqrt(c - n * qf) / n,
-        "lam_f": lamf_deg * D2R,
-        "fe": float(fe),
-        "fn": float(fn),
+        "lam_f": lon_0 * D2R,
+        "fe": float(x_0),
+        "fn": float(y_0),
     }
 
 
-def _laea_consts(phi0_deg, lam0_deg, fe, fn) -> dict:
-    phi0 = phi0_deg * D2R
+def laea_consts(lat_0, lon_0, x_0, y_0) -> dict:
+    phi0 = lat_0 * D2R
     q0 = _q(phi0)
     beta0 = math.asin(q0 / _QP)
     rq = A_WGS84 * math.sqrt(_QP / 2.0)
@@ -176,98 +174,10 @@ def _laea_consts(phi0_deg, lam0_deg, fe, fn) -> dict:
         "d": d,
         "sb0": math.sin(beta0),
         "cb0": math.cos(beta0),
-        "lam_0": lam0_deg * D2R,
-        "fe": float(fe),
-        "fn": float(fn),
+        "lam_0": lon_0 * D2R,
+        "fe": float(x_0),
+        "fn": float(y_0),
     }
-
-
-# EPSG registry parameters (public): 2154 RGF93/Lambert-93,
-# 5070 NAD83/Conus Albers, 3035 ETRS89-extended/LAEA Europe,
-# 3347 NAD83/Statistics Canada Lambert, 3577 GDA94/Australian Albers
-# (southern hemisphere: n < 0 — the inverse flips rho/theta signs).
-PARAMS: dict[int, dict] = {
-    LCC_2154: _lcc_consts(44.0, 49.0, 46.5, 3.0, 700000.0, 6600000.0),
-    ALBERS_5070: _albers_consts(29.5, 45.5, 23.0, -96.0, 0.0, 0.0),
-    LAEA_3035: _laea_consts(52.0, 10.0, 4321000.0, 3210000.0),
-    3347: _lcc_consts(49.0, 77.0, 63.390675, -91.0 - 52.0 / 60.0, 6200000.0, 3000000.0),
-    3577: _albers_consts(-18.0, -36.0, 0.0, 132.0, 0.0, 0.0),
-}
-
-
-# raw parameters behind each registry code (kind, lat_1, lat_2, lat_0,
-# lon_0, x_0, y_0; LAEA has no standard parallels) — used to normalize
-# a parameterized PROJ4 CRS back to its EPSG code when it matches.
-_RAW: dict[int, tuple] = {
-    LCC_2154: ("lcc", 44.0, 49.0, 46.5, 3.0, 700000.0, 6600000.0),
-    ALBERS_5070: ("aea", 29.5, 45.5, 23.0, -96.0, 0.0, 0.0),
-    LAEA_3035: ("laea", None, None, 52.0, 10.0, 4321000.0, 3210000.0),
-    3347: ("lcc", 49.0, 77.0, 63.390675, -91.0 - 52.0 / 60.0, 6200000.0, 3000000.0),
-    3577: ("aea", -18.0, -36.0, 0.0, 132.0, 0.0, 0.0),
-}
-
-
-def canonical_spec(kind: str, lat_1, lat_2, lat_0, lon_0, x_0, y_0) -> str:
-    """Deterministic "PROJ4:+proj=..." key for a parameterized conic /
-    equal-area CRS — the normalized-CRS string for non-EPSG params."""
-    parts = [f"+proj={kind}"]
-    if kind in ("lcc", "aea"):
-        parts.append(f"+lat_1={float(lat_1)!r} +lat_2={float(lat_2)!r}")
-    parts.append(
-        f"+lat_0={float(lat_0)!r} +lon_0={float(lon_0)!r} "
-        f"+x_0={float(x_0)!r} +y_0={float(y_0)!r}"
-    )
-    return "PROJ4:" + " ".join(parts)
-
-
-_BY_CANON: dict[str, int] = {canonical_spec(*raw): code for code, raw in _RAW.items()}
-_SPEC_CACHE: dict[str, dict] = {}
-
-
-def epsg_for_spec(spec: str) -> int | None:
-    """Registry EPSG code whose parameters exactly match `spec`."""
-    return _BY_CANON.get(spec)
-
-
-def _consts_for_spec(spec: str) -> dict:
-    """Derived projection constants for a canonical PROJ4 spec string
-    (cached: constants are pure functions of the parameters)."""
-    hit = _SPEC_CACHE.get(spec)
-    if hit is not None:
-        return hit
-    from rasterio_spark.grid.utm import spec_dict
-
-    kind, d = spec_dict(spec)
-    if kind == "lcc":
-        out = _lcc_consts(d["lat_1"], d["lat_2"], d["lat_0"], d["lon_0"], d["x_0"], d["y_0"])
-    elif kind == "aea":
-        out = _albers_consts(d["lat_1"], d["lat_2"], d["lat_0"], d["lon_0"], d["x_0"], d["y_0"])
-    elif kind == "laea":
-        out = _laea_consts(d["lat_0"], d["lon_0"], d["x_0"], d["y_0"])
-    else:
-        raise ValueError(f"not a supported parameterized projection: {spec!r}")
-    _SPEC_CACHE[spec] = out
-    return out
-
-
-def _resolve(code) -> dict:
-    """Constants for an EPSG code (registry) or canonical spec string."""
-    if isinstance(code, str):
-        return _consts_for_spec(code)
-    return PARAMS[code]
-
-
-def is_supported(code) -> bool:
-    if isinstance(code, str):
-        if not code.startswith("PROJ4:"):
-            return False
-        try:
-            _consts_for_spec(code)
-            return True
-        except (ValueError, KeyError, ZeroDivisionError):
-            # ZeroDivisionError: degenerate cone (n == 0) specs
-            return False
-    return code in PARAMS
 
 
 # ------------------------------------------------ NumPy or Spark Column
@@ -288,7 +198,7 @@ def _asin(m, x):
 def forward(lon, lat, code):
     """(lon, lat) degrees -> projected (x, y) meters, on arrays or
     Spark Columns."""
-    p = _resolve(code)
+    p = consts_for(code, __name__)
     with math_for(lon, lat) as (m, lon, lat):
         if p["kind"] in ("lcc", "albers"):
             if p["kind"] == "lcc":
@@ -315,7 +225,7 @@ def forward(lon, lat, code):
 
 def inverse(x, y, code):
     """Projected (x, y) meters -> (lon, lat) degrees."""
-    p = _resolve(code)
+    p = consts_for(code, __name__)
     with math_for(x, y) as (m, x, y):
         if p["kind"] in ("lcc", "albers"):
             sgn = 1.0 if p["n"] > 0 else -1.0  # GN7-2: rho' takes the sign of n
@@ -383,7 +293,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
     # DECIMAL(38) on full-precision literal inputs
     lon_sql = f"CAST(({lon_sql}) AS DOUBLE)"
     lat_sql = f"CAST(({lat_sql}) AS DOUBLE)"
-    p = _resolve(code)
+    p = consts_for(code, __name__)
     if p["kind"] == "lcc":
         rho = f"({p['aF']!r} * exp(-{p['n']!r} * {_psi_sql(lat_sql)}))"
         dlam = adjlon_sql(f"(({lon_sql}) * {D2R!r} - {p['lam_f']!r})")
@@ -419,7 +329,7 @@ def inverse_sql(x_sql: str, y_sql: str, code) -> tuple[str, str]:
     # on literal inputs (CLAUDE.md DECIMAL-literal rule)
     x_sql = f"CAST(({x_sql}) AS DOUBLE)"
     y_sql = f"CAST(({y_sql}) AS DOUBLE)"
-    p = _resolve(code)
+    p = consts_for(code, __name__)
     if p["kind"] in ("lcc", "albers"):
         sgn = 1.0 if p["n"] > 0 else -1.0  # GN7-2: rho' takes the sign of n
         dx = f"(({x_sql}) - {p['fe']!r})"

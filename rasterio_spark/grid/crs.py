@@ -1,16 +1,15 @@
 """CRS support: the closed-form WGS84 projections the engine ships
 (SURVEY.md §1.1 CRS row).
 
-EPSG:4326 (lon/lat degrees) <-> EPSG:3857 (Web Mercator) here; the UTM
-series EPSG:326xx/327xx in grid/utm.py; EPSG:3395 (World Mercator) and
-the polar stereographic family (UPS EPSG:32661/32761 plus the polar
-science grids EPSG:3413/3995/3031/3976/3032) in grid/projections.py;
-the conic / equal-area family — EPSG:2154 (Lambert-93, LCC 2SP),
-EPSG:5070 (Conus Albers), EPSG:3035 (LAEA Europe) — in grid/conic.py;
-sinusoidal (incl. the MODIS sphere) and equidistant cylindrical
-(EPSG:4087) in grid/cylindrical.py. Public closed-form formulas, each
-written once to run on NumPy arrays or Spark Columns (so the whole warp
-stays JVM-side), plus a DuckDB SQL twin for the oracle.
+EPSG:4326 (lon/lat degrees) <-> EPSG:3857 (Web Mercator) here; every
+other projected CRS — the UTM series, EPSG:2193, World Mercator, the
+polar stereographic, conic / equal-area and cylindrical / sinusoidal
+families, and parameterized "PROJ4:+proj=..." specs — resolves through
+the one registry in grid/projections.py (``resolve``), whose families
+(grid/utm.py, grid/conic.py, grid/cylindrical.py) hold the math.
+Public closed-form formulas, each written once to run on NumPy arrays
+or Spark Columns (so the whole warp stays JVM-side), plus a DuckDB SQL
+twin for the oracle.
 
 Reference behavior mirrored: warp.transform vectorized point transform
 (/root/reference/rasterio/warp.py:26-61), transform_bounds with 21-point
@@ -166,8 +165,8 @@ def from_dict(initialdata=None, **kwargs) -> str:
     if proj in ("lcc", "aea", "laea", "tmerc", "stere", "sinu", "eqc"):
         # parameterized conic / equal-area / transverse-Mercator /
         # polar-stereographic / sinusoidal / equidistant-cylindrical
-        # CRS (grid/conic.py, grid/utm.py, grid/projections.py,
-        # grid/cylindrical.py): exact registry matches normalize to
+        # CRS (the registry in grid/projections.py): exact registry
+        # matches normalize to
         # their EPSG code (incl. tmerc params that spell a UTM zone or
         # NZTM2000, stere params that spell UPS or the polar science
         # grids, eqc params that spell EPSG:4087); other params
@@ -176,7 +175,7 @@ def from_dict(initialdata=None, **kwargs) -> str:
         # datums only (GRS80 == WGS84 to < 0.1 mm; see conic.py datum
         # note) — except spherical sinusoidal, which takes its +R
         # radius verbatim (the MODIS grid's authalic sphere).
-        from rasterio_spark.grid import conic, cylindrical, projections, utm
+        from rasterio_spark.grid import projections
 
         rest = dict(d)
         rest.pop("proj", None)
@@ -245,10 +244,6 @@ def from_dict(initialdata=None, **kwargs) -> str:
             raise CRSError(
                 f"unsupported +{proj} parameters {sorted(rest)} in {d!r}"
             )
-        if proj == "tmerc":
-            spec = utm.tm_canonical_spec(lat_0, lon_0, k0, x_0, y_0)
-            code = utm.tm_epsg_for_spec(spec)
-            return f"EPSG:{code}" if code is not None else spec
         if proj == "stere":
             # polar only: the oblique/equatorial stereographic is a
             # different projection (PROJ sterea / EPSG 9809) — error
@@ -265,29 +260,21 @@ def from_dict(initialdata=None, **kwargs) -> str:
                         f"+lat_ts must lie strictly in the projection hemisphere: {d!r}"
                     )
                 k0 = projections.ps_k0_from_lat_ts(lat_ts)
-            spec = projections.stereo_canonical_spec(lat_0, lon_0, k0, x_0, y_0)
-            code = projections.stereo_epsg_for_spec(spec)
-            return f"EPSG:{code}" if code is not None else spec
-        if proj == "sinu":
-            if lat_0 != 0.0:
-                raise CRSError(f"+lat_0 unsupported for +proj=sinu: {d!r}")
-            return cylindrical.sinu_canonical_spec(lon_0, x_0, y_0, r_sph)
+        if proj == "sinu" and lat_0 != 0.0:
+            raise CRSError(f"+lat_0 unsupported for +proj=sinu: {d!r}")
         if proj == "eqc":
             lat_ts = lat_ts if lat_ts is not None else 0.0
             if not abs(lat_ts) < 90.0:
                 raise CRSError(f"eqc standard parallel out of range: {lat_ts!r}")
-            spec = cylindrical.eqc_canonical_spec(lat_ts, lat_0, lon_0, x_0, y_0)
-            code = cylindrical.eqc_epsg_for_spec(spec)
-            return f"EPSG:{code}" if code is not None else spec
-        spec = conic.canonical_spec(proj, lat_1, lat_2, lat_0, lon_0, x_0, y_0)
-        try:
-            # eager validation: degenerate cones (equator-symmetric or
-            # zero parallels -> n == 0, i.e. a cylinder) error here,
-            # not at first transform
-            conic._consts_for_spec(spec)
-        except (ValueError, ZeroDivisionError) as exc:
-            raise CRSError(f"invalid {proj} parameters {d!r}: {exc}")
-        code = conic.epsg_for_spec(spec)
+        spec = projections.canonical_spec(proj, {
+            "lat_1": lat_1, "lat_2": lat_2, "lat_ts": lat_ts, "r": r_sph, "lat_0": lat_0,
+            "lon_0": lon_0, "k_0": k0, "x_0": x_0, "y_0": y_0,
+        })
+        if projections.resolve(spec) is None:
+            # degenerate cones (equator-symmetric or zero parallels ->
+            # n == 0, i.e. a cylinder) error here, not at first transform
+            raise CRSError(f"invalid {proj} parameters {d!r}")
+        code = projections.epsg_for_spec(spec)
         return f"EPSG:{code}" if code is not None else spec
     raise CRSError(
         f"unsupported PROJ dict {d!r}: engine CRSs are EPSG-addressable "
@@ -454,7 +441,7 @@ def to_dict(crs) -> dict:
     and the ETRS89/GDA94 UTM series, whose PROJ4 is identical to other
     CRSs') raise CRSError — use the EPSG code itself, the same
     lossiness PROJ4 export has always had."""
-    from rasterio_spark.grid import conic, cylindrical, projections, utm
+    from rasterio_spark.grid import projections
 
     s = normalize_crs(crs)
     if s == "EPSG:4326":
@@ -467,11 +454,9 @@ def to_dict(crs) -> dict:
             "x_0": 0.0, "y_0": 0.0, "k": 1.0, "units": "m",
             "nadgrids": "@null", "no_defs": True,
         }
-    if s == "EPSG:3395":
-        return {"proj": "merc", "datum": "WGS84", "units": "m", "no_defs": True}
     if s.startswith("PROJ4:"):
         # canonical parameterized spec: parse back to its parameters
-        kind, d = utm.spec_dict(s)
+        kind, d = projections.spec_dict(s)
         out: dict = {"proj": kind}
         for k2, v in d.items():
             out["R" if k2 == "r" else k2] = v
@@ -489,34 +474,13 @@ def to_dict(crs) -> dict:
         if 26901 <= code <= 26923:
             return {"proj": "utm", "zone": code - 26900, "datum": "NAD83",
                     "units": "m", "no_defs": True}
-        raw = utm._TM_RAW.get(code)
-        if raw is not None:
-            lat_0, lon_0, k0, x_0, y_0 = raw
-            return {"proj": "tmerc", "lat_0": lat_0, "lon_0": lon_0,
-                    "k_0": k0, "x_0": x_0, "y_0": y_0, "ellps": "GRS80",
-                    "units": "m", "no_defs": True}
-        raw = projections._STEREO_RAW.get(code)
-        if raw is not None:
-            lat_0, lon_0, k0, fe, fn = raw
-            return {"proj": "stere", "lat_0": lat_0, "lon_0": lon_0,
-                    "k_0": k0, "x_0": fe, "y_0": fn, "ellps": "WGS84",
-                    "units": "m", "no_defs": True}
-        raw = conic._RAW.get(code)
-        if raw is not None:
-            kind, lat_1, lat_2, lat_0, lon_0, x_0, y_0 = raw
-            out = {"proj": kind, "lat_0": lat_0, "lon_0": lon_0,
-                   "x_0": x_0, "y_0": y_0, "ellps": "GRS80",
-                   "units": "m", "no_defs": True}
-            if kind in ("lcc", "aea"):
-                out["lat_1"] = lat_1
-                out["lat_2"] = lat_2
-            return out
-        raw = cylindrical._EQC_RAW.get(code)
-        if raw is not None:
-            lat_ts, lat_0, lon_0, x_0, y_0 = raw
-            return {"proj": "eqc", "lat_ts": lat_ts, "lat_0": lat_0,
-                    "lon_0": lon_0, "x_0": x_0, "y_0": y_0,
-                    "ellps": "WGS84", "units": "m", "no_defs": True}
+        hit = projections.EPSG.get(code)
+        if hit is not None:
+            proj, params = hit
+            # the registry's tmerc and conic codes are defined on GRS80
+            # datums (NZGD2000, RGF93, NAD83, ETRS89, GDA94), the rest on WGS84
+            ellps = "GRS80" if proj in ("tmerc", "lcc", "aea", "laea") else "WGS84"
+            return {"proj": proj, **params, "ellps": ellps, "units": "m", "no_defs": True}
     raise CRSError(
         f"CRS {s} has no unambiguous PROJ dict form in this engine "
         "(use the EPSG code)"
@@ -594,55 +558,18 @@ def _unsupported_pair(s: str, d: str) -> ValueError:
     return ValueError(f"unsupported CRS pair {s} -> {d} {_SUPPORTED_PAIRS_NOTE}")
 
 
-def _utm_code(normalized: str) -> int | str | None:
-    """Transverse-Mercator spec if `normalized` is a TM CRS the engine
-    resolves: the EPSG code (UTM 326xx/327xx, the named TM registry
-    e.g. 2193 NZTM2000), or the canonical "PROJ4:+proj=tmerc ..."
-    string itself for parameterized TM; else None."""
-    from rasterio_spark.grid import utm
-
-    if normalized.startswith("PROJ4:+proj=tmerc"):
-        return normalized if utm.is_tm(normalized) else None
-    if not normalized.startswith("EPSG:"):
-        return None
-    try:
-        code = int(normalized.split(":", 1)[1])
-    except ValueError:
-        return None
-    return code if utm.is_tm(code) else None
-
-
-def _proj_code(normalized: str) -> int | str | None:
-    """Projection spec if `normalized` is a non-UTM projection the
-    engine ships: the EPSG code (EPSG:3395 World Mercator,
-    EPSG:32661/32761 UPS, the conic/equal-area registry in
-    grid/conic.py), or the canonical "PROJ4:..." string itself for a
-    parameterized conic/equal-area CRS; else None."""
-    from rasterio_spark.grid import projections
-
-    if normalized.startswith("PROJ4:"):
-        return normalized if projections.is_supported(normalized) else None
-    if not normalized.startswith("EPSG:"):
-        return None
-    try:
-        code = int(normalized.split(":", 1)[1])
-    except ValueError:
-        return None
-    return code if projections.is_supported(code) else None
-
-
 def transform_points(src_crs: str, dst_crs: str, xs, ys):
-    """Vectorized point transform between supported CRSs: EPSG:4326,
-    EPSG:3857, the UTM series EPSG:326xx/327xx (Karney/Krueger
-    transverse-Mercator, grid/utm.py), EPSG:3395 (World Mercator),
-    EPSG:32661/32761 (UPS, grid/projections.py), and the conic/equal-area
-    family EPSG:2154/5070/3035 (grid/conic.py). Arbitrary pairs compose
-    through geographic coordinates — the same hub-CRS pipeline PROJ builds.
-    ``xs``/``ys`` are arrays (NumPy out) or Spark Columns (Column
-    expressions out — the reproject / warp hot path stays JVM-side)."""
+    """Vectorized point transform between supported CRSs: the
+    geographic WGS84 family, EPSG:3857, and every projected CRS
+    :func:`rasterio_spark.grid.projections.resolve` accepts. Arbitrary
+    pairs compose through geographic coordinates — the same hub-CRS
+    pipeline PROJ builds. ``xs``/``ys`` are arrays (NumPy out) or Spark
+    Columns (Column expressions out — the reproject / warp hot path
+    stays JVM-side)."""
     from rasterio_spark.grid import projections, utm
 
     s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
+    src, dst = projections.resolve(s), projections.resolve(d)
     with utm.math_for(xs, ys) as (m, xs, ys):
         if s == d:
             return xs, ys
@@ -653,10 +580,8 @@ def transform_points(src_crs: str, dst_crs: str, xs, ys):
         elif s == "EPSG:3857":
             lon = xs / R * (180.0 / math.pi)
             lat = (m.atan(m.exp(ys / R)) * 2.0 - math.pi / 2.0) * (180.0 / math.pi)
-        elif _utm_code(s) is not None:
-            lon, lat = utm.inverse(xs, ys, _utm_code(s))
-        elif _proj_code(s) is not None:
-            lon, lat = projections.inverse(xs, ys, _proj_code(s))
+        elif src is not None:
+            lon, lat = projections.inverse(xs, ys, src)
         else:
             raise _unsupported_pair(s, d)
 
@@ -667,10 +592,8 @@ def transform_points(src_crs: str, dst_crs: str, xs, ys):
             x = lon * math.pi / 180.0 * R
             y = m.log(m.tan(math.pi / 4.0 + lat * math.pi / 360.0)) * R
             return x, y
-        if _utm_code(d) is not None:
-            return utm.forward(lon, lat, _utm_code(d))
-        if _proj_code(d) is not None:
-            return projections.forward(lon, lat, _proj_code(d))
+        if dst is not None:
+            return projections.forward(lon, lat, dst)
         raise _unsupported_pair(s, d)
 
 
@@ -850,39 +773,32 @@ def transform_geom(
 
 # ---- Spark / DuckDB expression twins --------------------------------------
 
-def forward_3857_sql(lon_sql: str, lat_sql: str) -> tuple[str, str]:
-    """DuckDB (x, y) Web-Mercator expressions (double)."""
-    x = f"(({lon_sql}) * pi() / 180.0 * {R!r})"
-    y = f"(ln(tan(pi() / 4.0 + ({lat_sql}) * pi() / 360.0)) * {R!r})"
-    return x, y
-
-
 def transform_points_sql(src_crs, dst_crs, x_sql: str, y_sql: str) -> tuple[str, str]:
     """DuckDB twin of :func:`transform_points` (oracle side)."""
+    from rasterio_spark.grid import projections
+
     s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
+    src, dst = projections.resolve(s), projections.resolve(d)
     if s == d:
         return x_sql, y_sql
-
-    from rasterio_spark.grid import projections, utm
 
     if s in GEOGRAPHIC_WGS84_FAMILY:
         lon, lat = x_sql, y_sql
     elif s == "EPSG:3857":
         lon = f"(({x_sql}) / {R!r} * 180.0 / pi())"
         lat = f"((2.0 * atan(exp(({y_sql}) / {R!r})) - pi() / 2.0) * 180.0 / pi())"
-    elif _utm_code(s) is not None:
-        lon, lat = utm.inverse_sql(x_sql, y_sql, _utm_code(s))
-    elif _proj_code(s) is not None:
-        lon, lat = projections.inverse_sql(x_sql, y_sql, _proj_code(s))
+    elif src is not None:
+        lon, lat = projections.inverse_sql(x_sql, y_sql, src)
     else:
         raise _unsupported_pair(s, d)
 
     if d in GEOGRAPHIC_WGS84_FAMILY:
         return lon, lat
     if d == "EPSG:3857":
-        return forward_3857_sql(lon, lat)
-    if _utm_code(d) is not None:
-        return utm.forward_sql(lon, lat, _utm_code(d))
-    if _proj_code(d) is not None:
-        return projections.forward_sql(lon, lat, _proj_code(d))
+        return (
+            f"(({lon}) * pi() / 180.0 * {R!r})",
+            f"(ln(tan(pi() / 4.0 + ({lat}) * pi() / 360.0)) * {R!r})",
+        )
+    if dst is not None:
+        return projections.forward_sql(lon, lat, dst)
     raise _unsupported_pair(s, d)

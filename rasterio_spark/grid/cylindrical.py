@@ -25,9 +25,10 @@ Two more global raster grids the reference reaches through PROJ
 
 Like grid/utm.py / grid/conic.py, ONE parameter set feeds one body per
 direction that runs on NumPy arrays or Spark Columns (pure JVM,
-whole-stage codegen), plus a DuckDB SQL twin. Parameterized CRSs
-normalize to a canonical "PROJ4:+proj=..." spec (crs.from_dict);
-specs that spell a registry code (EPSG:4087) normalize home.
+whole-stage codegen), plus a DuckDB SQL twin. The registry
+(grid/projections.py) holds EPSG:4087's parameters, normalizes
+parameterized CRSs, and derives the constants through
+``sinu_consts`` / ``eqc_consts``.
 """
 
 from __future__ import annotations
@@ -44,61 +45,37 @@ from rasterio_spark.grid.utm import (
     E_ECC,
     _asinh,
     _atanh,
+    _mu,
     _sinh,
     adjlon,
     adjlon_sql,
+    consts_for,
     math_for,
     psi,
     series,
-    spec_dict,
     wrap_lon,
     wrap_lon_sql,
 )
 
 E2 = E_ECC * E_ECC
 
-EQC_4087 = 4087
 MODIS_R = 6371007.181  # MODIS sinusoidal authalic sphere radius (m)
-
-
-def sinu_canonical_spec(lon_0, x_0, y_0, r=None) -> str:
-    """Deterministic "PROJ4:+proj=sinu ..." key; ``r`` is the sphere
-    radius (None = WGS84 ellipsoidal)."""
-    sphere = f"+r={float(r)!r} " if r is not None else ""
-    return (
-        f"PROJ4:+proj=sinu {sphere}+lon_0={float(lon_0)!r} "
-        f"+x_0={float(x_0)!r} +y_0={float(y_0)!r}"
-    )
-
-
-def eqc_canonical_spec(lat_ts, lat_0, lon_0, x_0, y_0) -> str:
-    return (
-        f"PROJ4:+proj=eqc +lat_ts={float(lat_ts)!r} +lat_0={float(lat_0)!r} "
-        f"+lon_0={float(lon_0)!r} +x_0={float(x_0)!r} +y_0={float(y_0)!r}"
-    )
-
-
 #: the MODIS land-grid CRS ("+proj=sinu +R=6371007.181"), normalized
-MODIS_SINU = sinu_canonical_spec(0.0, 0.0, 0.0, MODIS_R)
-
-_EQC_RAW: dict[int, tuple] = {
-    EQC_4087: (0.0, 0.0, 0.0, 0.0, 0.0),  # lat_ts, lat_0, lon_0, x_0, y_0
-}
-_EQC_BY_CANON: dict[str, int] = {
-    eqc_canonical_spec(*raw): code for code, raw in _EQC_RAW.items()
-}
+MODIS_SINU = f"PROJ4:+proj=sinu +r={MODIS_R!r} +lon_0=0.0 +x_0=0.0 +y_0=0.0"
 
 
-def eqc_epsg_for_spec(spec: str) -> int | None:
-    """Registry EPSG code whose eqc parameters exactly match `spec`."""
-    return _EQC_BY_CANON.get(spec)
+def sinu_consts(lon_0, x_0, y_0, r=None) -> dict:
+    """``r`` is the sphere radius; None is the WGS84 ellipsoid."""
+    return {
+        "kind": "sinu_sph" if r is not None else "sinu",
+        "r": r,
+        "lon0": lon_0 * D2R,
+        "fe": x_0,
+        "fn": y_0,
+    }
 
 
-# scalar rectifying latitude: the same series as utm's fn_eff fold
-from rasterio_spark.grid.utm import _mu as _mu_scalar
-
-
-def _eqc_consts(lat_ts, lat_0, lon_0, x_0, y_0) -> dict:
+def eqc_consts(lat_ts, lat_0, lon_0, x_0, y_0) -> dict:
     phi1 = float(lat_ts) * D2R
     s1 = math.sin(phi1)
     return {
@@ -106,69 +83,13 @@ def _eqc_consts(lat_ts, lat_0, lon_0, x_0, y_0) -> dict:
         "nu1cos": A_WGS84 * math.cos(phi1) / math.sqrt(1.0 - E2 * s1 * s1),
         "lon0": float(lon_0) * D2R,
         "fe": float(x_0),
-        "fn": float(y_0) - A_CAP * _mu_scalar(lat_0),
+        "fn": float(y_0) - A_CAP * _mu(lat_0),
     }
-
-
-_SPEC_CACHE: dict[str, dict] = {}
-
-
-def _params(code) -> dict | None:
-    """Derived constants for an EPSG code or canonical spec; None if
-    the CRS is not a cylindrical/sinusoidal grid this module ships."""
-    if isinstance(code, int):
-        raw = _EQC_RAW.get(code)
-        return _eqc_consts(*raw) if raw is not None else None
-    if not isinstance(code, str) or not code.startswith("PROJ4:+proj="):
-        return None
-    hit = _SPEC_CACHE.get(code)
-    if hit is not None:
-        return hit
-    try:
-        kind, d = spec_dict(code)
-    except (ValueError, KeyError):
-        return None
-    if kind == "sinu":
-        r = d.get("r")
-        if r is not None and r <= 0.0:
-            return None
-        out = {
-            "kind": "sinu_sph" if r is not None else "sinu",
-            "r": r,
-            "lon0": d.get("lon_0", 0.0) * D2R,
-            "fe": d.get("x_0", 0.0),
-            "fn": d.get("y_0", 0.0),
-        }
-    elif kind == "eqc":
-        if not abs(d.get("lat_ts", 0.0)) < 90.0:
-            return None
-        out = _eqc_consts(
-            d.get("lat_ts", 0.0),
-            d.get("lat_0", 0.0),
-            d.get("lon_0", 0.0),
-            d.get("x_0", 0.0),
-            d.get("y_0", 0.0),
-        )
-    else:
-        return None
-    _SPEC_CACHE[code] = out
-    return out
-
-
-def is_supported(code) -> bool:
-    return _params(code) is not None
 
 
 # ------------------------------------------------ NumPy or Spark Column
 
 _NEG_BETA = tuple(-b for b in BETA)
-
-
-def _require(code) -> dict:
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
-    return p
 
 
 def _nucos(m, phi):
@@ -180,7 +101,7 @@ def _nucos(m, phi):
 def forward(lon, lat, code):
     """(lon, lat) degrees -> projected (x, y) meters, on arrays or
     Spark Columns."""
-    p = _require(code)
+    p = consts_for(code, __name__)
     with math_for(lon, lat) as (m, lon, lat):
         phi = lat * D2R
         dlam = adjlon(m, lon * D2R - p["lon0"])
@@ -195,7 +116,7 @@ def forward(lon, lat, code):
 
 def inverse(x, y, code):
     """Projected (x, y) meters -> (lon, lat) degrees."""
-    p = _require(code)
+    p = consts_for(code, __name__)
     with math_for(x, y) as (m, x, y):
         dx = x - p["fe"]
         if p["kind"] == "sinu_sph":
@@ -237,9 +158,7 @@ def _mu_inv_sql(mu: str) -> str:
 
 def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
     """DuckDB (x, y) expression strings — identical literal constants."""
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
+    p = consts_for(code, __name__)
     # CAST at derivation: DuckDB keeps DECIMAL literals DECIMAL through
     # pure +/-/* chains (overflowing DECIMAL(38) at full precision);
     # every downstream product must see a DOUBLE operand
@@ -265,9 +184,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code) -> tuple[str, str]:
 
 def inverse_sql(x_sql: str, y_sql: str, code) -> tuple[str, str]:
     """DuckDB (lon, lat) expression strings from projected coordinates."""
-    p = _params(code)
-    if p is None:
-        raise ValueError(f"not a supported cylindrical CRS: {code}")
+    p = consts_for(code, __name__)
     dx = f"CAST((({x_sql}) - {p['fe']!r}) AS DOUBLE)"
     if p["kind"] == "sinu_sph":
         # phi is pure linear arithmetic — same DECIMAL-literal hazard

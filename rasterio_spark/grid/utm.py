@@ -20,7 +20,11 @@ Each direction is written ONCE, as a body over a small math namespace
   the oracle, so they stay an independent transcription.
 
 All forms read ONE coefficient table and agree up to libm differences
-(~4e-9 — oracle queries round).
+(~4e-9 — oracle queries round). Which codes and specs are transverse
+Mercator, and with which parameters, is decided by the registry in
+grid/projections.py; this module derives their constants
+(:func:`tm_consts`) and holds the shared machinery every family builds
+on (math namespaces, series, longitude wrapping, :func:`consts_for`).
 """
 
 from __future__ import annotations
@@ -212,10 +216,6 @@ def utm_epsg_params(code: int) -> tuple[float, float] | None:
     return None
 
 
-def is_utm(code: int) -> bool:
-    return isinstance(code, int) and utm_epsg_params(code) is not None
-
-
 # ------------------------------------------------- generalized tmerc
 #
 # The Krueger series is parameterized by (lon0, k0, fe, fn_eff): any
@@ -237,100 +237,27 @@ def _mu(lat0_deg: float) -> float:
     return xi
 
 
-def spec_dict(spec: str) -> tuple[str, dict]:
-    """Parse a canonical "PROJ4:+proj=... +k=v ..." spec into
-    (proj, {param: float}) — the single parser behind utm._tm_params
-    and conic._consts_for_spec."""
-    proj = ""
-    d: dict = {}
-    for tok in spec[len("PROJ4:"):].split():
-        key, _, val = tok.lstrip("+").partition("=")
-        if key == "proj":
-            proj = val
-        else:
-            d[key] = float(val)
-    return proj, d
+def tm_consts(lat_0, lon_0, k_0, x_0, y_0) -> tuple[float, float, float, float]:
+    """(lon0, k0, fe, fn_eff) of a transverse-Mercator CRS."""
+    return (lon_0, k_0, x_0, y_0 - k_0 * A_CAP * _mu(lat_0))
 
 
-def tm_canonical_spec(lat_0, lon_0, k_0, x_0, y_0) -> str:
-    """Deterministic "PROJ4:+proj=tmerc ..." key for a parameterized
-    transverse-Mercator CRS (crs.from_dict normalization target)."""
-    return (
-        f"PROJ4:+proj=tmerc +lat_0={float(lat_0)!r} +lon_0={float(lon_0)!r} "
-        f"+k_0={float(k_0)!r} +x_0={float(x_0)!r} +y_0={float(y_0)!r}"
-    )
+def consts_for(code, family: str):
+    """The constants a family's bodies read for `code` — an EPSG code,
+    canonical spec or resolved Projection — through the one registry
+    (grid/projections.py); ValueError outside `family`."""
+    from rasterio_spark.grid.projections import require
 
-
-# named TM registry beyond the UTM series: EPSG:2193 NZGD2000 / New
-# Zealand Transverse Mercator 2000 (NZGD2000 == GRS80 family)
-_TM_RAW: dict[int, tuple] = {
-    2193: (0.0, 173.0, 0.9996, 1600000.0, 10000000.0),
-}
-_TM_BY_CANON: dict[str, int] = {
-    tm_canonical_spec(*raw): code for code, raw in _TM_RAW.items()
-}
-# UTM zones expressed as raw tmerc parameters also normalize home
-for _z in range(1, 61):
-    _TM_BY_CANON[tm_canonical_spec(0.0, _z * 6 - 183, 0.9996, 500000.0, 0.0)] = 32600 + _z
-    _TM_BY_CANON[
-        tm_canonical_spec(0.0, _z * 6 - 183, 0.9996, 500000.0, FALSE_NORTHING_SOUTH)
-    ] = 32700 + _z
-
-_TM_SPEC_CACHE: dict[str, tuple] = {}
-
-
-def tm_epsg_for_spec(spec: str) -> int | None:
-    """EPSG code whose tmerc parameters exactly match `spec`."""
-    return _TM_BY_CANON.get(spec)
-
-
-def _tm_params(code) -> tuple[float, float, float, float] | None:
-    """(lon0, k0, fe, fn_eff) for a UTM/TM EPSG code or a canonical
-    "PROJ4:+proj=tmerc ..." spec string; None if not TM."""
-    if isinstance(code, str):
-        if not code.startswith("PROJ4:+proj=tmerc"):
-            return None
-        hit = _TM_SPEC_CACHE.get(code)
-        if hit is not None:
-            return hit
-        _, d = spec_dict(code)
-        k0 = d["k_0"]
-        out = (d["lon_0"], k0, d["x_0"], d["y_0"] - k0 * A_CAP * _mu(d["lat_0"]))
-        _TM_SPEC_CACHE[code] = out
-        return out
-    raw = _TM_RAW.get(code)
-    if raw is not None:
-        lat_0, lon_0, k0, x_0, y_0 = raw
-        return (lon_0, k0, x_0, y_0 - k0 * A_CAP * _mu(lat_0))
-    p = utm_epsg_params(code) if isinstance(code, int) else None
-    if p is not None:
-        return (p[0], K0, FALSE_EASTING, p[1])
-    return None
-
-
-def is_tm(code) -> bool:
-    """True for any transverse-Mercator CRS the engine resolves: UTM
-    zone codes, the named TM registry, or a parameterized spec."""
-    try:
-        return _tm_params(code) is not None
-    except (KeyError, ValueError):
-        return False
+    return require(code, family).consts
 
 
 # ------------------------------------------------ NumPy or Spark Column
 
 
-def _require_tm(code) -> tuple[float, float, float, float]:
-    params = _tm_params(code)
-    if params is None:
-        raise ValueError(f"not a UTM/TM EPSG code or tmerc spec: {code}")
-    return params
-
-
 def forward(lon, lat, code):
     """(lon, lat) degrees -> (easting, northing) meters for a UTM/TM
     EPSG code or tmerc spec, on arrays or Spark Columns."""
-    lon0, k0, fe, fn = _require_tm(code)
+    lon0, k0, fe, fn = consts_for(code, __name__)
     with math_for(lon, lat) as (m, lon, lat):
         lam = (lon - lon0) * D2R
         t = m.sinh(psi(m, lat))
@@ -346,7 +273,7 @@ def forward(lon, lat, code):
 
 def inverse(x, y, code):
     """(easting, northing) meters -> (lon, lat) degrees."""
-    lon0, k0, fe, fn = _require_tm(code)
+    lon0, k0, fe, fn = consts_for(code, __name__)
     with math_for(x, y) as (m, x, y):
         xi = (y - fn) / (k0 * A_CAP)
         eta = (x - fe) / (k0 * A_CAP)
@@ -384,7 +311,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code: int) -> tuple[str, str]:
     """DuckDB (easting, northing) expression strings. Verbose but
     mechanical: the identical literal coefficients as the engine.
     Compare with round(4) — libm vs JVM differ at ~1e-9 relative."""
-    lon0, k0, fe, fn = _require_tm(code)
+    lon0, k0, fe, fn = consts_for(code, __name__)
     lam = f"((({lon_sql}) - {lon0!r}) * {D2R!r})"
     phi = f"(({lat_sql}) * {D2R!r})"
     t = _sinh(f"({_asinh(f'tan({phi})')} - {E_ECC!r} * {_atanh(f'{E_ECC!r} * sin({phi})')})")
@@ -404,7 +331,7 @@ def forward_sql(lon_sql: str, lat_sql: str, code: int) -> tuple[str, str]:
 
 def inverse_sql(x_sql: str, y_sql: str, code: int) -> tuple[str, str]:
     """DuckDB (lon, lat) expression strings from UTM easting/northing."""
-    lon0, k0, fe, fn = _require_tm(code)
+    lon0, k0, fe, fn = consts_for(code, __name__)
     xi = f"((({y_sql}) - {fn!r}) / {k0 * A_CAP!r})"
     eta = f"((({x_sql}) - {fe!r}) / {k0 * A_CAP!r})"
     xi_p = xi

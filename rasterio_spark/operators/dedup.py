@@ -47,21 +47,6 @@ def dedup_exact_sql(table: str = "documents", text_col: str = "text", id_col: st
     """
 
 
-def _shingles_expr(text_col: str, n: int) -> str:
-    """Spark SQL: array of n-gram shingles over space tokens.
-
-    NOTE (r6): lambda bodies re-evaluate their subexpressions per
-    element, so referencing ``split(text)`` inside the transform costs
-    one split per SHINGLE (~50x per doc measured). Prefer
-    :func:`_exploded_shingles`, which projects the token array once per
-    row; this string form is kept for SQL-twin construction and
-    callers that need a standalone expression."""
-    return (
-        f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(split({text_col}, ' '), i, {n})))"
-    )
-
-
 def _spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition inputs with pathologically few
     partitions (guide §2.5 'input skew': one unsplittable file). A
@@ -79,8 +64,8 @@ def _exploded_shingles(
     docs: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
     """(doc_id, shingle) with the token array projected ONCE per row
-    (same shingle strings as ``_shingles_expr``, ~n_tokens times less
-    split() work) and degenerate input partitioning spread."""
+    (~n_tokens times less split() work) and degenerate input
+    partitioning spread."""
     docs = _spread_small_input(docs)
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("_toks")
@@ -106,21 +91,23 @@ def shingle_docs(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: st
     return _exploded_shingles(docs, n, text_col, id_col).distinct()
 
 
-def cap_shingles(sh: DataFrame, max_df: int) -> DataFrame:
-    """Drop shingles present in more than ``max_df`` documents.
+def cap_shingles(df: DataFrame, key: str, cap: int) -> DataFrame:
+    """Drop the rows whose ``key`` value occurs in more than ``cap``
+    rows — the hot-key cap before every near-duplicate self-join
+    (shingles, LSH buckets, embedding clusters).
 
-    The hot-shingle set is tiny (only the boilerplate tail), so the
-    anti-join is a broadcast; this is the guard that keeps the
-    per-shingle self-join linear at 100 TB — without it one viral
-    trigram in 1% of 10^10 docs emits ~10^14 pairs.
+    The hot set is tiny (only the boilerplate tail), so the anti-join
+    is a broadcast; this is the guard that keeps a self-join on ``key``
+    linear at 100 TB — without it one viral trigram in 1% of 10^10 docs
+    emits ~10^14 pairs.
     """
     hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") > max_df)
-        .select("shingle")
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > cap)
+        .select(key)
     )
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
+    return df.join(F.broadcast(hot), key, "left_anti")
 
 
 def ngram_jaccard_pairs(
@@ -153,7 +140,7 @@ def ngram_jaccard_pairs(
     sh = scoped_persist(shingle_docs(docs, n, text_col, id_col))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     if max_df is not None:
-        sh = cap_shingles(sh, max_df)
+        sh = cap_shingles(sh, "shingle", max_df)
     a = sh.alias("a")
     b = sh.alias("b")
     shared = (
@@ -304,13 +291,7 @@ def minhash_lsh_pairs(
     # the signature agg — materializes it once per action.
     buckets = scoped_persist(lsh_buckets(sig, num_perm=num_perm, bands=bands))
     if max_bucket is not None:
-        hot = (
-            buckets.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_bucket)
-            .select("bucket")
-        )
-        buckets = buckets.join(F.broadcast(hot), "bucket", "left_anti")
+        buckets = cap_shingles(buckets, "bucket", max_bucket)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from rasterio_spark.operators.dedup import cap_shingles
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -311,13 +313,7 @@ def neardup_pairs(
         "_norm",
     )
     if max_cluster is not None and cluster_col:
-        hot = (
-            base.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_cluster)
-            .select("cluster")
-        )
-        base = base.join(F.broadcast(hot), "cluster", "left_anti")
+        base = cap_shingles(base, "cluster", max_cluster)
     a = base.alias("a")
     b = base.alias("b")
     cond = (F.col("a.cluster") == F.col("b.cluster")) & (F.col("a.vec_id") < F.col("b.vec_id"))

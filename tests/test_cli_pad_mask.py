@@ -217,3 +217,22 @@ def test_cli_clip_bounds_and_convert_scale(spark, tmp_path, capsys):
     conv = spark.read.parquet(conv_path)
     row = conv.where("row = 1 AND col = 0").first()
     assert row["value"] == 8 * 0.5 + 10
+
+
+def test_cli_stops_an_owned_session_on_error_exits(monkeypatch, tmp_path):
+    """The session the CLI creates is stopped on every exit, including
+    the two usage errors that return 2 mid-op."""
+    from rasterio_spark import cli
+
+    class FakeSession:
+        stops = 0
+
+        def stop(self):
+            FakeSession.stops += 1
+
+    monkeypatch.setattr(cli, "_session", lambda args: (FakeSession(), True))
+    no_layer = str(tmp_path / "no_layer")
+    assert cli.main(["overview", "--input", no_layer, "--cascade", "--method", "med"]) == 2
+    assert FakeSession.stops == 1
+    assert cli.main(["warp", "--input", no_layer, "--dst-crs", "EPSG:3857"]) == 2
+    assert FakeSession.stops == 2

@@ -29,6 +29,7 @@ from hypothesis import strategies as st
 
 from rasterio_spark.grid import conic as C
 from rasterio_spark.grid.crs import transform_points, transform_points_sql
+from rasterio_spark.grid.projections import canonical_spec, resolve
 
 A, E2 = C.A_WGS84, C.E2
 E4, E6 = E2 * E2, E2 * E2 * E2
@@ -221,7 +222,7 @@ def test_laea_antipode_under_ansi(spark):
     """At the antipode of the LAEA centre both backends return PROJ's
     (inf, inf), and the Column forward does not fail the job on its
     division by 0 under ANSI mode."""
-    spec = C.canonical_spec("laea", None, None, 45.0, -100.0, 1000000.0, 2000000.0)
+    spec = canonical_spec("laea", {"lat_0": 45.0, "lon_0": -100.0, "x_0": 1000000.0, "y_0": 2000000.0})
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
@@ -313,7 +314,7 @@ def test_southern_albers_std_parallels_and_sign():
     for lat in (-18.0, -36.0):
         k_par, _, _ = _local_scales(3577, 140.0, lat)
         assert abs(k_par - 1.0) < 1e-7
-    assert C.PARAMS[3577]["n"] < 0
+    assert resolve(3577).consts["n"] < 0
     # Sydney lands east and well south of the natural origin
     x, y = C.forward(151.2093, -33.8688, 3577)
     assert float(x) > 1_500_000 and float(y) < -3_500_000
@@ -380,9 +381,10 @@ def test_proj4_custom_params_transform_and_roundtrip():
 def test_proj4_single_parallel_limit_is_conformal():
     from rasterio_spark.grid import conic as CC
 
-    spec = CC.canonical_spec("lcc", 45.0, 45.0, 45.0, 0.0, 0.0, 0.0)
-    assert CC.is_supported(spec)
-    p = CC._resolve(spec)
+    spec = canonical_spec("lcc", {"lat_1": 45.0, "lat_2": 45.0, "lat_0": 45.0, "lon_0": 0.0,
+                                  "x_0": 0.0, "y_0": 0.0})
+    assert resolve(spec) is not None
+    p = resolve(spec).consts
     assert abs(p["n"] - math.sin(math.radians(45.0))) < 1e-15
     # k == 1 exactly on the single standard parallel
     h = 1e-6
@@ -399,7 +401,7 @@ def test_proj4_custom_three_forms_agree(spark):
     from pyspark.sql import functions as F
     from rasterio_spark.grid import conic as CC
 
-    spec = CC.canonical_spec("laea", None, None, 45.0, -100.0, 1000000.0, 2000000.0)
+    spec = canonical_spec("laea", {"lat_0": 45.0, "lon_0": -100.0, "x_0": 1000000.0, "y_0": 2000000.0})
     lons = np.linspace(-110, -90, 7)
     lats = np.linspace(38, 52, 7)
     x_np, y_np = CC.forward(lons, lats, spec)
@@ -491,7 +493,8 @@ def test_tmerc_three_forms(spark):
     from pyspark.sql import functions as F
     from rasterio_spark.grid import utm as U
 
-    spec = U.tm_canonical_spec(49.0, -2.0, 0.999601, 400000.0, -100000.0)
+    spec = canonical_spec("tmerc", {"lat_0": 49.0, "lon_0": -2.0, "k_0": 0.999601,
+                                    "x_0": 400000.0, "y_0": -100000.0})
     lons = np.linspace(-6, 2, 7)
     lats = np.linspace(47, 55, 7)
     x_np, y_np = U.forward(lons, lats, spec)

@@ -38,6 +38,7 @@ from rasterio_spark.grid.crs import (
     transform_points,
     transform_points_sql,
 )
+from rasterio_spark.grid.projections import canonical_spec, resolve
 from rasterio_spark.grid.utm import A_WGS84, E_ECC
 
 E2 = E_ECC * E_ECC
@@ -171,7 +172,7 @@ def test_modis_sinusoidal_grid():
 
 
 def test_sinu_ellipsoidal_equal_area():
-    spec = C.sinu_canonical_spec(0.0, 0.0, 0.0)
+    spec = canonical_spec("sinu", {"lon_0": 0.0, "x_0": 0.0, "y_0": 0.0})
     eps = 1e-6
     for lo, la in ((20.0, 40.0), (100.0, -65.0), (-150.0, 5.0)):
         x0, y0 = C.forward([lo], [la], spec)
@@ -189,7 +190,7 @@ def test_sinu_ellipsoidal_equal_area():
 @settings(max_examples=30, deadline=None)
 @given(lon=st.floats(-179.9, 179.9), lat=st.floats(-89.0, 89.0))
 def test_sinu_ellipsoidal_roundtrip(lon, lat):
-    spec = C.sinu_canonical_spec(0.0, 0.0, 0.0)
+    spec = canonical_spec("sinu", {"lon_0": 0.0, "x_0": 0.0, "y_0": 0.0})
     x, y = C.forward([lon], [lat], spec)
     lo, la = C.inverse(x, y, spec)
     assert abs(lo[0] - lon) < 1e-8 and abs(la[0] - lat) < 1e-9
@@ -215,7 +216,7 @@ def _sample_pts(code):
 def test_spark_cols_match_numpy(spark, backends_agree):
     from pyspark.sql import functions as F
 
-    for code in _GRID_CODES + [C.MODIS_SINU, C.sinu_canonical_spec(10.0, 100.0, 0.0)]:
+    for code in _GRID_CODES + [C.MODIS_SINU, canonical_spec("sinu", {"lon_0": 10.0, "x_0": 100.0, "y_0": 0.0})]:
         lons, lats = _sample_pts(code)
         df = spark.createDataFrame(
             [(float(lo), float(la)) for lo, la in zip(lons, lats)],
@@ -239,7 +240,7 @@ def test_spark_cols_match_numpy(spark, backends_agree):
             edge = [(lon0 - 180.0, sgn * 70.0), (lon0 + 180.0, sgn * 70.0), (lon0, sgn * 90.0)]
             guards = [(0.0, 0.0)]
         else:
-            p = C._params(code)
+            p = resolve(code).consts
             lon0, fe, fn = p["lon0"] / C.D2R, p["fe"], p["fn"]
             edge = [(lon0 - 180.0, 0.0), (lon0 + 180.0, 0.0), (lon0 + 180.0, 45.0)]
             pole_y = p["r"] * math.pi / 2.0 if p["kind"] == "sinu_sph" else None
@@ -259,7 +260,7 @@ def test_spark_cols_match_numpy(spark, backends_agree):
 
 def test_duckdb_sql_match_numpy():
     con = duckdb.connect()
-    for code in _GRID_CODES + [C.MODIS_SINU, C.sinu_canonical_spec(10.0, 100.0, 0.0)]:
+    for code in _GRID_CODES + [C.MODIS_SINU, canonical_spec("sinu", {"lon_0": 10.0, "x_0": 100.0, "y_0": 0.0})]:
         lons, lats = _sample_pts(code)
         con.execute("CREATE OR REPLACE TABLE pts(lon DOUBLE, lat DOUBLE)")
         con.execute(
